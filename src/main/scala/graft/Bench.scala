@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and prints
@@ -10,69 +8,30 @@ import scala.util.control.NonFatal
   * reflect real end-to-end execution.
   */
 object Bench {
-  private def env(name: String, default: String): String =
-    sys.env.get(name).map(_.trim).filter(_.nonEmpty).getOrElse(default)
+  private def env(name: String, default: String): String = Regime.env(name, default)
+
+  /** JSON string literal with a full escape (backslash, quote, and ALL
+    * control chars): exception messages can carry \r or \t past the
+    * first-line truncation, which would make the output line invalid JSON.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val benchOut = env("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val cpus = env("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Partition counts are sized by DATA VOLUME, not core count: at sf0.1
-      // every table is ≤11 MB, so 8 slices already puts each task near the
-      // ~1 MB scheduling floor — more partitions just buy scheduler
-      // overhead (measured: repart/shuffle 8/8 = 8.0s total, 16/8 = 9.2,
-      // 32/32 = 15.0). At production scale the same sizing rule
-      // (tens-of-MB tasks) yields thousands of partitions and AQE takes
-      // over runtime sizing.
-      .config("spark.sql.shuffle.partitions", env("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE is ON everywhere else in the engine (Jobs, streaming, tests):
-      // at cluster scale its runtime re-planning (skew joins, partition
-      // coalescing) is essential. In this benchmark regime — hundreds of MB
-      // per query, sub-second stages — its per-stage materialize-and-
-      // re-optimize barrier costs more than it saves (measured +25% on the
-      // 55-query catalog; re-measured round 7 at 73 queries: 23.4s vs
-      // 16.0s = +46%, the multi-stage similarity/propagation queries pay
-      // the barrier most), so the bench defaults it off. Both modes
-      // produce identical results.
-      .config("spark.sql.adaptive.enabled", env("SPARK_GRAFT_AQE", "false"))
-      // A/B knob: parallelismFirst=false coalesces shuffles to advisory
-      // byte size (fewer, fuller reducers); true (Spark default) holds the
-      // parallelism floor — measured better for CPU-bound small-byte stages.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        env("SPARK_GRAFT_PARFIRST", "true"))
-      // Scan parallelism: each harness parquet file is ONE row group, and a
-      // row group is parquet's unit of parallel reading — so without help
-      // every scan (and the cached relation built from it) is a single
-      // task on a 32-core machine. graft.scan.repartition (see
-      // Tables.load) re-slices each table right after the scan; with the
-      // table cache on, that shuffle is paid once at cache-build time and
-      // every query then reads an N-way parallel in-memory table.
-      .config("graft.scan.repartition", env("SPARK_GRAFT_REPART", "8"))
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Regime.session(Regime.bench(sys.env))
 
     // Warm the JVM/codegen once on the smallest SF so per-query timings
     // measure execution, not first-call classloading.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    // Shared-scan reuse: a resident engine serves repeated queries from its
-    // buffer pool; cache the base tables once so the 44 timings measure
-    // operator cost, not 44 re-parses of the same parquet files (the DuckDB
-    // comparison point reads from the OS page cache the same way). Catalyst
-    // substitutes the cached InMemoryRelation into every matching subplan.
-    if (env("SPARK_GRAFT_CACHE", "true").toBoolean) {
-      Tables.names.foreach { t =>
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.cache().count()
-      }
-    }
+    if (env("SPARK_GRAFT_CACHE", "true").toBoolean) Regime.cacheTables(spark, sfDir)
 
     // Optional iteration aid: SPARK_GRAFT_ONLY=q24_minhash_lsh,q25_simhash
     val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.trim.nonEmpty)
@@ -196,15 +155,6 @@ object Bench {
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
-    // Full JSON string escape (backslash, quote, and ALL control chars):
-    // exception messages can carry \r or \t past the first-line truncation,
-    // which would make the output line invalid JSON.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val total = results.map(_._2).sum
 
     // Twin-less production-family line, OUTSIDE the oracle total: the Xx

@@ -1,32 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same plan-shaping knobs (and defaults) as graft.Bench: the scan
-    // repartition perturbs row order, which can change order-sensitive
-    // results (collect_list/first, float-sum association) — so the plans the
-    // bench TIMES must be the plans this harness VERIFIES. Keep these in
-    // sync with Bench.main.
-    def env(n: String, d: String) =
-      sys.env.get(n).map(_.trim).filter(_.nonEmpty).getOrElse(d)
-    // SPARK_GRAFT_MASTER (never set by the driver; default = the driver's
-    // local[$cpus] contract) lets the multi-JVM deploy audit run this same
-    // 222-query gate on local-cluster[n,c,mem] — executors in separate
-    // JVMs, real serialization/broadcast paths (round-14 ask #3).
-    val spark = SparkSession.builder()
-      .master(env("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", env("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", env("SPARK_GRAFT_AQE", "false"))
-      .config("graft.scan.repartition", env("SPARK_GRAFT_REPART", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // graft.Bench's regime: the scan repartition perturbs row order, which
+    // can change order-sensitive results, so the plans the bench TIMES must
+    // be the plans this harness VERIFIES. SPARK_GRAFT_MASTER (unset in the
+    // oracle gate; default = the regime's local[$SPARK_GRAFT_CPUS]) lets the
+    // multi-JVM deploy audit run this same 222-query gate on
+    // local-cluster[n,c,mem] — executors in separate JVMs, real
+    // serialization/broadcast paths (round-14 ask #3).
+    val bench = Regime.bench(sys.env)
+    val spark = Regime.session(bench.updated("spark.master",
+      Regime.env("SPARK_GRAFT_MASTER", bench("spark.master"))))
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver never sets it): comma-separated query
     // names; when present, only those queries are dumped — the oracle json

@@ -41,6 +41,10 @@ object Catalog {
   def eagerBuildQueries: Set[String] =
     all.filter(_.eagerBuild).map(_.name).toSet
 
+  /** The query called `name`; an error naming it when there is none. */
+  def named(name: String): Q =
+    all.find(_.name == name).getOrElse(throw new NoSuchElementException(s"no catalog query $name"))
+
   private def qNoOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, None)
 

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * here a plain LCG over row indices — driver-side generation writes the
   * RAW text formats the ingests must parse, which Spark cannot emit).
   *
-  * NOT part of the library surface (a tool, like [[Scratch]]).
+  * NOT part of the library surface (a tool, like [[Profile]]).
   */
 object E2E {
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator for SCALE sessions above the
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * counts linearly off the sf=1 shape (lineitem 6M, orders 1.5M,
   * documents 50k, events 1M, embeddings 20k).
   *
-  * NOT part of the library surface (a tool, like [[Scratch]]); writes
+  * NOT part of the library surface (a tool, like [[Profile]]); writes
   * only under the given outDir.
   */
 object GenData {
@@ -42,14 +42,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Regime.session(graft.Regime.gendata)
     import spark.implicits._
 
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)

@@ -136,12 +136,15 @@ object IstdatenIngest {
   def ingest(spark: SparkSession, paths: Seq[String]): DataFrame =
     dedupe(normalize(readRaw(spark, paths)))
 
-  /** S10: month-partitioned idempotent sink. */
+  /** S10: month-partitioned idempotent sink. Dynamic overwrite is set on
+    * the write, so re-ingesting a month replaces only that month in any
+    * session. */
   def write(df: DataFrame, path: String): Unit =
     df.withColumn("ym", Macros.monthKey(col("service_date")))
       .write
       .partitionBy("ym")
       .option("compression", "zstd")
+      .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(path)
 }

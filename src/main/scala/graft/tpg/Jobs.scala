@@ -20,20 +20,8 @@ import org.apache.spark.sql.SparkSession
   * is replaced by idempotent dynamic partition overwrite.
   */
 object Jobs {
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def session(appName: String): SparkSession =
+    graft.Regime.session(graft.Regime.jobs(appName, sys.env))
 }
 
 object IngestWeather {

@@ -78,8 +78,9 @@ object WeatherIngest {
   def upsert(existing: DataFrame, incoming: DataFrame): DataFrame =
     Merge.upsertByKeyRange(existing, incoming, "station_id", "ts_utc")
 
-  /** Sink: month-partitioned ZSTD parquet (dynamic overwrite gives the
-    * idempotent re-run semantics of the reference's transactional upsert).
+  /** Sink: month-partitioned ZSTD parquet (dynamic overwrite, set on the
+    * write so it holds in any session, gives the idempotent re-run
+    * semantics of the reference's transactional upsert).
     */
   def write(df: DataFrame, path: String): Unit =
     df.withColumn("ym", Macros.monthKey(col("ts_utc")))
@@ -87,6 +88,7 @@ object WeatherIngest {
       .write
       .partitionBy("ym")
       .option("compression", "zstd")
+      .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(path)
 }

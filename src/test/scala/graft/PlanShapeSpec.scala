@@ -11,9 +11,7 @@ class PlanShapeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def planOf(name: String): String =
-    queries.Catalog.all.find(_.name == name)
-      .getOrElse(sys.error(s"no query $name"))
-      .run(spark, sf).queryExecution.executedPlan.toString
+    queries.Catalog.named(name).run(spark, sf).queryExecution.executedPlan.toString
 
   test("q01: shipdate predicate pushed to the scan; unused columns pruned") {
     val p = planOf("q01_pricing_summary")

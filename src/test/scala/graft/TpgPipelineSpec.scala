@@ -189,6 +189,49 @@ class TpgPipelineSpec extends SparkSpec {
       .limit(1).count() == 1L)
   }
 
+  /** `Fingerprint` digest (n_rows, xor60, sum32) of each `ym` partition. */
+  private def monthDigests(path: String): Map[String, (Long, Long, Long)] = {
+    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
+    val df = spark.read.parquet(path)
+    val cells = df.columns.filter(_ != "ym").sorted.toSeq
+      .map(c => coalesce(col(c).cast("string"), lit("\u0000")))
+    operators.Fingerprint.datasetFingerprint(
+      df.select(col("ym").cast("string").as("ym"), concat_ws("\u0001", cells: _*).as("row")),
+      Seq("ym"), Seq("row"))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+  }
+
+  test("re-ingesting one month leaves every other month's partition untouched") {
+    // The shared session leaves partitionOverwriteMode at Spark's static
+    // default, so only the writers' own option keeps July alive here.
+    def ist(day: String, fahrt: String) =
+      s"$day;$fahrt;TPG;Bus;12;Bel-Air;8587057;$day 10:00:00;$day 10:02:00;REAL;" +
+        s"$day 10:01:00;$day 10:03:00;REAL;0;0;0"
+    def weather(day: String, temp: String) =
+      s"GVE;$day 10:00;$temp;0.0;10.8;18.0;180;55;1013.2;350;10;12.0"
+    val weatherHeader = "station_abbr;reference_timestamp;tre200s0;rre150z0;fu3010z0;" +
+      "fu3010z1;dkl010z0;ure200s0;prestas0;gre000z0;sre000z0;tde200s0"
+    def csv(header: String, rows: String*) = writeTemp("month", (header +: rows).mkString("\n"))
+    for ((name, write, both, june) <- Seq(
+        ("istdaten", (ps: Seq[String], out: String) =>
+            IstdatenIngest.write(IstdatenIngest.ingest(spark, ps), out),
+          Seq(csv(istHeader, ist("01.06.2024", "85:1:1"), ist("02.07.2024", "85:1:2"))),
+          Seq(csv(istHeader, ist("01.06.2024", "85:1:1"), ist("03.06.2024", "85:1:3")))),
+        ("weather", (ps: Seq[String], out: String) =>
+            WeatherIngest.write(WeatherIngest.ingest(spark, ps), out),
+          Seq(csv(weatherHeader, weather("01.06.2024", "20.0"), weather("02.07.2024", "25.0"))),
+          Seq(csv(weatherHeader, weather("01.06.2024", "21.0"), weather("03.06.2024", "22.0")))))) {
+      val out = Files.createTempDirectory(s"graft_rerun_$name").toString
+      write(both, out)
+      val before = monthDigests(out)
+      assert(before.keySet == Set("2024-06", "2024-07"), s"$name: $before")
+      write(june, out)
+      val after = monthDigests(out)
+      assert(after.get("2024-07") == before.get("2024-07"), s"$name: July changed: $after")
+      assert(after("2024-06")._1 == 2L, s"$name: June not replaced: $after")
+    }
+  }
+
   test("Logging: rotating file handler rotates, format matches, setup is idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("graft_logs_").toString
     // tiny rotation budget so a few records span generations

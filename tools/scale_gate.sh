@@ -64,22 +64,9 @@ done
 LOAD1_START="$(load1)"
 echo "[scale_gate] quiet-window check passed: load1=$LOAD1_START (ceiling $QUIET_LOAD1)" >&2
 
-# JDK 17 module opens Spark needs outside spark-submit (same list as
-# build.sbt); running the compiled classes directly avoids fighting a
+# Running the compiled classes directly (tools/jrun.sh) avoids fighting a
 # resident sbt server for the project lock.
-JOPTS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JOPTS="$JOPTS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-run_main() {
-  # shellcheck disable=SC2086
-  java $JOPTS -Xmx"${SPARK_DRIVER_MEM:-12g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" "$@"
-}
+run_main() { SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-12g}" tools/jrun.sh "$@"; }
 
 if [ ! -d target/scala-2.13/classes/graft ]; then
   echo "[scale_gate] compiling..." >&2

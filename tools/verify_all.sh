@@ -24,21 +24,9 @@ TIER="${1:-quick}"
 WORK="${WORK:-/tmp/verify_all}"
 mkdir -p "$WORK"
 
-# Same direct-java runner as scale_gate.sh: avoids fighting a resident sbt
-# server for the project lock, and cold-starts in ~8 s instead of ~40.
-JOPTS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  JOPTS="$JOPTS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
-run_main() {
-  # shellcheck disable=SC2086
-  java $JOPTS -Xmx"${SPARK_DRIVER_MEM:-12g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" "$@"
-}
+# Direct-java runner (tools/jrun.sh): avoids fighting a resident sbt server
+# for the project lock, and cold-starts in ~8 s instead of ~40.
+run_main() { SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-12g}" tools/jrun.sh "$@"; }
 
 step() { echo; echo "=== [verify_all/$TIER] $* ==="; }
 
