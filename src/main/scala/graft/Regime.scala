@@ -17,6 +17,27 @@ import org.apache.spark.sql.SparkSession
 object Regime {
   type Env = Map[String, String]
 
+  /** Spark's cache of compiled generated classes, sized to the engine's
+    * working set. It is a per-JVM LRU keyed by the generated source, and a
+    * static SQL conf read once, when the first class is compiled, so it is
+    * set here, at session build. Spark's default (100 entries) is smaller
+    * than one pass of either benchmark workload, so in a rotating mix the
+    * queries evict each other's classes and every pass pays the Janino
+    * compile plus fresh JIT work again. Measured on a 4-core VM:
+    *  - working sets: the perfbench `catalog_mix` set-up plus one pass (five
+    *    catalog queries) compiles 152 distinct classes; a `pipeline_batch`
+    *    pass plus its checks compiles 272;
+    *  - at 100 entries every `catalog_mix` pass recompiled 77–138 classes,
+    *    and HotSpot JIT was 69% of the pass's CPU (16.9 of 24.5 CPU-s);
+    *  - heap: a retained class keeps about 30 KB (172 extra retained
+    *    classes added 5 MB), so 1024 entries cap the retained heap near
+    *    30 MB while holding several times the largest working set;
+    *  - with 1024, a `catalog_mix` pass recompiles 0 classes and its CPU
+    *    time drops 28% (10 interleaved pairs: median 21.1 → 15.3 s), with
+    *    the same jobs, stages, tasks and shuffle bytes.
+    */
+  val codegenCache: (String, String) = "spark.sql.codegen.cache.maxEntries" -> "1024"
+
   /** `name` from `vars`, trimmed; `default` when unset or blank. */
   def env(name: String, default: String, vars: Env = sys.env): String =
     vars.get(name).map(_.trim).filter(_.nonEmpty).getOrElse(default)
@@ -61,7 +82,8 @@ object Regime {
       // reason Verify runs in this regime.
       "graft.scan.repartition" -> e("SPARK_GRAFT_REPART", "8"),
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.ui.enabled" -> "false")
+      "spark.ui.enabled" -> "false",
+      codegenCache)
   }
 
   /** Shared-scan reuse: a resident engine serves repeated queries from its
@@ -86,7 +108,8 @@ object Regime {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+      codegenCache)
   }
 
   val gendata: Map[String, String] = Map(

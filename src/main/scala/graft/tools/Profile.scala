@@ -1,10 +1,12 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
@@ -30,6 +32,10 @@ import graft.queries.Catalog
   * so stdout is JSONL. Build and exec times are the min over the runs; every
   * other field comes from the run with the least build + exec time. A
   * failing query stops the tool with its full stack and exit status 1.
+  *
+  * `codegen_compiles` > 0 on the timed runs means the query's generated
+  * code depends on literal values (each new value compiles new classes) or
+  * the codegen cache is too small for the query.
   */
 object Profile extends AdaptiveSparkPlanHelper {
 
@@ -45,10 +51,14 @@ object Profile extends AdaptiveSparkPlanHelper {
     *                 the run (the noop write, plus any actions an eager
     *                 builder runs)
     * @param operators executed-plan node counts, subqueries included
+    * @param codegenCompiles classes Spark compiled from generated code
+    * @param jitMs HotSpot JIT compile time, all threads
+    * @param gcMs collection time summed over the JVM's collectors
     */
   final case class Record(query: String, sfDir: String, runs: Int, buildS: Double,
       execS: Double, wallMs: Long, phasesMs: Map[String, Long], jobs: Int,
-      stages: Seq[Stage], operators: Map[String, Int], plan: String) {
+      stages: Seq[Stage], operators: Map[String, Int], plan: String,
+      codegenCompiles: Long, jitMs: Long, gcMs: Long) {
     def wallSumMs: Long = stages.map(_.wallMs).sum
     def execRunSumMs: Long = stages.map(_.execRunMs).sum
 
@@ -84,6 +94,7 @@ object Profile extends AdaptiveSparkPlanHelper {
         "tracker_ms" -> obj(phasesMs.toSeq.sorted),
         "jobs" -> jobs, "stages" -> stages.size, "wall_sum_s" -> sec(wallSumMs),
         "exec_run_sum_s" -> sec(execRunSumMs), "stage_gap_s" -> sec(stageGapMs),
+        "codegen_compiles" -> codegenCompiles, "jit_ms" -> jitMs, "gc_ms" -> gcMs,
         "operators" -> obj(operators.toSeq.sorted),
         "stage_rows" -> Raw(stageRows.map(_.json).mkString("[", ",", "]")))).json
     }
@@ -116,7 +127,15 @@ object Profile extends AdaptiveSparkPlanHelper {
     }
   }
 
-  private final case class Run(buildNs: Long, execNs: Long, events: Events, df: DataFrame)
+  /** JVM-wide counters a run reads on both sides: classes compiled from
+    * generated code, JIT ms, GC ms. */
+  private def counters(): (Long, Long, Long) = (
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum)
+
+  private final case class Run(buildNs: Long, execNs: Long, events: Events, df: DataFrame,
+      compiles: Long, jitMs: Long, gcMs: Long)
 
   private def run(spark: SparkSession, sfDir: String, q: Catalog.Q): Run = {
     val sc = spark.sparkContext
@@ -124,13 +143,15 @@ object Profile extends AdaptiveSparkPlanHelper {
     val events = new Events
     sc.addSparkListener(events)
     try {
+      val (c0, j0, g0) = counters()
       val t0 = System.nanoTime()
       val df = q.run(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       GraftSqlShims.drainListeners(sc)
-      Run(t1 - t0, t2 - t1, events, df)
+      val (c1, j1, g1) = counters()
+      Run(t1 - t0, t2 - t1, events, df, c1 - c0, j1 - j0, g1 - g0)
     } finally sc.removeSparkListener(events)
   }
 
@@ -153,7 +174,7 @@ object Profile extends AdaptiveSparkPlanHelper {
       (best.df.queryExecution.tracker.phases.map { case (p, s) => p -> s.durationMs }.toSeq ++
         best.events.phases.asScala).groupMapReduce(_._1)(_._2)(_ + _),
       best.events.jobs.get, best.events.stages.asScala.toSeq, operators,
-      warm.df.queryExecution.explainString(FormattedMode))
+      warm.df.queryExecution.explainString(FormattedMode), best.compiles, best.jitMs, best.gcMs)
   }
 
   def main(args: Array[String]): Unit = {

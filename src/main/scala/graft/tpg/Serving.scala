@@ -98,17 +98,30 @@ object Serving {
     * keys, and an inclusive date range, time-ordered for the time-series
     * pane. Empty filter seqs mean "all" (same as the dashboard's empty
     * multiselects).
+    *
+    * Dates are `yyyy-MM-dd`, parsed here before the plan is built: an
+    * invalid one raises an error naming it. The window compares `sched_bin`'s session
+    * date as a `yyyy-MM-dd` string against string literals, which
+    * generated code takes by reference, so every window reuses the same
+    * compiled classes (a date literal would be inlined into the code, so
+    * each window would compile classes of its own).
     */
   def slice(byStopLine: DataFrame,
       lines: Seq[String] = Nil,
       stopKeys: Seq[String] = Nil,
       fromDate: Option[String] = None,
       toDate: Option[String] = None): DataFrame = {
+    def day(name: String, d: String): Column =
+      try lit(java.time.LocalDate.parse(d).toString)
+      catch { case e: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(s"$name: invalid date '$d', expected yyyy-MM-dd", e)
+      }
+    val binDay = date_format(col("sched_bin"), "yyyy-MM-dd")
     val preds = Seq(
       Option.when(lines.nonEmpty)(col("line_text").isin(lines: _*)),
       Option.when(stopKeys.nonEmpty)(col("stop_key").isin(stopKeys: _*)),
-      fromDate.map(d => to_date(col("sched_bin")) >= to_date(lit(d))),
-      toDate.map(d => to_date(col("sched_bin")) <= to_date(lit(d)))).flatten
+      fromDate.map(d => binDay >= day("fromDate", d)),
+      toDate.map(d => binDay <= day("toDate", d))).flatten
     preds.foldLeft(byStopLine)(_ filter _).orderBy(col("sched_bin"))
   }
 

@@ -21,6 +21,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Map(Regime.codegenCache))
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {

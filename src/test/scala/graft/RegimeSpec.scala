@@ -48,11 +48,19 @@ class RegimeSpec extends AnyFunSuite {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+      "spark.sql.codegen.cache.maxEntries" -> "1024")
     assert(Regime.jobs("app", Map.empty) == expected("local[32]", "32"))
     assert(Regime.jobs("app", Map("SPARK_GRAFT_CPUS" -> "6")) == expected("local[6]", "6"))
     assert(Regime.jobs("app", Map("SPARK_GRAFT_CPUS" -> "6", "SPARK_MASTER" -> "local[2]")) ==
       expected("local[2]", "6"))
+  }
+
+  test("bench and jobs size the codegen cache to the engine's working set") {
+    for (env <- Seq(Map.empty[String, String], Map("SPARK_GRAFT_CPUS" -> "4"))) {
+      assert(Regime.bench(env).get("spark.sql.codegen.cache.maxEntries").contains("1024"))
+      assert(Regime.jobs("app", env).get("spark.sql.codegen.cache.maxEntries").contains("1024"))
+    }
   }
 
   test("Regime.scala holds the only SparkSession.builder under src/main") {

@@ -2,7 +2,10 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.tpg._
 
@@ -111,5 +114,57 @@ class ServingSpec extends SparkSpec {
     // stop-key filter composes with line filter
     assert(Serving.slice(agg, lines = Seq("12", "14"),
       stopKeys = Seq("14·8587058")).count() == 1L)
+  }
+
+  /** A stop×line gold slice over five days, with bins on both edges of
+    * each day, read back from parquet as the dashboards read it. */
+  private lazy val days: DataFrame = {
+    val sp = spark
+    import sp.implicits._
+    val bins = for {
+      d <- 1 to 5
+      t <- Seq("00:00:00", "12:00:00", "23:50:00")
+      line <- Seq("1", "2")
+    } yield (line, s"${line}·85870${d}0", Timestamp.valueOf(s"2024-06-0$d $t"), d.toLong)
+    val dir = Files.createTempDirectory("serving_days_").toFile.getAbsolutePath + "/by_stop_line"
+    bins.toDF("line_text", "stop_key", "sched_bin", "n_trips").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("slice: date windows equal the to_date formula, boundary days included") {
+    def before(from: Option[String], to: Option[String]) = Seq(
+      from.map(d => to_date(col("sched_bin")) >= to_date(lit(d))),
+      to.map(d => to_date(col("sched_bin")) <= to_date(lit(d)))).flatten
+      .foldLeft(days.filter(col("line_text") === "1"))(_ filter _).orderBy(col("sched_bin"))
+    val windows = Seq(
+      Some("2024-06-02") -> Some("2024-06-04"), Some("2024-06-03") -> Some("2024-06-03"),
+      Some("2024-06-04") -> None, None -> Some("2024-06-01"),
+      Some("2024-06-04") -> Some("2024-06-02"), Some("2024-07-01") -> None)
+    for ((from, to) <- windows) {
+      val got = Serving.slice(days, lines = Seq("1"), fromDate = from, toDate = to).collect().toSeq
+      assert(got == before(from, to).collect().toSeq, (from, to))
+    }
+    // 2024-06-02 00:00 through 2024-06-04 23:50: three bins on each of three days
+    assert(Serving.slice(days, lines = Seq("1"), fromDate = Some("2024-06-02"),
+      toDate = Some("2024-06-04")).count() == 9L)
+    assert(Serving.slice(days, fromDate = Some("2024-06-04"), toDate = Some("2024-06-02"))
+      .count() == 0L)
+  }
+
+  test("slice: a new date window reuses the compiled classes") {
+    def compiles(from: String, to: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Serving.slice(days, lines = Seq("2"), fromDate = Some(from), toDate = Some(to)).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles("2024-06-01", "2024-06-03")
+    assert(compiles("2024-06-02", "2024-06-05") == 0L)
+  }
+
+  test("slice: an invalid date raises an error naming it") {
+    for (bad <- Seq("2024-13-01", "01.06.2024", "")) {
+      val e = intercept[IllegalArgumentException](Serving.slice(days, toDate = Some(bad)))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 }
