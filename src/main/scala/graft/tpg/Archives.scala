@@ -5,8 +5,14 @@ import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{CodingErrorAction, StandardCharsets}
 import java.nio.file.Files
 
-/** Driver-side archive + charset utilities shared by the ingest modules
-  * (reference `src/01_ingest_gtfs.py` and `src/02_ingest_istdaten.py:113-207`).
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+
+/** Driver-side archive + charset utilities and the one raw-CSV reader shared
+  * by the ingest modules (reference `src/01_ingest_gtfs.py`,
+  * `src/02_ingest_istdaten.py:113-207` and `src/03_ingest_weather.py`).
   *
   * Archives are enumerated/extracted on the driver with commons-compress
   * (Deflate64-capable, where `java.util.zip` is not — the opentransportdata
@@ -70,12 +76,11 @@ object Archives {
     * driver-side cost per file constant; Latin-1 transit data (station
     * names with umlauts/accents) shows up within the first MBs in practice.
     */
-  def isValidUtf8(path: String, probeBytes: Int = 4 << 20): Boolean = {
-    val f = new File(path)
-    val n = math.min(f.length(), probeBytes.toLong).toInt
-    val bytes = new Array[Byte](n)
-    val in = new java.io.DataInputStream(new java.io.FileInputStream(f))
-    try in.readFully(bytes) finally in.close()
+  def isValidUtf8(path: String, probeBytes: Int = 4 << 20,
+      conf: Configuration = new Configuration()): Boolean = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    val bytes = try in.readNBytes(probeBytes) finally in.close()
     val dec = StandardCharsets.UTF_8.newDecoder()
       .onMalformedInput(CodingErrorAction.REPORT)
       .onUnmappableCharacter(CodingErrorAction.REPORT)
@@ -84,5 +89,36 @@ object Archives {
     var res = dec.decode(bb, cb, false)
     while (res.isOverflow) { cb.clear(); res = dec.decode(bb, cb, false) }
     !res.isError
+  }
+
+  /** S3/S4/S5, P1/P2: the raw-input contract of every ingest. Each file is
+    * read as UTF-8 when it decodes as UTF-8, else as ISO-8859-1 — the
+    * reference's per-file retry (`02:184-207`), decided up front because
+    * Spark's reader substitutes U+FFFD instead of throwing. An absent
+    * `required` raw column raises an `IllegalArgumentException` naming it
+    * (a wrong delimiter reads as one column, so it fails here too); any other
+    * absent column is back-filled with NULL, as the reference does. Columns
+    * come out renamed raw → silver by `columns`, in its order, all strings.
+    */
+  def readCsv(spark: SparkSession, paths: Seq[String], options: Map[String, String],
+      columns: Seq[(String, String)], required: Seq[String]): DataFrame = {
+    // Globs and directories expand to their files as in Spark's own reader,
+    // so each file gets its own charset.
+    val files = if (paths.isEmpty) Nil
+      else spark.read.format("text").load(paths: _*).inputFiles.toSeq
+    require(files.nonEmpty, s"no CSV input files in: ${paths.mkString(", ")}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val (utf8, latin1) = files.partition(isValidUtf8(_, conf = conf))
+    Seq("UTF-8" -> utf8, "ISO-8859-1" -> latin1).collect { case (charset, ps) if ps.nonEmpty =>
+      val raw = spark.read.options(options).option("header", "true")
+        .option("encoding", charset).csv(ps: _*)
+      val present = raw.columns.toSet
+      val missing = required.filterNot(present)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"missing required columns ${missing.mkString(", ")} in ${ps.mkString(", ")}")
+      raw.select(columns.map { case (from, to) =>
+        (if (present(from)) col(from) else lit(null).cast("string")).as(to)
+      }: _*)
+    }.reduce(_ unionByName _)
   }
 }

@@ -1,39 +1,22 @@
 package graft.tpg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** GTFS timetable ingest ≙ reference `src/01_ingest_gtfs.py`.
   *
   * ZIP member extraction happens once on the driver (S1/S2 — GTFS feeds are
   * a few MB; executors never see the archive; commons-compress handles
   * Deflate64 where java.util.zip cannot), then each member is a plain
-  * distributed CSV scan. Missing member → empty relation with the declared
-  * schema. Required/optional column enforcement (P1), agency broadcast join
-  * (J1), operator substring filter (F1), and the cascading semi-join prune
-  * (J2) follow the reference exactly.
+  * distributed CSV scan through [[Archives.readCsv]] (P1 required/optional
+  * columns, per-file charset). A missing `agency.txt` reads as an empty
+  * agency table (so no route passes the operator filter), a missing
+  * `feed_info.txt` as feed_version "unknown"; any other missing member is an
+  * error. Agency broadcast join (J1), operator substring filter (F1), and the
+  * cascading semi-join prune (J2) follow the reference exactly.
   */
 object GtfsIngest {
-
-  /** S1/S2: extract wanted members of a GTFS ZIP to a temp dir, returning
-    * member → local path. Uses commons-compress (Deflate64-capable) via
-    * [[Archives.extractMembers]].
-    */
-  def extractMembers(zipPath: String, members: Seq[String]): Map[String, String] =
-    Archives.extractMembers(zipPath, members.toSet.contains).toMap
-
-  /** P1: fail on missing required columns; add optional ones as NULL. */
-  def ensureColumns(df: DataFrame, required: Seq[String], optional: Seq[String]): DataFrame = {
-    val present = df.columns.toSet
-    val missing = required.filterNot(present.contains)
-    require(missing.isEmpty, s"missing required columns: ${missing.mkString(", ")}")
-    optional.foldLeft(df) { (d, c) =>
-      if (present.contains(c)) d else d.withColumn(c, lit(null).cast("string"))
-    }
-  }
-
-  private def readMember(spark: SparkSession, paths: Map[String, String], member: String): Option[DataFrame] =
-    paths.get(member).map(p => spark.read.option("header", "true").csv(p))
 
   /** Full GTFS ingest: returns (routes, trips, stop_times, stops) pruned to
     * the configured operator, each stamped with feed_version.
@@ -41,76 +24,49 @@ object GtfsIngest {
   def ingest(spark: SparkSession, zipPath: String,
       operatorPattern: String = "Transports Publics Genevois")
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val paths = extractMembers(zipPath, Seq(
-      "feed_info.txt", "agency.txt", "routes.txt", "trips.txt",
-      "stop_times.txt", "stops.txt"))
+    val paths = Archives.extractMembers(zipPath, Schemas.gtfsRenames.contains).toMap
+    def member(name: String): DataFrame = Archives.readCsv(spark,
+      Seq(paths.getOrElse(name, sys.error(s"$name missing from GTFS feed"))),
+      Map.empty, Schemas.gtfsRenames(name), Schemas.gtfsRequired(name))
 
     val feedVersion: String =
-      readMember(spark, paths, "feed_info.txt")
-        .filter(_.columns.contains("feed_version"))
-        .flatMap(df => df.select("feed_version").limit(1).collect().headOption)
-        .map(_.getString(0))
-        .getOrElse("unknown")
+      if (!paths.contains("feed_info.txt")) "unknown"
+      else member("feed_info.txt").limit(1).collect().headOption
+        .flatMap(r => Option(r.getString(0))).getOrElse("unknown")
 
-    val agency = readMember(spark, paths, "agency.txt")
-      .map(ensureColumns(_, Seq("agency_id", "agency_name"), Nil))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("agency_id", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("agency_name", org.apache.spark.sql.types.StringType)))))
+    // Casts before `distinct`, so "01"/"1" collapse; feed_version after it.
+    def silver(table: StructType)(df: DataFrame): DataFrame =
+      df.transform(Schemas.project(StructType(table.filter(_.name != "feed_version"))))
+        .distinct()
+        .withColumn("feed_version", lit(feedVersion))
 
-    val routesRaw = readMember(spark, paths, "routes.txt")
-      .map(ensureColumns(_, Seq("route_id", "route_type"),
-        Seq("route_short_name", "route_long_name", "agency_id")))
-      .getOrElse(sys.error("routes.txt missing from GTFS feed"))
+    val agency =
+      if (paths.contains("agency.txt")) member("agency.txt")
+      else spark.createDataFrame(java.util.List.of[Row](),
+        StructType.fromDDL("agency_id STRING, agency_name STRING"))
 
     // J1: tiny agency dim — broadcast left join; F1: case-insensitive
     // substring filter on the denormalized operator name.
-    val routes = routesRaw
+    val routes = member("routes.txt")
       .join(broadcast(agency.select(col("agency_id"), col("agency_name").as("operator_name"))),
         Seq("agency_id"), "left")
       .filter(lower(col("operator_name")).contains(operatorPattern.toLowerCase))
-      .select("route_id", "route_short_name", "route_long_name", "route_type",
-        "agency_id", "operator_name")
-      .distinct()
-      .withColumn("feed_version", lit(feedVersion))
+      .transform(silver(Schemas.gtfsRoutes))
 
     // J2: cascading semi-join prune — trips ⋉ routes, stop_times ⋉ trips,
     // stops ⋉ stop_times. Key sides are small after the operator filter →
     // broadcast semi-joins, no shuffle of the big table.
-    val trips = readMember(spark, paths, "trips.txt")
-      .map(ensureColumns(_, Seq("trip_id", "route_id", "service_id"),
-        Seq("direction_id", "trip_headsign")))
-      .getOrElse(sys.error("trips.txt missing"))
+    val trips = member("trips.txt")
       .join(broadcast(routes.select("route_id")), Seq("route_id"), "left_semi")
-      .select("trip_id", "route_id", "service_id", "direction_id", "trip_headsign")
-      .distinct()
-      .withColumn("feed_version", lit(feedVersion))
+      .transform(silver(Schemas.gtfsTrips))
 
-    val stopTimes = readMember(spark, paths, "stop_times.txt")
-      .map(ensureColumns(_,
-        Seq("trip_id", "stop_sequence", "stop_id", "arrival_time", "departure_time"), Nil))
-      .getOrElse(sys.error("stop_times.txt missing"))
+    val stopTimes = member("stop_times.txt")
       .join(broadcast(trips.select("trip_id")), Seq("trip_id"), "left_semi")
-      .select(col("trip_id"), col("stop_sequence").cast("int").as("stop_sequence"),
-        col("stop_id"),
-        col("arrival_time").as("arrival_time_planned"),
-        col("departure_time").as("departure_time_planned"))
-      .distinct()
-      .withColumn("feed_version", lit(feedVersion))
+      .transform(silver(Schemas.gtfsStopTimes))
 
-    val stops = readMember(spark, paths, "stops.txt")
-      .map(ensureColumns(_, Seq("stop_id", "stop_name", "stop_lat", "stop_lon"),
-        Seq("location_type", "parent_station", "platform_code", "zone_id")))
-      .getOrElse(sys.error("stops.txt missing"))
+    val stops = member("stops.txt")
       .join(stopTimes.select("stop_id").distinct(), Seq("stop_id"), "left_semi")
-      .select(col("stop_id"), col("stop_name"),
-        col("stop_lat").cast("double").as("lat"),
-        col("stop_lon").cast("double").as("lon"),
-        col("location_type"), col("parent_station"), col("platform_code"), col("zone_id"))
-      .distinct()
-      .withColumn("feed_version", lit(feedVersion))
+      .transform(silver(Schemas.gtfsStops))
 
     (routes, trips, stopTimes, stops)
   }

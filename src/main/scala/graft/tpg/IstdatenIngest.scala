@@ -33,12 +33,10 @@ object IstdatenIngest {
 
   /** S2/S3/S4: accept plain CSV paths and/or ZIP archives. Archives have
     * their IstDaten members extracted on the driver (commons-compress,
-    * Deflate64-capable — the published opentransportdata ZIPs need it); each
-    * resulting file is charset-probed and read with UTF-8 or ISO-8859-1
-    * accordingly — the per-file retry semantics of the reference
-    * (`02:184-207`), established up front because Spark's reader substitutes
-    * U+FFFD instead of throwing. The extraction is driver-side but the data
-    * volume lives in the CSV scans, which stay fully distributed.
+    * Deflate64-capable — the published opentransportdata ZIPs need it); the
+    * resulting semicolon CSVs go through [[Archives.readCsv]]. The extraction
+    * is driver-side but the data volume lives in the CSV scans, which stay
+    * fully distributed.
     */
   def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val csvPaths = paths.flatMap { p =>
@@ -46,16 +44,8 @@ object IstdatenIngest {
         Archives.extractMembers(p, istdatenCsvMembers(p).toSet.contains).map(_._2)
       else Seq(p)
     }
-    require(csvPaths.nonEmpty, "no IstDaten CSV inputs found")
-    val (utf8, latin1) = csvPaths.partition(Archives.isValidUtf8(_))
-    def read(encoding: String, ps: Seq[String]) = spark.read
-      .option("header", "true")
-      .option("sep", ";")
-      .option("encoding", encoding)
-      .csv(ps: _*)
-    Seq("UTF-8" -> utf8, "ISO-8859-1" -> latin1)
-      .collect { case (enc, ps) if ps.nonEmpty => read(enc, ps) }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    Archives.readCsv(spark, csvPaths, Map("sep" -> ";"),
+      Schemas.istdatenRenames, Schemas.istdatenRequired)
   }
 
   /** C9: day-first timestamp, seconds optional (`dd.MM.yyyy HH:mm[:ss]`).
@@ -68,13 +58,10 @@ object IstdatenIngest {
       try_to_timestamp(c, lit("dd.MM.yyyy HH:mm:ss")),
       try_to_timestamp(c, lit("dd.MM.yyyy HH:mm")))
 
-  /** Normalize raw IstDaten to the ist_events schema (pre-dedupe). */
-  def normalize(raw: DataFrame, operatorAbbr: String = "TPG"): DataFrame = {
-    val present = raw.columns.toSet
-    val selected = Schemas.istdatenRenames.map { case (from, to) =>
-      (if (present.contains(from)) col(from) else lit(null).cast("string")).as(to)
-    }
-    raw.select(selected: _*)
+  /** Normalize [[readRaw]]'s silver-named strings to the ist_events schema
+    * (pre-dedupe). */
+  def normalize(raw: DataFrame, operatorAbbr: String = "TPG"): DataFrame =
+    raw
       // F3 + F4: operator and product filters (stored-content semantics)
       .filter(col("operator_abbr") === operatorAbbr)
       .filter(col("product_id").isin("Bus", "Tram") || col("product_id").isNull)
@@ -96,7 +83,7 @@ object IstdatenIngest {
       .withColumn("is_pass_through", Macros.robustBool(col("is_pass_through")))
       .withColumn("is_additional", Macros.robustBool(col("is_additional")))
       .withColumn("is_cancelled", Macros.robustBool(col("is_cancelled")))
-  }
+      .transform(Schemas.project(Schemas.istEvents))
 
   /** W3: the reference's 5-component priority dedupe (`02:263-325`):
     * per business key (service_date, fahrt_bezeichner, stop_code,

@@ -1,14 +1,21 @@
 package graft.tpg
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Warehouse table schemas — the engine's typed equivalent of the reference
-  * DDL (`src/common.py:93-194`). Spark columns are nullable by default,
-  * matching the reference's nullable pandas/DuckDB columns; business keys
-  * are enforced by the dedupe operators, not constraints (as in the
-  * reference).
+  * DDL (`src/common.py:93-194`) — and each raw source's column map and
+  * required columns, read by [[Archives.readCsv]]. Spark columns are
+  * nullable by default, matching the reference's nullable pandas/DuckDB
+  * columns; business keys are enforced by the dedupe operators, not
+  * constraints (as in the reference).
   */
 object Schemas {
+
+  /** Project to `schema`: its names, in its order, cast to its types. */
+  def project(schema: StructType)(df: DataFrame): DataFrame =
+    df.select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
   /** gtfs_stops ≙ common.py:95-105 */
   val gtfsStops: StructType = StructType(Seq(
@@ -105,6 +112,12 @@ object Schemas {
     "ZUSATZFAHRT_TF" -> "is_additional",
     "FAELLT_AUS_TF" -> "is_cancelled")
 
+  /** Without these the operator filter or the dedupe key empties or
+    * mis-keys the output, so they fail the read instead of reading as NULL.
+    */
+  val istdatenRequired: Seq[String] =
+    Seq("BETRIEBSTAG", "FAHRT_BEZEICHNER", "BETREIBER_ABK", "BPUIC")
+
   /** MeteoSwiss parameter-code → measure name map ≙ 03:36-49. */
   val weatherRenames: Seq[(String, String)] = Seq(
     "station_abbr" -> "station_id",
@@ -119,4 +132,31 @@ object Schemas {
     "gre000z0" -> "global_rad_wm2",
     "sre000z0" -> "sunshine_min",
     "tde200s0" -> "dewpoint_c")
+
+  /** The (station, timestamp) key: as NULL it would mis-key every row or
+    * drop it (F5), so a file without it fails the read instead. */
+  val weatherRequired: Seq[String] = Seq("station_abbr", "reference_timestamp")
+
+  private def same(names: String*): Seq[(String, String)] = names.map(n => n -> n)
+
+  /** GTFS member → raw→silver column map ≙ 01_ingest_gtfs.py. */
+  val gtfsRenames: Map[String, Seq[(String, String)]] = Map(
+    "feed_info.txt" -> same("feed_version"),
+    "agency.txt" -> same("agency_id", "agency_name"),
+    "routes.txt" -> same("route_id", "route_short_name", "route_long_name", "route_type",
+      "agency_id"),
+    "trips.txt" -> same("trip_id", "route_id", "service_id", "direction_id", "trip_headsign"),
+    "stop_times.txt" -> (same("trip_id", "stop_sequence", "stop_id") ++ Seq(
+      "arrival_time" -> "arrival_time_planned", "departure_time" -> "departure_time_planned")),
+    "stops.txt" -> (same("stop_id", "stop_name") ++ Seq("stop_lat" -> "lat", "stop_lon" -> "lon") ++
+      same("location_type", "parent_station", "platform_code", "zone_id")))
+
+  /** GTFS member → required raw columns (P1); `feed_info.txt` has none. */
+  val gtfsRequired: Map[String, Seq[String]] = Map(
+    "feed_info.txt" -> Nil,
+    "agency.txt" -> Seq("agency_id", "agency_name"),
+    "routes.txt" -> Seq("route_id", "route_type"),
+    "trips.txt" -> Seq("trip_id", "route_id", "service_id"),
+    "stop_times.txt" -> Seq("trip_id", "stop_sequence", "stop_id", "arrival_time", "departure_time"),
+    "stops.txt" -> Seq("stop_id", "stop_name", "stop_lat", "stop_lon"))
 }

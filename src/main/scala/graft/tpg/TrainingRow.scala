@@ -65,26 +65,13 @@ object TrainingRow {
       .withColumn("cos_hour", Macros.cosHour(col("hour")))
       // 10/20-minute weather lags joined on (station, bin): features carry
       // the resolved station_id from FeaturesEvents.build, so multi-station
-      // weather can't fan rows out or attach another station's lags
-      .join(maybeBroadcastLags(weatherLags),
+      // weather can't fan rows out or attach another station's lags. The
+      // planner picks the join: broadcast while the lag frame's size estimate
+      // is under spark.sql.autoBroadcastJoinThreshold, a shuffled join above
+      // (AQE re-decides on runtime sizes).
+      .join(weatherLags,
         col("sched_bin") === col("lag_ts") && col("station_id") === col("lag_station_id"),
         "left")
       .drop("lag_ts", "lag_station_id")
-  }
-
-  /** Broadcast the lag frame only while it is plausibly executor-resident.
-    * One station-year of 10-minute obs is ~52k rows (broadcast is clearly
-    * right); thousands of stations × years make the lag frame fact-sized,
-    * where a pinned broadcast is the scale cliff — it must degrade to a
-    * plain (station, bin) shuffled join. The decision reads Catalyst's
-    * optimized-plan size estimate against `graft.lags.broadcast.maxBytes`
-    * (default 64 MB); set 0 to force the shuffled path.
-    */
-  private def maybeBroadcastLags(weatherLags: DataFrame): DataFrame = {
-    val maxBytes = BigInt(
-      weatherLags.sparkSession.conf.get("graft.lags.broadcast.maxBytes",
-        (64L << 20).toString))
-    val estBytes = weatherLags.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes <= maxBytes) broadcast(weatherLags) else weatherLags
   }
 }

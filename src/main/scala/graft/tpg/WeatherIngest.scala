@@ -13,54 +13,26 @@ import graft.operators.{Dedupe, Merge}
   * (F5) → exact-median dedupe of duplicate (station, ts) rows (A1) →
   * per-station time-window upsert (S11).
   *
-  * Scale: one `spark.read.csv` over any number of station files parallelizes
-  * per-split (replacing the reference's thread pool); the only shuffle is the
-  * median dedupe groupBy on (station_id, ts_utc) — key-partitioned, skew-free
-  * (10-min grid bounds group size).
+  * Scale: one CSV scan per charset over any number of station files
+  * parallelizes per-split (replacing the reference's thread pool); the only
+  * shuffle is the median dedupe groupBy on (station_id, ts_utc) —
+  * key-partitioned, skew-free (10-min grid bounds group size).
   */
 object WeatherIngest {
 
-  val measures: Seq[String] = Seq(
-    "temp_c", "rain_mm", "wind_ms", "gust_ms", "wind_dir_deg", "rel_humidity",
-    "pressure_hpa", "global_rad_wm2", "sunshine_min", "dewpoint_c")
-
-  /** S5: semicolon CSV, '-' → NULL, UTF-8 with Latin-1 fallback retry. */
-  def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    def read(encoding: String) = spark.read
-      .option("header", "true")
-      .option("sep", ";")
-      .option("nullValue", "-")
-      .option("encoding", encoding)
-      .csv(paths: _*)
-    try {
-      val df = read("UTF-8")
-      df.schema // force schema inference to surface encoding errors early
-      df
-    } catch { case _: Exception => read("ISO-8859-1") }
-  }
+  /** The weather_obs measure columns: everything after (station_id, ts_utc). */
+  val measures: Seq[String] = Schemas.weatherObs.fieldNames.toSeq.drop(2)
 
   /** Normalize one raw frame to the weather_obs schema (before dedupe). */
-  def normalize(raw: DataFrame): DataFrame = {
-    val present = raw.columns.toSet
-    val selected = Schemas.weatherRenames.map { case (from, to) =>
-      (if (present.contains(from)) col(from) else lit(null)).as(to)
-    }
-    raw.select(selected: _*)
+  def normalize(raw: DataFrame): DataFrame =
+    raw
       .withColumn("ts_utc", try_to_timestamp(col("ts_utc"), lit("dd.MM.yyyy HH:mm")))
       .na.drop(Seq("ts_utc"))
       // C13 numeric coercion (invalid → NULL, never error) then C12 units
-      .select(
-        (Seq(col("station_id"), col("ts_utc")) ++
-          Seq("temp_c", "rain_mm", "wind_dir_deg", "rel_humidity",
-            "pressure_hpa", "global_rad_wm2", "sunshine_min", "dewpoint_c")
-            .map(c => Macros.toDoubleOrNull(col(c)).as(c)) ++
-          Seq(
-            Macros.kmhToMs(Macros.toDoubleOrNull(col("wind_kmh"))).as("wind_ms"),
-            Macros.kmhToMs(Macros.toDoubleOrNull(col("gust_kmh"))).as("gust_ms"))): _*)
-      .select("station_id", "ts_utc",
-        "temp_c", "rain_mm", "wind_ms", "gust_ms", "wind_dir_deg",
-        "rel_humidity", "pressure_hpa", "global_rad_wm2", "sunshine_min", "dewpoint_c")
-  }
+      .withColumn("wind_ms", Macros.kmhToMs(Macros.toDoubleOrNull(col("wind_kmh"))))
+      .withColumn("gust_ms", Macros.kmhToMs(Macros.toDoubleOrNull(col("gust_kmh"))))
+      .withColumns(measures.map(m => m -> Macros.toDoubleOrNull(col(m))).toMap)
+      .transform(Schemas.project(Schemas.weatherObs))
 
   /** A1: duplicate (station_id, ts_utc) rows collapse to exact per-column
     * medians (skip-NULL, like DuckDB MEDIAN / pandas median).
@@ -68,9 +40,10 @@ object WeatherIngest {
   def dedupe(df: DataFrame): DataFrame =
     Dedupe.medianDedupe(df, Seq("station_id", "ts_utc"), measures)
 
-  /** Full ingest transform. */
+  /** Full ingest transform; S5: semicolon CSV with '-' as NULL. */
   def ingest(spark: SparkSession, paths: Seq[String]): DataFrame =
-    dedupe(normalize(readRaw(spark, paths)))
+    dedupe(normalize(Archives.readCsv(spark, paths, Map("sep" -> ";", "nullValue" -> "-"),
+      Schemas.weatherRenames, Schemas.weatherRequired)))
 
   /** S11: merge a new batch into the existing table — per-station [min,max]
     * window replace (the one reference upsert that is not partition-aligned).

@@ -141,10 +141,9 @@ class FeaturesSpec extends SparkSpec {
     val broadcastRows = viaBroadcast.orderBy("fahrt_bezeichner")
       .drop("row_id").collect() // row_id is partition-layout-dependent
 
-    // maxBytes=0 drops OUR hint; autoBroadcastJoinThreshold=-1 stops the
-    // planner re-broadcasting the (tiny, test-sized) frame on its own stats
-    // — together they emulate a fact-sized lag frame
-    spark.conf.set("graft.lags.broadcast.maxBytes", "0")
+    // autoBroadcastJoinThreshold=-1 stops the planner broadcasting the
+    // (tiny, test-sized) frame on its own stats — it emulates a fact-sized
+    // lag frame
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val viaShuffle = TrainingRow.build(feats, weather2)
@@ -158,7 +157,6 @@ class FeaturesSpec extends SparkSpec {
       val shuffleRows = viaShuffle.orderBy("fahrt_bezeichner").drop("row_id").collect()
       assert(shuffleRows.toSeq == broadcastRows.toSeq)
     } finally {
-      spark.conf.unset("graft.lags.broadcast.maxBytes")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }

@@ -16,6 +16,49 @@ class TpgPipelineSpec extends SparkSpec {
     f.getAbsolutePath
   }
 
+  /** A ZIP of (member, bytes) pairs, in order. */
+  private def zipOf(members: (String, Array[Byte])*): String = {
+    val zip = File.createTempFile("feed", ".zip")
+    zip.deleteOnExit()
+    val zos = new ZipOutputStream(new FileOutputStream(zip))
+    for ((name, bytes) <- members) {
+      zos.putNextEntry(new ZipEntry(name))
+      zos.write(bytes)
+      zos.closeEntry()
+    }
+    zos.close()
+    zip.getAbsolutePath
+  }
+
+  private def utf8(members: (String, String)*): Seq[(String, Array[Byte])] =
+    members.map { case (n, c) => n -> c.getBytes("UTF-8") }
+
+  /** The first half of `zipPath`'s bytes: the central directory is gone. */
+  private def truncated(zipPath: String): String = {
+    val bytes = Files.readAllBytes(new File(zipPath).toPath)
+    val f = File.createTempFile("truncated", ".zip")
+    f.deleteOnExit()
+    Files.write(f.toPath, bytes.take(bytes.length / 2))
+    f.getAbsolutePath
+  }
+
+  private val weatherHeader = "station_abbr;reference_timestamp;tre200s0;rre150z0;fu3010z0;" +
+    "fu3010z1;dkl010z0;ure200s0;prestas0;gre000z0;sre000z0;tde200s0"
+
+  /** A two-operator GTFS feed: TPG route r12 (trip t1, stops s1, s2) and an
+    * SBB route the operator filter and semi-join cascade prune away. */
+  private def gtfsFeed(stops: String = "stop_id,stop_name,stop_lat,stop_lon\n" +
+      "s1,Bel-Air,46.204,6.141\ns2,Stand,46.205,6.142\ns9,Bern,46.949,7.439\nsX,Orphan,0,0\n")
+      : Seq[(String, String)] = Seq(
+    "feed_info.txt" -> "feed_publisher_name,feed_version\nopendata,2024-06\n",
+    "agency.txt" -> "agency_id,agency_name\n881,Transports Publics Genevois\n11,SBB\n",
+    "routes.txt" -> ("route_id,agency_id,route_short_name,route_long_name,route_type\n" +
+      "r12,881,12,Bel-Air - Moillesulaz,0\nrIC,11,IC1,Intercity,2\n"),
+    "trips.txt" -> "route_id,service_id,trip_id\nr12,wk,t1\nrIC,wk,t9\n",
+    "stop_times.txt" -> ("trip_id,arrival_time,departure_time,stop_id,stop_sequence\n" +
+      "t1,10:00:00,10:01:00,s1,1\nt1,25:10:00,25:11:00,s2,2\nt9,09:00:00,09:01:00,s9,1\n"),
+    "stops.txt" -> stops)
+
   test("weather ingest: rename, '-' as NA, kmh→ms, median dedupe, bad rows dropped") {
     val csv =
       """station_abbr;reference_timestamp;tre200s0;rre150z0;fu3010z0;fu3010z1;dkl010z0;ure200s0;prestas0;gre000z0;sre000z0;tde200s0
@@ -71,24 +114,16 @@ class TpgPipelineSpec extends SparkSpec {
       "01.06.2024 10:01:00;01.06.2024 10:03:00;REAL;0;0;0"
 
   test("istdaten ZIP ingest: regex member listing, byte-stream extraction") {
-    val zip = File.createTempFile("istdaten", ".zip")
-    zip.deleteOnExit()
-    val zos = new ZipOutputStream(new FileOutputStream(zip))
-    def member(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    member("readme.txt", "not a csv")
-    member("2024-06-01_IstDaten.csv", istHeader + "\n" + istRow("85:889:1", "Bel-Air") + "\n")
-    member("notes.csv", "a;b\n1;2\n") // CSV but not an IstDaten member → excluded
-    member("subdir/2024-06-02_istdaten.csv",
-      istHeader + "\n" + istRow("85:889:2", "Stand") + "\n")
-    zos.close()
+    val zip = zipOf(utf8(
+      "readme.txt" -> "not a csv",
+      "2024-06-01_IstDaten.csv" -> (istHeader + "\n" + istRow("85:889:1", "Bel-Air") + "\n"),
+      "notes.csv" -> "a;b\n1;2\n", // CSV but not an IstDaten member → excluded
+      "subdir/2024-06-02_istdaten.csv" ->
+        (istHeader + "\n" + istRow("85:889:2", "Stand") + "\n")): _*)
 
-    assert(IstdatenIngest.istdatenCsvMembers(zip.getAbsolutePath).toSet ==
+    assert(IstdatenIngest.istdatenCsvMembers(zip).toSet ==
       Set("2024-06-01_IstDaten.csv", "subdir/2024-06-02_istdaten.csv"))
-    val got = IstdatenIngest.ingest(spark, Seq(zip.getAbsolutePath))
+    val got = IstdatenIngest.ingest(spark, Seq(zip))
       .orderBy("fahrt_bezeichner").collect()
     assert(got.length == 2)
     assert(got.map(_.getAs[String]("stop_name")).sameElements(Array("Bel-Air", "Stand")))
@@ -111,6 +146,55 @@ class TpgPipelineSpec extends SparkSpec {
     assert(got.length == 2)
     assert(got(0).getAs[String]("stop_name") == "Genève, Bel-Air")
     assert(got(1).getAs[String]("stop_name") == "Châtelaine")
+    // utf-8-sig (FIXTURES.md): the byte-order mark is not part of BETRIEBSTAG
+    val bom = File.createTempFile("ist_bom", ".csv")
+    bom.deleteOnExit()
+    Files.write(bom.toPath, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ utf8Csv.getBytes("UTF-8"))
+    assert(IstdatenIngest.ingest(spark, Seq(bom.getAbsolutePath))
+      .select("stop_name").collect().map(_.getString(0)).toSeq == Seq("Genève, Bel-Air"))
+
+    // weather: one UTF-8 and one Latin-1 station file in one ingest call,
+    // named one by one or by a glob
+    val wRow = ";01.06.2024 10:00;20.0;0.0;10.8;18.0;180;55;1013.2;350;10;12.0\n"
+    val wDir = Files.createTempDirectory("graft_weather_")
+    val wUtf8 = Files.writeString(wDir.resolve("zrh.csv"), weatherHeader + "\nZÜRICH" + wRow)
+    val wLatin1 = Files.write(wDir.resolve("gve.csv"),
+      (weatherHeader + "\nGENÈVE" + wRow).getBytes("ISO-8859-1"))
+    for (paths <- Seq(Seq(wUtf8.toString, wLatin1.toString), Seq(s"$wDir/*.csv"))) {
+      val stations = WeatherIngest.ingest(spark, paths)
+        .select("station_id").collect().map(_.getString(0)).toSet
+      assert(stations == Set("ZÜRICH", "GENÈVE"), s"$paths: $stations")
+    }
+
+    // GTFS: a feed whose stops.txt alone is Latin-1
+    val feed = gtfsFeed(stops = "stop_id,stop_name,stop_lat,stop_lon\n" +
+      "s1,Châtelaine,46.204,6.141\ns2,Genève-Plage,46.205,6.142\n")
+    val zip = zipOf(feed.map { case (n, c) =>
+      n -> c.getBytes(if (n == "stops.txt") "ISO-8859-1" else "UTF-8") }: _*)
+    val gtfsStops = GtfsIngest.ingest(spark, zip)._4.orderBy("stop_id").collect()
+    assert(gtfsStops.map(_.getAs[String]("stop_name")).toSeq == Seq("Châtelaine", "Genève-Plage"))
+  }
+
+  test("malformed raw input: a missing required column fails the read, naming it") {
+    // a comma-delimited IstDaten file reads as one column under ';'
+    val commas = writeTemp("ist_commas",
+      istHeader.replace(';', ',') + "\n" + istRow("85:889:1", "Bel-Air").replace(';', ',') + "\n")
+    val ist = intercept[IllegalArgumentException](IstdatenIngest.ingest(spark, Seq(commas)))
+    for (c <- Seq("BETRIEBSTAG", "FAHRT_BEZEICHNER", "BETREIBER_ABK", "BPUIC"))
+      assert(ist.getMessage.contains(c), ist.getMessage)
+    // a weather file without its timestamp column
+    val noTs = writeTemp("w_no_ts", "station_abbr;tre200s0\nGVE;20.0\n")
+    val w = intercept[IllegalArgumentException](WeatherIngest.ingest(spark, Seq(noTs)))
+    assert(w.getMessage.contains("reference_timestamp"), w.getMessage)
+    assert(!w.getMessage.contains("station_abbr"), w.getMessage)
+  }
+
+  test("malformed raw input: truncated GTFS and IstDaten ZIPs throw") {
+    val gtfs = truncated(zipOf(utf8(gtfsFeed(): _*): _*))
+    intercept[java.io.IOException](GtfsIngest.ingest(spark, gtfs))
+    val ist = truncated(zipOf(utf8(
+      "2024-06-01_istdaten.csv" -> (istHeader + "\n" + istRow("85:889:1", "Bel-Air") + "\n")): _*))
+    intercept[java.io.IOException](IstdatenIngest.ingest(spark, Seq(ist)))
   }
 
   test("utf8 probe: multi-byte char straddling the probe boundary is not invalid") {
@@ -130,30 +214,8 @@ class TpgPipelineSpec extends SparkSpec {
   }
 
   test("gtfs ingest: member extraction, operator filter, semi-join cascade") {
-    val zip = File.createTempFile("gtfs", ".zip")
-    zip.deleteOnExit()
-    val zos = new ZipOutputStream(new FileOutputStream(zip))
-    def member(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    member("feed_info.txt", "feed_publisher_name,feed_version\nopendata,2024-06\n")
-    member("agency.txt", "agency_id,agency_name\n881,Transports Publics Genevois\n11,SBB\n")
-    member("routes.txt",
-      "route_id,agency_id,route_short_name,route_long_name,route_type\n" +
-        "r12,881,12,Bel-Air - Moillesulaz,0\nrIC,11,IC1,Intercity,2\n")
-    member("trips.txt",
-      "route_id,service_id,trip_id\nr12,wk,t1\nrIC,wk,t9\n")
-    member("stop_times.txt",
-      "trip_id,arrival_time,departure_time,stop_id,stop_sequence\n" +
-        "t1,10:00:00,10:01:00,s1,1\nt1,25:10:00,25:11:00,s2,2\nt9,09:00:00,09:01:00,s9,1\n")
-    member("stops.txt",
-      "stop_id,stop_name,stop_lat,stop_lon\ns1,Bel-Air,46.204,6.141\n" +
-        "s2,Stand,46.205,6.142\ns9,Bern,46.949,7.439\nsX,Orphan,0,0\n")
-    zos.close()
-
-    val (routes, trips, stopTimes, stops) = GtfsIngest.ingest(spark, zip.getAbsolutePath)
+    val zip = zipOf(utf8(gtfsFeed(): _*): _*)
+    val (routes, trips, stopTimes, stops) = GtfsIngest.ingest(spark, zip)
     assert(routes.collect().map(_.getString(0)).sameElements(Array("r12")))
     assert(trips.collect().map(_.getString(0)).sameElements(Array("t1")))
     val st = stopTimes.orderBy("stop_sequence").collect()
@@ -187,6 +249,15 @@ class TpgPipelineSpec extends SparkSpec {
     // ASOF join actually attached weather: at least one row carries a value
     assert(tr.filter(org.apache.spark.sql.functions.col("temp_c").isNotNull)
       .limit(1).count() == 1L)
+    // every silver table lands with exactly its Schemas fields (ym aside)
+    for ((table, schema) <- Seq("gtfs_routes" -> Schemas.gtfsRoutes,
+        "gtfs_trips" -> Schemas.gtfsTrips, "gtfs_stop_times" -> Schemas.gtfsStopTimes,
+        "gtfs_stops" -> Schemas.gtfsStops, "ist_events" -> Schemas.istEvents,
+        "weather_obs" -> Schemas.weatherObs)) {
+      val got = spark.read.parquet(s"$work/gold/$table").schema.filter(_.name != "ym")
+      assert(got.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType),
+        s"$table: $got")
+    }
   }
 
   /** `Fingerprint` digest (n_rows, xor60, sum32) of each `ym` partition. */
@@ -209,8 +280,6 @@ class TpgPipelineSpec extends SparkSpec {
         s"$day 10:01:00;$day 10:03:00;REAL;0;0;0"
     def weather(day: String, temp: String) =
       s"GVE;$day 10:00;$temp;0.0;10.8;18.0;180;55;1013.2;350;10;12.0"
-    val weatherHeader = "station_abbr;reference_timestamp;tre200s0;rre150z0;fu3010z0;" +
-      "fu3010z1;dkl010z0;ure200s0;prestas0;gre000z0;sre000z0;tde200s0"
     def csv(header: String, rows: String*) = writeTemp("month", (header +: rows).mkString("\n"))
     for ((name, write, both, june) <- Seq(
         ("istdaten", (ps: Seq[String], out: String) =>
