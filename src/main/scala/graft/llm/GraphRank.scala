@@ -17,14 +17,15 @@ import org.apache.spark.sql.functions._
   * edges-carry-1/outdeg PageRank layout), so the rank frame every round
   * consumes and produces is a pure `(node, pr)` pair: no deg re-attach
   * join after the aggregate, no per-round odd jobs. Each round is then
-  * exactly one node-keyed equi-join (ranks × edges on src), one hash
-  * aggregate by dst, and a free union of the static in-degree-0 frame —
-  * no driver-side graph state. `n` is a 1-row broadcast in the lazy
-  * form; under `reuseFrames` it is counted ONCE off the materialized
-  * outdegree frame and embedded as a literal (one bounded driver long —
-  * the q102 `|S|` convention), which deletes the per-round 1-row
-  * broadcast builds. Rank frames are |V|-sized,
-  * edge frames |E|-sized; both stay distributed. For rounds ≫ a handful,
+  * exactly one node-keyed equi-join (broadcast ranks × edges on src), one
+  * hash aggregate by dst, and a free union of the static in-degree-0
+  * frame — no driver-side graph state. `n` is a 1-row broadcast in the
+  * lazy form; under `reuseFrames` it is counted ONCE off the materialized
+  * outdegree frame and embedded as a literal (one bounded driver long),
+  * which deletes the per-round 1-row broadcast builds. Rank and degree
+  * frames are |V|-sized and broadcast, so the node set must be
+  * dimension-sized; edge frames are |E|-sized and never shuffle inside a
+  * round. For rounds ≫ a handful,
   * localCheckpoint the rank frame on a cadence (the q61 lineage
   * discipline) — at the 2–3 rounds a curation prior needs, plain lineage
   * is cheaper.
@@ -52,49 +53,46 @@ object GraphRank {
 
   /** Ranks after `rounds` power-iteration rounds over directed `edges`.
     *
+    * One execution regime: every round joins the rank frame into the edge
+    * frame as a BROADCAST, so the edge frame never shuffles inside a round —
+    * each round is a map-side hash join + partial aggregate + one
+    * ≤|V|-sized exchange. The node set must therefore be dimension-sized
+    * (it fits an executor: up to tens of millions of nodes). A
+    * billion-node graph needs the shuffle-join round, which comes back only
+    * with a caller that needs it, selected from the node count.
+    *
     * @param edges one row per directed edge; duplicates count as parallel
     *              edges (they add outdegree and contribute twice — dedupe
     *              first if that is not intended)
-    * @param validate when true (default), probe once that every destination
-    *                 also appears as a source (the no-dangling-sink
-    *                 contract) and fail loudly otherwise; set false to skip
-    *                 the probe for graphs validated once or correct by
-    *                 construction (symmetrized / self-looped)
-    * @param reuseFrames when true, the prepared frames every round reads —
-    *                    outdegree `od` (|V|), the outdegree-attached edge
-    *                    frame `se` (|E|, pre-partitioned on the join key so
-    *                    each round only shuffles the |V|-sized rank frame),
-    *                    and the static in-degree-0 frame — are EAGERLY
-    *                    localCheckpoint'd once instead of being recomputed
-    *                    by every round's lineage (the q61 discipline; the
-    *                    call stops being lazy). False (default) keeps the
-    *                    fully-lazy single-plan form — right for rounds ≤ 2
-    *                    consumed once; reuse wins for more rounds or
-    *                    repeated executions of the result.
-    * @param symmetric caller's declaration that the edge set is symmetric
-    *                  BY CONSTRUCTION (every (u,v) has its (v,u) — e.g.
-    *                  built as `e ∪ reverse(e)`). Then dst set ≡ src set,
-    *                  so the dangling-sink probe is vacuous (skipped even
-    *                  under `validate`) and the in-degree-0 frame is empty
-    *                  by construction — skipping its |E|-sized dst-distinct
-    *                  and the per-round unionAll. Declaring this falsely
-    *                  silently drains mass (the sink contract above) —
-    *                  only pass true for symmetrize-first callers.
-    * @param broadcastRanks when true, each round joins the |V|-sized rank
-    *                       frame into the edge frame as a BROADCAST — the
-    *                       edge frame then never shuffles at all; each
-    *                       round is a map-side hash join + partial
-    *                       aggregate + one ≤|V|-sized exchange. Correct
-    *                       whenever the node set is dimension-sized (fits
-    *                       an executor: up to tens of millions of nodes) —
-    *                       the broadcast-dim-join discipline. Keep false
-    *                       for billion-node graphs, where the shuffle join
-    *                       is the only shape that holds.
-    * @return one row per node: `node`, `pr` (double), `pr12` (the exact
-    *         scale-12 long the next round would consume — the
-    *         deterministic sort/compare key)
-    */
-  /** @param weightCol optional POSITIVE LONG edge-weight column (e.g.
+    * @param validate the graph's input contract, checked: when true
+    *                 (default), probe once that every destination also
+    *                 appears as a source (the no-dangling-sink contract)
+    *                 and fail loudly otherwise; set false to skip the probe
+    *                 for graphs validated once or correct by construction
+    *                 (symmetrized / self-looped)
+    * @param reuseFrames when true, the frames every round reads — the edge
+    *                    input, outdegree `od` and the outdegree-attached
+    *                    edge frame `se` — are EAGERLY localCheckpoint'd
+    *                    once, `n` is counted once into a literal, and every
+    *                    intermediate rank frame is checkpointed (the q61
+    *                    discipline; the call stops being lazy). False
+    *                    (default) keeps ONE lazy plan with zero driver
+    *                    actions. Callers differ, each on measurement: q97
+    *                    and q146 run lazy (one prepared plan, so a rerun
+    *                    pays execution, not re-analysis); q190's vocabulary
+    *                    graph runs eager, where the lazy form measured +16%
+    *                    (r16 — its pinned `__s` exchange costs more than the
+    *                    checkpoint rebuild).
+    * @param symmetric the graph's input contract, declared: the edge set is
+    *                  symmetric BY CONSTRUCTION (every (u,v) has its (v,u) —
+    *                  e.g. built as `e ∪ reverse(e)`). Then dst set ≡ src
+    *                  set, so the dangling-sink probe is vacuous (skipped
+    *                  even under `validate`) and the in-degree-0 frame is
+    *                  empty by construction — skipping its |E|-sized
+    *                  dst-distinct and the per-round unionAll. Declaring
+    *                  this falsely silently drains mass (the sink contract
+    *                  above) — only pass true for symmetrize-first callers.
+    * @param weightCol optional POSITIVE LONG edge-weight column (e.g.
     *        click/order counts): contributions become `pr·nw` with the
     *        NORMALIZED weight `nw = w/outstrength` (outstrength = Σw per
     *        source) computed ONCE on the edge frame — the weighted
@@ -105,12 +103,15 @@ object GraphRank {
     *        loudly in-plan (a zero weight silently deletes an edge; a
     *        negative one corrupts mass). None (default) = every edge
     *        weighs 1, bit-identical to the unweighted form.
+    * @return one row per node: `node`, `pr` (double), `pr12` (the exact
+    *         scale-12 long the next round would consume — the
+    *         deterministic sort/compare key)
     */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, damping: Double = 0.85,
       validate: Boolean = true, reuseFrames: Boolean = false,
-      broadcastRanks: Boolean = false, symmetric: Boolean = false,
+      symmetric: Boolean = false,
       weightCol: Option[String] = None): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     def ck(df: DataFrame): DataFrame =
@@ -137,18 +138,17 @@ object GraphRank {
               lit("pageRank: edge weight must be a positive long, got "),
               col(w).cast("string")))).as("__w")): _*)
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-    // Lazy broadcast regime (r15): NO pinned |E|-sized exchange. The
-    // per-round probes are broadcast joins — they require no particular
-    // partitioning — so cross-consumer reuse rides the caller's LAST
-    // exchange (the edge-dedupe shuffle in every catalog caller); each
-    // consumer re-runs only the narrow post-exchange tail (dedupe-final +
-    // explode) inline, which the r15 sf1 profile measured cheaper than
-    // writing + reading the extra full-|E| src-hash exchange the pin
-    // cost. Unpinned, groupBy(src) also gains a partial-aggregate
-    // ENSURE_REQUIREMENTS exchange of its own — a |V|·partitions-sized
-    // boundary all degree consumers (w builds, rank init, n) reuse. A
-    // caller whose edge build has NO exchange at all should pass
-    // reuseFrames = true instead.
+    // Lazy form (r15): NO pinned |E|-sized exchange. The per-round probes
+    // are broadcast joins — they require no particular partitioning — so
+    // cross-consumer reuse rides the caller's LAST exchange (the
+    // edge-dedupe shuffle in every catalog caller); each consumer re-runs
+    // only the narrow post-exchange tail (dedupe-final + explode) inline,
+    // which the r15 sf1 profile measured cheaper than writing + reading
+    // the extra full-|E| src-hash exchange the pin cost. Unpinned,
+    // groupBy(src) also gains a partial-aggregate ENSURE_REQUIREMENTS
+    // exchange of its own — a |V|·partitions-sized boundary all degree
+    // consumers (w builds, rank init, n) reuse. A caller whose edge build
+    // has NO exchange at all should pass reuseFrames = true instead.
     val base = ck(base0)
     val src = col(srcCol)
     val dst = col(dstCol)
@@ -171,15 +171,9 @@ object GraphRank {
     }
     // n: a 1-row broadcast in the lazy form; under reuseFrames, counted
     // once off the materialized base and embedded as a LITERAL (one
-    // bounded driver long — the personalizedPageRank |S| convention),
-    // which deletes every per-round 1-row broadcast build + crossJoin.
-    // `oneMinusD / n` is one IEEE double division either way — identical
-    // bits to the SQL twins' `(1e0 - d) / n.n`.
-    // count(deg), not count(1): identical (deg is never NULL — every od
-    // group has ≥1 row), but it stops column pruning from manufacturing a
-    // deg-less od copy below this branch, which under a caller-pinned edge
-    // exchange would be a canonically DIFFERENT exchange and re-run the
-    // whole edge build for the 1-row count (r15)
+    // bounded driver long), which deletes every per-round 1-row broadcast
+    // build + crossJoin. `oneMinusD / n` is one IEEE double division
+    // either way — identical bits to the SQL twins' `(1e0 - d) / n.n`.
     // count(when(deg > 0, …)), not count(1)/count(deg): deg is a positive
     // count/sum by construction so the value is identical, but a bare
     // count(deg) gets rewritten to count(1) by NullPropagation (deg is
@@ -197,45 +191,33 @@ object GraphRank {
         case None => df.crossJoin(broadcast(nFrame)).select(col("node"),
           (lit(oneMinusD) / col("n") + psumTerm).as("pr"))
       }
-    // the per-round rank side: broadcast when the node set is
-    // dimension-sized, shuffle-hash otherwise
-    def rankSide(r: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(r) else r.hint("shuffle_hash")
     // THE layout decision: the per-edge share divisor rides ON the edge
     // frame — `__sdeg` = outdeg(src) unweighted, `__nw` = w/outstrength
     // weighted (normalization folded once, not per round) — so the rank
     // frame is a pure (node, pr) pair and NO round ever re-attaches deg.
-    // Built with one od join (broadcast when the node set is
-    // dimension-sized), checkpointed under reuseFrames; in the
-    // shuffle-join form it is additionally pre-partitioned on the
-    // per-round join key so each round only shuffles the rank frame.
+    // Built with one broadcast od join, checkpointed under reuseFrames.
     val odSrc = od.select(col("node").as("__on"), col("deg"))
     val seCols = weightCol.fold(
       Seq(src.as("__s"), dst.as("__d"), col("deg").as("__sdeg")))(_ =>
       Seq(src.as("__s"), dst.as("__d"),
         (col("__w").cast("double") / col("deg")).as("__nw")))
-    // lazy val: the lazy-broadcast UNWEIGHTED regime never builds the
-    // decorated copy at all — its per-source share moves to the broadcast
-    // side of each round (below), and the probe side stays raw `base`.
-    // (The weighted share w/outstrength is PER-EDGE, so the weighted form
-    // keeps the decoration in every regime.)
+    // lazy val: the lazy UNWEIGHTED form never builds the decorated copy
+    // at all — its per-source share moves to the broadcast side of each
+    // round (below), and the probe side stays raw `base`. (The weighted
+    // share w/outstrength is PER-EDGE, so the weighted form keeps the
+    // decoration either way.)
     lazy val se = {
-      val seRaw = base
-        .join(if (broadcastRanks) broadcast(odSrc) else odSrc,
-          src === col("__on"))
+      val seRaw = base.join(broadcast(odSrc), src === col("__on"))
         .select(seCols: _*)
-      if (broadcastRanks) {
-        // lazy weighted-broadcast regime: pin the decorated edge frame
-        // behind ONE __s-keyed exchange — every round's probe (and the
-        // final save) then READS it via ReuseExchange instead of
-        // re-running the |E|-sized decorate join per consumer (the r15
-        // q97/q102 post-explode-pin lesson applied to the weighted form).
-        // Under reuseFrames the localCheckpoint is already the barrier.
-        if (reuseFrames) ck(seRaw) else seRaw.repartition(col("__s"))
-      } else ck(seRaw.repartition(col("__s")))
+      // lazy weighted form: pin the decorated edge frame behind ONE
+      // __s-keyed exchange — every round's probe (and the final save) then
+      // READS it via ReuseExchange instead of re-running the |E|-sized
+      // decorate join per consumer (the r15 q97/q102 post-explode-pin
+      // lesson applied to the weighted form). Under reuseFrames the
+      // localCheckpoint is already the barrier.
+      if (reuseFrames) seRaw.localCheckpoint() else seRaw.repartition(col("__s"))
     }
-    val lazySparseRounds =
-      !reuseFrames && broadcastRanks && weightCol.isEmpty
+    val lazySparseRounds = !reuseFrames && weightCol.isEmpty
     // per-edge mass share: pr/outdeg unweighted (kept verbatim for bit
     // compatibility), pr·nw weighted (nw precomputed above — the order
     // the SQL twins mirror)
@@ -251,8 +233,7 @@ object GraphRank {
     val noIn: Option[DataFrame] = if (symmetric) None else {
       val dstNodes = base.select(dst.as("node")).distinct()
       Some(withBaseline(od.select(col("node"))
-        .join(if (broadcastRanks) broadcast(dstNodes) else dstNodes,
-          Seq("node"), "left_anti"), lit(0.0)))
+        .join(broadcast(dstNodes), Seq("node"), "left_anti"), lit(0.0)))
     }
     // Round-1 fold (r15): r0 is the UNIFORM 1/n for every node, so round 1
     // never builds a rank frame at all — the share reads `initPr` in place
@@ -268,16 +249,15 @@ object GraphRank {
     var r: DataFrame = null
     var ranks: DataFrame = null
     for (k <- 1 to rounds) {
-      // one equi-join (edges × ranks on src) + one hash aggregate by dst;
-      // under broadcastRanks the join is map-side and the only exchange is
-      // the ≤|V|-sized partially-aggregated contribution frame
+      // one map-side equi-join (edges × broadcast ranks on src) + one hash
+      // aggregate by dst; the only exchange is the ≤|V|-sized
+      // partially-aggregated contribution frame
       ranks = if (lazySparseRounds) {
         // the per-edge share floor((pr/deg)·1e12 + 0.5) is CONSTANT per
         // source, so precompute it ON THE BROADCAST SIDE (`__c`) and probe
         // the raw 2-column edge frame — bit-identical psums, no decorated
         // |E| copy (the r14 personalizedPageRank round shape, applied to
-        // the dense unweighted rank frame, which is ≤|V| and broadcastable
-        // by the broadcastRanks contract)
+        // the dense unweighted rank frame, which is ≤|V|)
         val w = if (k == 1) {
           withN(odSrc).select(col("__on").as("__r"),
             floor((initPr / col("deg")) * lit(1e12) + 0.5)
@@ -296,7 +276,7 @@ object GraphRank {
       } else {
         val joined =
           if (k == 1) withN(se).withColumn("pr", initPr)
-          else se.join(rankSide(r.withColumnRenamed("node", "__r")),
+          else se.join(broadcast(r.withColumnRenamed("node", "__r")),
             col("__s") === col("__r"))
         withBaseline(
           joined.groupBy(col("__d").as("node"))
@@ -321,16 +301,19 @@ object GraphRank {
     *   r_{k+1}(v) = (1−d)·tele(v) + d · Σ_{u→v} r_k(u)/outdeg(u),
     *   tele(v) = 1/|S| for v ∈ S, else 0;  r_0 = tele.
     *
-    * Same plan shape as [[pageRank]] per round (one edge×rank equi-join +
-    * one aggregate; `broadcastRanks`/`reuseFrames` behave identically);
-    * the share divisor and the destination teleport ride ON THE EDGE
-    * FRAME (the [[pageRank]] layout), so rank frames are pure
-    * `(node, pr)` pairs with no per-round re-attach join. Nodes
-    * unreachable from the seeds converge to rank 0 and are still emitted
-    * (a complete frame, deterministic). Same contracts as [[pageRank]]:
-    * node set = edge sources; dst ⊆ src guarded when `validate`; seeds
-    * must appear as sources — unknown seeds fail loudly (their teleport
-    * mass would silently vanish).
+    * One execution regime: ONE lazy plan with zero driver actions (the
+    * regime a resident engine serves — at sf1 the per-build Catalyst
+    * analysis of an eager build cost 2× the execution, r14), and SPARSE
+    * broadcast rounds: each round broadcasts only the nonzero-rank nodes,
+    * with the per-edge share precomputed on the broadcast side, and probes
+    * the raw 2-column edge frame. Rank, degree and seed frames must be
+    * dimension-sized (as for [[pageRank]]). Nodes unreachable from the
+    * seeds converge to rank 0 and are still emitted (a complete frame,
+    * deterministic). Same contracts as [[pageRank]]: node set = edge
+    * sources; dst ⊆ src guarded when `validate` (skipped when
+    * `symmetric`); seeds must appear as sources — unknown seeds fail every
+    * execution loudly, with their count (their teleport mass would
+    * silently vanish).
     *
     * Determinism: identical to [[pageRank]] — scale-12 floored
     * contributions, no libm.
@@ -339,22 +322,18 @@ object GraphRank {
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String,
       rounds: Int, damping: Double = 0.85,
-      validate: Boolean = true, reuseFrames: Boolean = false,
-      broadcastRanks: Boolean = false, symmetric: Boolean = false): DataFrame = {
+      validate: Boolean = true, symmetric: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    def ck(df: DataFrame): DataFrame =
-      if (reuseFrames) df.localCheckpoint() else df
     // explicit not-null endpoint filter: contract + ReuseExchange
-    // canonical equality across branches — see [[pageRank]] (r15)
-    val base0 = edges.select(col(srcCol).as(srcCol), col(dstCol).as(dstCol))
+    // canonical equality across branches — see [[pageRank]] (r15).
+    // NO pinned |E|-sized exchange: the probes are broadcast joins with no
+    // partitioning requirement, so reuse rides the caller's edge-dedupe
+    // exchange and groupBy(src) gains its own reusable partial-aggregate
+    // boundary (see [[pageRank]]; the r15 sf1 profile measured the pin's
+    // extra full-|E| exchange write + reads costlier than the inline
+    // dedupe-final re-runs).
+    val base = edges.select(col(srcCol).as(srcCol), col(dstCol).as(dstCol))
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-    // Lazy broadcast regime (r15): NO pinned |E|-sized exchange — the
-    // probes are broadcast joins with no partitioning requirement, so
-    // reuse rides the caller's edge-dedupe exchange and groupBy(src)
-    // gains its own reusable partial-aggregate boundary (see [[pageRank]];
-    // the r15 sf1 profile measured the pin's extra full-|E| exchange
-    // write + reads costlier than the inline dedupe-final re-runs).
-    val base = ck(base0)
     val src = col(srcCol)
     val dst = col(dstCol)
     // count(dst) = count(1) under the not-null filter; keeps the pinned
@@ -368,47 +347,24 @@ object GraphRank {
         s"dangling node '${dangling.headOption.map(_.get(0)).orNull}': every " +
           "destination must also appear as an edge source (symmetrize first)")
     }
-    def rankSide(r: DataFrame): DataFrame =
-      if (broadcastRanks) broadcast(r) else r.hint("shuffle_hash")
     val oneMinusD = 1.0 - damping
-    // seed flag rides next to deg in the node frame. The flag (not tele)
-    // is stored so the frame can be BUILT before |S| is known — |S| and
-    // the seed-presence check then come out of ONE driver action below
-    // (the r14 action fold: previously sd.count() + a second
-    // tele>0 count ran as separate jobs on the build path).
-    val odF = ck(od
+    // seed flag rides next to deg in the node frame
+    val odF = od
       .join(broadcast(sd.withColumn("__isSeed", lit(1))), Seq("node"), "left")
       .select(col("node"), col("deg"),
-        coalesce(col("__isSeed"), lit(0)).as("__isSeed")))
+        coalesce(col("__isSeed"), lit(0)).as("__isSeed"))
     // |S| and the seed-presence guard. A dropped seed silently deletes
     // teleport mass (the PPR analog of a dangling sink), so a mismatch
-    // must fail loudly — the guard is ALWAYS on, in one of two forms:
-    //  - reuseFrames (frames are materialized anyway): ONE bounded driver
-    //    action yields |S| and the present-count over checkpointed blocks;
-    //    the anti-join runs only on the FAILURE path, to name the
-    //    offender. |S| then rides every plan as an exact literal.
-    //    (Union-counted rather than joined so NEITHER side needs a
-    //    broadcast or shuffle.)
-    //  - lazy (reuseFrames = false): the build runs ZERO driver actions —
-    //    the whole PPR is ONE prepared plan, the regime a resident engine
-    //    serves (measured at sf1: the per-build Catalyst analysis was
-    //    costing 2× the execution). |S| rides a 1-row aggregate frame
-    //    (`1.0/__ns` is the same IEEE division as the literal), and the
-    //    guard is an in-plan `assert_true` whose 1.0 result multiplies
-    //    tele (x·1.0 ≡ x for every double) — a missing seed still fails
-    //    every run loudly, with the missing COUNT in the message (re-run
-    //    with reuseFrames=true to have the offender named).
-    // An EMPTY seed set is a legal degenerate in both forms: the seed
-    // branch is never taken, every tele is 0, and every rank converges to
-    // 0 — the same all-zero frame the SQL form yields (its CASE never
-    // reaches the 1/ns division), kept consistent here.
-    // Lazy regime's 1-row metadata frame: |S| AND the loud missing-seed
-    // guard in ONE aggregate over one sd-side probe (r15 — previously two
-    // separate frames cost an extra broadcast-build job and an extra
-    // od-keys pass per execution). guard ≡ 1.0 via the assert_true/
-    // coalesce identity; tele multiplies by it so a dropped seed still
-    // fails every run loudly.
-    lazy val metaF = sd
+    // must fail loudly: ONE 1-row aggregate over one sd-side probe (r15 —
+    // previously two separate frames cost an extra broadcast-build job and
+    // an extra od-keys pass per execution) carries |S| (`1.0/__ns` is the
+    // same IEEE division as a literal) and an in-plan `assert_true` whose
+    // 1.0 result multiplies tele (x·1.0 ≡ x for every double) — a missing
+    // seed fails every run loudly, with the missing COUNT in the message.
+    // An EMPTY seed set is a legal degenerate: every tele is 0 and every
+    // rank converges to 0 — the same all-zero frame the SQL form yields
+    // (its CASE never reaches the 1/ns division).
+    val metaF = sd
       // deg (never NULL) doubles as the presence flag so this probe does
       // not column-prune od into a separate deg-less copy (r15)
       .join(od.select(col("node"), col("deg").as("__in")), Seq("node"), "left")
@@ -420,12 +376,12 @@ object GraphRank {
             lit(" seed(s) are not edge sources: every seed must be a " +
               "node of the graph"))).cast("double"),
         lit(1.0)).as("__guard"))
-    // Seeds-only teleport frame (lazy-broadcast regime): tele over JUST
-    // the |S| seed rows, built from `sd` directly — bit-identical to
-    // odT.filter(tele > 0) (tele > 0 ⇔ seed; same (1.0/ns)·guard IEEE
-    // ops) but its lineage never touches the |E|-sized degree aggregate,
-    // deleting one od pass (round-1 w build) and one more (intermediate
-    // completion) per execution — the r15 sf1 trim.
+    // Seeds-only teleport frame: tele over JUST the |S| seed rows, built
+    // from `sd` directly — bit-identical to odT.filter(tele > 0) (tele > 0
+    // ⇔ seed; same (1.0/ns)·guard IEEE ops) but its lineage never touches
+    // the |E|-sized degree aggregate, deleting one od pass (round-1 w
+    // build) and one more (intermediate completion) per execution — the
+    // r15 sf1 trim.
     // The division is guarded by `__ns > 0`: with a NON-empty seed set the
     // branch is the identical (1.0/ns)·guard IEEE ops (CaseWhen evaluates
     // the taken branch only — bit-identical), and with an EMPTY seed set the
@@ -434,164 +390,73 @@ object GraphRank {
     // where an unguarded 1.0/0.0 is an ANSI DIVIDE_BY_ZERO even though no
     // seed row ever materializes (found by the sf0.001 oracle gate: nation-7
     // has zero suppliers there, r15).
-    lazy val seedTeleF = sd.crossJoin(broadcast(metaF))
+    val seedTeleF = sd.crossJoin(broadcast(metaF))
       .select(col("node"),
         when(col("__ns") > 0.0, lit(1.0) / col("__ns") * col("__guard"))
           .otherwise(lit(0.0)).as("tele"))
-    val odT = if (reuseFrames) {
-      val metaRow = sd.select(lit(1L).as("__sd"), lit(0L).as("__pres"))
-        .unionAll(odF.select(lit(0L).as("__sd"),
-          col("__isSeed").cast("long").as("__pres")))
-        .agg(sum(col("__sd")).as("__ns"), sum(col("__pres")).as("__present"))
-        .collect()(0)
-      def longAt(name: String): Long =
-        Option(metaRow.get(metaRow.fieldIndex(name)))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val ns = longAt("__ns")
-      if (longAt("__present") != ns) {
-        val unknown = sd.join(od, Seq("node"), "left_anti").limit(1).collect()
-        require(unknown.isEmpty,
-          s"seed '${unknown.headOption.map(_.get(0)).orNull}' is not an edge " +
-            "source: every seed must be a node of the graph")
-      }
-      odF.select(col("node"), col("deg"),
-        when(col("__isSeed") === 1, lit(1.0 / ns))
-          .otherwise(lit(0.0)).as("tele"))
-    } else {
-      odF.crossJoin(broadcast(metaF))
-        .select(col("node"), col("deg"),
-          (when(col("__isSeed") === 1, lit(1.0) / col("__ns"))
-            .otherwise(lit(0.0)) * col("__guard")).as("tele"))
-    }
-    // SHUFFLE regime only — the pageRank edge-frame layout: the share
-    // divisor (`__sdeg`, outdeg(src)) AND the destination's teleport
-    // (`__dtele`) ride ON the edge frame, attached once from the
-    // (checkpointed) node frame — so the per-round rank frame is a pure
-    // (node, pr) pair and no round ever re-attaches deg/tele. Under
-    // broadcastRanks this decorated |E|-sized copy is NOT built at all
-    // (the r14 edge-frame fold): the share is precomputed on the
-    // broadcast side instead, and rounds probe the raw 2-column `base`.
-    lazy val se = ck(base
-      .join(odT.select(col("node").as("__sn"), col("deg")), src === col("__sn"))
-      .join(odT.select(col("node").as("__dn"), col("tele")), dst === col("__dn"))
-      .select(src.as("__s"), dst.as("__d"),
-        col("deg").as("__sdeg"), col("tele").as("__dtele"))
-      .repartition(col("__s")))
-    // in-degree-0 nodes: rank pinned at (1−d)·tele from round 1 on (0 for
-    // non-seeds — still emitted, the complete-frame convention). Re-unioned
-    // EVERY round so a source-only seed keeps feeding its out-neighbors —
-    // the same retention rule pageRank enforces.
-    // in-degree-0 frame: EMPTY by construction on a symmetric graph
-    // (dst set ≡ src set), so `symmetric = true` skips both the |E|-sized
-    // dst-distinct in its lineage and the per-round unionAll entirely —
-    // the r11 job-count trim for the q97/q102 symmetrize-first callers.
-    // Otherwise it is static and ck'd ONCE under reuseFrames: its
-    // dst-distinct would re-execute inside every round's checkpoint AND
-    // the final lazy round (unlike pageRank's noIn, whose recompute was
-    // measured cheaper than a barrier, this one rides in `rounds`
-    // unionAlls, so the barrier amortizes).
-    val noInR: Option[DataFrame] = if (symmetric || broadcastRanks) None else {
-      val pprDst = base.select(dst.as("node")).distinct()
-        .withColumn("__hasIn", lit(1))
-      Some(ck(odT
-        .join(if (broadcastRanks) broadcast(pprDst) else pprDst,
-          Seq("node"), "left")
-        .filter(col("__hasIn").isNull)
-        .select(col("node"), (lit(oneMinusD) * col("tele")).as("pr"))))
-    }
+    val odT = odF.crossJoin(broadcast(metaF))
+      .select(col("node"), col("deg"),
+        (when(col("__isSeed") === 1, lit(1.0) / col("__ns"))
+          .otherwise(lit(0.0)) * col("__guard")).as("tele"))
 
-    // Lazy-broadcast init rides the |S|-sized seed frame: round 1's w
-    // filters to pr ≠ 0 anyway, so seeding with the nonzero rows alone is
-    // the same frame with the |E|-sized odT lineage cut out of its plan.
-    var r: DataFrame =
-      if (!reuseFrames && broadcastRanks)
-        seedTeleF.select(col("node"), col("tele").as("pr"))
-      else odT.select(col("node"), col("tele").as("pr"))
+    // init rides the |S|-sized seed frame: round 1's w filters to pr ≠ 0
+    // anyway, so seeding with the nonzero rows alone is the same frame
+    // with the |E|-sized odT lineage cut out of its plan.
+    var r: DataFrame = seedTeleF.select(col("node"), col("tele").as("pr"))
     var ranks: DataFrame = null
     for (k <- 1 to rounds) {
-      if (broadcastRanks) {
-        // SPARSE round (the PPR-specific win): teleport-seeded rank frames
-        // are mostly EXACT zeros (tele = 0 off-seed, and a zero rank
-        // contributes floor(0·1e12/deg + 0.5) = 0 to every psum), so the
-        // join side filters to pr ≠ 0 — round 1 broadcasts |S| rows, not
-        // |V| — and a left-join COMPLETION against the checkpointed node
-        // frame restores the all-nodes output with psum = 0, which is
-        // bit-identical to aggregating the zero contributions (x + d·0 =
-        // x). The completion join also subsumes the in-degree-0 re-union:
-        // those nodes simply have no aggregate row. Both joins are
-        // map-side (the node set is dimension-sized by the broadcastRanks
-        // contract, so the ≤|V|-sized aggregate broadcasts too).
-        // The per-edge share floor((pr/deg)·1e12 + 0.5) is CONSTANT per
-        // source, so it is precomputed ON THE BROADCAST SIDE (`__c`, one
-        // row per nonzero-rank node) — bit-identical psums, and the probe
-        // side stays the raw 2-column edge frame: no decorated |E|-sized
-        // copy is built or checkpointed in this regime, and each round
-        // scans 2 longs per edge instead of 4 columns.
-        // the share divisor comes from the BARE degree frame in the lazy
-        // regime (w never reads tele, and joining odT instead was pulling
-        // the whole seed-decoration lineage into every round's broadcast
-        // build — r15); under reuseFrames odT is the checkpointed frame,
-        // so reading it is the free path there
-        val w = (if (reuseFrames) odT else od)
-          .join(broadcast(r.filter(col("pr") =!= 0.0)
-              .select(col("node").as("__rn"), col("pr"))),
-            col("node") === col("__rn"))
-          .select(col("node").as("__r"),
-            floor((col("pr") / col("deg")) * lit(1e12) + 0.5)
-              .cast("long").as("__c"))
-        val contrib = base
-          .join(broadcast(w), src === col("__r"))
-          .groupBy(dst.as("__an"))
-          .agg(sum(col("__c")).as("__psum"))
-        ranks = if (k < rounds) {
-          // Intermediate rounds skip the |V|-sized completion: the next
-          // round refilters to pr ≠ 0, and pr ≠ 0 ⇔ psum ≠ 0 ∨ tele > 0
-          // (every term is ≥ 0), so completing contrib against the
-          // |S|-sized seed frame alone is exact — a node in neither frame
-          // has pr exactly 0.0 and feeds nothing forward. contrib is
-          // already hash-partitioned on the join key by its aggregate, so
-          // the full-outer costs one |S|-sized exchange, not a |V| scan.
-          contrib.join(
-            if (reuseFrames) odT.filter(col("tele") > 0)
-              .select(col("node"), col("tele"))
-            else seedTeleF, // same frame, |E|-free lineage (r15)
-            col("__an") === col("node"), "full_outer")
-            .select(coalesce(col("node"), col("__an")).as("node"),
-              (lit(oneMinusD) * coalesce(col("tele"), lit(0.0)) +
-                lit(damping) *
-                (coalesce(col("__psum"), lit(0L)).cast("double") / lit(1e12)))
-                .as("pr"))
-        } else odT
-          .join(broadcast(contrib), col("node") === col("__an"), "left")
-          .select(col("node"),
-            (lit(oneMinusD) * col("tele") + lit(damping) *
+      // SPARSE round (the PPR-specific win): teleport-seeded rank frames
+      // are mostly EXACT zeros (tele = 0 off-seed, and a zero rank
+      // contributes floor(0·1e12/deg + 0.5) = 0 to every psum), so the
+      // join side filters to pr ≠ 0 — round 1 broadcasts |S| rows, not
+      // |V| — and a left-join COMPLETION against the node frame restores
+      // the all-nodes output with psum = 0, which is bit-identical to
+      // aggregating the zero contributions (x + d·0 = x). The completion
+      // join also subsumes the in-degree-0 re-union: those nodes simply
+      // have no aggregate row. Both joins are map-side.
+      // The per-edge share floor((pr/deg)·1e12 + 0.5) is CONSTANT per
+      // source, so it is precomputed ON THE BROADCAST SIDE (`__c`, one
+      // row per nonzero-rank node) — bit-identical psums, and the probe
+      // side stays the raw 2-column edge frame: no decorated |E|-sized
+      // copy is built, and each round scans 2 longs per edge.
+      // The share divisor comes from the BARE degree frame (w never reads
+      // tele, and joining odT instead was pulling the whole
+      // seed-decoration lineage into every round's broadcast build — r15).
+      // The prior rank frame is consumed exactly once per round (by this
+      // broadcast build), so round k executes once inside round k+1's
+      // lineage and needs no checkpoint.
+      val w = od
+        .join(broadcast(r.filter(col("pr") =!= 0.0)
+            .select(col("node").as("__rn"), col("pr"))),
+          col("node") === col("__rn"))
+        .select(col("node").as("__r"),
+          floor((col("pr") / col("deg")) * lit(1e12) + 0.5)
+            .cast("long").as("__c"))
+      val contrib = base
+        .join(broadcast(w), src === col("__r"))
+        .groupBy(dst.as("__an"))
+        .agg(sum(col("__c")).as("__psum"))
+      ranks = if (k < rounds) {
+        // Intermediate rounds skip the |V|-sized completion: the next
+        // round refilters to pr ≠ 0, and pr ≠ 0 ⇔ psum ≠ 0 ∨ tele > 0
+        // (every term is ≥ 0), so completing contrib against the
+        // |S|-sized seed frame alone is exact — a node in neither frame
+        // has pr exactly 0.0 and feeds nothing forward. contrib is
+        // already hash-partitioned on the join key by its aggregate, so
+        // the full-outer costs one |S|-sized exchange, not a |V| scan.
+        contrib.join(seedTeleF, col("__an") === col("node"), "full_outer")
+          .select(coalesce(col("node"), col("__an")).as("node"),
+            (lit(oneMinusD) * coalesce(col("tele"), lit(0.0)) +
+              lit(damping) *
               (coalesce(col("__psum"), lit(0L)).cast("double") / lit(1e12)))
               .as("pr"))
-      } else {
-        // shuffle form: one equi-join + one aggregate; the (1−d)·tele term
-        // reads the dst teleport carried on the edge frame (a group key —
-        // exact doubles, 1/|S| or 0) so no post-aggregate node join runs,
-        // and the static in-degree-0 frame re-unions per round
-        ranks = se
-          .join(rankSide(r.withColumnRenamed("node", "__r")),
-            col("__s") === col("__r"))
-          .groupBy(col("__d").as("node"), col("__dtele").as("tele"))
-          .agg(sum(floor((col("pr") / col("__sdeg")) * lit(1e12) + 0.5)
-            .cast("long")).as("__psum"))
-          .select(col("node"),
-            (lit(oneMinusD) * col("tele") +
-              lit(damping) * (col("__psum").cast("double") / lit(1e12))).as("pr"))
-        ranks = noInR.fold(ranks)(ranks.unionAll)
-      }
-      // Intermediate rounds checkpoint ONLY in the shuffle regime. In the
-      // sparse/broadcast regime the prior rank frame is consumed exactly
-      // once per round (by the broadcast `w` build — the completion join
-      // reads odT, not r), so round k executes exactly once inside round
-      // k+1's lineage anyway: a checkpoint there is a pure barrier +
-      // materialization with zero recompute avoided (measured −0.4 s/round
-      // at sf1). The shuffle regime keeps it: its rank frame feeds a
-      // shuffle-hash build whose re-execution was the r13 motivation.
-      r = if (k < rounds && !broadcastRanks) ck(ranks) else ranks
+      } else odT
+        .join(broadcast(contrib), col("node") === col("__an"), "left")
+        .select(col("node"),
+          (lit(oneMinusD) * col("tele") + lit(damping) *
+            (coalesce(col("__psum"), lit(0L)).cast("double") / lit(1e12)))
+            .as("pr"))
+      r = ranks
     }
     ranks.select(col("node"), col("pr"))
       .withColumn("pr12", floor(col("pr") * lit(1e12) + 0.5).cast("long"))

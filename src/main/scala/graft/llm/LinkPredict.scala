@@ -35,22 +35,19 @@ object LinkPredict {
     * are normalized (self-loops dropped, duplicates and reversals
     * collapsed).
     *
+    * The node-sized degree frame broadcasts into its three join sites
+    * (the q97 broadcast-rank precedent; saves three shuffle+sort pairs),
+    * so the node set must be dimension-sized. A billion-node graph would
+    * need the shuffle joins back, selected from the node count.
+    *
     * @param maxDeg wedge centers with degree above this are excluded
     *               (None = no cap)
-    * @param broadcastDegrees broadcast the node-sized degree frame into
-    *               its three join sites (default — the q97 broadcast-rank
-    *               precedent; saves three shuffle+sort pairs). Set false
-    *               for billion-node graphs where the degree frame
-    *               outgrows executor memory: every join is equi-keyed, so
-    *               the shuffle fallback is the same plan minus the
-    *               broadcast.
     * @return (rnk, u, v, cn, jaccard, aa) — ordered by (cn desc, u, v);
     *         jaccard = cn/(deg u + deg v − cn)
     */
   def predict(
       edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxDeg: Option[Long] = None,
-      broadcastDegrees: Boolean = true): DataFrame = {
+      k: Int, maxDeg: Option[Long] = None): DataFrame = {
     require(k > 0, "k must be positive")
     val und = edges
       .select(
@@ -71,8 +68,7 @@ object LinkPredict {
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__e"))
       .select(col("__e.n").as("n"), col("__e.m").as("m"))
-    val deg0 = adj.groupBy(col("n")).agg(count(lit(1)).as("d"))
-    val deg = if (broadcastDegrees) broadcast(deg0) else deg0
+    val deg = broadcast(adj.groupBy(col("n")).agg(count(lit(1)).as("d")))
 
     // wedges a–w–b (a<b), centered on w; hub centers excluded wholesale
     val centers = maxDeg match {

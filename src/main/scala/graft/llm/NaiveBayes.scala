@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * — not raw token occurrences — and unseen-token mass is closed-form:
   * `score(d, c) = prior4_c + Σ_matched m·lp4 + (M_d − cov)·lp0_c`, needing
   * only the per-(doc, class) matched sums, never a dense doc×vocab frame.
-  * The class-stats frame (C rows) is the only broadcast.
+  * The model and the class-stats frame (C rows) broadcast, so vocab ×
+  * classes must be dimension-sized (most language ID / quality-gate
+  * models are).
   *
   * Determinism: every log term is rounded to a scale-4 LONG
   * (`floor(ln(p)·10⁴ + 0.5)`, the [[LanguageModel]] convention) BEFORE
@@ -37,38 +39,26 @@ object NaiveBayes {
 
   /** Train on `(labelCol, textCol)`: returns
     * (tokenModel: (label, token, lp4), classStats: (label, prior4, lp0)).
-    * Both are lazy plans over `train` — nothing is collected.
     *
-    * @param reuseFrames the q61/GraphRank materialize-once discipline:
-    *        localCheckpoint the (label, token) count frame and the C-row
-    *        stats frame, so the ≥4 consumers (vocab probe, stats build,
-    *        the model join's big side, the scorer's class-stats
-    *        broadcast) read two materialized frames instead of each
-    *        re-running the tokenize + count lineage (measured: the q80
-    *        stage count drops ~24 → ~14). The call stops being lazy;
-    *        keep false when the training frame is consumed once.
-    * @param memoizeModel register the returned model and stats frames with
-    *        the Spark CACHE (lazy — no job runs here): the first execution
-    *        materializes them, and every later plan over the SAME training
-    *        frame — including independently rebuilt, plan-canonically-equal
-    *        ones — substitutes the cached artifact instead of re-training.
-    *        This is the serving regime (the q133 IVF-quantizer memoization
-    *        convention: a trained model is an artifact, reused across
-    *        requests) and the measured q80 shape: per-request cost drops to
-    *        scoring only, 1.0–1.3 s → 0.41–0.51 s at sf0.1. The cache pins
-    *        vocab×classes rows — dimension-sized by the broadcastModel
-    *        contract; caller owns unpersist if the model is rotated.
+    * Both frames are registered with the Spark CACHE (lazy — no job runs
+    * here): the first execution materializes them, and every later plan
+    * over the SAME training frame — including independently rebuilt,
+    * plan-canonically-equal ones — substitutes the cached artifact instead
+    * of re-training. A trained model is an artifact reused across requests
+    * (the q133 IVF-quantizer memoization convention): per-request cost
+    * drops to scoring only, q80 1.0–1.3 s → 0.41–0.51 s at sf0.1. The
+    * cache pins vocab × classes rows, dimension-sized like the broadcast
+    * model in [[score]]; the caller owns unpersist if the model is
+    * rotated. (Checkpointing the count and stats frames instead measured
+    * slower than the lazy form on q80, 1.2–1.8 s.)
     */
   def train(
       trainDocs: DataFrame, labelCol: String, textCol: String,
-      tokenSep: String = " ", reuseFrames: Boolean = false,
-      memoizeModel: Boolean = false): (DataFrame, DataFrame) = {
-    def ck(df: DataFrame): DataFrame =
-      if (reuseFrames) df.localCheckpoint() else df
+      tokenSep: String = " "): (DataFrame, DataFrame) = {
     val tok = trainDocs.select(
       col(labelCol).as("label"),
       explode(split(col(textCol), tokenSep)).as("token"))
-    val cnt = ck(tok.groupBy(col("label"), col("token")).agg(count(lit(1)).as("c")))
+    val cnt = tok.groupBy(col("label"), col("token")).agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy(col("label")).agg(sum(col("c")).as("t"))
     // vocabulary size from the TYPE-sized (label, token) frame, not a
     // distinct over raw token occurrences: a token is in-vocab iff it has
@@ -80,38 +70,32 @@ object NaiveBayes {
       .agg(count(lit(1)).as("dl"))
     val ndocs = trainDocs.agg(count(lit(1)).as("d"))
     // vocab ⨯ ndocs fold into ONE 1-row broadcast build (not two)
-    val stats = ck(tot.join(pri, "label")
+    val stats = tot.join(pri, "label")
       .crossJoin(broadcast(vocab.crossJoin(ndocs)))
       .select(
         col("label"),
         col("t"), col("v"),
         log4(col("dl").cast("double") / col("d")).as("prior4"),
-        log4(lit(1.0) / (col("t") + col("v"))).as("lp0")))
+        log4(lit(1.0) / (col("t") + col("v"))).as("lp0"))
     val tokenModel = cnt.join(stats.select("label", "t", "v"), "label")
       .select(
         col("label"), col("token"),
         log4((col("c") + lit(1.0)) / (col("t") + col("v"))).as("lp4"))
-    val classStats = stats.select("label", "prior4", "lp0")
-    if (memoizeModel) (tokenModel.cache(), classStats.cache())
-    else (tokenModel, classStats)
+    (tokenModel.cache(), stats.select("label", "prior4", "lp0").cache())
   }
 
   /** Per-(doc, class) integer scores: (idCol, label, score4).
     *
-    * @param broadcastModel when true, the (label, token, lp4) model joins
-    *        as a BROADCAST — the doc-term frame (the big side) then never
-    *        shuffles for the model join. Correct whenever vocab × classes
-    *        fits an executor (the dimension-join discipline; most language
-    *        ID / quality-gate models do); keep false for 10⁹-row models,
-    *        where the token-keyed shuffle join is the only shape that
-    *        holds.
+    * The (label, token, lp4) model joins as a BROADCAST (pivoted to one
+    * row per token), so the doc-term frame (the big side) never shuffles
+    * for the model join. A 10⁹-row model would need a token-keyed shuffle
+    * join, selected from the model's size, not from a flag.
     */
   def score(
       docs: DataFrame, idCol: String, textCol: String,
       tokenModel: DataFrame, classStats: DataFrame,
-      tokenSep: String = " ",
-      broadcastModel: Boolean = false): DataFrame = {
-    // CLASS-WIDE single-pass scoring (r15, broadcastModel only): the
+      tokenSep: String = " "): DataFrame = {
+    // CLASS-WIDE single-pass scoring (r15): the
     // model pivots ONCE at plan-build into one row per token with C lp4
     // columns (NULL = token unseen for that class), and the probe runs
     // over RAW token occurrences LEFT-joined to that broadcast — no
@@ -129,18 +113,15 @@ object NaiveBayes {
     // same contract that lets classStats broadcast; already materialized
     // for a memoized model).
     //
-    // Fallbacks to the long doc-term join (dedup + C-way fanout —
-    // the right shape when the model itself must stay distributed):
-    // broadcastModel = false (a raw-occurrence shuffle join would move
-    // |tokens|-sized data; the dedup halves it), C > 64 (the wide row
-    // stops being a sane schema), an empty model, or a NULL class label
-    // (a lit(NULL) never equi-joins, so the wide path would silently drop
-    // that class's rows).
+    // Fallbacks to the long doc-term join (dedup + C-way fanout): C > 64
+    // (the wide row stops being a sane schema), an empty model, or a NULL
+    // class label (a lit(NULL) never equi-joins, so the wide path would
+    // silently drop that class's rows).
     val rawLabels = classStats.select(col("label"))
       .distinct().collect().map(_.getString(0))
     val labels: Seq[String] =
       if (rawLabels.contains(null)) Nil else rawLabels.sorted.toSeq
-    if (broadcastModel && labels.nonEmpty && labels.size <= 64) {
+    if (labels.nonEmpty && labels.size <= 64) {
       def lpc(i: Int) = s"__lp_$i"
       val aggs = labels.zipWithIndex.map { case (l, i) =>
         max(when(col("label") === l, col("lp4"))).as(lpc(i)) }
@@ -207,10 +188,8 @@ object NaiveBayes {
   def predict(
       docs: DataFrame, idCol: String, textCol: String,
       tokenModel: DataFrame, classStats: DataFrame,
-      tokenSep: String = " ",
-      broadcastModel: Boolean = false): DataFrame = {
-    score(docs, idCol, textCol, tokenModel, classStats, tokenSep,
-      broadcastModel)
+      tokenSep: String = " "): DataFrame = {
+    score(docs, idCol, textCol, tokenModel, classStats, tokenSep)
       .groupBy(col(idCol))
       .agg(min(struct((-col("score4")).as("n"), col("label"))).as("__m"))
       .select(col(idCol), col("__m.label").as("label"),

@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions._
   * no ranking signal and bloats the graph). Ranking = the q146-style
   * weighted [[GraphRank.pageRank]]: the word vocabulary is
   * dimension-sized, so ranks broadcast and the edge frame never shuffles
-  * inside a round (`broadcastRanks`); the symmetrized-by-construction
-  * edge set skips the dangling probe (`symmetric`).
+  * inside a round; the symmetrized-by-construction edge set skips the
+  * dangling probe (`symmetric`). The rounds run eager (`reuseFrames`):
+  * the lazy form measured +16% on this vocabulary-sized graph (q190,
+  * r16), its pinned `__s` exchange costing more than the checkpoints.
   *
   * Scale shape: one explode + hash-aggregate over token volume builds
   * the graph (map-side combinable); everything after is vocabulary-sized.
@@ -41,8 +43,7 @@ object TextRank {
     */
   def keywords(
       docs: DataFrame, textCol: String,
-      minCount: Long = 3, rounds: Int = 2, k: Int = 20,
-      reuseFrames: Boolean = true): DataFrame = {
+      minCount: Long = 3, rounds: Int = 2, k: Int = 20): DataFrame = {
     val pairs = docs
       .select(explode(
         graft.functions.TextExprs.wordShingles(col(textCol), 2)).as("__w12"))
@@ -58,7 +59,7 @@ object TextRank {
       pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
     GraphRank.topK(
       GraphRank.pageRank(sym, "u", "v", rounds = rounds,
-        validate = false, reuseFrames = reuseFrames, broadcastRanks = true,
-        symmetric = true, weightCol = Some("w")), k)
+        validate = false, reuseFrames = true, symmetric = true,
+        weightCol = Some("w")), k)
   }
 }

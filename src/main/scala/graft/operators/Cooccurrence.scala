@@ -22,13 +22,20 @@ import org.apache.spark.sql.functions._
   * expansion, 1.15s — the set aggregate is an off-codegen
   * ObjectHashAggregate, so "fewer shuffles" loses). The skew risk is a
   * single giant basket (k² blowup), so `maxBasketSize` excludes oversized
-  * baskets via a broadcast anti-join against the (normally EMPTY)
-  * offender list — never a per-basket window sort; at corpus scale a
-  * 10⁵-item basket is a data bug, not signal (the cap is standard Apriori
-  * practice). Counts are map-side-combined aggregates; the
-  * vocabulary-sized item-count frame broadcasts by default so the pair
-  * frame never shuffles for its statistics joins; statistics are
+  * baskets, found by one bounded driver action over the basket sizes —
+  * never a per-basket window sort; at corpus scale a 10⁵-item basket is a
+  * data bug, not signal (the cap is standard Apriori practice). Counts are
+  * map-side-combined aggregates; the vocabulary-sized item-count frame
+  * broadcasts, so the pair frame never shuffles for its statistics joins
+  * and the item vocabulary must be dimension-sized; statistics are
   * exact-integer-count divisions (IEEE, engine-identical).
+  *
+  * One execution regime: the deduped (basket, item) frame is materialized
+  * ONCE (localCheckpoint — the call is eager): it feeds ≥4 consumers
+  * (basket sizes, N, item counts, both self-join legs), and lazily each
+  * broadcast subtree re-executed its |rows|-sized dedupe exchange
+  * (measured at sf0.1: ~3 extra executions of a 600k-row distinct per
+  * run, q116).
   */
 object Cooccurrence {
 
@@ -47,23 +54,16 @@ object Cooccurrence {
     *        this is safe only where rows-per-partition are known to fit
     *        executor memory (size `spark.sql.shuffle.partitions`
     *        accordingly). False (default) keeps the spillable sort-merge —
-    *        the safe-by-default shape for library users at unknown scale.
-    * @param reuseFrames materialize the deduped (basket, item) frame ONCE
-    *        (localCheckpoint — the call stops being lazy): it feeds ≥4
-    *        consumers (offender probe, N, item counts, both self-join
-    *        legs), and lazily each broadcast subtree re-executes its
-    *        |rows|-sized dedupe exchange (measured at sf0.1: ~3 extra
-    *        executions of a 600k-row distinct per run). False keeps the
-    *        single-plan lazy form.
+    *        the safe-by-default shape for library users at unknown scale,
+    *        which PlanShapeSpec pins; only q116, whose partition sizing is
+    *        known, opts in.
     */
   def pairStats(
       df: DataFrame,
       basketCol: String,
       itemCol: String,
       maxBasketSize: Int = 1000,
-      broadcastItemCounts: Boolean = true,
-      hashSelfJoin: Boolean = false,
-      reuseFrames: Boolean = false): DataFrame = {
+      hashSelfJoin: Boolean = false): DataFrame = {
     require(maxBasketSize >= 2, s"maxBasketSize must be >= 2, got $maxBasketSize")
     // ONE basket-keyed exchange serves the whole bk-clustered pipeline:
     // hashpartitioning(__bk) satisfies the (__bk, __it) dedupe's clustered
@@ -71,112 +71,63 @@ object Cooccurrence {
     // self-join legs, and the basket count — so dedupe, join and N all run
     // without re-shuffling. Only the pair and item aggregates (different
     // keys) pay their own exchanges.
-    val items0 = df.select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
+    val items = df.select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
       .filter(col("__it").isNotNull)
       .repartition(col("__bk"))
       .distinct()
-    val items = if (reuseFrames) items0.localCheckpoint() else items0
+      .localCheckpoint()
     // ONE basket-size aggregate (map-side on the __bk exchange) serves
-    // BOTH the oversized-offender list and N — the previous form re-ran a
-    // full distinct-count over `sized` just to produce the 1-row N frame
-    // (a second wide aggregate + its exchange, r12 stage-chain trim #1).
-    // Deliberately NOT a collect_list-of-offenders 1-row frame: collect_*
-    // aggregates are flagged nondeterministic, which defeats exchange
-    // canonicalization and made every frame above the meta row build TWICE
-    // (measured — the "one broadcast" variant was net slower).
+    // BOTH the oversized-offender count and N.
     val basketSizes = items.groupBy(col("__bk")).agg(count(lit(1)).as("__bsz"))
-    // Oversized-basket cap + N, two regimes:
-    //  - reuseFrames (already eager — items is materialized): ONE bounded
-    //    driver action over the basket-size aggregate yields N and the
-    //    offender COUNT (two longs). The offender LIST is collected only on
-    //    the nonzero path, gated by an exact ≤100k count first (the
-    //    DedupCluster gated-collect discipline; oversized baskets are data
-    //    bugs by contract, so the healthy path collects nothing but the two
-    //    longs). This deletes the oversized-anti-join and 1-row-N broadcast
-    //    subtrees — lazily each was a separate job re-reading the aggregate.
-    //  - lazy: broadcast ANTI-join against the (normally EMPTY) offender
-    //    frame and a 1-row N frame riding in the item-count broadcast (the
-    //    q59 idiom) — no action ever runs at build time.
-    val (sized, itemCounts0) = if (reuseFrames) {
-      val meta = basketSizes.agg(
-        sum(when(col("__bsz") <= maxBasketSize, 1L).otherwise(0L)).as("n"),
-        sum(when(col("__bsz") > maxBasketSize, 1L).otherwise(0L)).as("nbad"))
-        .collect()(0)
-      val n = Option(meta.getAs[Long]("n")).getOrElse(0L)
-      val nbad = Option(meta.getAs[Long]("nbad")).getOrElse(0L)
-      val sz = if (nbad == 0L) items else {
-        require(nbad <= 100000L,
-          s"pairStats: $nbad baskets exceed maxBasketSize=$maxBasketSize — " +
-            "that is no longer a data-bug-sized offender set; raise the cap " +
-            "or pre-filter the input")
-        val bad = basketSizes.filter(col("__bsz") > maxBasketSize)
-          .select(col("__bk")).collect().map(_.get(0)).toSeq
-        // coalesce(..., false): a NULL __bk makes isInCollection NULL, and
-        // bare negation would DROP that row — the lazy regime's left_anti
-        // join keeps NULL-key rows (NULL never equi-matches an offender
-        // key), so the eager path must keep them too or n_a/n_b/N diverge
-        // between regimes when oversized baskets and NULL basket ids
-        // coexist.
-        items.filter(!coalesce(col("__bk").isInCollection(bad), lit(false)))
-      }
-      (sz, sz.groupBy(col("__it")).agg(count(lit(1)).as("__ni"))
-        .withColumn("__n", lit(n)))
-    } else {
-      val oversized = basketSizes.filter(col("__bsz") > maxBasketSize)
-        .select(col("__bk"))
-      val sz = items.join(broadcast(oversized), Seq("__bk"), "left_anti")
-      val nFrame = basketSizes.filter(col("__bsz") <= maxBasketSize)
-        .agg(count(lit(1)).as("__n"))
-      (sz, sz.groupBy(col("__it")).agg(count(lit(1)).as("__ni"))
-        .crossJoin(broadcast(nFrame)))
+    // Oversized-basket cap + N: ONE bounded driver action over the
+    // basket-size aggregate yields N and the offender COUNT (two longs).
+    // The offender LIST is collected only on the nonzero path, gated by an
+    // exact ≤100k count first (the DedupCluster gated-collect discipline;
+    // oversized baskets are data bugs by contract, so the healthy path
+    // collects nothing but the two longs).
+    val meta = basketSizes.agg(
+      sum(when(col("__bsz") <= maxBasketSize, 1L).otherwise(0L)).as("n"),
+      sum(when(col("__bsz") > maxBasketSize, 1L).otherwise(0L)).as("nbad"))
+      .collect()(0)
+    val n = Option(meta.getAs[Long]("n")).getOrElse(0L)
+    val nbad = Option(meta.getAs[Long]("nbad")).getOrElse(0L)
+    val sized = if (nbad == 0L) items else {
+      require(nbad <= 100000L,
+        s"pairStats: $nbad baskets exceed maxBasketSize=$maxBasketSize — " +
+          "that is no longer a data-bug-sized offender set; raise the cap " +
+          "or pre-filter the input")
+      val bad = basketSizes.filter(col("__bsz") > maxBasketSize)
+        .select(col("__bk")).collect().map(_.get(0)).toSeq
+      // coalesce(..., false): a NULL __bk makes isInCollection NULL, and
+      // bare negation would DROP that row — NULL never equi-matches an
+      // offender key, so NULL-key rows stay and count in n_a/n_b/N
+      items.filter(!coalesce(col("__bk").isInCollection(bad), lit(false)))
     }
-    if (broadcastItemCounts) {
-      // ONE broadcast item-keyed frame (__it, __ni, __n), attached to the
-      // deduped rows BEFORE the self-join — each pair row then carries both
-      // endpoints' counts and N, so the statistics fall out of the pair
-      // AGGREGATE itself (max over group-constant longs) and the Σk²-sized
-      // pair frame pays ZERO post-aggregate joins. The attach join is
-      // map-side on the smaller pre-pair frame (|distinct items-in-baskets|
-      // rows, ≪ Σk²) — the r13 completion of the r11 one-broadcast ask.
-      val sizedNi = sized.join(broadcast(itemCounts0), Seq("__it"))
-      val rightLeg0 = sizedNi.select(col("__bk").as("__bkr"),
-        col("__it").as("__itr"), col("__ni").as("__nir"))
-      val rightLeg = if (hashSelfJoin) rightLeg0.hint("shuffle_hash")
-        else rightLeg0
-      sizedNi
-        .join(rightLeg,
-          col("__bk") === col("__bkr") && col("__it") < col("__itr"))
-        .groupBy(col("__it").as("a"), col("__itr").as("b"))
-        .agg(count(lit(1)).as("n_ab"),
-          max(col("__ni")).as("n_a"), max(col("__nir")).as("n_b"),
-          max(col("__n")).as("__nn"))
-        .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
-          (col("n_ab").cast("double") / col("__nn")).as("support"),
-          (col("n_ab").cast("double") / col("n_a")).as("conf_a_b"),
-          (col("n_ab").cast("double") * col("__nn") /
-            (col("n_a") * col("n_b"))).as("lift"))
-    } else {
-      // non-broadcast path: attaching counts pre-join would force an
-      // __it-keyed shuffle of the row frame AND a re-shuffle back to __bk
-      // for the self-join — strictly worse. Keep the two post-aggregate
-      // sort-merge equi-joins on the pair frame (vocabularies too large to
-      // broadcast are the only reason to be here).
-      val rightLeg = if (hashSelfJoin) sized.as("r").hint("shuffle_hash")
-        else sized.as("r")
-      val pairs = sized.as("l")
-        .join(rightLeg,
-          col("l.__bk") === col("r.__bk") && col("l.__it") < col("r.__it"))
-        .groupBy(col("l.__it").as("a"), col("r.__it").as("b"))
-        .agg(count(lit(1)).as("n_ab"))
-      pairs
-        .join(itemCounts0.as("ia"), col("a") === col("ia.__it"))
-        .join(itemCounts0.as("ib"), col("b") === col("ib.__it"))
-        .select(col("a"), col("b"), col("n_ab"),
-          col("ia.__ni").as("n_a"), col("ib.__ni").as("n_b"),
-          (col("n_ab").cast("double") / col("ia.__n")).as("support"),
-          (col("n_ab").cast("double") / col("ia.__ni")).as("conf_a_b"),
-          (col("n_ab").cast("double") * col("ia.__n") /
-            (col("ia.__ni") * col("ib.__ni"))).as("lift"))
-    }
+    val itemCounts = sized.groupBy(col("__it")).agg(count(lit(1)).as("__ni"))
+      .withColumn("__n", lit(n))
+    // ONE broadcast item-keyed frame (__it, __ni, __n), attached to the
+    // deduped rows BEFORE the self-join — each pair row then carries both
+    // endpoints' counts and N, so the statistics fall out of the pair
+    // AGGREGATE itself (max over group-constant longs) and the Σk²-sized
+    // pair frame pays ZERO post-aggregate joins. The attach join is
+    // map-side on the smaller pre-pair frame (|distinct items-in-baskets|
+    // rows, ≪ Σk²) — the r13 completion of the r11 one-broadcast ask.
+    val sizedNi = sized.join(broadcast(itemCounts), Seq("__it"))
+    val rightLeg0 = sizedNi.select(col("__bk").as("__bkr"),
+      col("__it").as("__itr"), col("__ni").as("__nir"))
+    val rightLeg = if (hashSelfJoin) rightLeg0.hint("shuffle_hash")
+      else rightLeg0
+    sizedNi
+      .join(rightLeg,
+        col("__bk") === col("__bkr") && col("__it") < col("__itr"))
+      .groupBy(col("__it").as("a"), col("__itr").as("b"))
+      .agg(count(lit(1)).as("n_ab"),
+        max(col("__ni")).as("n_a"), max(col("__nir")).as("n_b"),
+        max(col("__n")).as("__nn"))
+      .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
+        (col("n_ab").cast("double") / col("__nn")).as("support"),
+        (col("n_ab").cast("double") / col("n_a")).as("conf_a_b"),
+        (col("n_ab").cast("double") * col("__nn") /
+          (col("n_a") * col("n_b"))).as("lift"))
   }
 }

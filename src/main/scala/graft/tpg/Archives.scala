@@ -5,6 +5,7 @@ import java.nio.{ByteBuffer, CharBuffer}
 import java.nio.charset.{CodingErrorAction, StandardCharsets}
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -37,12 +38,21 @@ object Archives {
     } finally zf.close()
   }
 
-  /** Extract the members accepted by `wanted` to a temp dir; returns
-    * member name → local path (insertion order = archive order).
+  /** Extraction dirs of this JVM. The extracted files back lazy
+    * DataFrames, so they live until the JVM exits; one shutdown hook then
+    * deletes them all. */
+  private val extractDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
+  Runtime.getRuntime.addShutdownHook(
+    new Thread(() => extractDirs.forEach(d => FileUtils.deleteQuietly(d))))
+
+  /** Extract the members accepted by `wanted` to a temp dir (deleted at JVM
+    * exit); returns member name → local path (insertion order = archive
+    * order).
     */
   def extractMembers(zipPath: String, wanted: String => Boolean): Seq[(String, String)] = {
     import org.apache.commons.compress.archivers.zip.ZipFile
     val tmp = Files.createTempDirectory("graft_zip_").toFile
+    extractDirs.add(tmp)
     val zf = ZipFile.builder().setFile(new File(zipPath)).get()
     try {
       val it = zf.getEntries

@@ -1,5 +1,6 @@
 package graft.tpg
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,12 +52,31 @@ object WeatherIngest {
   def upsert(existing: DataFrame, incoming: DataFrame): DataFrame =
     Merge.upsertByKeyRange(existing, incoming, "station_id", "ts_utc")
 
-  /** Sink: month-partitioned ZSTD parquet (dynamic overwrite, set on the
-    * write so it holds in any session, gives the idempotent re-run
-    * semantics of the reference's transactional upsert).
+  /** Sink: month-partitioned ZSTD parquet, written as the reference's S11
+    * upsert: the batch is merged ([[upsert]]) into the table's rows of the
+    * months the batch has rows in, and only those months are rewritten
+    * (dynamic overwrite, set on the write so it holds in any session). A
+    * re-run is idempotent, and re-ingesting part of a window keeps every
+    * other station's rows and the rest of the month. A station window
+    * reaching into a month without batch rows leaves that month as it is.
+    * With no table at `path` yet the batch is written as is, with no extra
+    * job.
     */
-  def write(df: DataFrame, path: String): Unit =
-    df.withColumn("ym", Macros.monthKey(col("ts_utc")))
+  def write(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    val table = new Path(path)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val withYm = (d: DataFrame) => d.withColumn("ym", Macros.monthKey(col("ts_utc")))
+    val rows = if (!Option(fs.globStatus(new Path(table, "ym=*"))).exists(_.nonEmpty)) df
+      else {
+        // the schema is given, so reading the table infers nothing (no job)
+        val existing = spark.read.schema(Schemas.weatherObs.add("ym", "string"))
+          .parquet(path)
+          .join(broadcast(withYm(df).select("ym").distinct()), Seq("ym"), "left_semi")
+          .drop("ym")
+        upsert(existing, df)
+      }
+    withYm(rows)
       .sortWithinPartitions("station_id", "ts_utc")
       .write
       .partitionBy("ym")
@@ -64,4 +84,5 @@ object WeatherIngest {
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(path)
+  }
 }

@@ -43,9 +43,9 @@ class BehaviorOpsSpec extends SparkSpec {
     }
   }
 
-  test("pairStats: reuseFrames/hashSelfJoin/broadcast paths agree with lazy form") {
-    // includes an oversized basket so the reuseFrames gated-collect path
-    // (meta action + isInCollection filter) is exercised, not just N
+  test("pairStats: hashSelfJoin path agrees with the sort-merge form") {
+    // includes an oversized basket so the gated-collect path (meta action
+    // + isInCollection filter) is exercised, not just N
     val big = (1 to 10).map(i => (99L, s"i$i"))
     val df = (Seq((1L, "a"), (1L, "b"), (2L, "a"), (2L, "b"), (3L, "a")) ++ big)
       .toDF("bk", "itm")
@@ -54,20 +54,19 @@ class BehaviorOpsSpec extends SparkSpec {
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5),
          r.getDouble(6), r.getDouble(7))).toMap
     val base = norm(Cooccurrence.pairStats(df, "bk", "itm", maxBasketSize = 5))
-    for (reuse <- Seq(true, false); hash <- Seq(true, false);
-         bcast <- Seq(true, false)) {
-      val v = norm(Cooccurrence.pairStats(df, "bk", "itm", maxBasketSize = 5,
-        broadcastItemCounts = bcast, hashSelfJoin = hash, reuseFrames = reuse))
-      assert(v == base, s"reuse=$reuse hash=$hash bcast=$bcast")
-    }
+    // a,b pair in baskets 1 and 2; a alone in 3; N = 3 (basket 99 dropped)
+    assert(base == Map(("a", "b") -> ((2L, 3L, 2L, 2.0 / 3, 2.0 / 3, 2.0 * 3 / (3 * 2)))))
+    val hash = norm(Cooccurrence.pairStats(df, "bk", "itm", maxBasketSize = 5,
+      hashSelfJoin = true))
+    assert(hash == base)
   }
 
-  test("pairStats: NULL basket keys survive BOTH regimes when offenders coexist") {
-    // The eager (reuseFrames) offender filter once used a bare
-    // !isInCollection, which is NULL for a NULL __bk row and silently
-    // DROPPED the whole NULL basket — while the lazy left_anti kept it
-    // (NULL never equi-matches an offender key). Pin regime parity on the
-    // exact shape that diverged: oversized offender + NULL basket id.
+  test("pairStats: NULL basket keys count in item totals when offenders coexist") {
+    // The offender filter once used a bare !isInCollection, which is NULL
+    // for a NULL __bk row and silently DROPPED the whole NULL basket
+    // (NULL never equi-matches an offender key, so it must stay). Pinned
+    // on the exact shape that dropped it: oversized offender + NULL
+    // basket id.
     def jl(x: Long) = java.lang.Long.valueOf(x)
     val big = (1 to 10).map(i => (jl(99L), s"i$i"))
     val df = (Seq((jl(1L), "a"), (jl(1L), "b"),
@@ -76,15 +75,12 @@ class BehaviorOpsSpec extends SparkSpec {
     def norm(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val lazyGot = norm(Cooccurrence.pairStats(df, "bk", "itm", maxBasketSize = 5))
-    val eagerGot = norm(Cooccurrence.pairStats(df, "bk", "itm",
-      maxBasketSize = 5, reuseFrames = true))
-    assert(lazyGot == eagerGot)
+    val got = norm(Cooccurrence.pairStats(df, "bk", "itm", maxBasketSize = 5))
     // the NULL basket can never PAIR (its __bk fails the equi self-join, as
     // in SQL) but its rows DO count in the per-item totals — so n_ab=1
-    // (basket 1 only) while n_a=n_b=2 (baskets {1, NULL}); the old eager
-    // filter reported n_a=n_b=1 here, diverging from the lazy regime
-    assert(lazyGot(("a", "b")) == ((1L, 2L, 2L)))
+    // (basket 1 only) while n_a=n_b=2 (baskets {1, NULL}); the bare
+    // negation reported n_a=n_b=1 here
+    assert(got(("a", "b")) == ((1L, 2L, 2L)))
   }
 
   test("transitions: hand-computed chain with tie-break and last-event drop") {

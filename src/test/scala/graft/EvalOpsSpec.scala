@@ -381,7 +381,7 @@ class EvalOpsSpec extends SparkSpec {
     assert(m3.getAs[Long]("n_cand") == 1L)
   }
 
-  test("targetEncode: broadcastStats=false (shuffle-join fallback) is value-identical") {
+  test("targetEncode: loo and outOfFold hand-computed on a two-category, two-fold frame") {
     import graft.operators.TargetEncode
     val df = Seq(
       (1L, "A", 10.0, 0), (2L, "A", 20.0, 0), (3L, "A", 40.0, 1),
@@ -389,16 +389,19 @@ class EvalOpsSpec extends SparkSpec {
     ).toDF("id", "cat", "y", "fold")
     def m(d: org.apache.spark.sql.DataFrame, c: String) =
       d.select("id", c).collect()
-        .map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    val looB = m(TargetEncode.loo(df, Seq("cat"), col("y"), m = 3), "te")
-    val looS = m(TargetEncode.loo(df, Seq("cat"), col("y"), m = 3,
-      broadcastStats = false), "te")
-    assert(looB == looS)
-    val oofB = m(TargetEncode.outOfFold(df, Seq("cat"), col("y"),
-      col("fold"), m = 3), "te_oof")
-    val oofS = m(TargetEncode.outOfFold(df, Seq("cat"), col("y"),
-      col("fold"), m = 3, broadcastStats = false), "te_oof")
-    assert(oofB == oofS)
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // cents: S_A = 7000 (n 3), S_B = 16000 (n 2), S_g = 23000, n_g = 5;
+    // te = ((S − y)·n_g + m·S_g) / ((n − 1 + m)·n_g·100)
+    assert(m(TargetEncode.loo(df, Seq("cat"), col("y"), m = 3), "te") == Map(
+      1L -> 99000.0 / 2500, 2L -> 94000.0 / 2500, 3L -> 84000.0 / 2500,
+      4L -> 99000.0 / 2000, 5L -> 119000.0 / 2000))
+    // fold 0 = {1, 2, 4} (S 13000, n 3), fold 1 = {3, 5} (S 10000, n 2);
+    // te = ((S_c − S_cf)·n_gc + m·S_gc) / ((n_c − n_cf + m)·n_gc·100)
+    // over the complement of the row's fold
+    assert(m(TargetEncode.outOfFold(df, Seq("cat"), col("y"), col("fold"),
+        m = 3), "te_oof") == Map(
+      1L -> 38000.0 / 800, 2L -> 38000.0 / 800, 3L -> 48000.0 / 1500,
+      4L -> 42000.0 / 800, 5L -> 69000.0 / 1200))
   }
 
   // ----------------------------------------------- sorted neighborhood

@@ -1415,10 +1415,8 @@ class LlmSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getAs[Long]("pr12")).toMap
     assert(m2 == Map("a" -> 127500000000L, "b" -> 722500000000L,
       "c" -> 150000000000L))
-    // unknown seed fails loudly in BOTH guard regimes — its teleport mass
-    // would silently vanish otherwise. Lazy (default): the in-plan assert
-    // fires on EVERY execution; eager (reuseFrames): the build action
-    // names the offender.
+    // an unknown seed fails loudly — its teleport mass would silently
+    // vanish otherwise: the in-plan assert fires on EVERY execution
     def chainMsg(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
@@ -1427,11 +1425,6 @@ class LlmSpec extends SparkSpec {
         Seq("zz").toDF("node"), "node", rounds = 1).collect()
     }
     assert(chainMsg(boomLazy).contains("seed"), chainMsg(boomLazy))
-    val boomEager = intercept[IllegalArgumentException] {
-      GraphRank.personalizedPageRank(sym, "src", "dst",
-        Seq("zz").toDF("node"), "node", rounds = 1, reuseFrames = true)
-    }
-    assert(boomEager.getMessage.contains("seed 'zz'"))
   }
 
   test("personalized pagerank: EMPTY seed set is the all-zero degenerate in every regime") {
@@ -1444,42 +1437,30 @@ class LlmSpec extends SparkSpec {
     val sym = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"))
       .toDF("src", "dst")
     val noSeeds = Seq.empty[String].toDF("node")
-    for {
-      reuse <- Seq(false, true); bcast <- Seq(false, true)
-      symm <- Seq(false, true)
-    } {
+    for (symm <- Seq(false, true)) {
       val got = GraphRank.personalizedPageRank(sym, "src", "dst",
-          noSeeds, "node", rounds = 2, reuseFrames = reuse,
-          broadcastRanks = bcast, symmetric = symm)
+          noSeeds, "node", rounds = 2, symmetric = symm)
         .collect().map(r => r.getString(0) -> r.getAs[Long]("pr12")).toMap
-      assert(got == Map("a" -> 0L, "b" -> 0L, "c" -> 0L),
-        s"(reuse=$reuse, bcast=$bcast, symm=$symm): $got")
+      assert(got == Map("a" -> 0L, "b" -> 0L, "c" -> 0L), s"(symm=$symm): $got")
     }
   }
 
-  test("pagerank execution modes agree bit-exactly: reuseFrames × broadcastRanks") {
+  test("pagerank execution modes agree bit-exactly: reuseFrames × symmetric") {
     import spark.implicits._
     val sym = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"))
       .toDF("src", "dst")
     val seedA = Seq("a").toDF("node")
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getAs[Long]("pr12")).toMap
-    val combos = for {
-      reuse <- Seq(false, true); bcast <- Seq(false, true)
-      symm <- Seq(false, true)
-    } yield (reuse, bcast, symm)
-    val prs = combos.map { case (reuse, bcast, symm) =>
-      m(GraphRank.pageRank(sym, "src", "dst", rounds = 2,
-        reuseFrames = reuse, broadcastRanks = bcast, symmetric = symm))
-    }
+    val prs = for (reuse <- Seq(false, true); symm <- Seq(false, true))
+      yield m(GraphRank.pageRank(sym, "src", "dst", rounds = 2,
+        reuseFrames = reuse, symmetric = symm))
     assert(prs.forall(_ == prs.head), s"pageRank modes disagree: $prs")
     assert(prs.head == Map("a" -> 312083333333L, "b" -> 375833333334L,
       "c" -> 312083333333L)) // the hand-computed reference values
-    val pprs = combos.map { case (reuse, bcast, symm) =>
-      m(GraphRank.personalizedPageRank(sym, "src", "dst", seedA, "node",
-        rounds = 2, reuseFrames = reuse, broadcastRanks = bcast,
-        symmetric = symm))
-    }
+    val pprs = for (symm <- Seq(false, true))
+      yield m(GraphRank.personalizedPageRank(sym, "src", "dst", seedA, "node",
+        rounds = 2, symmetric = symm))
     assert(pprs.forall(_ == pprs.head), s"ppr modes disagree: $pprs")
     assert(pprs.head == Map("a" -> 511250000000L, "b" -> 127500000000L,
       "c" -> 361250000000L))

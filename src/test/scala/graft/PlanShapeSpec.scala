@@ -210,7 +210,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"), name)
       assert("BroadcastHashJoin".r.findAllIn(p).nonEmpty, name)
     }
-    // q97 (reuseFrames): rank/edge joins all broadcast — zero sort-merge
+    // q97: rank/edge joins all broadcast — zero sort-merge
     assert(!planOf("q97_pagerank").contains("SortMergeJoin"))
     // q102 (the LAZY single-plan PPR): the only sort-merge joins are
     // sub-|V| — the seed-guard probe (|S| × node frame) and the
@@ -228,6 +228,53 @@ class PlanShapeSpec extends SparkSpec {
       assert("SortMergeJoin".r.findAllIn(p102).length <= 2, p102)
       assert(p102.contains("ReusedExchange"), p102)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("q80/q116/q126/q132/q135/q146/q190: each operator's one regime is in the plan") {
+    // the graph/text operators have ONE execution regime each; these pin
+    // it per caller. Size-based broadcasts are off, so every
+    // BroadcastHashJoin below comes from the operator's own hint, and AQE
+    // is off as in the bench regime (static plan, ReusedExchange visible).
+    val prev = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.enabled").map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    def count(p: String, re: String) = re.r.findAllIn(p).length
+    try {
+      // NaiveBayes: the trained model is cached, and the pivoted model is a
+      // broadcast LEFT probe of the raw token occurrences
+      val p80 = planOf("q80_naive_bayes")
+      assert(p80.contains("InMemoryRelation [label#"), p80)
+      assert(count(p80, "BroadcastHashJoin \\[token#\\d+\\], \\[token#\\d+\\], LeftOuter") == 1, p80)
+      // pairStats: the deduped frame is checkpointed, the item counts
+      // broadcast onto it, and no lazy anti-join is left
+      val p116 = planOf("q116_basket_lift")
+      assert(p116.contains("Scan ExistingRDD[__bk#"), p116)
+      assert(count(p116, "BroadcastHashJoin \\[__it#") == 2, p116)
+      assert(!p116.contains("LeftAnti"), p116)
+      // LinkPredict: both wedge-center legs and both scored endpoints join
+      // the broadcast degree frame
+      val p126 = planOf("q126_link_predict")
+      assert(count(p126, "BroadcastHashJoin \\[(n|a|b)#\\d+L\\]") == 4, p126)
+      // TargetEncode: every stats frame broadcasts; nothing sort-merges
+      val p132 = planOf("q132_target_encode")
+      assert(count(p132, "BroadcastHashJoin .*LeftOuter") == 1, p132)
+      assert(!p132.contains("SortMergeJoin"), p132)
+      val p135 = planOf("q135_oof_target_encode")
+      assert(count(p135, "BroadcastHashJoin .*LeftOuter") == 3, p135)
+      assert(!p135.contains("SortMergeJoin"), p135)
+      // weighted pageRank: broadcast ranks probe the decorated edge frame;
+      // q146 lazy (one pinned __s exchange, no checkpoint), q190 eager
+      val bcastRanks = "BroadcastHashJoin \\[__s#\\d+L?\\], \\[__r#"
+      val p146 = planOf("q146_weighted_pagerank")
+      assert(count(p146, bcastRanks) >= 1, p146)
+      assert(p146.contains("Exchange hashpartitioning(__s#"), p146)
+      assert(!p146.contains("ExistingRDD") && !p146.contains("SortMergeJoin"), p146)
+      val p190 = planOf("q190_textrank")
+      assert(count(p190, bcastRanks) == 1, p190)
+      assert(p190.contains("Scan ExistingRDD[__s#"), p190)
+      assert(!p190.contains("SortMergeJoin"), p190)
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("q121: sessionize lag/run-sum/rollup ride ONE entity exchange") {

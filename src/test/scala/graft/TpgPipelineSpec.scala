@@ -260,17 +260,22 @@ class TpgPipelineSpec extends SparkSpec {
     }
   }
 
-  /** `Fingerprint` digest (n_rows, xor60, sum32) of each `ym` partition. */
-  private def monthDigests(path: String): Map[String, (Long, Long, Long)] = {
+  /** `Fingerprint` digest (n_rows, xor60, sum32) of the rows of each
+    * `group` value, over every column but `ym`. */
+  private def digests(df: org.apache.spark.sql.DataFrame,
+      group: org.apache.spark.sql.Column): Map[String, (Long, Long, Long)] = {
     import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
-    val df = spark.read.parquet(path)
     val cells = df.columns.filter(_ != "ym").sorted.toSeq
       .map(c => coalesce(col(c).cast("string"), lit("\u0000")))
     operators.Fingerprint.datasetFingerprint(
-      df.select(col("ym").cast("string").as("ym"), concat_ws("\u0001", cells: _*).as("row")),
-      Seq("ym"), Seq("row"))
+      df.select(group.cast("string").as("g"), concat_ws("\u0001", cells: _*).as("row")),
+      Seq("g"), Seq("row"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
   }
+
+  /** `Fingerprint` digest of each `ym` partition. */
+  private def monthDigests(path: String): Map[String, (Long, Long, Long)] =
+    digests(spark.read.parquet(path), org.apache.spark.sql.functions.col("ym"))
 
   test("re-ingesting one month leaves every other month's partition untouched") {
     // The shared session leaves partitionOverwriteMode at Spark's static
@@ -299,6 +304,60 @@ class TpgPipelineSpec extends SparkSpec {
       assert(after.get("2024-07") == before.get("2024-07"), s"$name: July changed: $after")
       assert(after("2024-06")._1 == 2L, s"$name: June not replaced: $after")
     }
+  }
+
+  test("re-ingesting part of a weather window keeps every other row") {
+    // S11: a batch replaces only each station's [min,max] window — not the
+    // rest of its month, and no other station's rows
+    import org.apache.spark.sql.functions.{col, lit, when}
+    def weather(station: String, day: String, time: String, temp: String) =
+      s"$station;$day $time;$temp;0.0;10.8;18.0;180;55;1013.2;350;10;12.0"
+    val out = Files.createTempDirectory("graft_window").toString
+    def ingest(rows: Seq[String]): Unit = WeatherIngest.write(WeatherIngest.ingest(spark,
+      Seq(writeTemp("window", (weatherHeader +: rows).mkString("\n")))), out)
+    ingest(for (station <- Seq("GVE", "BER"); day <- Seq("01", "02", "03");
+        time <- Seq("10:00", "10:10")) yield weather(station, s"$day.06.2024", time, "20.0"))
+    def split() = {
+      val df = spark.read.parquet(out)
+      digests(df, when(col("station_id") === "GVE" &&
+        col("ts_utc").cast("date") === lit("2024-06-02").cast("date"), "window")
+        .otherwise("kept"))
+    }
+    val before = split()
+    assert(before("kept")._1 == 10L && before("window")._1 == 2L, before)
+    ingest(Seq(weather("GVE", "02.06.2024", "10:00", "25.0"),
+      weather("GVE", "02.06.2024", "10:10", "26.0")))
+    val after = split()
+    assert(after.get("kept") == before.get("kept"), s"rows outside the window changed: $after")
+    assert(after("window")._1 == 2L && after("window") != before("window"), after)
+    val temps = spark.read.parquet(out).filter(col("station_id") === "GVE" &&
+      col("ts_utc").cast("date") === lit("2024-06-02").cast("date"))
+      .orderBy("ts_utc").collect().map(_.getAs[Double]("temp_c")).toSeq
+    assert(temps == Seq(25.0, 26.0))
+  }
+
+  test("IngestGtfs leaves no extracted archive member behind when its JVM exits") {
+    // the extracted members back lazy DataFrames, so they outlive the
+    // ingest call; the JVM's exit must delete them
+    val tmp = Files.createTempDirectory("graft_tmpdir").toFile
+    val out = Files.createTempDirectory("graft_gtfs_gold").toString
+    val log = File.createTempFile("ingest_gtfs", ".log")
+    log.deleteOnExit()
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).filter(_.startsWith("--add-opens")).toSeq
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvm ++ Seq(
+      "-Xmx1g", s"-Djava.io.tmpdir=$tmp", "-Dspark.ui.enabled=false",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.tpg.IngestGtfs", out, zipOf(utf8(gtfsFeed(): _*): _*))
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    val rc = pb.start().waitFor()
+    def output = Files.readString(log.toPath)
+    assert(rc == 0, output)
+    assert(new File(out, "gtfs_routes").isDirectory, output)
+    val left = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_zip_"))
+    assert(left.isEmpty, s"extraction dirs left in java.io.tmpdir: ${left.mkString(", ")}")
   }
 
   test("Logging: rotating file handler rotates, format matches, setup is idempotent") {
