@@ -120,9 +120,11 @@ object Regime {
     "spark.ui.enabled" -> "false")
 
   /** The session for `settings` (`spark.master` and `spark.app.name`
-    * included), log level WARN. */
+    * included), with the engine's SQL function names ([[GraftExtensions]]),
+    * log level WARN. */
   def session(settings: Map[String, String]): SparkSession = {
-    val spark = SparkSession.builder().config(settings).getOrCreate()
+    val spark = SparkSession.builder().config(settings)
+      .withExtensions(new GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

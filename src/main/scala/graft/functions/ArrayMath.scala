@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -171,29 +172,10 @@ case class SquaredL2(left: Expression, right: Expression) extends ArrayBinaryMat
 }
 
 object ArrayMath {
-  /** Register the functions for SQL + Column access. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "squared_l2", exprs => SquaredL2(exprs(0), exprs(1)), "built-in")
-  }
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 
-  def dot(a: Column, b: Column): Column = {
-    RegisterOnce("array_math")(register)
-    org.apache.spark.sql.functions.call_function("dot_product", a, b)
-  }
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  def cosine(a: Column, b: Column): Column = {
-    RegisterOnce("array_math")(register)
-    org.apache.spark.sql.functions.call_function("cosine_similarity", a, b)
-  }
-
-  def l2sq(a: Column, b: Column): Column = {
-    RegisterOnce("array_math")(register)
-    org.apache.spark.sql.functions.call_function("squared_l2", a, b)
-  }
+  def l2sq(a: Column, b: Column): Column = column(SquaredL2(expression(a), expression(b)))
 }

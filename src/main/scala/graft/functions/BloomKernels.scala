@@ -1,13 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Bloom-filter build + probe as native Catalyst kernels.
   *
@@ -212,31 +212,6 @@ case class BloomMightContainBroadcast(
 
 object BloomSketch {
 
-  /** Register SQL forms: bloom_agg(x, 'numBytes,numHashes'),
-    * bloom_might_contain(sketch, x).
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // same foldable-aware contract as GraftExtensions.litStr
-    def litStr(e: Expression): String = e match {
-      case Literal(v: UTF8String, StringType) => v.toString
-      case f if f.foldable && f.dataType == StringType =>
-        f.eval().asInstanceOf[UTF8String].toString
-      case other => sys.error(s"expected string literal, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => {
-        val Array(nb, k) = litStr(exprs(1)).split(',').map(_.trim.toInt)
-        BloomAgg(Cast(exprs(0), LongType), nb, k)
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   /** Sketch sized for <1% false positives at `expectedItems`: 12 bits per
     * item (the p = 0.01 optimum is ≈9.6; the margin covers estimate error),
     * 7 probes. Size is clamped to the JVM array bound (~256 MB sketch ≈
@@ -250,16 +225,11 @@ object BloomSketch {
     bloomAgg(c, numBytes = bytes.toInt, numHashes = 7)
   }
 
-  def bloomAgg(c: Column, numBytes: Int, numHashes: Int): Column = {
-    RegisterOnce("bloom")(register)
-    org.apache.spark.sql.functions.call_function(
-      "bloom_agg", c, org.apache.spark.sql.functions.lit(s"$numBytes,$numHashes"))
-  }
+  def bloomAgg(c: Column, numBytes: Int, numHashes: Int): Column =
+    column(BloomAgg(Cast(expression(c), LongType), numBytes, numHashes).toAggregateExpression())
 
-  def mightContain(sketch: Column, x: Column): Column = {
-    RegisterOnce("bloom")(register)
-    org.apache.spark.sql.functions.call_function("bloom_might_contain", sketch, x)
-  }
+  def mightContain(sketch: Column, x: Column): Column =
+    column(BloomMightContain(expression(sketch), expression(x)))
 
   /** Probe against a broadcast sketch (the large-sketch path — see
     * [[BloomMightContainBroadcast]]). Bit-identical verdicts to the literal
@@ -267,7 +237,5 @@ object BloomSketch {
     */
   def mightContainBroadcast(
       sketch: org.apache.spark.broadcast.Broadcast[Array[Byte]], x: Column): Column =
-    org.apache.spark.sql.GraftSqlShims.column(
-      BloomMightContainBroadcast(sketch,
-        org.apache.spark.sql.GraftSqlShims.expression(x)))
+    column(BloomMightContainBroadcast(sketch, expression(x)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,17 +115,7 @@ case class EwmaBlockConvolve(first: Expression, second: Expression, third: Expre
 }
 
 object EwmaKernel {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "ewma_block_convolve",
-      exprs => EwmaBlockConvolve(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
   /** `convolve(prev, cur, weights)` as a Column — see [[EwmaBlockConvolve]]. */
-  def convolve(prev: Column, cur: Column, weights: Column): Column = {
-    RegisterOnce("ewma_kernel")(register)
-    org.apache.spark.sql.functions.call_function(
-      "ewma_block_convolve", prev, cur, weights)
-  }
+  def convolve(prev: Column, cur: Column, weights: Column): Column =
+    column(EwmaBlockConvolve(expression(prev), expression(cur), expression(weights)))
 }

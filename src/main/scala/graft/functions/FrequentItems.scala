@@ -5,6 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -155,24 +156,14 @@ object MisraGriesAgg {
     containsNull = false)
 }
 
-/** Column-API + SQL surface for the Misra–Gries sketch. */
+/** Column-API surface for the Misra–Gries sketch (its SQL name
+  * `mg_sketch` comes from [[graft.GraftExtensions]]).
+  */
 object FrequentItems {
 
   /** `mg_sketch(items, capacity)` as a Column aggregate — see
-    * [[MisraGriesAgg]] for guarantees. Registers the SQL function lazily on
-    * the active session (or use [[graft.GraftExtensions]]).
+    * [[MisraGriesAgg]] for guarantees.
     */
-  def mgSketch(item: Column, capacity: Int): Column = {
-    RegisterOnce("mg_sketch") { s =>
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "mg_sketch",
-        exprs => MisraGriesAgg(exprs.head, exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => sys.error(s"mg_sketch capacity must be an int literal, got $other")
-        }),
-        "scala_udf")
-    }
-    org.apache.spark.sql.functions.call_function(
-      "mg_sketch", item, org.apache.spark.sql.functions.lit(capacity))
-  }
+  def mgSketch(item: Column, capacity: Int): Column =
+    column(MisraGriesAgg(expression(item), capacity).toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,16 +63,9 @@ case class HammingDistance(left: Expression, right: Expression)
 
 object HammingDistance {
 
-  /** Register as a SQL-callable function (`SELECT hamming_distance(a, b)`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_distance", exprs => HammingDistance(exprs(0), exprs(1)), "built-in")
-
-  /** Column-API form. Registers on the active session first (the public
-    * Column ↔ Expression bridge in Spark 4 is the function registry).
+  /** Column-API form, built straight from the expression; the SQL name
+    * `hamming_distance` comes from [[graft.GraftExtensions]].
     */
-  def hamming(a: Column, b: Column): Column = {
-    RegisterOnce("hamming_distance")(register)
-    org.apache.spark.sql.functions.call_function("hamming_distance", a, b)
-  }
+  def hamming(a: Column, b: Column): Column =
+    column(HammingDistance(expression(a), expression(b)))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -119,14 +120,7 @@ case class JaroWinklerSim(left: Expression, right: Expression)
 
 object JaroWinklerSim {
 
-  /** Register as a SQL-callable function (`SELECT jaro_winkler(a, b)`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerSim(exprs(0), exprs(1)), "built-in")
-
   /** Column-API form. */
-  def jaroWinkler(a: Column, b: Column): Column = {
-    RegisterOnce("jaro_winkler")(register)
-    org.apache.spark.sql.functions.call_function("jaro_winkler", a, b)
-  }
+  def jaroWinkler(a: Column, b: Column): Column =
+    column(JaroWinklerSim(expression(a), expression(b)))
 }

@@ -2,14 +2,14 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Open-addressing Double→Long count map on two primitive arrays — zero
   * boxing on the per-row hot path (the built-in `Percentile` buffers into a
@@ -96,8 +96,6 @@ final class QuantileBuffer(compactThreshold: Int = 1 << 12) extends Serializable
   private[functions] var map: DoubleCounts = null
   private var compactionFailed = false
 
-  def isMapMode: Boolean = map != null
-
   def addValue(v: Double): Unit = {
     if (map != null) { map.add(v, 1L); return }
     if (n == vals.length) {
@@ -116,11 +114,6 @@ final class QuantileBuffer(compactThreshold: Int = 1 << 12) extends Serializable
     }
     vals = java.util.Arrays.copyOf(vals, math.max(128, n << 1))
   }
-
-  /** Add a key with an explicit count (merge/deserialize path). */
-  def addCount(k: Double, c: Long): Unit =
-    if (c == 1L && map == null) addValue(k)
-    else { toMap(); map.add(k, c) }
 
   /** Force map mode (merging a map-mode sibling in). */
   private[functions] def toMap(): Unit = if (map == null) {
@@ -289,24 +282,6 @@ case class PercentileArray(
 }
 
 object NativeAgg {
-  /** Register the SQL form: percentile_array(col, 'p1,p2,...'). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def litStr(e: Expression): String = e match {
-      case Literal(v: UTF8String, StringType) => v.toString
-      case other => sys.error(s"expected string literal, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "percentile_array",
-      exprs => PercentileArray(
-        Cast(exprs(0), DoubleType),
-        litStr(exprs(1)).split(',').toSeq.map(_.trim.toDouble)),
-      "built-in")
-  }
-
-  def percentileArray(c: Column, ps: Seq[Double]): Column = {
-    RegisterOnce("percentile_array")(register)
-    org.apache.spark.sql.functions.call_function(
-      "percentile_array", c, org.apache.spark.sql.functions.lit(ps.mkString(",")))
-  }
+  def percentileArray(c: Column, ps: Seq[Double]): Column =
+    column(PercentileArray(Cast(expression(c), DoubleType), ps).toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlShims}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -128,8 +129,8 @@ object PqKernels {
     */
   def nearestCode(vec: Column, candidates: Seq[(Int, Seq[Double])],
       offset: Int): Column =
-    GraftSqlShims.column(PqNearestCode(
-      GraftSqlShims.expression(vec),
+    column(PqNearestCode(
+      expression(vec),
       candidates.map(_._2.toArray).toArray,
       candidates.map(_._1).toArray,
       offset))

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -149,49 +150,16 @@ object QgramKernels {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "char_gram_codes",
-      exprs => CharGramCodes(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => sys.error(s"expected int literal q, got $other")
-      }),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_codes_jaccard",
-      exprs => SortedCodesJaccard(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_strings_jaccard",
-      exprs => SortedStringsJaccard(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_strings_intersect",
-      exprs => SortedStringsIntersect(exprs(0), exprs(1)),
-      "built-in")
-  }
+  def charGramCodes(s: Column, q: Int): Column = column(CharGramCodes(expression(s), q))
 
-  def charGramCodes(s: Column, q: Int): Column = {
-    RegisterOnce("qgram")(register)
-    org.apache.spark.sql.functions.call_function(
-      "char_gram_codes", s, org.apache.spark.sql.functions.lit(q))
-  }
+  def sortedCodesJaccard(a: Column, b: Column): Column =
+    column(SortedCodesJaccard(expression(a), expression(b)))
 
-  def sortedCodesJaccard(a: Column, b: Column): Column = {
-    RegisterOnce("qgram")(register)
-    org.apache.spark.sql.functions.call_function("sorted_codes_jaccard", a, b)
-  }
+  def sortedStringsJaccard(a: Column, b: Column): Column =
+    column(SortedStringsJaccard(expression(a), expression(b)))
 
-  def sortedStringsJaccard(a: Column, b: Column): Column = {
-    RegisterOnce("qgram")(register)
-    org.apache.spark.sql.functions.call_function("sorted_strings_jaccard", a, b)
-  }
-
-  def sortedStringsIntersect(a: Column, b: Column): Column = {
-    RegisterOnce("qgram")(register)
-    org.apache.spark.sql.functions.call_function("sorted_strings_intersect", a, b)
-  }
+  def sortedStringsIntersect(a: Column, b: Column): Column =
+    column(SortedStringsIntersect(expression(a), expression(b)))
 }
 
 /** Sorted distinct packed q-gram codes of a string (see [[QgramKernels]]). */

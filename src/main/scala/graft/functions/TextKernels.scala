@@ -2,9 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -315,58 +316,16 @@ case class MinHashXx(child: Expression, numHashes: Int) extends UnaryExpression 
 }
 
 object TextExprs {
-  /** Register SQL forms (int args must be literals). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def litInt(e: Expression): Int = e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => sys.error(s"expected integer literal, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0), litInt(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_slices", exprs => MinHashSlices(exprs(0), litInt(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_xx", exprs => MinHashXx(exprs(0), litInt(exprs(1))), "built-in")
-    def litStr(e: Expression): String = e match {
-      case Literal(v: UTF8String, StringType) => v.toString
-      case f if f.foldable && f.dataType == StringType =>
-        f.eval().asInstanceOf[UTF8String].toString
-      case other => sys.error(s"expected string literal, got $other")
-    }
-    reg.createOrReplaceTempFunction(
-      "marker_counts",
-      exprs => MarkerCounts(exprs(0), litStr(exprs(1)).split('\u0000').toSeq), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs(0)), "built-in")
-  }
+  def wordShingles(text: Column, n: Int): Column = column(WordShingles(expression(text), n))
 
-  def wordShingles(text: Column, n: Int): Column = {
-    RegisterOnce("text_exprs")(register)
-    org.apache.spark.sql.functions.call_function(
-      "word_shingles", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def minhashSlices(shingles: Column, numHashes: Int): Column =
+    column(MinHashSlices(expression(shingles), numHashes))
 
-  def minhashSlices(shingles: Column, numHashes: Int): Column = {
-    RegisterOnce("text_exprs")(register)
-    org.apache.spark.sql.functions.call_function(
-      "minhash_slices", shingles, org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def minhashXx(shingles: Column, numHashes: Int): Column =
+    column(MinHashXx(expression(shingles), numHashes))
 
-  def minhashXx(shingles: Column, numHashes: Int): Column = {
-    RegisterOnce("text_exprs")(register)
-    org.apache.spark.sql.functions.call_function(
-      "minhash_xx", shingles, org.apache.spark.sql.functions.lit(numHashes))
-  }
+  def simhash32(text: Column): Column = column(SimHash32(expression(text)))
 
-  def simhash32(text: Column): Column = {
-    RegisterOnce("text_exprs")(register)
-    org.apache.spark.sql.functions.call_function("simhash32", text)
-  }
-
-  def markerCounts(text: Column, markers: Seq[String]): Column = {
-    RegisterOnce("text_exprs")(register)
-    org.apache.spark.sql.functions.call_function(
-      "marker_counts", text, org.apache.spark.sql.functions.lit(markers.mkString("\u0000")))
-  }
+  def markerCounts(text: Column, markers: Seq[String]): Column =
+    column(MarkerCounts(expression(text), markers))
 }

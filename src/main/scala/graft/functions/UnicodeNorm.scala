@@ -2,7 +2,8 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,21 +73,7 @@ case class UnicodeNormalize(child: Expression, nfkc: Boolean)
 }
 
 object UnicodeNormExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => UnicodeNormalize(exprs(0), nfkc = false), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nfkc_normalize", exprs => UnicodeNormalize(exprs(0), nfkc = true), "built-in")
-  }
+  def nfc(text: Column): Column = column(UnicodeNormalize(expression(text), nfkc = false))
 
-  def nfc(text: Column): Column = {
-    RegisterOnce("unicode_norm")(register)
-    org.apache.spark.sql.functions.call_function("nfc_normalize", text)
-  }
-
-  def nfkc(text: Column): Column = {
-    RegisterOnce("unicode_norm")(register)
-    org.apache.spark.sql.functions.call_function("nfkc_normalize", text)
-  }
+  def nfkc(text: Column): Column = column(UnicodeNormalize(expression(text), nfkc = true))
 }

@@ -48,7 +48,7 @@ object TextAnalysis {
     * replace-length trick — identical left-to-right semantics everywhere).
     */
   def occurrences(text: Column, pattern: String): Column =
-    ((length(text) - length(call_function("replace", text, lit(pattern), lit("")))) / pattern.length)
+    ((length(text) - length(replace(text, lit(pattern), lit("")))) / pattern.length)
       .cast("long")
 
   /** Marker vocabularies for the language-ID heuristic. Padded-space match
@@ -109,7 +109,7 @@ object TextAnalysis {
   }
 
   def avgWordLen(text: Column): Column =
-    length(call_function("replace", text, lit(" "), lit(""))) * lit(1.0) / size(words(text))
+    length(replace(text, lit(" "), lit(""))) * lit(1.0) / size(words(text))
 
   /** Coarse quality bin from length + stopword density (the shape of a
     * heuristic quality scorer; thresholds are illustrative).
@@ -412,7 +412,7 @@ object TextAnalysis {
   def charGrams(s: Column, q: Int): Column =
     array_distinct(transform(
       sequence(lit(1), greatest(length(s) - (q - 1), lit(1))),
-      i => call_function("substr", s, i, lit(q))))
+      i => substr(s, i, lit(q))))
 
   /** Exact Jaccard similarity of two array columns (treated as sets). */
   def jaccardSets(a: Column, b: Column): Column =

@@ -46,7 +46,6 @@ object Anomaly {
       k: Double = 4.0): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(slotCols.nonEmpty, "slotCols must be non-empty")
-    graft.functions.NativeAgg // ensure registration on this session
     val slotted = slotCols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
       .filter(col(valueCol).isNotNull)
     val keys = groupCols ++ slotCols.map(_._1)

@@ -50,11 +50,6 @@ object Dedupe {
       .drop("__rn")
   }
 
-  /** Exact whole-row duplicate elimination (reference `drop_duplicates()`,
-    * `01:160` etc.) — one shuffle on all columns.
-    */
-  def distinctRows(df: DataFrame): DataFrame = df.distinct()
-
   /** Group-wise numeric summarization dedupe: rows sharing `keys` collapse to
     * the exact median of each column in `medianCols` (reference weather dedupe,
     * `03:206-216`; DuckDB MEDIAN is exact → Spark exact `percentile`, not

@@ -68,7 +68,6 @@ object Robust {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     require(0.0 <= pLo && pLo < pHi && pHi <= 1.0,
       "need 0 <= pLo < pHi <= 1")
-    graft.functions.NativeAgg // ensure registration on this session
     val g = groupCols.map(col)
     val v = col(valueCol)
     val bounds = df.filter(v.isNotNull)
@@ -97,7 +96,6 @@ object Robust {
   def robustScale(
       df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
-    graft.functions.NativeAgg // ensure registration on this session
     val g = groupCols.map(col)
     val v = col(valueCol)
     val stats = df.filter(v.isNotNull)
@@ -118,7 +116,6 @@ object Robust {
       df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Double = 3.0): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
-    graft.functions.NativeAgg // ensure registration on this session
     val g = groupCols.map(col)
     val v = col(valueCol)
     val med = df.filter(v.isNotNull)

@@ -211,7 +211,6 @@ object Catalog {
     // partial+final into one aggregate — measured 0.38-0.41s vs 0.28-0.36s;
     // capping the heavy map-build at |groups|=3 tasks loses more than the
     // partial-buffer serialization saves)
-    graft.functions.NativeAgg // ensure registration on this session
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(

@@ -1,37 +1,136 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions._
 import graft.operators.Salt
+
+/** One input frame and every native Column helper over it, shared by the
+  * SQL-name case and the session-independence case.
+  */
+object NativeHelpers {
+
+  /** A 32-byte, 7-probe Bloom sketch holding 1, 2 and 3. */
+  val sketch: Array[Byte] = {
+    val s = new Array[Byte](33)
+    s(0) = 7
+    Seq(1L, 2L, 3L).foreach(BloomKernels.setBits(s, _))
+    s
+  }
+
+  def input(spark: SparkSession): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("t", StringType), StructField("a", StringType), StructField("b", StringType),
+      StructField("n", StringType),
+      StructField("u", ArrayType(DoubleType)), StructField("v", ArrayType(DoubleType)),
+      StructField("s1", ArrayType(StringType)), StructField("s2", ArrayType(StringType)),
+      StructField("prev", ArrayType(LongType)), StructField("cur", ArrayType(LongType)),
+      StructField("bf", BinaryType), StructField("h", LongType), StructField("x", DoubleType)))
+    // every non-ASCII codepoint as a \u escape (see the NFC case below)
+    val rows = Seq(
+      Row("the quick the fox", "martha", "marhta", "Gene\u0301ve", Seq(1.0, 2.0), Seq(3.0, 4.0),
+        Seq("a", "b", "c"), Seq("b", "c", "d"), Seq(1L, 2L), Seq(3L, 4L, 5L), sketch, 2L, 1.0),
+      Row("a b a c a the", "DWAYNE", "DUANE", "\uFB01n de sie\u0300cle", Seq(0.5, -1.0),
+        Seq(2.0, 2.0), Seq("x"), Seq.empty[String], Seq.empty[Long], Seq(5L, 6L), sketch, 99L, 3.0),
+      Row("a a a", "DIXON", "DICKSONX", "\u00e9", Seq(3.0), Seq(1.0), Seq("p", "q"), Seq("q"),
+        Seq(7L), Seq(8L), sketch, 3L, 2.0))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** (SQL name, SQL form, Column helper) of every scalar SQL name. */
+  def scalars: Seq[(String, String, Column)] = Seq(
+    ("hamming_distance", "hamming_distance(a, b)", HammingDistance.hamming(col("a"), col("b"))),
+    ("jaro_winkler", "jaro_winkler(a, b)", JaroWinklerSim.jaroWinkler(col("a"), col("b"))),
+    ("dot_product", "dot_product(u, v)", ArrayMath.dot(col("u"), col("v"))),
+    ("cosine_similarity", "cosine_similarity(u, v)", ArrayMath.cosine(col("u"), col("v"))),
+    ("squared_l2", "squared_l2(u, v)", ArrayMath.l2sq(col("u"), col("v"))),
+    ("word_shingles", "word_shingles(t, 2)", TextExprs.wordShingles(col("t"), 2)),
+    ("minhash_slices", "minhash_slices(word_shingles(t, 2), 4)",
+      TextExprs.minhashSlices(TextExprs.wordShingles(col("t"), 2), 4)),
+    ("minhash_xx", "minhash_xx(word_shingles(t, 2), 4)",
+      TextExprs.minhashXx(TextExprs.wordShingles(col("t"), 2), 4)),
+    ("simhash32", "simhash32(t)", TextExprs.simhash32(col("t"))),
+    ("marker_counts", "marker_counts(t, concat(' the ', chr(0), ' a '))",
+      TextExprs.markerCounts(col("t"), Seq(" the ", " a "))),
+    ("char_gram_codes", "char_gram_codes(a, 3)", QgramKernels.charGramCodes(col("a"), 3)),
+    ("sorted_codes_jaccard", "sorted_codes_jaccard(char_gram_codes(a, 2), char_gram_codes(b, 2))",
+      QgramKernels.sortedCodesJaccard(
+        QgramKernels.charGramCodes(col("a"), 2), QgramKernels.charGramCodes(col("b"), 2))),
+    ("sorted_strings_jaccard", "sorted_strings_jaccard(s1, s2)",
+      QgramKernels.sortedStringsJaccard(col("s1"), col("s2"))),
+    ("sorted_strings_intersect", "sorted_strings_intersect(s1, s2)",
+      QgramKernels.sortedStringsIntersect(col("s1"), col("s2"))),
+    ("nfc_normalize", "nfc_normalize(n)", UnicodeNormExprs.nfc(col("n"))),
+    ("nfkc_normalize", "nfkc_normalize(n)", UnicodeNormExprs.nfkc(col("n"))),
+    ("ewma_block_convolve", "ewma_block_convolve(prev, cur, array(3L, 1L))",
+      EwmaKernel.convolve(col("prev"), col("cur"), typedLit(Seq(3L, 1L)))),
+    ("bloom_might_contain", "bloom_might_contain(bf, h)",
+      BloomSketch.mightContain(col("bf"), col("h"))))
+
+  /** (SQL name, SQL form, Column helper) of every aggregate SQL name. */
+  def aggregates: Seq[(String, String, Column)] = Seq(
+    ("percentile_array", "percentile_array(x, '0.5,1.0')",
+      NativeAgg.percentileArray(col("x"), Seq(0.5, 1.0))),
+    ("bloom_agg", "bloom_agg(h, '256,7')", BloomSketch.bloomAgg(col("h"), 256, 7)),
+    ("mg_sketch", "mg_sketch(t, 2)", FrequentItems.mgSketch(col("t"), 2)))
+
+  /** Every public native Column helper over [[input]]: the scalar row
+    * values, then the one aggregate row. */
+  def values(spark: SparkSession, bc: Broadcast[Array[Byte]]): (Seq[Row], Seq[Row]) = {
+    val df = input(spark)
+    val scalar = scalars.map(_._3) ++ Seq(
+      BloomSketch.mightContainBroadcast(bc, col("h")),
+      PqKernels.nearestCode(col("u"), Seq((4, Seq(1.0)), (2, Seq(0.0))), 0))
+    val agg = aggregates.map(_._3) :+ BloomSketch.bloomAggFor(col("h"), 100)
+    (df.select(scalar: _*).collect().toSeq, df.agg(agg.head, agg.tail: _*).collect().toSeq)
+  }
+}
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("GraftExtensions registers native functions for SQL use") {
-    // a dedicated session so registration comes ONLY from the extension;
-    // clear (not stop) any shared session first — getOrCreate would
-    // otherwise return it and silently skip withExtensions
+  /** A dedicated session built by [[Regime.session]], so its SQL names
+    * come ONLY from the extension it installs; clear (not stop) any shared
+    * session first — getOrCreate would otherwise return it and silently
+    * skip the extension.
+    */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Map(Regime.codegenCache))
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      spark.sparkContext.setLogLevel("WARN")
+    try f(Regime.session(Map(
+      "spark.master" -> "local[2]",
+      "spark.app.name" -> "graft-ext-test",
+      "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      Regime.codegenCache)))
+    finally {
+      // hand the shared session back without stopping the SparkContext
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  test("GraftExtensions registers native functions for SQL use") {
+    withExtensionSession { spark =>
       val row = spark.sql(
         """SELECT hamming_distance('abc', 'abd') AS h,
           |       dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,
           |       cosine_similarity(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS cs,
           |       word_shingles('a b c d', 3) AS sh,
-          |       minhash_slices(word_shingles('a b c d', 3), 8) AS mh
+          |       minhash_slices(word_shingles('a b c d', 3), 8) AS mh,
+          |       jaro_winkler('martha', 'marhta') AS jw
           |""".stripMargin).collect()(0)
       assert(row.getAs[Int]("h") == 1)
       assert(row.getAs[Double]("dp") == 11.0)
@@ -39,6 +138,7 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(row.getSeq[String](3) == Seq("a b c", "b c d"))
       assert(row.getSeq[String](4).length == 8)
       assert(row.getSeq[String](4).forall(_.length == 8))
+      assert(row.getAs[Double]("jw") == 0.9611111111111111)
       val row2 = spark.sql(
         """SELECT simhash32('the quick fox') AS sh,
           |       marker_counts('the quick the fox', concat(' the ', chr(0), ' a ')) AS mc
@@ -77,15 +177,41 @@ class ExtensionsSpec extends AnyFunSuite {
           |""".stripMargin).collect()(0)
       assert(bloom.getAs[Boolean]("hit"))
       assert(!bloom.getAs[Boolean]("miss"))
-    } finally {
-      // hand the shared session back without stopping the SparkContext
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
     }
+  }
+
+  test("every GraftExtensions SQL name resolves and equals its Column helper's value") {
+    withExtensionSession { spark =>
+      val (scalars, aggregates) = (NativeHelpers.scalars, NativeHelpers.aggregates)
+      val names = (scalars ++ aggregates).map(_._1)
+      assert(names.size == 21)
+      assert(names.sorted == GraftExtensions.functions.map(_._1).sorted)
+      val df = NativeHelpers.input(spark)
+      assert(df.selectExpr(scalars.map(_._2): _*).collect().toSeq ==
+        df.select(scalars.map(_._3): _*).collect().toSeq)
+      assert(df.selectExpr(aggregates.map(_._2): _*).collect().toSeq ==
+        df.select(aggregates.map(_._3): _*).collect().toSeq)
+    }
+  }
+}
+
+class NativeHelpersSpec extends SparkSpec {
+
+  test("native Column helpers evaluate on a frame of any session, with or without an active one") {
+    val bc = spark.sparkContext.broadcast(NativeHelpers.sketch)
+    val expected = NativeHelpers.values(spark, bc)
+    // a frame of another session while the suite session is active
+    SparkSession.setActiveSession(spark)
+    assert(NativeHelpers.values(spark.newSession(), bc) == expected)
+    // a thread with no active session at all
+    var inThread: Try[(Seq[Row], Seq[Row])] = null
+    val t = new Thread(() => {
+      SparkSession.clearActiveSession()
+      inThread = Try(NativeHelpers.values(spark.newSession(), bc))
+    })
+    t.start()
+    t.join()
+    assert(inThread.get == expected)
   }
 }
 
@@ -139,19 +265,19 @@ class SquaredL2Spec extends SparkSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(1))))
 
     // length mismatch → null on both forms (zip_with null-pad poisons)
-    val mis = spark.sql(
-      "SELECT squared_l2(array(1.0d, 2.0d), array(1.0d)) AS k").collect()(0)
+    val mis = df.limit(1).select(
+      ArrayMath.l2sq(array(lit(1.0), lit(2.0)), array(lit(1.0))).as("k")).collect()(0)
     assert(mis.isNullAt(0))
     val misF = df.limit(1).select(
       folded(typedLit(Seq(1.0, 2.0)), typedLit(Seq(1.0))).as("f")).collect()(0)
     assert(misF.isNullAt(0))
 
     // null element → null; empty arrays → 0.0; null input → null
-    val edge = spark.sql(
-      """SELECT squared_l2(array(1.0d, cast(null as double)), array(1.0d, 2.0d)) AS ne,
-        |       squared_l2(cast(array() as array<double>), cast(array() as array<double>)) AS empty,
-        |       squared_l2(cast(null as array<double>), array(1.0d)) AS ni
-        |""".stripMargin).collect()(0)
+    val empty = array().cast("array<double>")
+    val edge = df.limit(1).select(
+      ArrayMath.l2sq(array(lit(1.0), lit(null).cast("double")), array(lit(1.0), lit(2.0))).as("ne"),
+      ArrayMath.l2sq(empty, empty).as("empty"),
+      ArrayMath.l2sq(lit(null).cast("array<double>"), array(lit(1.0))).as("ni")).collect()(0)
     assert(edge.isNullAt(0))
     assert(edge.getDouble(1) == 0.0)
     assert(edge.isNullAt(2))

@@ -71,7 +71,7 @@ class MacrosSpec extends SparkSpec {
     assert(got.sameElements(Array(3, 3, 2, 1, 0, 0)))
   }
 
-  test("hamming_distance native expression: eval, codegen span, SQL form") {
+  test("hamming_distance native expression: eval, codegen span") {
     import graft.functions.HammingDistance
     val df = Seq(("10100000", "10011000"), ("1010", "10"))
       .toDF("a", "b")
@@ -81,10 +81,6 @@ class MacrosSpec extends SparkSpec {
     val n = Seq((Option.empty[String], Some("x"))).toDF("a", "b")
       .select(HammingDistance.hamming($"a", $"b").as("d")).collect()(0)
     assert(n.isNullAt(0))
-    // SQL registration path
-    HammingDistance.register(spark)
-    assert(spark.sql("SELECT hamming_distance('abc', 'abd') AS d")
-      .collect()(0).getInt(0) == 1)
     // stays inside whole-stage codegen (LocalRelation would constant-fold,
     // so anchor on a range scan)
     val plan = spark.range(3)
@@ -119,10 +115,6 @@ class MacrosSpec extends SparkSpec {
     val n = Seq((Option.empty[String], Some("x"))).toDF("a", "b")
       .select(JaroWinklerSim.jaroWinkler($"a", $"b").as("jw")).collect()(0)
     assert(n.isNullAt(0))
-    // SQL registration path
-    JaroWinklerSim.register(spark)
-    assert(spark.sql("SELECT jaro_winkler('martha', 'marhta') AS jw")
-      .collect()(0).getDouble(0) == 0.9611111111111111)
     // stays inside whole-stage codegen
     val plan = spark.range(3)
       .select(JaroWinklerSim.jaroWinkler(concat($"id", lit("a")), lit("1a")))

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the session regimes: Verify still plans what it planned before it
-  * shared Bench's regime, `Jobs.session` is unchanged, and no main builds a
-  * session of its own.
+  * shared Bench's regime, `Jobs.session` is unchanged, no main builds a
+  * session of its own, and no library entry point reaches a native function
+  * through the session's function registry.
   */
 class RegimeSpec extends AnyFunSuite {
 
@@ -63,10 +64,19 @@ class RegimeSpec extends AnyFunSuite {
     }
   }
 
-  test("Regime.scala holds the only SparkSession.builder under src/main") {
-    val builders = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && Files.readString(p).contains("SparkSession.builder"))
+  /** The files under src/main whose text contains `word`. */
+  private def holding(word: String): Seq[String] =
+    Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && Files.readString(p).contains(word))
       .map(_.toString).toSeq
-    assert(builders == Seq("src/main/scala/graft/Regime.scala"))
+
+  test("Regime.scala holds the only SparkSession.builder under src/main") {
+    assert(holding("SparkSession.builder") == Seq("src/main/scala/graft/Regime.scala"))
+  }
+
+  test("native functions reach Columns without a function registry; GraftExtensions holds the SQL names") {
+    for (word <- Seq("createOrReplaceTempFunction", "call_function", "RegisterOnce", "getActiveSession"))
+      assert(holding(word).isEmpty, s"$word under src/main")
+    assert(holding("injectFunction") == Seq("src/main/scala/graft/GraftExtensions.scala"))
   }
 }

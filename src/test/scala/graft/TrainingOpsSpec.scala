@@ -174,11 +174,10 @@ class TrainingOpsSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](BloomKernels.mightContain(bad, 42L))
       assert(e.getMessage.contains("bloom_agg"))
     }
-    // and through the SQL-registered form on an executor
-    graft.functions.BloomSketch.register(spark)
+    // and through the Column form on an executor
     val err = intercept[Exception] {
       Seq(1L).toDF("x")
-        .selectExpr("bloom_might_contain(cast('' as binary), x)").collect()
+        .select(graft.functions.BloomSketch.mightContain(lit("").cast("binary"), $"x")).collect()
     }
     assert(err.getMessage != null)
   }
