@@ -65,11 +65,6 @@ object Regime {
       // the barrier most), so the bench defaults it off. Both modes
       // produce identical results.
       "spark.sql.adaptive.enabled" -> e("SPARK_GRAFT_AQE", "false"),
-      // A/B knob: parallelismFirst=false coalesces shuffles to advisory
-      // byte size (fewer, fuller reducers); true (Spark default) holds the
-      // parallelism floor — measured better for CPU-bound small-byte stages.
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        e("SPARK_GRAFT_PARFIRST", "true"),
       // Scan parallelism: each harness parquet file is ONE row group, and a
       // row group is parquet's unit of parallel reading — so without help
       // every scan (and the cached relation built from it) is a single
@@ -100,9 +95,9 @@ object Regime {
     }
 
   def jobs(appName: String, vars: Env): Map[String, String] = {
-    val cpus = vars.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = env("SPARK_GRAFT_CPUS", "32", vars)
     Map(
-      "spark.master" -> vars.getOrElse("SPARK_MASTER", s"local[$cpus]"),
+      "spark.master" -> env("SPARK_MASTER", s"local[$cpus]", vars),
       "spark.app.name" -> appName,
       "spark.sql.shuffle.partitions" -> cpus,
       "spark.sql.session.timeZone" -> "UTC",

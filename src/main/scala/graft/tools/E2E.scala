@@ -4,13 +4,16 @@ import java.io.{File, FileOutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+
+import graft.tpg._
 
 /** One-command END-TO-END pipeline run over generated raw-format inputs —
   * the system-level smoke the per-query bench can't give: GTFS ZIP +
   * semicolon IstDaten daily CSVs + '-'-as-NA weather CSVs are generated in
-  * the reference's RAW formats (FIXTURES.md shapes, scaled up), then the
-  * full chain runs as the CLI mains would drive it:
+  * the reference's RAW formats (FIXTURES.md shapes, scaled up), then
+  * [[graft.tpg.Pipeline.run]] runs the chain (the stages the CLI mains run
+  * one each) into `<workDir>/gold`, and the serving queries read it:
   *
   *   ingest gtfs → ingest istdaten → ingest weather
   *     → build features (ASOF weather join) → by-stop-line aggregate
@@ -38,13 +41,31 @@ object E2E {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_e2e")
     val rowsPerDayK = args.lift(1).map(_.toInt).getOrElse(20)
-    val (_, tGen) = generate(work, days = 30, rowsPerDay = rowsPerDayK * 1000)
-    val spark = graft.tpg.Jobs.session("e2e")
-    val (rows, nServe, total) = pipeline(spark, work)
+    val (inputs, tGen) = generate(work, days = 30, rowsPerDay = rowsPerDayK * 1000)
+    val gold = s"$work/gold"
+    val spark = Jobs.session("e2e")
+    val stages = Pipeline.run(spark, inputs, gold)
+    val t0 = System.nanoTime()
+    val nServe = serve(spark, gold)
+    val times = stages :+ ("serving queries" -> (System.nanoTime() - t0) / 1e9)
+    times.foreach { case (name, dt) => println(f"[e2e] $name%-22s $dt%7.2f s") }
+    val rows = Seq("ist_events", "features", "by_stop_line", "training_rows")
+      .map(t => t -> Pipeline.read(spark, gold, t).count())
     println(f"[e2e] raw-input generation  $tGen%7.2f s (untimed, driver-side)")
-    println(f"[e2e] TOTAL pipeline        $total%7.2f s  " +
+    println(f"[e2e] TOTAL pipeline        ${times.map(_._2).sum}%7.2f s  " +
       rows.map { case (t, n) => s"$t=$n" }.mkString(" ") + s" serve_rows=$nServe")
     spark.stop()
+  }
+
+  /** Runs the serving queries over the gold tables under `gold`; returns
+    * their summed row count. */
+  def serve(spark: SparkSession, gold: String): Long = {
+    def read(t: String) = Pipeline.read(spark, gold, t)
+    val feats = read("features")
+    Serving.latestEvents(read("ist_events")).count() +
+      Serving.missingProfile(feats).count() +
+      FeaturesByStopLine.qc(read("by_stop_line")).count() +
+      FeaturesEvents.qc(feats).count()
   }
 
   /** Generate the three raw-format inputs (GTFS ZIP, per-day semicolon
@@ -53,7 +74,7 @@ object E2E {
     * which Spark cannot emit. Returns the generated input paths and the
     * generation wall time.
     */
-  def generate(work: String, days: Int, rowsPerDay: Int): (RawInputs, Double) = {
+  def generate(work: String, days: Int, rowsPerDay: Int): (Pipeline.Inputs, Double) = {
     new File(work).mkdirs()
 
     // ---------------------------------------------------------- raw inputs
@@ -139,81 +160,6 @@ object E2E {
       Files.writeString(Paths.get(p), sb.toString); p
     }
     val tGen = (System.nanoTime() - t0) / 1e9
-    (RawInputs(gtfsZip, istPaths, wPaths), tGen)
-  }
-
-  /** The generated raw-format input paths under a work dir. */
-  case class RawInputs(
-      gtfsZip: String, istPaths: Seq[String], weatherPaths: Seq[String])
-
-  /** Run the full raw-formats → training-rows chain over inputs previously
-    * written by [[generate]] into `work`, timing each stage. Returns the
-    * gold-table row counts, the serving-query row total, and the summed
-    * pipeline wall time. Testable entry: the capstone spec drives this on
-    * a 1-day × 1k-row corpus with the shared test session.
-    */
-  def pipeline(spark: org.apache.spark.sql.SparkSession, work: String)
-      : (Seq[(String, Long)], Long, Double) = {
-    val gtfsZip = s"$work/gtfs.zip"
-    def listed(dir: String): Seq[String] = {
-      val fs = Option(new File(dir).listFiles())
-        .getOrElse(Array.empty[File])
-      fs.map(_.getAbsolutePath).toSeq.sorted
-    }
-    val istPaths = listed(s"$work/istdaten")
-    val wPaths = listed(s"$work/weather")
-    require(istPaths.nonEmpty && wPaths.nonEmpty,
-      s"pipeline: no generated inputs under $work — run generate() first")
-    def stage[A](name: String)(f: => A): (A, Double) = {
-      val s0 = System.nanoTime(); val a = f
-      val dt = (System.nanoTime() - s0) / 1e9
-      println(f"[e2e] $name%-22s $dt%7.2f s"); (a, dt)
-    }
-    import graft.tpg._
-    val (_, tG) = stage("ingest gtfs") {
-      val (routes, trips, stopTimes, st) = GtfsIngest.ingest(spark, gtfsZip)
-      GtfsIngest.write(routes, s"$work/gold/gtfs_routes")
-      GtfsIngest.write(trips, s"$work/gold/gtfs_trips")
-      GtfsIngest.write(stopTimes, s"$work/gold/gtfs_stop_times")
-      GtfsIngest.write(st, s"$work/gold/gtfs_stops")
-    }
-    val (_, tI) = stage("ingest istdaten") {
-      IstdatenIngest.write(
-        IstdatenIngest.ingest(spark, istPaths), s"$work/gold/ist_events")
-    }
-    val (_, tW) = stage("ingest weather") {
-      WeatherIngest.write(
-        WeatherIngest.ingest(spark, wPaths), s"$work/gold/weather_obs")
-    }
-    val (_, tF) = stage("build features (asof)") {
-      val ev = spark.read.parquet(s"$work/gold/ist_events")
-      val w = spark.read.parquet(s"$work/gold/weather_obs")
-      FeaturesEvents.write(
-        FeaturesEvents.build(ev, w, asof = true), s"$work/gold/features")
-    }
-    val (_, tB) = stage("by-stop-line") {
-      FeaturesEvents.write(
-        FeaturesByStopLine.build(spark.read.parquet(s"$work/gold/features")),
-        s"$work/gold/by_stop_line")
-    }
-    val (_, tT) = stage("training rows") {
-      FeaturesEvents.write(
-        TrainingRow.build(
-          spark.read.parquet(s"$work/gold/features"),
-          spark.read.parquet(s"$work/gold/weather_obs")),
-        s"$work/gold/training_rows")
-    }
-    val (nServe, tS) = stage("serving queries") {
-      val ev = spark.read.parquet(s"$work/gold/ist_events")
-      val feats = spark.read.parquet(s"$work/gold/features")
-      Serving.latestEvents(ev).count() +
-        Serving.missingProfile(feats).count() +
-        FeaturesByStopLine.qc(spark.read.parquet(s"$work/gold/by_stop_line")).count() +
-        FeaturesEvents.qc(feats).count()
-    }
-    val rows = Seq("ist_events", "features", "by_stop_line", "training_rows")
-      .map(t => t -> spark.read.parquet(s"$work/gold/$t").count())
-    val total = tG + tI + tW + tF + tB + tT + tS
-    (rows, nServe, total)
+    (Pipeline.Inputs(gtfsZip, istPaths, wPaths), tGen)
   }
 }

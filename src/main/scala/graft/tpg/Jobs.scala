@@ -3,17 +3,19 @@ package graft.tpg
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry points mirroring the reference's scripts — a user of
-  * `AurelK7/tpg_weather_etl` maps each `python src/NN_*.py` invocation onto
-  * one of these mains:
+  * `AurelK7/tpg_weather_etl` maps each `python src/NN_*.py --db <db>`
+  * invocation onto one of these mains. The gold directory is the first
+  * argument of each, as the reference's `--db` is of each script; every main
+  * runs one [[Pipeline]] stage over it:
   *
-  * | reference                       | here                          |
-  * |---------------------------------|-------------------------------|
-  * | 01_ingest_gtfs.py               | graft.tpg.IngestGtfs          |
-  * | 02_ingest_istdaten.py           | graft.tpg.IngestIstdaten      |
-  * | 03_ingest_weather.py            | graft.tpg.IngestWeather       |
-  * | 10_build_features.py [--asof]   | graft.tpg.BuildFeatures       |
-  * | 11_build_features_by_stop_line  | graft.tpg.BuildByStopLine     |
-  * | 12_* (declared, absent)         | graft.tpg.BuildTrainingRows   |
+  * | reference                      | here (`graft.tpg.`)                            |
+  * |--------------------------------|------------------------------------------------|
+  * | 01_ingest_gtfs.py              | IngestGtfs <gold> <gtfsZip>                    |
+  * | 02_ingest_istdaten.py          | IngestIstdaten <gold> <csv...>                 |
+  * | 03_ingest_weather.py           | IngestWeather <gold> <csv...>                  |
+  * | 10_build_features.py [--asof]  | BuildFeatures <gold> [--asof] [--station-id X] |
+  * | 11_build_features_by_stop_line | BuildByStopLine <gold>                         |
+  * | 12_* (declared, absent)        | BuildTrainingRows <gold>                       |
   *
   * No `--workers`/PRAGMA flags: parallelism is Spark's (per-split scans,
   * `spark.sql.shuffle.partitions`), and the transactional upsert machinery
@@ -22,77 +24,48 @@ import org.apache.spark.sql.SparkSession
 object Jobs {
   def session(appName: String): SparkSession =
     graft.Regime.session(graft.Regime.jobs(appName, sys.env))
-}
 
-object IngestWeather {
-  /** args: <outDir> <csvPathOrGlob...> */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("ingest-weather")
-    WeatherIngest.write(WeatherIngest.ingest(spark, args.drop(1).toSeq), args(0))
-    spark.stop()
-  }
-}
-
-object IngestIstdaten {
-  /** args: <outDir> <csvPathOrGlob...> */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("ingest-istdaten")
-    IstdatenIngest.write(IstdatenIngest.ingest(spark, args.drop(1).toSeq), args(0))
+  /** Runs `f` in a [[session]] named `appName`, then stops it. */
+  def run(appName: String)(f: SparkSession => Unit): Unit = {
+    val spark = session(appName)
+    f(spark)
     spark.stop()
   }
 }
 
 object IngestGtfs {
-  /** args: <outDir> <gtfsZip> */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("ingest-gtfs")
-    val (routes, trips, stopTimes, stops) = GtfsIngest.ingest(spark, args(1))
-    GtfsIngest.write(routes, s"${args(0)}/gtfs_routes")
-    GtfsIngest.write(trips, s"${args(0)}/gtfs_trips")
-    GtfsIngest.write(stopTimes, s"${args(0)}/gtfs_stop_times")
-    GtfsIngest.write(stops, s"${args(0)}/gtfs_stops")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Jobs.run("ingest-gtfs")(Pipeline.gtfs(_, args(0), args(1)))
+}
+
+object IngestIstdaten {
+  def main(args: Array[String]): Unit =
+    Jobs.run("ingest-istdaten")(Pipeline.istdaten(_, args(0), args.drop(1).toSeq))
+}
+
+object IngestWeather {
+  def main(args: Array[String]): Unit =
+    Jobs.run("ingest-weather")(Pipeline.weather(_, args(0), args.drop(1).toSeq))
 }
 
 object BuildFeatures {
-  /** args: <eventsParquet> <weatherParquet> <outDir> [--asof] [--station-id X] */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("build-features")
-    val asof = args.contains("--asof")
-    val station = args.sliding(2).collectFirst {
-      case Array("--station-id", id) => id
-    }
-    val events = spark.read.parquet(args(0))
-    val weather = spark.read.parquet(args(1))
-    val strategy = station
+  def main(args: Array[String]): Unit = Jobs.run("build-features") { spark =>
+    val station = args.sliding(2).collectFirst { case Array("--station-id", id) => id }
+    Pipeline.features(spark, args(0), asof = args.contains("--asof"), strategy = station
       .map(FeaturesEvents.ExplicitStation(_): FeaturesEvents.StationStrategy)
-      .getOrElse(FeaturesEvents.DominantStation)
-    val feats = FeaturesEvents.build(events, weather, strategy, asof)
-    FeaturesEvents.write(feats, args(2))
-    FeaturesEvents.qc(spark.read.parquet(args(2))).show(truncate = false)
-    spark.stop()
+      .getOrElse(FeaturesEvents.DominantStation))
+    FeaturesEvents.qc(Pipeline.read(spark, args(0), "features")).show(truncate = false)
   }
 }
 
 object BuildByStopLine {
-  /** args: <featuresParquet> <outDir> */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("build-by-stop-line")
-    val agg = FeaturesByStopLine.build(spark.read.parquet(args(0)))
-    FeaturesEvents.write(agg, args(1))
-    FeaturesByStopLine.qc(spark.read.parquet(args(1))).show(truncate = false)
-    spark.stop()
+  def main(args: Array[String]): Unit = Jobs.run("build-by-stop-line") { spark =>
+    Pipeline.byStopLine(spark, args(0))
+    FeaturesByStopLine.qc(Pipeline.read(spark, args(0), "by_stop_line")).show(truncate = false)
   }
 }
 
 object BuildTrainingRows {
-  /** args: <featuresParquet> <weatherParquet> <outDir> */
-  def main(args: Array[String]): Unit = {
-    val spark = Jobs.session("build-training-rows")
-    val rows = TrainingRow.build(
-      spark.read.parquet(args(0)), spark.read.parquet(args(1)))
-    FeaturesEvents.write(rows, args(2))
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Jobs.run("build-training-rows")(Pipeline.trainingRows(_, args(0)))
 }

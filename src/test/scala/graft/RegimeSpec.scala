@@ -57,6 +57,14 @@ class RegimeSpec extends AnyFunSuite {
       expected("local[2]", "6"))
   }
 
+  test("jobs: a blank or whitespace-only SPARK_GRAFT_CPUS or SPARK_MASTER counts as unset") {
+    for (blank <- Seq("", " ", "\t ")) {
+      val settings = Regime.jobs("app", Map("SPARK_GRAFT_CPUS" -> blank, "SPARK_MASTER" -> blank))
+      assert(settings("spark.master") == "local[32]", s"'$blank'")
+      assert(settings("spark.sql.shuffle.partitions") == "32", s"'$blank'")
+    }
+  }
+
   test("bench and jobs size the codegen cache to the engine's working set") {
     for (env <- Seq(Map.empty[String, String], Map("SPARK_GRAFT_CPUS" -> "4"))) {
       assert(Regime.bench(env).get("spark.sql.codegen.cache.maxEntries").contains("1024"))

@@ -227,21 +227,23 @@ class TpgPipelineSpec extends SparkSpec {
 
   test("E2E capstone: generated raw formats (GTFS zip + IstDaten + weather CSVs) " +
     "through the full chain to training rows") {
-    // The tools/E2E CLI chain at tiny SF (1 day × 1k events): the same
-    // generate() + pipeline() entries the 600k-row smoke run uses, so the
-    // raw-formats→training-rows path cannot silently break between the
-    // hand-run smokes. Every gold table must land non-empty and the
-    // training rows must carry the label and the ASOF weather features.
+    // The chain at tiny SF (1 day × 1k events): the same generate() and
+    // Pipeline.run the 600k-row smoke run uses, so the raw-formats→training-
+    // rows path cannot silently break between the hand-run smokes. Every
+    // gold table must land non-empty and the training rows must carry the
+    // label and the ASOF weather features.
     val work = java.nio.file.Files.createTempDirectory("graft_e2e_").toString
+    val gold = s"$work/gold"
     val (inputs, _) = tools.E2E.generate(work, days = 1, rowsPerDay = 1000)
     assert(inputs.istPaths.size == 1 && inputs.weatherPaths.size == 2)
-    val (rows, nServe, _) = tools.E2E.pipeline(spark, work)
-    val counts = rows.toMap
-    assert(counts("ist_events") == 1000L, counts.toString)
-    assert(counts("features") == 1000L)
-    assert(counts("by_stop_line") > 0L && counts("training_rows") > 0L)
-    assert(nServe > 0L)
-    val tr = spark.read.parquet(s"$work/gold/training_rows")
+    assert(Pipeline.run(spark, inputs, gold).size == 6)
+    assert(new File(gold).list().toSet == Pipeline.tables.toSet)
+    def count(t: String) = Pipeline.read(spark, gold, t).count()
+    assert(count("ist_events") == 1000L)
+    assert(count("features") == 1000L)
+    assert(count("by_stop_line") > 0L && count("training_rows") > 0L)
+    assert(tools.E2E.serve(spark, gold) > 0L)
+    val tr = Pipeline.read(spark, gold, "training_rows")
     val cols = tr.columns.toSet
     for (c <- Seq("delay_sec", "temp_c", "rain_mm", "med_delay_7d_sec",
         "rain_mm_lag10", "target_late_ge2"))
@@ -254,19 +256,35 @@ class TpgPipelineSpec extends SparkSpec {
         "gtfs_trips" -> Schemas.gtfsTrips, "gtfs_stop_times" -> Schemas.gtfsStopTimes,
         "gtfs_stops" -> Schemas.gtfsStops, "ist_events" -> Schemas.istEvents,
         "weather_obs" -> Schemas.weatherObs)) {
-      val got = spark.read.parquet(s"$work/gold/$table").schema.filter(_.name != "ym")
+      val got = Pipeline.read(spark, gold, table).schema.filter(_.name != "ym")
       assert(got.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType),
         s"$table: $got")
     }
+    // rerun law: the chain run again over the same inputs rewrites the
+    // same gold (training_rows' row_id follows file position)
+    def goldDigests() = Pipeline.tables.map { t =>
+      t -> digests(Pipeline.read(spark, gold, t).drop("row_id"),
+        org.apache.spark.sql.functions.lit(t))(t)
+    }.toMap
+    val first = goldDigests()
+    Pipeline.run(spark, inputs, gold)
+    assert(goldDigests() == first)
   }
 
   /** `Fingerprint` digest (n_rows, xor60, sum32) of the rows of each
-    * `group` value, over every column but `ym`. */
+    * `group` value, over every column but `ym`. Doubles are hashed to ten
+    * significant digits, so summation order cannot change a digest. */
   private def digests(df: org.apache.spark.sql.DataFrame,
       group: org.apache.spark.sql.Column): Map[String, (Long, Long, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
-    val cells = df.columns.filter(_ != "ym").sorted.toSeq
-      .map(c => coalesce(col(c).cast("string"), lit("\u0000")))
+    import org.apache.spark.sql.functions.{coalesce, col, concat_ws, format_string, lit}
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val cells = df.schema.fields.filter(_.name != "ym").sortBy(_.name).toSeq.map { f =>
+      val c = f.dataType match {
+        case DoubleType | FloatType => format_string("%.9e", col(f.name))
+        case _ => col(f.name).cast("string")
+      }
+      coalesce(c, lit("\u0000"))
+    }
     operators.Fingerprint.datasetFingerprint(
       df.select(group.cast("string").as("g"), concat_ws("\u0001", cells: _*).as("row")),
       Seq("g"), Seq("row"))

@@ -6,7 +6,9 @@
 # without reading four tools' CLIs.
 #
 # Usage:
-#   tools/verify_all.sh quick   # ~3 min: compile + oracle gate at sf0.01
+#   tools/verify_all.sh quick   # ~6 min: compile + oracle gate at sf0.01
+#                               #   + the TPG chain (E2E, then the six CLI
+#                               #   mains over its generated inputs)
 #   tools/verify_all.sh full    # ~25 min: sbt test + oracle gates at
 #                               #   sf0.001/0.01/0.1 + det audit + bench
 #                               #   ratio guard at sf0.1
@@ -47,6 +49,16 @@ case "$TIER" in
 quick)
   step "oracle gate @ /root/testdata/sf0.01 (222 queries, Spark vs DuckDB)"
   gate /root/testdata/sf0.01 "$WORK/out_sf001q"
+  step "TPG chain: E2E, then the six CLI mains over its inputs into a second gold dir"
+  e2e="$WORK/e2e" gold="$WORK/gold_cli"
+  rm -rf "$e2e" "$gold"
+  run_main graft.tools.E2E "$e2e" 1
+  run_main graft.tpg.IngestGtfs "$gold" "$e2e/gtfs.zip"
+  run_main graft.tpg.IngestIstdaten "$gold" "$e2e"/istdaten/*.csv
+  run_main graft.tpg.IngestWeather "$gold" "$e2e"/weather/*.csv
+  run_main graft.tpg.BuildFeatures "$gold" --asof
+  run_main graft.tpg.BuildByStopLine "$gold"
+  run_main graft.tpg.BuildTrainingRows "$gold"
   ;;
 full)
   step "sbt test (all suites)"
