@@ -116,11 +116,10 @@ object Regime {
 
   /** The session for `settings` (`spark.master` and `spark.app.name`
     * included), with the engine's SQL function names ([[GraftExtensions]]),
-    * log level WARN. */
-  def session(settings: Map[String, String]): SparkSession = {
-    val spark = SparkSession.builder().config(settings)
+    * log level WARN. The level is set in the builder, so it holds from the
+    * SparkContext's start; only the context's version, OS and Java banner,
+    * logged before any conf applies, precede it. */
+  def session(settings: Map[String, String]): SparkSession =
+    SparkSession.builder().config(settings).config("spark.log.level", "WARN")
       .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -37,15 +37,8 @@ object InvertedIndex {
     * occurrences), `first_doc` (min doc id), and `postings_md5` — md5 of
     * the sorted comma-joined `doc:pos` list (1-based positions), the
     * compact engine-comparable digest of the full posting list.
-    * `withPostings = true` additionally keeps the raw sorted list column
-    * `postings_list` for consumers that want the index itself, not a
-    * digest.
     */
-  def postings(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      withPostings: Boolean = false): DataFrame = {
+  def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = docs.select(
       col(idCol).as("doc"),
       posexplode(TextAnalysis.words(col(textCol))).as(Seq("pos", "term")))
@@ -59,13 +52,10 @@ object InvertedIndex {
     // count(*)) so a NULL-id document's group is excluded, exactly as
     // countDistinct(doc) excluded NULLs in the single-level form
     val sorted = array_sort(flatten(collect_list(col("__pl_d"))))
-    val base = perDoc.groupBy(col("term")).agg(
+    perDoc.groupBy(col("term")).agg(
       count(col("doc")).as("df"),
       sum(col("__cf_d")).as("cf"),
       min(col("doc")).as("first_doc"),
-      (if (withPostings) sorted.as("postings_list") else md5(array_join(sorted, ",")).as("postings_md5")))
-    if (withPostings)
-      base.withColumn("postings_md5", md5(array_join(col("postings_list"), ",")))
-    else base
+      md5(array_join(sorted, ",")).as("postings_md5"))
   }
 }

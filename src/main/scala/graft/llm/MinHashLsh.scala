@@ -124,17 +124,6 @@ object MinHashLsh {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** Exact Jaccard over distinct shingle sets, candidates only.
-    *
-    * Empty-set convention: a pair where BOTH shingle sets are empty (docs
-    * shorter than the shingle size) scores jaccard = 1.0 — two empty
-    * documents are identical. LSH banding never produces such a pair (no
-    * shingles → no band key), so this only matters to callers passing
-    * externally-built pairs.
-    */
-  def jaccardVerify(pairs: DataFrame, sigs: DataFrame): DataFrame =
-    jaccardOnSets(pairs, sigs.select(col("id"), array_distinct(col("shingles")).as("sset")))
-
   /** Exact Jaccard where the shingle sets are rebuilt *behind a semi-join
     * on the candidate ids*: the expensive array materialization happens for
     * colliding documents only — at healthy LSH tuning a small fraction of
@@ -172,7 +161,7 @@ object MinHashLsh {
   // are exact string equality either way); for the empty-vs-empty pair the
   // kernel returns 1.0 where the HOF form's 0/0 division returned NULL —
   // banding can't produce such a pair (no shingles → no band collisions),
-  // but public [[jaccardVerify]]/[[jaccardVerifyDocs]] callers passing
+  // but public [[jaccardVerifyDocs]] callers passing
   // their own pairs should know the convention (two empty sets count as
   // identical, matching SimHash/embedding-dedup semantics).
   // Round-8 matched-session A/B (min-of-5 × 3 interleaved Bench sessions,

@@ -1,337 +1,17 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, processed per-partition in batches.
-  *
-  * The Spark-side design is real and tested: schema, partitioning, batch
-  * iteration, metadata extraction as codegen'd expressions. CONTAINER
-  * METADATA is parsed for real, pure-JVM, for every major format — PNG/JPEG
-  * ([[ImageHeaders]]), WAV/RIFF ([[WavHeaders]]), MP4/ISO-BMFF
-  * ([[Mp4Headers]]) — so dims, sample rates, durations, and frame counts
-  * come off the actual bytes. Only PIXEL/SAMPLE decode (which needs codec
-  * libraries this environment doesn't ship) is stubbed behind
-  * [[FakeDecoder]], and only for payloads no header parser recognizes.
-  * Swap `decodeImage`/`resize` for a real implementation and nothing else
-  * changes.
-  *
-  * Scale notes: binary payloads ride in the same parquet row group as their
-  * metadata; `maxPartitionBytes` bounds per-task memory; decode happens via
-  * `mapPartitions` so any per-batch native context (decoder handles, GPU
-  * sessions) is amortized across the partition, the same shape as
-  * `mapInPandas` batching in PySpark.
+  * with an envelope of metadata computed as plain expressions, the
+  * scan-time pass that runs before any decode would be scheduled. No media
+  * is decoded.
   */
 object Multimodal {
 
-  /** A media row: opaque bytes + envelope metadata. */
-  case class MediaRow(media_id: Long, kind: String, content: Array[Byte])
-
-  /** Decoded media metadata (what a real decoder would return).
-    * Field applicability is per-container: images carry (width, height) and
-    * n_frames = 1; WAV audio carries sample_rate / duration_s and
-    * n_frames = PCM frame count; MP4 video carries (width, height) from
-    * tkhd, duration_s from mvhd, and n_frames = stsz sample count.
-    * Inapplicable fields are 0 / 0.0.
-    */
-  case class MediaMeta(
-      media_id: Long, kind: String, n_bytes: Long,
-      width: Int, height: Int, n_frames: Int,
-      sample_rate: Int, duration_s: Double, sha: String)
-
-  /** Real, pure-JVM image header parsing — no decode libraries needed.
-    * Reads (width, height) straight out of the container header: PNG's IHDR
-    * chunk (first chunk by spec, big-endian dims at bytes 16/20) and JPEG's
-    * SOFn frame segment (scan the marker stream for 0xC0–0xCF excluding
-    * DHT/JPG/DAC, dims at segment offset +5/+7). Anything unrecognized or
-    * truncated returns None and callers fall back to [[FakeDecoder]] (the
-    * audio/video paths, and the test corpus's text-bytes stand-ins).
-    */
-  object ImageHeaders {
-    def dimensions(b: Array[Byte]): Option[(Int, Int)] =
-      if (isPng(b)) pngDims(b)
-      else if (isJpeg(b)) jpegDims(b)
-      else None
-
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def be32(b: Array[Byte], i: Int): Int =
-      (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-
-    private def isPng(b: Array[Byte]): Boolean =
-      b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G' &&
-        u8(b, 4) == 0x0d && u8(b, 5) == 0x0a && u8(b, 6) == 0x1a && u8(b, 7) == 0x0a
-
-    private def pngDims(b: Array[Byte]): Option[(Int, Int)] =
-      // PNG spec: IHDR MUST be the first chunk — type at bytes 12–15,
-      // then width/height as big-endian u32
-      if (b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
-        Some((be32(b, 16), be32(b, 20)))
-      else None
-
-    private def isJpeg(b: Array[Byte]): Boolean =
-      b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8
-
-    private def jpegDims(b: Array[Byte]): Option[(Int, Int)] = {
-      var i = 2
-      while (i + 9 <= b.length) {
-        if (u8(b, i) != 0xff) return None // marker stream desynced
-        val marker = u8(b, i + 1)
-        if (marker == 0xff) i += 1 // fill byte
-        else if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd9)) i += 2 // standalone
-        else {
-          // SOF0–SOF15 carry frame dims; 0xC4/0xC8/0xCC are DHT/JPG/DAC
-          if (marker >= 0xc0 && marker <= 0xcf &&
-              marker != 0xc4 && marker != 0xc8 && marker != 0xcc)
-            return Some((be16(b, i + 7), be16(b, i + 5)))
-          i += 2 + be16(b, i + 2) // skip segment: 2 marker bytes + payload len
-        }
-      }
-      None
-    }
-  }
-
-  /** Real, pure-JVM WAV/RIFF header parsing (same spirit as [[ImageHeaders]]:
-    * container metadata straight off the bytes, no codec libraries). RIFF is
-    * little-endian: "RIFF" + chunk walk; the `fmt ` chunk carries channel
-    * count / sample rate / block align, the `data` chunk's byte length over
-    * block align is the PCM frame count. Chunks are word-aligned (odd sizes
-    * pad one byte). Truncated or non-WAVE input returns None.
-    */
-  object WavHeaders {
-    final case class WavInfo(sampleRate: Int, channels: Int,
-        bitsPerSample: Int, nFrames: Long) {
-      def durationSec: Double =
-        if (sampleRate > 0) nFrames.toDouble / sampleRate else 0.0
-    }
-
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-    private def le32(b: Array[Byte], i: Int): Long =
-      (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16).toLong |
-        (u8(b, i + 3).toLong << 24)) & 0xffffffffL
-    private def fourCC(b: Array[Byte], i: Int): String =
-      new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-    def info(b: Array[Byte]): Option[WavInfo] = {
-      if (b.length < 12 || fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WAVE") return None
-      var i = 12
-      var rate = 0; var channels = 0; var bits = 0; var blockAlign = 0
-      var dataBytes = -1L
-      var walking = true
-      while (walking && i + 8 <= b.length) {
-        val id = fourCC(b, i)
-        val size = le32(b, i + 4)
-        val payload = i + 8
-        // the size >= 16 gate keeps a truncated fmt chunk from silently
-        // reading the NEXT chunk's header bytes as format fields
-        if (id == "fmt " && size >= 16 && payload + 16 <= b.length) {
-          channels = le16(b, payload + 2)
-          rate = le32(b, payload + 4).toInt
-          blockAlign = le16(b, payload + 12)
-          bits = le16(b, payload + 14)
-        } else if (id == "data") {
-          // the data payload may be truncated or absent in a header-only
-          // fixture; the declared size is still the authoritative length
-          dataBytes = size
-        }
-        // progress guard: size is a masked non-negative Long, so `next`
-        // always advances past i — but a corrupt u32 near 2³² would wrap
-        // `toInt` negative and stall or rewind the walk (an executor hang
-        // on crafted input); the Int.MaxValue bound stops it. Declared
-        // sizes are still recorded above; only the WALK stops.
-        val next = payload.toLong + size + (size & 1L) // word alignment
-        if (next > Int.MaxValue) walking = false
-        else i = next.toInt
-      }
-      if (rate > 0 && blockAlign > 0 && dataBytes >= 0)
-        Some(WavInfo(rate, channels, bits, dataBytes / blockAlign))
-      else None
-    }
-  }
-
-  /** Real, pure-JVM MP4 (ISO BMFF) box parsing: big-endian u32 size + fourcc
-    * box walk, recursing through moov → trak → mdia → minf → stbl. Extracts
-    * presentation duration from `mvhd` (duration / timescale, v0 and v1
-    * layouts), track display dims from `tkhd` (16.16 fixed point), and the
-    * frame count from `stsz`'s sample_count. A 64-bit `size == 1` largesize
-    * or `size == 0` (to-end-of-file) box stops the walk conservatively.
-    */
-  object Mp4Headers {
-    final case class Mp4Info(width: Int, height: Int,
-        durationSec: Double, nSamples: Long)
-
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) |
-        u8(b, i + 3)) & 0xffffffffL
-    private def be64(b: Array[Byte], i: Int): Long = (be32(b, i) << 32) | be32(b, i + 4)
-    private def fourCC(b: Array[Byte], i: Int): String =
-      new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-    private final class Acc {
-      var width = 0; var height = 0
-      var durationSec = 0.0; var nSamples = 0L
-      var sawMoov = false
-    }
-    // per-trak sub-accumulator: dims and sample count must come from the
-    // SAME track, or an audio trak preceding the video trak would donate
-    // its (huge) AAC sample count as the video frame count
-    private final class TrakAcc {
-      var width = 0; var height = 0
-      var nSamples = 0L
-    }
-
-    // the container boxes we recurse into on the moov → stbl spine
-    private val containers = Set("moov", "trak", "mdia", "minf", "stbl")
-
-    // the real spine is 5 levels (moov→trak→mdia→minf→stbl); the bound
-    // only exists so a crafted deeply-nested container chain cannot drive
-    // the recursion into a StackOverflowError inside an executor task
-    private val MaxDepth = 8
-
-    private def walk(b: Array[Byte], from: Int, until: Int, acc: Acc,
-        trak: TrakAcc, depth: Int): Unit = {
-      if (depth > MaxDepth) return
-      var i = from
-      while (i + 8 <= until) {
-        val size = be32(b, i)
-        val name = fourCC(b, i + 4)
-        if (size < 8 || i + size > until) return // largesize/EOF box or truncated
-        val payload = i + 8
-        name match {
-          case "trak" =>
-            val sub = new TrakAcc
-            walk(b, payload, i + size.toInt, acc, sub, depth + 1)
-            // first VIDEO trak wins outright (dims + its own sample count);
-            // a dimension-less trak (audio) only donates a provisional
-            // sample count until a video trak shows up
-            if (sub.width > 0 && acc.width == 0) {
-              acc.width = sub.width; acc.height = sub.height
-              acc.nSamples = sub.nSamples
-            } else if (acc.width == 0 && acc.nSamples == 0L) {
-              acc.nSamples = sub.nSamples
-            }
-          case c if containers.contains(c) =>
-            if (c == "moov") acc.sawMoov = true
-            walk(b, payload, i + size.toInt, acc, trak, depth + 1)
-          case "mvhd" if payload + 4 <= until =>
-            val v = u8(b, payload)
-            if (v == 0 && payload + 20 <= until) {
-              val timescale = be32(b, payload + 12)
-              val duration = be32(b, payload + 16)
-              if (timescale > 0) acc.durationSec = duration.toDouble / timescale
-            } else if (v == 1 && payload + 32 <= until) {
-              val timescale = be32(b, payload + 20)
-              val duration = be64(b, payload + 24)
-              if (timescale > 0) acc.durationSec = duration.toDouble / timescale
-            }
-          case "tkhd" if trak != null && payload < until =>
-            val v = u8(b, payload)
-            // width/height close the box: v0 payload offset 76, v1 offset 88
-            val off = if (v == 1) payload + 88 else payload + 76
-            if (off + 8 <= until) {
-              // 16.16 fixed point; display dims keep the integer part
-              val w = (be32(b, off) >> 16).toInt
-              val h = (be32(b, off + 4) >> 16).toInt
-              // an audio trak's tkhd carries 0×0 — keep the first video one
-              if (w > 0 && h > 0 && trak.width == 0) { trak.width = w; trak.height = h }
-            }
-          case "stsz" if trak != null && payload + 12 <= until =>
-            if (trak.nSamples == 0L) trak.nSamples = be32(b, payload + 8)
-          case _ => () // leaf box we don't need
-        }
-        i += size.toInt
-      }
-    }
-
-    def info(b: Array[Byte]): Option[Mp4Info] = {
-      if (b.length < 12) return None
-      // ISO BMFF files open with an ftyp box (styp for segments)
-      val first = fourCC(b, 4)
-      if (first != "ftyp" && first != "styp") return None
-      val acc = new Acc
-      walk(b, 0, b.length, acc, null, 0)
-      if (acc.sawMoov) Some(Mp4Info(acc.width, acc.height, acc.durationSec, acc.nSamples))
-      else None
-    }
-  }
-
-  /** REAL pixel decode/resample for the formats the JVM ships codecs for —
-    * PNG, JPEG, GIF, BMP, WBMP via `javax.imageio` (no external libraries;
-    * works headless). Closes the decode stub for those formats; payloads no
-    * installed reader recognizes still fall back to [[FakeDecoder]], which
-    * is now fallback-only in both senses. One `ImageIO` registry lives per
-    * executor JVM, so the per-partition reader amortizes exactly like the
-    * "decoder context per partition" contract documents.
-    */
-  object JvmDecoder {
-    import java.awt.RenderingHints
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-
-    /** Decoded raster, or None when no installed reader takes the bytes
-      * (corrupt payloads land here too — a decode failure must degrade,
-      * not kill the task).
-      */
-    def decodeImage(bytes: Array[Byte]): Option[BufferedImage] =
-      try Option(ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-      catch { case scala.util.control.NonFatal(_) => None }
-
-    /** Real resample: decode, bilinear-scale to (w, h), re-encode as PNG
-      * (lossless, always-available writer). None when the payload isn't a
-      * decodable image.
-      */
-    def resize(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-      decodeImage(bytes).map { img =>
-        val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        g.setRenderingHint(RenderingHints.KEY_INTERPOLATION,
-          RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(img, 0, 0, w, h, null)
-        g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        ImageIO.write(out, "png", bos)
-        bos.toByteArray
-      }
-  }
-
-  /** STUB decoder — now the UNKNOWN-FORMAT fallback only (the test corpus's
-    * text-bytes payloads and any container [[ImageHeaders]]/[[WavHeaders]]/
-    * [[Mp4Headers]] don't recognize): deterministic fake dimensions derived
-    * from the payload. A real pixel/sample decoder would replace this; all
-    * recognized containers already take the real header path.
-    */
-  object FakeDecoder {
-    def decodeImage(bytes: Array[Byte]): (Int, Int, Int) = {
-      // STUB: real decode unavailable in this environment; deterministic fake:
-      val n = bytes.length
-      val w = 64 + (n % 1216)
-      val h = 64 + ((n * 7) % 656)
-      val frames = if (n % 3 == 0) 1 else 1 + (n % 30)
-      (w, h, frames)
-    }
-
-    /** STUB resample (real one unavailable in this environment):
-      * deterministic fake preserving the real contract — output size ∝
-      * target area, content-derived bytes. Empty input yields the
-      * zero-filled output (a real resampler emits a black canvas).
-      */
-    def resize(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val out = new Array[Byte](math.max(1, (w * h) / 64))
-      if (bytes.nonEmpty) {
-        var i = 0
-        while (i < out.length) { out(i) = bytes(i % bytes.length); i += 1 }
-      }
-      out
-    }
-  }
-
   /** Build a media table from the documents corpus (text bytes stand in for
-    * media payloads — the plumbing under test is schema/partition/batch).
+    * media payloads).
     */
   def fromDocuments(docs: DataFrame): DataFrame =
     docs.select(
@@ -342,8 +22,7 @@ object Multimodal {
       col("text").cast("binary").as("content"))
 
   /** Metadata extraction as pure expressions (no decode): byte length,
-    * content hash, head-of-payload hex — the cheap scan-time envelope pass
-    * that runs *before* any expensive decode is scheduled.
+    * content hash and head-of-payload hex.
     */
   def envelope(media: DataFrame): DataFrame =
     media.select(
@@ -351,116 +30,4 @@ object Multimodal {
       octet_length(col("content")).as("n_bytes"),
       sha2(col("content"), 256).as("content_sha"),
       hex(substring(col("content"), 1, 16)).as("head16"))
-
-  /** One sampled frame of a media payload. */
-  case class Frame(media_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
-
-  /** Frame sampling (video → every-Nth-frame rows): the flatMap shape a
-    * real extractor has — one input row fans out to its sampled frames,
-    * decoder context per partition, per-task memory bounded by
-    * `maxPartitionBytes` on the input side and the sampling rate on the
-    * output side. Frame bytes themselves come from the stub decoder.
-    */
-  def sampleFrames(spark: SparkSession, media: DataFrame, everyN: Int = 10): Dataset[Frame] = {
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("content"))
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          // real frame count when the payload is a recognized MP4 (stsz
-          // sample count); still images are a single frame; only
-          // unrecognized payloads fall back to the stub
-          val frames = Mp4Headers.info(r.content) match {
-            case Some(mp4) => math.min(mp4.nSamples, Int.MaxValue.toLong).toInt
-            case None if ImageHeaders.dimensions(r.content).isDefined => 1
-            case None => FakeDecoder.decodeImage(r.content)._3
-          }
-          (0 until frames by everyN).iterator.map { i =>
-            val len = math.max(1, r.content.length)
-            val start = (i * 17) % len
-            val end = math.min(len, start + 32)
-            Frame(r.media_id, i, java.util.Arrays.copyOfRange(r.content, start, end))
-          }
-        }
-      }
-  }
-
-  /** Batched resize pass (bytes → bytes at target dimensions): REAL
-    * decode + bilinear resample + PNG re-encode via [[JvmDecoder]] for
-    * every payload the JVM's codecs recognize; only unrecognized payloads
-    * take the deterministic fallback.
-    */
-  case class Resized(media_id: Long, width: Int, height: Int, content: Array[Byte])
-  def resizeImages(spark: SparkSession, media: DataFrame, w: Int, h: Int): Dataset[Resized] = {
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("content"))
-      .as[MediaRow]
-      .mapPartitions(rows => rows.map(r =>
-        Resized(r.media_id, w, h,
-          JvmDecoder.resize(r.content, w, h)
-            .getOrElse(FakeDecoder.resize(r.content, w, h)))))
-  }
-
-  /** Feature extraction (the CLIP-encoder slot): a fixed-width float vector
-    * per media row, model session per partition. The stub derives 16
-    * deterministic floats in [-1, 1] from the content digest — identical
-    * payloads get identical vectors, so the output composes directly with
-    * the embedding operators (`Embeddings.lshBucket` / `annTopK` /
-    * `dedupInCells`): decode → embed → ANN dedup is one pipeline.
-    */
-  case class MediaFeatures(media_id: Long, embedding: Array[Float])
-  def extractFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("content"))
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition model session would be initialized here
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-        rows.map { r =>
-          digest.reset()
-          val d = digest.digest(r.content)
-          val vec = Array.tabulate(16)(i =>
-            ((((d(2 * i) & 0xff) << 8) | (d(2 * i + 1) & 0xff)) - 32768) / 32768.0f)
-          MediaFeatures(r.media_id, vec)
-        }
-      }
-  }
-
-  /** Batched decode pass: mapPartitions over the typed Dataset so decoder
-    * state is per-partition, not per-row. Every recognized container takes a
-    * REAL pure-JVM header parse — PNG IHDR / JPEG SOFn ([[ImageHeaders]]),
-    * WAV/RIFF fmt+data ([[WavHeaders]]), MP4 mvhd/tkhd/stsz ([[Mp4Headers]])
-    * — and only unrecognized payloads (the test corpus's text stand-ins)
-    * fall back to the [[FakeDecoder]] stub.
-    */
-  def decodeMeta(spark: SparkSession, media: DataFrame): Dataset[MediaMeta] = {
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("content"))
-      .as[MediaRow]
-      .mapPartitions { rows =>
-        // per-partition decoder context would be initialized here
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-        rows.map { r =>
-          val (w, h, f, rate, dur) = ImageHeaders.dimensions(r.content) match {
-            case Some((pw, ph)) => (pw, ph, 1, 0, 0.0) // still image: one frame
-            case None => WavHeaders.info(r.content) match {
-              case Some(wav) =>
-                val frames = math.min(wav.nFrames, Int.MaxValue.toLong).toInt
-                (0, 0, frames, wav.sampleRate, wav.durationSec)
-              case None => Mp4Headers.info(r.content) match {
-                case Some(mp4) =>
-                  val frames = math.min(mp4.nSamples, Int.MaxValue.toLong).toInt
-                  (mp4.width, mp4.height, frames, 0, mp4.durationSec)
-                case None =>
-                  val (fw, fh, ff) = FakeDecoder.decodeImage(r.content)
-                  (fw, fh, ff, 0, 0.0)
-              }
-            }
-          }
-          digest.reset()
-          val sha = digest.digest(r.content).map("%02x".format(_)).mkString
-          MediaMeta(r.media_id, r.kind, r.content.length.toLong, w, h, f, rate, dur, sha)
-        }
-      }
-  }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -80,29 +80,5 @@ object Sharding {
       .withColumn("pos", col("__off") + col("__rn"))
       .withColumn("shard", ((col("pos") - 1) % numShards).cast("long"))
       .drop("__sk", "__bk", "__rn", "__off")
-  }
-
-  /** The sink end of the shuffle: write `df` as `numShards` JSONL shard
-    * directories (`shard=N/`), each holding its rows in training order —
-    * the layout a data loader streams sequentially per worker. One
-    * shard-keyed exchange co-locates each shard in a single task (so each
-    * directory gets ONE file whose line order IS the training order —
-    * rows are sorted by (shard, pos) within the task before writing);
-    * `pos` is kept in the output as resume metadata. Compression (e.g.
-    * "gzip") trades splittability for size — irrelevant here because the
-    * sharding itself is the parallelism unit.
-    */
-  def writeShards(
-      df: DataFrame,
-      keyCol: String,
-      numShards: Int,
-      outDir: String,
-      salt: String = "shard",
-      compression: Option[String] = None): Unit = {
-    val sharded = shuffleShards(df, keyCol, numShards, salt)
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-    val w = sharded.write.partitionBy("shard").mode("overwrite")
-    compression.fold(w)(c => w.option("compression", c)).json(outDir)
   }
 }

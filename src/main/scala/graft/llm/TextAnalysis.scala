@@ -37,20 +37,6 @@ object TextAnalysis {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** One MinHash value: min over shingles of md5(seed|shingle). md5 is used
-    * as the hash family because it is identical in every engine (and in the
-    * DuckDB oracle) — a production variant would swap in xxhash64.
-    */
-  def minhash(shingles: Column, seed: Int): Column =
-    array_min(transform(shingles, s => md5(concat(lit(s"$seed|"), s))))
-
-  /** Count of non-overlapping occurrences of a literal pattern (the
-    * replace-length trick — identical left-to-right semantics everywhere).
-    */
-  def occurrences(text: Column, pattern: String): Column =
-    ((length(text) - length(replace(text, lit(pattern), lit("")))) / pattern.length)
-      .cast("long")
-
   /** Marker vocabularies for the language-ID heuristic. Padded-space match
     * so only whole words count.
     */
@@ -59,18 +45,6 @@ object TextAnalysis {
     "fr" -> Seq(" le ", " la ", " les "),
     "de" -> Seq(" der ", " und ", " die "),
     "es" -> Seq(" el ", " los ", " una "))
-
-  /** Per-language marker score over ' '-padded lowercased text. */
-  def langScore(text: Column, markers: Seq[String]): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    markers.map(m => occurrences(padded, m)).reduce(_ + _)
-  }
-
-  /** Argmax language with deterministic priority tie-break (catalog order);
-    * all-zero scores → 'und'.
-    */
-  def langId(text: Column): Column =
-    langIdFromScores(langMarkers.map { case (l, ms) => l -> langScore(text, ms) })
 
   /** All 12 language markers flattened in catalog order. */
   val allLangMarkers: Seq[String] = langMarkers.flatMap(_._2)
@@ -91,7 +65,8 @@ object TextAnalysis {
     }
   }
 
-  /** Deterministic argmax over per-language score columns. */
+  /** Deterministic argmax over per-language score columns: ties go to the
+    * earlier language in catalog order, all-zero scores give 'und'. */
   def langIdFromScores(scores: Seq[(String, Column)]): Column = {
     val maxScore = greatest(scores.map(_._2): _*)
     val pick = scores.foldLeft(when(maxScore === 0, "und")) {
@@ -128,18 +103,6 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column =
     array_min(transform(wordShingles(text, 5), s => md5(s)))
-
-  /** Intra-document repetition: 1 − distinct/total word n-gram shingles —
-    * 0 for fully novel text, → 1 as the document degenerates into repeated
-    * boilerplate. The standard corpus-filtering signal for loops/templated
-    * spam; NULL when the document is shorter than one shingle (repetition
-    * is undefined, not zero, on such fragments).
-    */
-  def repetitionRatio(text: Column, n: Int = 3): Column = {
-    val sh = wordShingles(text, n)
-    when(size(sh) > 0,
-      lit(1.0) - size(array_distinct(sh)) * lit(1.0) / size(sh))
-  }
 
   /** Occurrence count of the document's single most frequent word — the
     * numerator of the Gopher-style "fraction of words that are the top

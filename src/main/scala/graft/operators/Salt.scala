@@ -3,45 +3,25 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation: salted joins and salted two-phase aggregation.
+/** Skew mitigation: salted joins.
   *
   * A hash-partitioned join or group-by sends every row of a hot key to one
   * task; at 100 TB one pathological key (a bot user, a default timestamp,
   * an empty-string id) stalls the stage. Salting splits each hot key into
-  * `factor` synthetic sub-keys:
-  *
-  *  - **salted aggregation**: add `salt = crc32(unique) % factor`, aggregate
-  *    on (key, salt) — partial results fan out over `factor` tasks — then
-  *    aggregate again on key. Works for any algebraic aggregate.
-  *  - **salted broadcast-side explode**: for joins, the skewed (big) side
-  *    gets a salt column and the small side is exploded ×`factor` so every
-  *    (key, salt) pair still matches.
+  * `factor` synthetic sub-keys: the skewed (big) side gets a salt column
+  * and the small side is exploded ×`factor` so every (key, salt) pair
+  * still matches.
   *
   * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on by
-  * default here) covers sort-merge joins automatically at runtime; these
-  * helpers are for aggregations and for joins AQE cannot split (e.g.
-  * build-side skew in broadcast scenarios, streaming state).
+  * default here) covers sort-merge joins automatically at runtime; this
+  * helper is for joins AQE cannot split (e.g. build-side skew in broadcast
+  * scenarios, streaming state).
   */
 object Salt {
 
   /** Deterministic salt in [0, factor) from an arbitrary unique column. */
   def saltFrom(unique: Column, factor: Int): Column =
     pmod(crc32(unique.cast("string")), lit(factor)).cast("int")
-
-  /** Two-phase salted aggregation: count/sum per key with the heavy shuffle
-    * fanned out over `factor` sub-keys per key.
-    */
-  def saltedCountSum(
-      df: DataFrame,
-      key: String,
-      uniqueCol: String,
-      sumCol: String,
-      factor: Int = 16): DataFrame =
-    df.withColumn("__salt", saltFrom(col(uniqueCol), factor))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(sumCol)).as("__s"))
-      .groupBy(col(key))
-      .agg(sum("__n").as("n"), sum("__s").as("sum"))
 
   /** Salted equi-join of a skewed big side against a small side: the small
     * side is exploded ×factor (and broadcast), so the big side's salt

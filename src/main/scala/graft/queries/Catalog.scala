@@ -5817,7 +5817,7 @@ object Catalog {
       .transform(ordered("event_type"))
   }
 
-  /** HLL set algebra ([[graft.operators.Hll.mergeSketches]]): union and
+  /** HLL set algebra ([[graft.operators.Hll.sketchTagged]]): union and
     * inclusion–exclusion intersection estimates for the even-doc vs
     * odd-doc token vocabularies per lang, each graded against its exact
     * counterpart — the mergeable-sketch path to "how much vocabulary do

@@ -40,7 +40,8 @@ object Jsonl {
     * column unless the whole frame is cached first (SPARK-21610) — a
     * pinned full-corpus cache is exactly what a 100 TB read must not do.
     * `from_json` carries the same PERMISSIVE + corrupt-column semantics
-    * with no such restriction, so the split below stays a pure scan.
+    * with no such restriction, so filtering on [[CorruptCol]] stays a pure
+    * scan.
     */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     parse(spark.read.textFile(path).toDF("__line"), schema)
@@ -66,19 +67,4 @@ object Jsonl {
       .select(schema.fields.map(f => col("__j").getField(f.name).as(f.name)) :+
         when(col("__j").isNull, col("__line"))
           .otherwise(col("__j").getField(CorruptCol)).as(CorruptCol): _*)
-
-  /** (clean rows without the quarantine column, quarantined raw lines).
-    * The split is by CORRUPTION only — schema-drifted rows (missing
-    * fields → NULLs) stay on the clean side for downstream null-policy
-    * operators to handle. Each side is an independent lazy scan (the
-    * files are read once per materialized side); nothing is pinned in
-    * storage — callers materializing both sides repeatedly should write
-    * the split out once instead of caching a corpus-sized frame.
-    */
-  def readSplit(spark: SparkSession, path: String, schema: StructType): (DataFrame, DataFrame) = {
-    val all = read(spark, path, schema)
-    val clean = all.filter(col(CorruptCol).isNull).drop(CorruptCol)
-    val bad = all.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw_line"))
-    (clean, bad)
-  }
 }

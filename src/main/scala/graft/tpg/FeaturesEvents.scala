@@ -26,10 +26,16 @@ object FeaturesEvents {
   case class MappingTable(mapping: DataFrame) extends StationStrategy
   case object DominantStation extends StationStrategy
 
+  /** The station with the most observations, the smallest id on a tie. An
+    * empty weather table has none: that is an `IllegalArgumentException`,
+    * not a guess. */
   def dominantStation(weather: DataFrame): String =
     weather.groupBy(col("station_id")).count()
       .orderBy(desc("count"), col("station_id"))
-      .limit(1).collect()(0).getString(0)
+      .limit(1).collect().headOption.map(_.getString(0)).getOrElse(
+        throw new IllegalArgumentException("the weather table has no rows, so it has no " +
+          "dominant station; name the station explicitly with --station-id <id> " +
+          "(FeaturesEvents.ExplicitStation)"))
 
   /** The enrichment stage (base filters + C7 coalesce/flags + C5 delays +
     * C6 bin). Exposed separately for testing.

@@ -49,12 +49,37 @@ object IngestWeather {
 }
 
 object BuildFeatures {
-  def main(args: Array[String]): Unit = Jobs.run("build-features") { spark =>
-    val station = args.sliding(2).collectFirst { case Array("--station-id", id) => id }
-    Pipeline.features(spark, args(0), asof = args.contains("--asof"), strategy = station
-      .map(FeaturesEvents.ExplicitStation(_): FeaturesEvents.StationStrategy)
-      .getOrElse(FeaturesEvents.DominantStation))
-    FeaturesEvents.qc(Pipeline.read(spark, args(0), "features")).show(truncate = false)
+  /** `<gold> [--asof] [--station-id <id>]` as (gold, asof, station
+    * strategy): the dominant station unless one is named. Any other
+    * argument, or `--station-id` without an id, is an
+    * `IllegalArgumentException` naming it. */
+  def parse(args: Seq[String]): (String, Boolean, FeaturesEvents.StationStrategy) = {
+    import FeaturesEvents.{DominantStation, ExplicitStation, StationStrategy}
+    def fail(why: String) = throw new IllegalArgumentException(
+      s"$why; usage: BuildFeatures <gold> [--asof] [--station-id <id>]")
+    @scala.annotation.tailrec
+    def flags(rest: List[String], asof: Boolean, station: StationStrategy)
+        : (Boolean, StationStrategy) = rest match {
+      case Nil => (asof, station)
+      case "--asof" :: t => flags(t, asof = true, station)
+      case "--station-id" :: id :: t if !id.startsWith("--") => flags(t, asof, ExplicitStation(id))
+      case "--station-id" :: _ => fail("--station-id needs a station id")
+      case other :: _ => fail(s"unknown argument '$other'")
+    }
+    args.toList match {
+      case gold :: rest if !gold.startsWith("--") =>
+        val (asof, station) = flags(rest, asof = false, DominantStation)
+        (gold, asof, station)
+      case _ => fail("the gold directory comes first")
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (gold, asof, strategy) = parse(args.toSeq)
+    Jobs.run("build-features") { spark =>
+      Pipeline.features(spark, gold, asof, strategy)
+      FeaturesEvents.qc(Pipeline.read(spark, gold, "features")).show(truncate = false)
+    }
   }
 }
 

@@ -69,6 +69,20 @@ class FeaturesSpec extends SparkSpec {
     assert(asof(2).getAs[Double]("temp_c") == 22.0)
   }
 
+  test("empty weather: the dominant-station build names the fix; an explicit station gives NULL weather") {
+    val none = weather.limit(0)
+    for (asof <- Seq(false, true)) {
+      val e = intercept[IllegalArgumentException](
+        FeaturesEvents.build(events, none, FeaturesEvents.DominantStation, asof = asof))
+      assert(e.getMessage.contains("weather table has no rows"), e.getMessage)
+      assert(e.getMessage.contains("--station-id"), e.getMessage)
+      val rows = FeaturesEvents.build(events, none, FeaturesEvents.ExplicitStation("GVE"), asof = asof)
+        .collect()
+      assert(rows.length == 3, s"asof=$asof")
+      assert(rows.forall(r => r.isNullAt(r.fieldIndex("temp_c"))), s"asof=$asof")
+    }
+  }
+
   test("asof staleness edge: exactly 5 min is fresh, beyond is null") {
     val lateEvents = Seq(
       ("g1", "2024-06-01 10:13:00"), // bin 10:10; obs 10:08 → 120 s fresh

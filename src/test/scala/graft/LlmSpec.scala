@@ -18,9 +18,9 @@ class LlmSpec extends SparkSpec {
     val r = docs.filter($"doc_id" === 0)
       .select(
         t.tokenCountWs($"text").as("nws"),
-        t.occurrences(concat(lit(" "), $"text", lit(" ")), " the ").as("nthe"),
+        element_at(t.langMarkerCounts($"text"), 1).as("nthe"), // marker " the "
         t.stopwordRatio($"text").as("swr"),
-        t.langId($"text").as("lang"),
+        t.langIdFromScores(t.langScoresFromCounts(t.langMarkerCounts($"text"))).as("lang"),
         t.fingerprint($"text").as("fp"))
       .collect()(0)
     assert(r.getAs[Int]("nws") == 14)
@@ -79,8 +79,11 @@ class LlmSpec extends SparkSpec {
     val viaKernel = docs.select($"doc_id", t.langMarkerCounts($"text").as("mc"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val padded = concat(lit(" "), lower($"text"), lit(" "))
+    // non-overlapping occurrences by the replace-length identity
+    def occurrences(m: String) =
+      ((length(padded) - length(replace(padded, lit(m), lit("")))) / m.length).cast("long")
     val viaReplace = docs.select(($"doc_id" +: markers.zipWithIndex.map {
-      case (m, i) => t.occurrences(padded, m).as(s"m$i") }): _*)
+      case (m, i) => occurrences(m).as(s"m$i") }): _*)
       .collect().map(r => r.getLong(0) -> markers.indices.map(i => r.getLong(i + 1))).toMap
     assert(viaKernel.view.mapValues(_.toSeq).toMap == viaReplace.view.mapValues(_.toSeq).toMap)
   }
@@ -163,19 +166,6 @@ class LlmSpec extends SparkSpec {
     val plan = Embeddings.dedupInCells(vecs, cents, 0.9)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-  }
-
-  test("repetition ratio: novel 0, repeated boilerplate high, short fragment null") {
-    val t = Seq(
-      (1L, "one two three four five six seven eight"),      // all shingles distinct
-      (2L, "spam spam spam spam spam spam spam spam spam"), // one distinct shingle
-      (3L, "a b"))                                          // shorter than a shingle
-      .toDF("id", "text")
-      .select($"id", TextAnalysis.repetitionRatio($"text").as("rep"))
-      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-    assert(t(1L).contains(0.0))
-    assert(t(2L).exists(_ > 0.8)) // 7 shingles, 1 distinct → 6/7
-    assert(t(3L).isEmpty)
   }
 
   test("cross-corpus decontamination: benchmark overlap found, within-corpus pairs not reported") {
@@ -327,206 +317,16 @@ class LlmSpec extends SparkSpec {
     assert(stats((1, 0L)) == (2L, 200L))
   }
 
-  test("multimodal: frame sampling, resize, features feeding ANN dedup") {
+  test("multimodal: envelope metadata") {
     val media = Multimodal.fromDocuments(docs)
-    // frame sampling fans one row out per sampled frame, deterministically
-    val frames = Multimodal.sampleFrames(spark, media, everyN = 5).collect()
-    assert(frames.nonEmpty && frames.forall(_.frame_bytes.nonEmpty))
-    assert(frames.map(f => (f.media_id, f.frame_idx)).distinct.length == frames.length)
-    // resize emits target-area-proportional payloads
-    val resized = Multimodal.resizeImages(spark, media, 128, 64).collect()
-    assert(resized.forall(r => r.content.length == 128 * 64 / 64))
-    // identical payloads → identical feature vectors → ANN finds the pair
-    val feats = Multimodal.extractFeatures(spark, media)
-      .toDF().withColumnRenamed("media_id", "vec_id")
-    val planes = Embeddings.hyperplanes(4, 16)
-    val pairs = Embeddings.annTopK(feats, planes, 3)
-      .collect().map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"))).toSet
-    assert(pairs.contains((0L, 3L)) && pairs.contains((3L, 0L))) // exact dups collide
-  }
-
-  test("multimodal: envelope metadata + batched stub decode") {
-    val media = Multimodal.fromDocuments(docs.withColumn("doc_id", $"doc_id"))
     val text0 = docs.filter($"doc_id" === 0).collect()(0).getString(1)
     val env = media.transform(Multimodal.envelope).orderBy("media_id").collect()
-    assert(env(0).getAs[String]("kind") == "image") // doc_id 0 % 3
+    assert(env.map(_.getAs[String]("kind")).toSeq == Seq("image", "audio", "video", "image"))
     assert(env(0).getAs[Int]("n_bytes") == text0.getBytes("UTF-8").length)
-    assert(env(0).getAs[String]("content_sha").length == 64)
-    val meta = Multimodal.decodeMeta(spark, media).orderBy("media_id").collect()
-    assert(meta.length == 4)
-    assert(meta(0).n_bytes == text0.length && meta(0).width == 64 + text0.length % 1216)
-    assert(meta(0).sha == env(0).getAs[String]("content_sha")) // expr and mapPartitions agree
-  }
-
-  test("multimodal: REAL pixel decode + resample via JvmDecoder (PNG through the Dataset API)") {
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    // a real 4×2 solid-red PNG, encoded by the JVM's own writer
-    val src = new BufferedImage(4, 2, BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4; y <- 0 until 2) src.setRGB(x, y, 0xFF0000)
-    val bos = new java.io.ByteArrayOutputStream()
-    ImageIO.write(src, "png", bos)
-    val pngBytes = bos.toByteArray
-    // unit: decode returns the true raster; corrupt bytes degrade to None
-    val img = Multimodal.JvmDecoder.decodeImage(pngBytes).get
-    assert(img.getWidth == 4 && img.getHeight == 2)
-    assert(Multimodal.JvmDecoder.decodeImage("not an image".getBytes).isEmpty)
-    // through the Dataset resize pass: output is a REAL 8×4 PNG, still red
-    val media = spark.createDataFrame(Seq((1L, "image", pngBytes)))
-      .toDF("media_id", "kind", "content")
-    val out = Multimodal.resizeImages(spark, media, 8, 4).collect()
-    assert(out.length == 1 && out(0).width == 8 && out(0).height == 4)
-    val decoded = Multimodal.JvmDecoder.decodeImage(out(0).content).get
-    assert(decoded.getWidth == 8 && decoded.getHeight == 4)
-    assert((decoded.getRGB(3, 2) & 0xFFFFFF) == 0xFF0000) // bilinear of solid = solid
-    // non-image payloads still take the deterministic fallback, same schema
-    val fake = Multimodal.resizeImages(spark,
-      spark.createDataFrame(Seq((2L, "image", "plain text".getBytes)))
-        .toDF("media_id", "kind", "content"), 8, 4).collect()
-    assert(fake(0).content.length == math.max(1, 8 * 4 / 64)) // = 1
-  }
-
-  test("multimodal: real PNG/JPEG header decode, stub fallback for the rest") {
-    // a REAL 1×1 transparent PNG (the canonical smallest encoder output)
-    val png = java.util.Base64.getDecoder.decode(
-      "iVBORw0KGgoAAAANSUhEUgAAAAEAAAABCAYAAAAfFcSJAAAADUlEQVR42mNkYPhfDwAChwGA60e6kgAAAABJRU5ErkJggg==")
-    assert(Multimodal.ImageHeaders.dimensions(png).contains((1, 1)))
-    // a minimal JPEG marker stream: SOI, APP0 (skipped by length), SOF0
-    // declaring height=7 width=5
-    val jpeg = Array(
-      0xff, 0xd8,                                     // SOI
-      0xff, 0xe0, 0x00, 0x04, 0x4a, 0x46,             // APP0, len 4
-      0xff, 0xc0, 0x00, 0x0b, 0x08, 0x00, 0x07, 0x00, 0x05, 0x03 // SOF0: h=7 w=5
-    ).map(_.toByte)
-    assert(Multimodal.ImageHeaders.dimensions(jpeg).contains((5, 7)))
-    // DHT (0xC4) before SOF must be skipped, not read as a frame header
-    val jpegDht = Array(
-      0xff, 0xd8,
-      0xff, 0xc4, 0x00, 0x04, 0x00, 0x00,             // DHT, len 4 — not SOF
-      0xff, 0xc2, 0x00, 0x0b, 0x08, 0x00, 0x03, 0x00, 0x09, 0x01 // SOF2: h=3 w=9
-    ).map(_.toByte)
-    assert(Multimodal.ImageHeaders.dimensions(jpegDht).contains((9, 3)))
-    // unrecognized / truncated payloads → None (stub fallback territory)
-    assert(Multimodal.ImageHeaders.dimensions("plain text".getBytes).isEmpty)
-    assert(Multimodal.ImageHeaders.dimensions(png.take(10)).isEmpty)
-    assert(Multimodal.ImageHeaders.dimensions(Array(0xff, 0xd8).map(_.toByte)).isEmpty)
-
-    // through the Spark decode pass: the PNG row reports its TRUE dims while
-    // the text row keeps the deterministic stub's
-    val media = Seq((1L, "image", png), (2L, "image", "not an image".getBytes))
-      .toDF("media_id", "kind", "content")
-    val meta = Multimodal.decodeMeta(spark, media).orderBy("media_id").collect()
-    assert(meta(0).width == 1 && meta(0).height == 1 && meta(0).n_frames == 1)
-    val n = "not an image".getBytes.length
-    assert(meta(1).width == 64 + n % 1216) // stub fallback unchanged
-  }
-
-  test("multimodal: real WAV/RIFF and MP4 header decode") {
-    import java.io.ByteArrayOutputStream
-    def be16(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le32(v: Long) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def cc(s: String) = s.getBytes("US-ASCII")
-
-    // hand-built canonical WAV header: PCM, stereo, 44.1 kHz, 16-bit, and a
-    // `data` chunk declaring 88200 bytes = 22050 frames = 0.5 s (header-only
-    // fixture: the declared size is authoritative, payload absent)
-    val wav = {
-      val o = new ByteArrayOutputStream()
-      o.write(cc("RIFF")); o.write(le32(36 + 88200)); o.write(cc("WAVE"))
-      o.write(cc("fmt ")); o.write(le32(16))
-      o.write(le16(1)); o.write(le16(2))          // PCM, 2 channels
-      o.write(le32(44100)); o.write(le32(176400)) // rate, byte rate
-      o.write(le16(4)); o.write(le16(16))         // block align, bits
-      o.write(cc("data")); o.write(le32(88200))
-      o.toByteArray
-    }
-    val wavInfo = Multimodal.WavHeaders.info(wav)
-    assert(wavInfo.contains(Multimodal.WavHeaders.WavInfo(44100, 2, 16, 22050L)))
-    assert(wavInfo.get.durationSec == 0.5)
-
-    // hand-built minimal MP4: ftyp + moov(mvhd[timescale 1000, duration
-    // 2500] + trak(tkhd[640×360 fixed 16.16] + mdia(minf(stbl(stsz[120])))))
-    val mp4 = {
-      def box(name: String, payload: Array[Byte]): Array[Byte] =
-        be32(8L + payload.length) ++ cc(name) ++ payload
-      val mvhd = box("mvhd", new Array[Byte](12) ++ be32(1000) ++ be32(2500) ++
-        new Array[Byte](80)) // version 0; rest of the v0 payload zeroed
-      val tkhd = box("tkhd", new Array[Byte](76) ++
-        be32(640L << 16) ++ be32(360L << 16))
-      val stsz = box("stsz", new Array[Byte](4) ++ be32(0) ++ be32(120))
-      val trak = box("trak", tkhd ++ box("mdia", box("minf", box("stbl", stsz))))
-      box("ftyp", cc("isom") ++ be32(1)) ++ box("moov", mvhd ++ trak)
-    }
-    val mp4Info = Multimodal.Mp4Headers.info(mp4)
-    assert(mp4Info.contains(Multimodal.Mp4Headers.Mp4Info(640, 360, 2.5, 120L)))
-
-    // negatives: unrecognized and truncated inputs stay None
-    assert(Multimodal.WavHeaders.info("plain text bytes".getBytes).isEmpty)
-    assert(Multimodal.WavHeaders.info(wav.take(10)).isEmpty)
-    assert(Multimodal.Mp4Headers.info("plain text bytes".getBytes).isEmpty)
-    assert(Multimodal.Mp4Headers.info(mp4.take(6)).isEmpty)
-
-    // through the Spark decode pass: each container reports its REAL
-    // metadata; the text payload is the only row on the stub fallback
-    val media = Seq((1L, "audio", wav), (2L, "video", mp4),
-        (3L, "image", "not a container".getBytes))
-      .toDF("media_id", "kind", "content")
-    val meta = Multimodal.decodeMeta(spark, media).orderBy("media_id").collect()
-    assert(meta(0).sample_rate == 44100 && meta(0).duration_s == 0.5 &&
-      meta(0).n_frames == 22050 && meta(0).width == 0)
-    assert(meta(1).width == 640 && meta(1).height == 360 &&
-      meta(1).n_frames == 120 && meta(1).duration_s == 2.5 && meta(1).sample_rate == 0)
-    assert(meta(2).sample_rate == 0 && meta(2).duration_s == 0.0 &&
-      meta(2).width == 64 + "not a container".getBytes.length % 1216)
-
-    // frame sampling reads the MP4's true stsz count: 120 frames @ every
-    // 30th → indices 0, 30, 60, 90
-    val frames = Multimodal.sampleFrames(spark, media.filter($"media_id" === 2L), everyN = 30)
-      .collect().map(_.frame_idx).sorted
-    assert(frames.toSeq == Seq(0, 30, 60, 90))
-  }
-
-  test("multimodal: MP4 parser track-awareness and malformed-input hardening") {
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def cc(s: String) = s.getBytes("US-ASCII")
-    def box(name: String, payload: Array[Byte]): Array[Byte] =
-      be32(8L + payload.length) ++ cc(name) ++ payload
-    val ftyp = box("ftyp", cc("isom") ++ be32(1))
-    def stszOf(n: Long) = box("stsz", new Array[Byte](4) ++ be32(0) ++ be32(n))
-    def trakOf(dims: Option[(Int, Int)], samples: Long) = {
-      val tkhd = box("tkhd", new Array[Byte](76) ++ (dims match {
-        case Some((w, h)) => be32(w.toLong << 16) ++ be32(h.toLong << 16)
-        case None         => be32(0) ++ be32(0) // audio trak: 0×0 dims
-      }))
-      box("trak", tkhd ++ box("mdia", box("minf", box("stbl", stszOf(samples)))))
-    }
-
-    // audio trak FIRST: its 430k-sample stsz must not become the video
-    // frame count — dims and samples must come from the same (video) trak
-    val audioFirst = ftyp ++ box("moov",
-      trakOf(None, 430000L) ++ trakOf(Some((640, 360)), 300L))
-    assert(Multimodal.Mp4Headers.info(audioFirst)
-      .contains(Multimodal.Mp4Headers.Mp4Info(640, 360, 0.0, 300L)))
-    // audio-only file: the audio trak's count is the honest frame count
-    val audioOnly = ftyp ++ box("moov", trakOf(None, 430000L))
-    assert(Multimodal.Mp4Headers.info(audioOnly).get.nSamples == 430000L)
-
-    // header-only tkhd box ending exactly at the buffer end: must parse
-    // (to None-ish fields), never throw reading the version byte
-    val bareTkhd = ftyp ++ box("moov", box("trak", be32(8) ++ cc("tkhd")))
-    assert(Multimodal.Mp4Headers.info(bareTkhd).isDefined) // sawMoov, no dims
-
-    // a crafted deeply-nested container chain must terminate promptly
-    // (depth bound), not drive the recursive walk into a stack overflow
-    val depth = 5000
-    val innermost = stszOf(7L)
-    val nested = (1 to depth).foldLeft(innermost)((inner, _) => box("moov", inner))
-    assert(Multimodal.Mp4Headers.info(ftyp ++ nested).isDefined)
+    val sha0 = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text0.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(env(0).getAs[String]("content_sha") == sha0)
+    assert(env(3).getAs[String]("content_sha") == sha0) // doc 3 is doc 0's exact dup
   }
 
   test("chunking: full coverage, overlap, and the short-doc single chunk") {

@@ -376,6 +376,30 @@ class TpgPipelineSpec extends SparkSpec {
     assert(new File(out, "gtfs_routes").isDirectory, output)
     val left = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_zip_"))
     assert(left.isEmpty, s"extraction dirs left in java.io.tmpdir: ${left.mkString(", ")}")
+    // the session logs at WARN from the start: the only INFO lines are the
+    // SparkContext's version, OS and Java banner, logged before any conf
+    val info = output.linesIterator.filter(_.contains(" INFO ")).toSeq
+    val banner = info.filter(_.matches(
+      ".* INFO SparkContext: (Running Spark version|OS info|Java version) .*"))
+    assert(banner.size == 3 && info == banner, info.mkString("\n"))
+  }
+
+  test("BuildFeatures: the gold directory, then only --asof and --station-id <id>") {
+    import FeaturesEvents.{DominantStation, ExplicitStation}
+    assert(BuildFeatures.parse(Seq("g")) == (("g", false, DominantStation)))
+    assert(BuildFeatures.parse(Seq("g", "--asof")) == (("g", true, DominantStation)))
+    assert(BuildFeatures.parse(Seq("g", "--station-id", "GVE", "--asof")) ==
+      (("g", true, ExplicitStation("GVE"))))
+    for ((args, named) <- Seq(
+        Seq("g", "--station-id") -> "--station-id",
+        Seq("g", "--station-id", "--asof") -> "--station-id",
+        Seq("g", "--staton-id", "GVE") -> "--staton-id",
+        Seq("g", "--asof", "extra") -> "extra",
+        Seq("--asof", "g") -> "gold directory",
+        Seq.empty[String] -> "gold directory")) {
+      val e = intercept[IllegalArgumentException](BuildFeatures.parse(args))
+      assert(e.getMessage.contains(named), s"$args: ${e.getMessage}")
+    }
   }
 
   test("Logging: rotating file handler rotates, format matches, setup is idempotent") {

@@ -68,23 +68,26 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("inverted index: df, cf, and 1-based positions") {
     val docs = Seq((10L, "x y x"), (2L, "y z")).toDF("doc_id", "text")
-    val idx = InvertedIndex.postings(docs, "doc_id", "text", withPostings = true)
+    val idx = InvertedIndex.postings(docs, "doc_id", "text")
       .orderBy("term").collect()
     val byTerm = idx.map(r => r.getAs[String]("term") -> r).toMap
 
     assert(byTerm("x").getAs[Long]("df") == 1L)
     assert(byTerm("x").getAs[Long]("cf") == 2L)
     assert(byTerm("x").getAs[Long]("first_doc") == 10L)
-    assert(byTerm("x").getAs[scala.collection.Seq[String]]("postings_list").toSeq == Seq("10:1", "10:3"))
+    // postings_md5 digests the sorted comma-joined `doc:pos` list
+    def md5Of(postings: String*) = java.security.MessageDigest.getInstance("MD5")
+      .digest(postings.mkString(",").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(byTerm("x").getAs[String]("postings_md5") == md5Of("10:1", "10:3"))
 
     assert(byTerm("y").getAs[Long]("df") == 2L)
     assert(byTerm("y").getAs[Long]("cf") == 2L)
     assert(byTerm("y").getAs[Long]("first_doc") == 2L)
     // lexicographic posting order is the deterministic contract
-    assert(byTerm("y").getAs[scala.collection.Seq[String]]("postings_list").toSeq == Seq("10:2", "2:1"))
+    assert(byTerm("y").getAs[String]("postings_md5") == md5Of("10:2", "2:1"))
 
     assert(byTerm("z").getAs[Long]("cf") == 1L)
-    assert(byTerm("z").getAs[scala.collection.Seq[String]]("postings_list").toSeq == Seq("2:2"))
+    assert(byTerm("z").getAs[String]("postings_md5") == md5Of("2:2"))
   }
 
   test("mixing: copy counts realize the weights; zero-weight drops; copy_ix enumerates") {
@@ -292,42 +295,21 @@ class TrainingOpsSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType)))
-    val (clean, bad) = graft.sources.Jsonl.readSplit(spark, dir.getAbsolutePath, schema)
+    import graft.sources.Jsonl
+    val all = Jsonl.read(spark, dir.getAbsolutePath, schema)
+    val corrupt = col(Jsonl.CorruptCol).isNotNull
 
-    val cleanRows = clean.orderBy("doc_id").collect()
+    val cleanRows = all.filter(!corrupt).orderBy("doc_id").collect()
     assert(cleanRows.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 2L, 4L))
     assert(cleanRows(1).isNullAt(cleanRows(1).fieldIndex("lang"))) // drift → NULL
     assert(cleanRows(2).getAs[String]("text") == "gzipped")        // .gz read transparently
 
-    val badRows = bad.collect().map(_.getAs[String]("raw_line"))
+    val badRows = all.filter(corrupt).collect().map(_.getAs[String](Jsonl.CorruptCol))
     assert(badRows.length == 3)
     assert(badRows.exists(_.contains("truncated")) && badRows.contains("not json at all"))
     // the `null` literal is quarantined as its raw line — previously it
     // parsed to a NULL struct and masqueraded as a clean all-NULL row
     assert(badRows.contains("null"))
-  }
-
-  test("shard write: one file per shard, line order is training order") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("shards").toString
-    val df = (0 until 300).map(i => (i.toLong, s"doc $i")).toDF("k", "text")
-    Sharding.writeShards(df, "k", numShards = 4, outDir = dir)
-
-    val expected = Sharding.shuffleShards(df, "k", 4)
-      .select("shard", "pos", "k").collect()
-      .groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq).toMap
-
-    (0 until 4).foreach { s =>
-      val files = Files.list(Paths.get(dir, s"shard=$s")).iterator().asScala
-        .filter(_.toString.endsWith(".json")).toSeq
-      assert(files.size == 1, s"shard $s should be exactly one file, got ${files.size}")
-      // line order in the file must be ascending pos = training order
-      val ks = Files.readAllLines(files.head).asScala
-        .map(l => """"k":(\d+)""".r.findFirstMatchIn(l).get.group(1).toLong).toSeq
-      assert(ks == expected(s.toLong), s"shard $s out of training order")
-    }
   }
 
   test("q-gram kernel ≡ declarative charGrams+jaccardSets, bit-exact") {
