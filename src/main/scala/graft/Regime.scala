@@ -55,7 +55,7 @@ object Regime {
       // over runtime sizing.
       "spark.sql.shuffle.partitions" -> e("SPARK_GRAFT_SHUFFLE", "8"),
       "spark.sql.session.timeZone" -> "UTC",
-      // AQE is ON everywhere else in the engine (Jobs, streaming, tests):
+      // AQE is ON everywhere else in the engine (Jobs, tests):
       // at cluster scale its runtime re-planning (skew joins, partition
       // coalescing) is essential. In this benchmark regime — hundreds of MB
       // per query, sub-second stages — its per-stage materialize-and-

@@ -256,10 +256,7 @@ object Drift {
     * fixed-width projection, not a pivot), then Laplace-smoothed
     * `p_i = (c_i+1)/(n+bins)` against the baseline literal `b_i`, each
     * term floored at scale 8 and summed in a fixed Scala-ordered
-    * expression — exact longs, engine-identical, and STREAM-SAFE (the
-    * same aggregate runs under a watermarked time window;
-    * [[graft.streaming.Streaming.psiMonitor]] reuses these exact
-    * expressions, making batch ≡ stream a law).
+    * expression — exact longs, engine-identical.
     *
     * Out-of-range values clamp into the edge bins (a monitor must count
     * tail excursions, not drop them).
@@ -417,9 +414,7 @@ object Drift {
     * the drift terms), so the whole scan is two cumulative windows over
     * one group partitioning. NO-RESTART semantics by contract: the
     * statistic keeps accumulating past h and the FIRST crossing per
-    * (group, direction) is reported — exactly the semantics the
-    * streaming twin ([[graft.streaming.Streaming.cusumMonitor]]) holds
-    * in O(1) state, which is what makes the batch ≡ stream law exact.
+    * (group, direction) is reported.
     *
     * Exactness: μ, k, h and the values fix-point at scale 4, so S, the
     * running min, g and the ≥ h compare are all exact LONG arithmetic —

@@ -52,10 +52,6 @@ object Redaction {
       s"n_$name" -> regexp_count(text, lit(re)).cast("long")
     }
 
-  /** Total hits of all classes — the document-level density numerator. */
-  def piiTotal(text: Column): Column =
-    piiCounts(text).map(_._2).reduce(_ + _)
-
   // ------------------------------------------------------------ SQL twins
   // (DuckDB RE2: regexp_replace needs the 'g' flag for global semantics,
   // which is Spark's default; counting is len(regexp_extract_all).)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on by
   * default here) covers sort-merge joins automatically at runtime; this
   * helper is for joins AQE cannot split (e.g. build-side skew in broadcast
-  * scenarios, streaming state).
+  * scenarios).
   */
 object Salt {
 

@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
   * Overflow contract (the [[graft.llm.Drift.cusum]] discipline): the
   * numerator is LONG arithmetic bounded by `Σw_j·max|v4| < 10⁸/α·|v|·10⁴`,
   * so |value| must stay under ~10⁶·α (≈ 2.7·10⁶ at α = 0.3) — pre-scale
-  * wider-ranged metrics before smoothing. The same bound governs the
-  * streaming ring in [[graft.streaming.Streaming.ewmaMonitor]].
+  * wider-ranged metrics before smoothing.
   *
   * Plan: no sequential scan and no self-join — rows collapse into
   * length-K blocks (one array per (group, block)), each block reads its

@@ -884,8 +884,7 @@ object Catalog {
       .transform(ordered("fingerprint"))
   }
 
-  /** C6 via the native `window()` tumbling operator (vs q08's manual floor —
-    * this is the form that carries over verbatim to Structured Streaming).
+  /** C6 via the native `window()` tumbling operator (vs q08's manual floor).
     */
   val q30 = q(
     "q30_tumbling_window",
@@ -1251,10 +1250,10 @@ object Catalog {
   /** Session windows (gap-based): per-user sessions close after 30 idle
     * minutes. Spark's `session_window` merges an event into the previous
     * session when its gap is ≤ the threshold — INCLUSIVE at exactly the
-    * gap duration (verified empirically in StreamingSpec's boundary test) —
-    * so the gaps-and-islands oracle breaks strictly on gap > 30 min,
-    * session key = running break count. The same `session_window` call is
-    * the streaming form (see streaming/Streaming) — shared semantics.
+    * gap duration (EvalOpsSpec "sessionize law: session count ≡
+    * session_window on boundary-landing data": a 30:00 gap merges, 30:01
+    * splits) — so the gaps-and-islands oracle breaks strictly on gap > 30
+    * min, session key = running break count.
     */
   val q45 = q(
     "q45_session_window",
@@ -5026,9 +5025,7 @@ object Catalog {
     * sequential decision rule over each event type's value stream
     * (μ = 45, k = 2.5, h = 100) — WHERE does the monitor first fire,
     * per direction. No-restart semantics via the running-minimum
-    * identity, all exact scale-4 longs, no division anywhere; the
-    * streaming twin ([[graft.streaming.Streaming.cusumMonitor]]) holds
-    * the identical statistic in O(1) per-key state (law-tested).
+    * identity, all exact scale-4 longs, no division anywhere.
     */
   val q144 = q(
     "q144_cusum_alarms",
@@ -5900,10 +5897,8 @@ object Catalog {
 
   /** PSI vs a frozen baseline per (event_type, day)
     * ([[graft.llm.Drift.psiAgainstBaseline]]): uniform-baseline PSI over
-    * static [0,100) bins — the one-aggregate, stream-deployable PSI form
-    * (q139 bins over the data's own min/max and needs two passes; this
-    * is the monitor shape [[graft.streaming.Streaming.psiMonitor]] runs
-    * under a watermark, law-tested batch ≡ stream). Out-of-range values
+    * static [0,100) bins — the one-aggregate PSI form (q139 bins over
+    * the data's own min/max and needs two passes). Out-of-range values
     * clamp into edge bins.
     */
   val q163 = q(

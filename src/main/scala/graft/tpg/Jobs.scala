@@ -31,21 +31,53 @@ object Jobs {
     f(spark)
     spark.stop()
   }
+
+  /** An `IllegalArgumentException` saying `why`, then the main's `usage`
+    * line; each main raises it from its `parse`, before any session starts. */
+  private[tpg] def usageError(why: String, usage: String): Nothing =
+    throw new IllegalArgumentException(s"$why; usage: $usage")
+
+  private[tpg] def wrongCount(args: Seq[String], usage: String): Nothing =
+    usageError(s"wrong number of arguments (${args.size})", usage)
 }
 
 object IngestGtfs {
-  def main(args: Array[String]): Unit =
-    Jobs.run("ingest-gtfs")(Pipeline.gtfs(_, args(0), args(1)))
+  /** `<gold> <gtfsZip>`; any other argument count is a usage error. */
+  def parse(args: Seq[String]): (String, String) = args match {
+    case Seq(gold, zip) => (gold, zip)
+    case _ => Jobs.wrongCount(args, "IngestGtfs <gold> <gtfsZip>")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (gold, zip) = parse(args.toSeq)
+    Jobs.run("ingest-gtfs")(Pipeline.gtfs(_, gold, zip))
+  }
 }
 
 object IngestIstdaten {
-  def main(args: Array[String]): Unit =
-    Jobs.run("ingest-istdaten")(Pipeline.istdaten(_, args(0), args.drop(1).toSeq))
+  /** `<gold> <csv...>`, at least one CSV; anything shorter is a usage error. */
+  def parse(args: Seq[String]): (String, Seq[String]) = args match {
+    case gold +: csvs if csvs.nonEmpty => (gold, csvs)
+    case _ => Jobs.wrongCount(args, "IngestIstdaten <gold> <csv...>")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (gold, csvs) = parse(args.toSeq)
+    Jobs.run("ingest-istdaten")(Pipeline.istdaten(_, gold, csvs))
+  }
 }
 
 object IngestWeather {
-  def main(args: Array[String]): Unit =
-    Jobs.run("ingest-weather")(Pipeline.weather(_, args(0), args.drop(1).toSeq))
+  /** `<gold> <csv...>`, at least one CSV; anything shorter is a usage error. */
+  def parse(args: Seq[String]): (String, Seq[String]) = args match {
+    case gold +: csvs if csvs.nonEmpty => (gold, csvs)
+    case _ => Jobs.wrongCount(args, "IngestWeather <gold> <csv...>")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (gold, csvs) = parse(args.toSeq)
+    Jobs.run("ingest-weather")(Pipeline.weather(_, gold, csvs))
+  }
 }
 
 object BuildFeatures {
@@ -55,8 +87,7 @@ object BuildFeatures {
     * `IllegalArgumentException` naming it. */
   def parse(args: Seq[String]): (String, Boolean, FeaturesEvents.StationStrategy) = {
     import FeaturesEvents.{DominantStation, ExplicitStation, StationStrategy}
-    def fail(why: String) = throw new IllegalArgumentException(
-      s"$why; usage: BuildFeatures <gold> [--asof] [--station-id <id>]")
+    def fail(why: String) = Jobs.usageError(why, "BuildFeatures <gold> [--asof] [--station-id <id>]")
     @scala.annotation.tailrec
     def flags(rest: List[String], asof: Boolean, station: StationStrategy)
         : (Boolean, StationStrategy) = rest match {
@@ -84,13 +115,30 @@ object BuildFeatures {
 }
 
 object BuildByStopLine {
-  def main(args: Array[String]): Unit = Jobs.run("build-by-stop-line") { spark =>
-    Pipeline.byStopLine(spark, args(0))
-    FeaturesByStopLine.qc(Pipeline.read(spark, args(0), "by_stop_line")).show(truncate = false)
+  /** `<gold>` alone; any other argument count is a usage error. */
+  def parse(args: Seq[String]): String = args match {
+    case Seq(gold) => gold
+    case _ => Jobs.wrongCount(args, "BuildByStopLine <gold>")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val gold = parse(args.toSeq)
+    Jobs.run("build-by-stop-line") { spark =>
+      Pipeline.byStopLine(spark, gold)
+      FeaturesByStopLine.qc(Pipeline.read(spark, gold, "by_stop_line")).show(truncate = false)
+    }
   }
 }
 
 object BuildTrainingRows {
-  def main(args: Array[String]): Unit =
-    Jobs.run("build-training-rows")(Pipeline.trainingRows(_, args(0)))
+  /** `<gold>` alone; any other argument count is a usage error. */
+  def parse(args: Seq[String]): String = args match {
+    case Seq(gold) => gold
+    case _ => Jobs.wrongCount(args, "BuildTrainingRows <gold>")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val gold = parse(args.toSeq)
+    Jobs.run("build-training-rows")(Pipeline.trainingRows(_, gold))
+  }
 }

@@ -574,6 +574,16 @@ class EvalOpsSpec extends SparkSpec {
       ("g", 5.0, true), ("g", 5.0, false)).toDF("g", "v", "a")
     assert(Drift.psi(same, Seq("g"), col("v"), col("a"), bins = 2)
       .collect().head.getAs[Long]("psi8") == 0L)
+    // against a frozen (0.5, 0.5) baseline over [0, 10): group w1 = {1, 9}
+    // is balanced (psi8 0); w2 = {1, 1, 2} gives p = (4/5, 1/5)
+    val windows = Seq(("w1", 1.0), ("w1", 9.0), ("w2", 1.0), ("w2", 1.0), ("w2", 2.0))
+      .toDF("w", "v")
+    val byWindow = Drift.psiAgainstBaseline(windows, Seq("w"), col("v"),
+        mn = 0.0, mx = 10.0, bins = 2, baseline = Seq(0.5, 0.5))
+      .collect().map(r => r.getString(0) -> (r.getAs[Long]("n"), r.getAs[Long]("psi8"))).toMap
+    val b0 = math.floor((0.8 - 0.5) * math.log(0.8 / 0.5) * 1e8 + 0.5).toLong
+    val b1 = math.floor((0.2 - 0.5) * math.log(0.2 / 0.5) * 1e8 + 0.5).toLong
+    assert(byWindow == Map("w1" -> ((2L, 0L)), "w2" -> ((3L, b0 + b1))))
   }
 
   // --------------------------------------------------------- hellinger
@@ -629,6 +639,16 @@ class EvalOpsSpec extends SparkSpec {
       tieCols = Seq(col("t"))).collect().head
     assert(f.getAs[Long]("d_peak") == 0L && f.getAs[Long]("cp_idx") == 1L)
     assert(f.getAs[Double]("cusum") == 0.0)
+    // Page's alarms, μ = 10, k = 0, h = 5 over v = [13, 9, 14, 20, 0, 0]:
+    // g⁺ = 3, 2, 6 first crosses at i = 3 (and is not re-reported at 16);
+    // g⁻ = 0, 1, 0, 0, 10 first crosses at i = 5
+    val drift = Seq(13.0, 9.0, 14.0, 20.0, 0.0, 0.0).zipWithIndex
+      .map { case (v, i) => ("g", i + 1L, v) }.toDF("g", "t", "v")
+    val alarms = Drift.cusumAlarms(drift, Seq("g"), col("t"), col("v"),
+        tieCols = Seq(col("t")), refMean = 10.0, slack = 0.0, threshold = 5.0)
+      .collect().map(r => (r.getAs[String]("direction"), r.getAs[Long]("alarm_idx"),
+        r.getAs[Long]("alarm_order"), r.getAs[Long]("stat4"))).toSet
+    assert(alarms == Set(("up", 3L, 3L, 60000L), ("down", 5L, 5L, 100000L)))
   }
 
   // ------------------------------------------------------- cohen kappa

@@ -90,9 +90,74 @@ class RegimeSpec extends AnyFunSuite {
   }
 
   /** Code text of a source file: block and line comments blanked, so a
-    * name mentioned only in documentation counts as unreached. */
-  private def code(p: java.nio.file.Path): String =
-    Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", "")
+    * name mentioned only in documentation counts as unreached. Scala
+    * sources also lose the text of their string literals (a function that
+    * names itself in its own error message is not reached by that), keeping
+    * the `$name` and `${…}` parts of interpolated ones; tool scripts name
+    * classes in strings on purpose, so theirs stay. */
+  private def code(p: java.nio.file.Path): String = {
+    val text = Files.readString(p)
+    if (p.toString.endsWith(".scala")) scalaCode(text)
+    else text.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", "")
+  }
+
+  /** `src` with comments, character literals and string-literal text blanked. */
+  private def scalaCode(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(j: Int) = if (j < src.length) src.charAt(j) else '\u0000'
+    def identChar(c: Char) = c.isLetterOrDigit || c == '_'
+    // Code up to the end of `src`, or past the `}` that closes a `${` splice.
+    def lexCode(inSplice: Boolean): Unit = {
+      var depth = 0
+      while (i < src.length) {
+        val c = src.charAt(i)
+        if (src.startsWith("//", i)) while (i < src.length && src.charAt(i) != '\n') i += 1
+        else if (src.startsWith("/*", i)) {
+          val end = src.indexOf("*/", i + 2)
+          i = if (end < 0) src.length else end + 2
+          out += ' '
+        } else if (c == '"') lexString(interpolated = i > 0 && identChar(src.charAt(i - 1)))
+        else if (c == '\'' && at(i + 1) == '\\') { i = src.indexOf('\'', i + 3) + 1; out += ' ' }
+        else if (c == '\'' && at(i + 2) == '\'') { i += 3; out += ' ' }
+        else {
+          if (c == '{') depth += 1
+          if (c == '}' && inSplice && depth == 0) { i += 1; return }
+          if (c == '}') depth -= 1
+          out += c
+          i += 1
+        }
+      }
+    }
+    def lexString(interpolated: Boolean): Unit = {
+      val triple = src.startsWith("\"\"\"", i)
+      i += (if (triple) 3 else 1)
+      out += ' '
+      var open = true
+      while (open && i < src.length) {
+        val c = src.charAt(i)
+        if (triple && src.startsWith("\"\"\"", i)) {
+          i += 3
+          while (at(i) == '"') i += 1
+          open = false
+        } else if (!triple && c == '"') { i += 1; open = false }
+        else if (!triple && c == '\\') i += 2
+        else if (interpolated && c == '$' && at(i + 1) == '{') {
+          i += 2
+          out += ' '
+          lexCode(inSplice = true)
+          out += ' '
+        } else if (interpolated && c == '$' && at(i + 1) != '$') {
+          i += 1
+          out += ' '
+          while (i < src.length && identChar(src.charAt(i))) { out += src.charAt(i); i += 1 }
+          out += ' '
+        } else i += (if (interpolated && c == '$') 2 else 1)
+      }
+    }
+    lexCode(inSplice = false)
+    out.toString
+  }
 
   private def sources(dir: String, exts: String*): Seq[java.nio.file.Path] =
     Files.walk(Paths.get(dir)).iterator().asScala
@@ -126,22 +191,10 @@ class RegimeSpec extends AnyFunSuite {
   /** Public definitions kept although nothing in the engine, its tools or
     * the benchmark names them, each with the reason. */
   private val keptUnreached: Map[String, String] = {
-    val streaming = "Structured Streaming jobs, called only by their specs; " +
-      "kept until the chain gets a streaming caller or the module is deleted"
     val kernelReference = "declarative form the specs check a compiled kernel against"
     val pinnedOperator = "operator with a spec of its own and no caller yet; " +
       "deleting it also deletes that spec"
     Map(
-      "Streaming" -> streaming,
-      "Streaming.binAgg" -> streaming,
-      "Streaming.nearDupCandidates" -> streaming,
-      "Streaming.nearDupCandidatesTtl" -> streaming,
-      "Streaming.scd2Closed" -> streaming,
-      "Streaming.psiMonitor" -> streaming,
-      "Streaming.sessionAgg" -> streaming,
-      "Jsonl" -> ("read/readStream, the JSONL quarantine source the streaming " +
-        "specs read through; kept with Streaming"),
-      "Redaction.piiTotal" -> "called only by the streaming specs; kept with Streaming",
       "Embeddings.invalidateQuantizers" -> "memo-reset hook the specs call between sessions",
       "ProductQuant.invalidateBooks" -> "memo-reset hook the specs call between sessions",
       "Logging" -> ("the reference's utils_logging.py analog; its caller is the chain's " +

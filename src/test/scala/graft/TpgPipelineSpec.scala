@@ -385,19 +385,44 @@ class TpgPipelineSpec extends SparkSpec {
   }
 
   test("BuildFeatures: the gold directory, then only --asof and --station-id <id>") {
+    // every CLI main checks its arguments in `parse`, before its session starts
     import FeaturesEvents.{DominantStation, ExplicitStation}
-    assert(BuildFeatures.parse(Seq("g")) == (("g", false, DominantStation)))
-    assert(BuildFeatures.parse(Seq("g", "--asof")) == (("g", true, DominantStation)))
-    assert(BuildFeatures.parse(Seq("g", "--station-id", "GVE", "--asof")) ==
-      (("g", true, ExplicitStation("GVE"))))
-    for ((args, named) <- Seq(
-        Seq("g", "--station-id") -> "--station-id",
-        Seq("g", "--station-id", "--asof") -> "--station-id",
-        Seq("g", "--staton-id", "GVE") -> "--staton-id",
-        Seq("g", "--asof", "extra") -> "extra",
-        Seq("--asof", "g") -> "gold directory",
-        Seq.empty[String] -> "gold directory")) {
-      val e = intercept[IllegalArgumentException](BuildFeatures.parse(args))
+    type Parse = Seq[String] => Any
+    for ((parse, args, parsed) <- Seq[(Parse, Seq[String], Any)](
+        (BuildFeatures.parse, Seq("g"), ("g", false, DominantStation)),
+        (BuildFeatures.parse, Seq("g", "--asof"), ("g", true, DominantStation)),
+        (BuildFeatures.parse, Seq("g", "--station-id", "GVE", "--asof"),
+          ("g", true, ExplicitStation("GVE"))),
+        (IngestGtfs.parse, Seq("g", "feed.zip"), ("g", "feed.zip")),
+        (IngestIstdaten.parse, Seq("g", "a.csv", "b.csv"), ("g", Seq("a.csv", "b.csv"))),
+        (IngestWeather.parse, Seq("g", "w.csv"), ("g", Seq("w.csv"))),
+        (BuildByStopLine.parse, Seq("g"), "g"),
+        (BuildTrainingRows.parse, Seq("g"), "g")))
+      assert(parse(args) == parsed, s"$args")
+    val gtfs = "usage: IngestGtfs <gold> <gtfsZip>"
+    val istdaten = "usage: IngestIstdaten <gold> <csv...>"
+    val weather = "usage: IngestWeather <gold> <csv...>"
+    val byStopLine = "usage: BuildByStopLine <gold>"
+    val trainingRows = "usage: BuildTrainingRows <gold>"
+    for ((parse, args, named) <- Seq[(Parse, Seq[String], String)](
+        (BuildFeatures.parse, Seq("g", "--station-id"), "--station-id"),
+        (BuildFeatures.parse, Seq("g", "--station-id", "--asof"), "--station-id"),
+        (BuildFeatures.parse, Seq("g", "--staton-id", "GVE"), "--staton-id"),
+        (BuildFeatures.parse, Seq("g", "--asof", "extra"), "extra"),
+        (BuildFeatures.parse, Seq("--asof", "g"), "gold directory"),
+        (BuildFeatures.parse, Seq.empty, "gold directory"),
+        (IngestGtfs.parse, Seq.empty, gtfs),
+        (IngestGtfs.parse, Seq("g"), gtfs),
+        (IngestGtfs.parse, Seq("g", "feed.zip", "extra"), gtfs),
+        (IngestIstdaten.parse, Seq.empty, istdaten),
+        (IngestIstdaten.parse, Seq("g"), istdaten),
+        (IngestWeather.parse, Seq.empty, weather),
+        (IngestWeather.parse, Seq("g"), weather),
+        (BuildByStopLine.parse, Seq.empty, byStopLine),
+        (BuildByStopLine.parse, Seq("g", "extra"), byStopLine),
+        (BuildTrainingRows.parse, Seq.empty, trainingRows),
+        (BuildTrainingRows.parse, Seq("g", "extra"), trainingRows))) {
+      val e = intercept[IllegalArgumentException](parse(args))
       assert(e.getMessage.contains(named), s"$args: ${e.getMessage}")
     }
   }

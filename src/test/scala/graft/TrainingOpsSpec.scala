@@ -276,42 +276,6 @@ class TrainingOpsSpec extends SparkSpec {
     assert(sims.sorted.reverse.toSeq == sims.toSeq)
   }
 
-  test("jsonl ingestion: corrupt lines quarantined whole, schema drift stays clean, gz transparent") {
-    import java.nio.file.Files
-    import java.util.zip.GZIPOutputStream
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("jsonl").toFile
-    val lines = Seq(
-      """{"doc_id": 1, "text": "good line", "lang": "en"}""",
-      """{"doc_id": 2, "text": "drifted line"}""",          // missing field → NULL, stays clean
-      """{"doc_id": 3, "text": "truncated""",               // corrupt JSON
-      """not json at all""",
-      """null""")          // JSON literal null: a NULL struct, not a clean row
-    Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      lines.mkString("\n").getBytes("UTF-8"))
-    val gz = new GZIPOutputStream(new java.io.FileOutputStream(new java.io.File(dir, "part-1.jsonl.gz")))
-    gz.write("""{"doc_id": 4, "text": "gzipped", "lang": "de"}""".getBytes("UTF-8")); gz.close()
-
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType)))
-    import graft.sources.Jsonl
-    val all = Jsonl.read(spark, dir.getAbsolutePath, schema)
-    val corrupt = col(Jsonl.CorruptCol).isNotNull
-
-    val cleanRows = all.filter(!corrupt).orderBy("doc_id").collect()
-    assert(cleanRows.map(_.getAs[Long]("doc_id")).toSeq == Seq(1L, 2L, 4L))
-    assert(cleanRows(1).isNullAt(cleanRows(1).fieldIndex("lang"))) // drift → NULL
-    assert(cleanRows(2).getAs[String]("text") == "gzipped")        // .gz read transparently
-
-    val badRows = all.filter(corrupt).collect().map(_.getAs[String](Jsonl.CorruptCol))
-    assert(badRows.length == 3)
-    assert(badRows.exists(_.contains("truncated")) && badRows.contains("not json at all"))
-    // the `null` literal is quarantined as its raw line — previously it
-    // parsed to a NULL struct and masqueraded as a clean all-NULL row
-    assert(badRows.contains("null"))
-  }
-
   test("q-gram kernel ≡ declarative charGrams+jaccardSets, bit-exact") {
     import graft.functions.QgramKernels
     val strs = Seq("", "a", "ab", "aa", "abcabc", "spark native engine",
