@@ -26,7 +26,11 @@ object Regime {
     * compile plus fresh JIT work again. Measured on a 4-core VM:
     *  - working sets: the perfbench `catalog_mix` set-up plus one pass (five
     *    catalog queries) compiles 152 distinct classes; a `pipeline_batch`
-    *    pass plus its checks compiles 272;
+    *    pass plus its checks compiles 272. These counts include repeats: the
+    *    cache keys a class on the compiling thread's class loader as well as
+    *    its source, so a whole-stage class the driver compiles to check its
+    *    size is compiled again in an executor task thread (67 of 264
+    *    compiles in one cold chain pass with its serving reads);
     *  - at 100 entries every `catalog_mix` pass recompiled 77–138 classes,
     *    and HotSpot JIT was 69% of the pass's CPU (16.9 of 24.5 CPU-s);
     *  - heap: a retained class keeps about 30 KB (172 extra retained

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native vector math over `array<double>` columns — tier-(b) custom
   * Catalyst expressions. The `zip_with` + `aggregate` formulation is
   * interpreted (per-element lambda dispatch through NamedLambdaVariable);
-  * these compile to a tight primitive loop inside whole-stage codegen.
+  * these run one compiled primitive loop per row ([[ArrayKernels]]), which
+  * whole-stage codegen calls like `eval` does.
   * Element order is ascending-index (fold-left), matching both the
   * interpreted formulation and DuckDB's list functions — results are
   * bit-identical to what they replace.
@@ -34,35 +35,11 @@ abstract class ArrayBinaryMath extends BinaryExpression {
 case class DotProduct(left: Expression, right: Expression) extends ArrayBinaryMath {
   override def prettyName: String = "dot_product"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArrayKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $acc += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.ArrayKernels.dot($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -72,43 +49,12 @@ case class DotProduct(left: Expression, right: Expression) extends ArrayBinaryMa
 case class CosineSimilarity(left: Expression, right: Expression) extends ArrayBinaryMath {
   override def prettyName: String = "cosine_similarity"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) {
-        val xv = x.getDouble(i); val yv = y.getDouble(i)
-        dot += xv * yv; na += xv * xv; nb += yv * yv
-      }
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArrayKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    double $xv = $a.getDouble($i); double $yv = $b.getDouble($i);
-         |    $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |  }
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.ArrayKernels.cosine($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -124,51 +70,76 @@ case class CosineSimilarity(left: Expression, right: Expression) extends ArrayBi
   * yield NULL here, never a silently-partial distance. Ascending-index
   * accumulation from 0.0 — bit-identical IEEE sequence to the fold and
   * to the DuckDB twins' ordered `list_sum(list_transform(...))`.
+  *
+  * Generated code hands the kernel a one-slot buffer that lives in the
+  * generated class, so a row allocates nothing.
   */
 case class SquaredL2(left: Expression, right: Expression) extends ArrayBinaryMath {
   override def prettyName: String = "squared_l2"
   override def nullable: Boolean = true
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (y.numElements() != n) return null
+    val out = new Array[Double](1)
+    if (ArrayKernels.squaredL2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], out)) out(0)
+    else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val out = ctx.addMutableState("double[]", "l2sq", v => s"$v = new double[1];")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.ArrayKernels.squaredL2($a, $b, $out); " +
+        s"${ev.value} = $out[0];")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The loops of [[DotProduct]], [[CosineSimilarity]] and [[SquaredL2]]:
+  * interpreted `eval` and generated code both call these. */
+object ArrayKernels {
+
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += d * d
+      if (!x.isNullAt(i) && !y.isNullAt(i)) acc += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $d = $a.getDouble($i) - $b.getDouble($i);
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i)) {
+        val xv = x.getDouble(i); val yv = y.getDouble(i)
+        dot += xv * yv; na += xv * xv; nb += yv * yv
+      }
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** Σ (xᵢ−yᵢ)² into `out(0)`; false (the result is NULL) when the lengths
+    * differ or an element is NULL. */
+  def squaredL2(x: ArrayData, y: ArrayData, out: Array[Double]): Boolean = {
+    val n = x.numElements()
+    if (y.numElements() != n) return false
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      val d = x.getDouble(i) - y.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    out(0) = acc
+    true
+  }
 }
 
 object ArrayMath {

@@ -19,10 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *
   * where `v_{i−j}` reads the current block for `i−j ≥ 0` and the TAIL of
   * the previous block otherwise — exactly the terms the ×K row-fan-out
-  * formulation aggregates, evaluated in one codegen'd primitive loop
-  * instead of K rows through a hash aggregate. Numerator and denominator
-  * accumulate in exact LONG arithmetic (the Smooth overflow contract) and
-  * the two casts + divisions mirror the fan-out form bit for bit.
+  * formulation aggregates, evaluated in one compiled primitive loop
+  * ([[EwmaKernel.blockConvolve]], which `eval` and generated code both
+  * call) instead of K rows through a hash aggregate. Numerator and
+  * denominator accumulate in exact LONG arithmetic (the Smooth overflow
+  * contract) and the two casts + divisions mirror the fan-out form bit
+  * for bit.
   *
   * Children: (prevVals: array<long> — pass an EMPTY array for the first
   * block, not NULL —, curVals: array<long>, weights: FOLDABLE
@@ -47,12 +49,27 @@ case class EwmaBlockConvolve(first: Expression, second: Expression, third: Expre
   @transient private lazy val wts: Array[Long] =
     third.eval(null).asInstanceOf[ArrayData].toLongArray()
 
-  override protected def nullSafeEval(prev: Any, cur: Any, unused: Any): Any = {
-    val p = prev.asInstanceOf[ArrayData]
-    val c = cur.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(prev: Any, cur: Any, unused: Any): Any =
+    EwmaKernel.blockConvolve(prev.asInstanceOf[ArrayData], cur.asInstanceOf[ArrayData], wts)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val wRef = ctx.addReferenceObj("wts", wts, "long[]")
+    nullSafeCodeGen(ctx, ev, (a, b, _) =>
+      s"${ev.value} = graft.functions.EwmaKernel.blockConvolve($a, $b, $wRef);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object EwmaKernel {
+  /** The kernel `eval` and generated code call: one output per element of
+    * the current block `c`, reading the tail of the previous block `p`
+    * where the window reaches back. */
+  def blockConvolve(p: ArrayData, c: ArrayData, w: Array[Long]): ArrayData = {
     val pn = p.numElements()
     val n = c.numElements()
-    val w = wts
     val out = new Array[Double](n)
     var i = 0
     while (i < n) {
@@ -74,47 +91,6 @@ case class EwmaBlockConvolve(first: Expression, second: Expression, third: Expre
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("wts", wts, "long[]")
-    nullSafeCodeGen(ctx, ev, (a, b, _) => {
-      val pn = ctx.freshName("pn")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val jMax = ctx.freshName("jMax")
-      val num = ctx.freshName("num")
-      val den = ctx.freshName("den")
-      val src = ctx.freshName("src")
-      val v = ctx.freshName("v")
-      s"""
-         |int $pn = $a.numElements();
-         |int $n = $b.numElements();
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $num = 0L;
-         |  long $den = 0L;
-         |  int $jMax = $wRef.length - 1;
-         |  if ($jMax > $i + $pn) $jMax = $i + $pn;
-         |  for (int $j = 0; $j <= $jMax; $j++) {
-         |    int $src = $i - $j;
-         |    long $v = $src >= 0 ? $b.getLong($src) : $a.getLong($pn + $src);
-         |    $num += $wRef[$j] * $v;
-         |    $den += $wRef[$j];
-         |  }
-         |  $out[$i] = (double) $num / (double) $den / 10000.0;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object EwmaKernel {
   /** `convolve(prev, cur, weights)` as a Column — see [[EwmaBlockConvolve]]. */
   def convolve(prev: Column, cur: Column, weights: Column): Column =
     column(EwmaBlockConvolve(expression(prev), expression(cur), expression(weights)))

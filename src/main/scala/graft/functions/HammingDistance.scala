@@ -12,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (byte-wise; length difference counts as distance). Used for SimHash
   * fingerprint comparison, where the interpreted
   * `aggregate(zip_with(split…))` formulation pays per-character lambda
-  * dispatch — this expression runs inside whole-stage codegen as a tight
-  * byte loop: the preference-order tier (b) custom operator, a scalar the
-  * built-in function set can't express efficiently.
+  * dispatch — this expression's generated code calls one compiled byte
+  * loop ([[HammingDistance.distance]]): the preference-order tier (b)
+  * custom operator, a scalar the built-in function set can't express
+  * efficiently.
   */
 case class HammingDistance(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -30,38 +31,30 @@ case class HammingDistance(left: Expression, right: Expression)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (string, string), got (${left.dataType}, ${right.dataType})")
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[UTF8String].getBytes
-    val y = b.asInstanceOf[UTF8String].getBytes
-    val len = math.min(x.length, y.length)
-    var i = 0
-    var n = math.abs(x.length - y.length)
-    while (i < len) { if (x(i) != y(i)) n += 1; i += 1 }
-    n
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    HammingDistance.distance(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("xb")
-      val y = ctx.freshName("yb")
-      val i = ctx.freshName("i")
-      val len = ctx.freshName("len")
-      s"""
-         |byte[] $x = $a.getBytes();
-         |byte[] $y = $b.getBytes();
-         |int $len = Math.min($x.length, $y.length);
-         |${ev.value} = Math.abs($x.length - $y.length);
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if ($x[$i] != $y[$i]) ${ev.value}++;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.HammingDistance.distance($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
 object HammingDistance {
+
+  /** The kernel `eval` and generated code call: differing bytes over the
+    * common prefix plus the length difference. */
+  def distance(a: UTF8String, b: UTF8String): Int = {
+    val x = a.getBytes
+    val y = b.getBytes
+    val len = math.min(x.length, y.length)
+    var i = 0
+    var n = math.abs(x.length - y.length)
+    while (i < len) { if (x(i) != y(i)) n += 1; i += 1 }
+    n
+  }
 
   /** Column-API form, built straight from the expression; the SQL name
     * `hamming_distance` comes from [[graft.GraftExtensions]].

@@ -14,8 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Compiled kernels for the text-fingerprinting hot path. The array-
   * expression formulations (transform/aggregate over shingles) are
   * interpreted per element; these run the whole per-document loop in
-  * compiled Scala, invoked from generated code via a kernel reference —
-  * the same per-row cost model as Spark's own string expressions.
+  * compiled Scala, which `eval` and generated code both call statically —
+  * the same per-row cost model as Spark's own string expressions. The
+  * md5 digest is a ThreadLocal of this object, so nothing of it enters a
+  * plan.
   */
 object TextKernels {
 
@@ -184,18 +186,6 @@ object TextKernels {
   }
 }
 
-/** Serializable handle for generated code: the kernel object itself holds a
-  * non-serializable ThreadLocal digest, so plans reference this stateless
-  * forwarder instead (the object is class-loaded fresh on each executor).
-  */
-class TextKernelsRef extends Serializable {
-  def shingles(t: UTF8String, n: Int): ArrayData = TextKernels.shingles(t, n)
-  def minhashSlices(a: ArrayData, k: Int): ArrayData = TextKernels.minhashSlices(a, k)
-  def minhashXx(a: ArrayData, k: Int): ArrayData = TextKernels.minhashXx(a, k)
-  def markerCounts(t: UTF8String, ms: Array[String]): ArrayData = TextKernels.markerCounts(t, ms)
-  def simhash32(t: UTF8String): UTF8String = TextKernels.simhash32(t)
-}
-
 /** Codegen-integrated expression wrapping [[TextKernels.shingles]]. */
 case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -209,10 +199,9 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     TextKernels.shingles(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("textKernels", new TextKernelsRef, classOf[TextKernelsRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.shingles($c, $n);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.shingles($c, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -236,9 +225,9 @@ case class MarkerCounts(child: Expression, markers: Seq[String]) extends UnaryEx
     TextKernels.markerCounts(input.asInstanceOf[UTF8String], markerArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("textKernels", new TextKernelsRef, classOf[TextKernelsRef].getName)
     val ms = ctx.addReferenceObj("markers", markerArr, "java.lang.String[]")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.markerCounts($c, $ms);")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.markerCounts($c, $ms);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -258,10 +247,9 @@ case class SimHash32(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     TextKernels.simhash32(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("textKernels", new TextKernelsRef, classOf[TextKernelsRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.simhash32($c);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.simhash32($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -282,10 +270,9 @@ case class MinHashSlices(child: Expression, numHashes: Int) extends UnaryExpress
   override protected def nullSafeEval(input: Any): Any =
     TextKernels.minhashSlices(input.asInstanceOf[ArrayData], numHashes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("textKernels", new TextKernelsRef, classOf[TextKernelsRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.minhashSlices($c, $numHashes);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.minhashSlices($c, $numHashes);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -306,10 +293,9 @@ case class MinHashXx(child: Expression, numHashes: Int) extends UnaryExpression 
   override protected def nullSafeEval(input: Any): Any =
     TextKernels.minhashXx(input.asInstanceOf[ArrayData], numHashes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("textKernels", new TextKernelsRef, classOf[TextKernelsRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.minhashXx($c, $numHashes);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.minhashXx($c, $numHashes);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

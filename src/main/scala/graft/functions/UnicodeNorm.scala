@@ -40,14 +40,6 @@ object UnicodeNorm {
   }
 }
 
-/** Serializable forwarder for generated code (the [[TextKernelsRef]]
-  * convention).
-  */
-class UnicodeNormRef extends Serializable {
-  def normalize(s: UTF8String, nfkc: Boolean): UTF8String =
-    UnicodeNorm.normalize(s, nfkc)
-}
-
 /** `unicode_norm(text, nfkc)` — NFC (nfkc = false) or NFKC canonical form. */
 case class UnicodeNormalize(child: Expression, nfkc: Boolean)
     extends UnaryExpression {
@@ -62,11 +54,9 @@ case class UnicodeNormalize(child: Expression, nfkc: Boolean)
   override protected def nullSafeEval(input: Any): Any =
     UnicodeNorm.normalize(input.asInstanceOf[UTF8String], nfkc)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("unicodeNorm", new UnicodeNormRef,
-      classOf[UnicodeNormRef].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $kernel.normalize($c, $nfkc);")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.UnicodeNorm.normalize($c, $nfkc);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

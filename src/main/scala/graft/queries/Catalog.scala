@@ -45,9 +45,6 @@ object Catalog {
   def named(name: String): Q =
     all.find(_.name == name).getOrElse(throw new NoSuchElementException(s"no catalog query $name"))
 
-  private def qNoOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
-
   /** Deterministic 4-decimal rounding used on BOTH sides of every oracle
     * pair: `floor(x*10000 + 0.5)/10000` is plain IEEE arithmetic, so given
     * the same input double both engines produce bit-identical results —

@@ -37,25 +37,32 @@ object FeaturesEvents {
           "dominant station; name the station explicitly with --station-id <id> " +
           "(FeaturesEvents.ExplicitStation)"))
 
+  /** C7: departure time first, arrival time when it is missing — the
+    * `sched_ts` and `est_ts` of the feature build and the serving layer. */
+  val schedTs: Column = coalesce(col("depart_time_sched"), col("arrival_time_sched"))
+  val estTs: Column = coalesce(col("depart_time_est"), col("arrival_time_est"))
+
+  /** C5: `delay_sec` = `est_ts − sched_ts` in whole seconds; `delay_min`
+    * is it in fractional minutes (reference `10:244`: CAST(delay_sec AS
+    * DOUBLE)/60.0, NOT the minute-boundary-crossing date_diff macro, which
+    * is Macros.delayMinutes, used where the reference calls it). */
+  val delaySec: Column = Macros.delaySeconds(col("est_ts"), col("sched_ts"))
+  val delayMin: Column = col("delay_sec").cast("double") / 60.0
+
   /** The enrichment stage (base filters + C7 coalesce/flags + C5 delays +
     * C6 bin). Exposed separately for testing.
     */
   def enrich(events: DataFrame): DataFrame =
-    events
-      .filter(col("operator_abbr") === "TPG")
-      .filter(col("product_id").isin("Bus", "Tram") || col("product_id").isNull)
+    IstdatenIngest.tpgBusTram(events)
       .filter(col("arrival_time_sched").isNotNull || col("depart_time_sched").isNotNull)
-      .withColumn("sched_ts", coalesce(col("depart_time_sched"), col("arrival_time_sched")))
-      .withColumn("est_ts", coalesce(col("depart_time_est"), col("arrival_time_est")))
+      .withColumn("sched_ts", schedTs)
+      .withColumn("est_ts", estTs)
       .withColumn("used_arrival_sched",
         col("depart_time_sched").isNull && col("arrival_time_sched").isNotNull)
       .withColumn("used_arrival_est",
         col("depart_time_est").isNull && col("arrival_time_est").isNotNull)
-      .withColumn("delay_sec", Macros.delaySeconds(col("est_ts"), col("sched_ts")))
-      // Reference `10:244`: delay_min = CAST(delay_sec AS DOUBLE)/60.0 —
-      // fractional minutes, NOT the minute-boundary-crossing date_diff macro
-      // (that macro is Macros.delayMinutes, used where the reference calls it).
-      .withColumn("delay_min", col("delay_sec").cast("double") / 60.0)
+      .withColumn("delay_sec", delaySec)
+      .withColumn("delay_min", delayMin)
       .withColumn("sched_bin", Macros.floorBin10(col("sched_ts")))
 
   /** Attach the resolved station key to the event side: the mapping strategy

@@ -58,13 +58,18 @@ object IstdatenIngest {
       try_to_timestamp(c, lit("dd.MM.yyyy HH:mm:ss")),
       try_to_timestamp(c, lit("dd.MM.yyyy HH:mm")))
 
+  /** F3 + F4: operator TPG, products Bus, Tram or NULL — the base filters
+    * of the ingest (stored-content semantics), the feature build and the
+    * serving layer. */
+  def tpgBusTram(events: DataFrame): DataFrame =
+    events
+      .filter(col("operator_abbr") === "TPG")
+      .filter(col("product_id").isin("Bus", "Tram") || col("product_id").isNull)
+
   /** Normalize [[readRaw]]'s silver-named strings to the ist_events schema
     * (pre-dedupe). */
-  def normalize(raw: DataFrame, operatorAbbr: String = "TPG"): DataFrame =
-    raw
-      // F3 + F4: operator and product filters (stored-content semantics)
-      .filter(col("operator_abbr") === operatorAbbr)
-      .filter(col("product_id").isin("Bus", "Tram") || col("product_id").isNull)
+  def normalize(raw: DataFrame): DataFrame =
+    tpgBusTram(raw)
       .withColumn("service_date", coalesce(
         try_to_timestamp(col("service_date"), lit("dd.MM.yyyy")),
         try_to_timestamp(col("service_date"), lit("yyyy-MM-dd"))).cast("date"))

@@ -27,16 +27,11 @@ object Serving {
     * per-partition top-N then a single merge, no global sort.
     */
   def latestEvents(istEvents: DataFrame, n: Int = 50): DataFrame =
-    istEvents
-      .filter(col("operator_abbr") === "TPG")
-      .filter(col("product_id").isin("Bus", "Tram") || col("product_id").isNull)
-      .select(
-        col("service_date"), col("line_text"), col("stop_name"),
-        coalesce(col("depart_time_sched"), col("arrival_time_sched")).as("sched_ts"),
-        coalesce(col("depart_time_est"), col("arrival_time_est")).as("est_ts"))
-      .withColumn("delay_sec",
-        Macros.delaySeconds(col("est_ts"), col("sched_ts")).cast("int"))
-      .withColumn("delay_min", col("delay_sec").cast("double") / 60.0)
+    IstdatenIngest.tpgBusTram(istEvents)
+      .select(col("service_date"), col("line_text"), col("stop_name"),
+        FeaturesEvents.schedTs.as("sched_ts"), FeaturesEvents.estTs.as("est_ts"))
+      .withColumn("delay_sec", FeaturesEvents.delaySec.cast("int"))
+      .withColumn("delay_min", FeaturesEvents.delayMin)
       .orderBy(col("service_date").desc, col("sched_ts").desc)
       .limit(n)
 

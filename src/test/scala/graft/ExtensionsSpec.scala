@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -212,6 +215,62 @@ class NativeHelpersSpec extends SparkSpec {
     t.start()
     t.join()
     assert(inThread.get == expected)
+  }
+}
+
+class NativeCodegenSpec extends SparkSpec {
+
+  /** [[NativeHelpers.input]]'s rows plus the edges: all NULL; empty strings
+    * and arrays; NULL array elements with mismatched lengths; a NULL
+    * element at equal lengths; signed zeros and a NaN; an infinity facing
+    * a NULL element. */
+  private def edges(): DataFrame = {
+    val base = NativeHelpers.input(spark)
+    val rows = Seq(
+      Row(Seq.fill(13)(null): _*),
+      Row("", "", "", "", Seq.empty[Double], Seq.empty[Double], Seq.empty[String],
+        Seq.empty[String], Seq.empty[Long], Seq.empty[Long], NativeHelpers.sketch, 0L, 0.0),
+      Row("x  y", "abc", "", "\u00e9", Seq(1.0, null, 3.0), Seq(2.0, 5.0), Seq("a"),
+        Seq("a", "b"), Seq(1L), Seq(2L, 3L, 4L, 5L), NativeHelpers.sketch, 3L, 1.0),
+      Row(" ", "", "ab", " ", Seq(null, 2.0), Seq(1.0, 2.0), Seq.empty[String], Seq("z"),
+        Seq(4L, 5L, 6L), Seq.empty[Long], null, null, null),
+      Row("the the", "a", "a", "a", Seq(0.0, -0.0), Seq(-0.0, Double.NaN), Seq("q"), Seq("q"),
+        Seq.empty[Long], Seq(7L), NativeHelpers.sketch, 1L, 0.0),
+      Row("a", "ab", "ba", "b", Seq(Double.PositiveInfinity, 1.0), Seq(null, 2.0), Seq("b"),
+        Seq("a"), Seq(1L, 2L), Seq(3L), NativeHelpers.sketch, 2L, 0.0))
+    base.union(spark.createDataFrame(rows.asJava, base.schema))
+  }
+
+  private def withConf[T](confs: (String, String)*)(f: => T): T = {
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  test("every native expression computes the same rows generated and interpreted, on a parquet scan") {
+    val dir = Files.createTempDirectory("graft_native_edges_").resolve("t").toString
+    edges().write.parquet(dir)
+    val bc = spark.sparkContext.broadcast(NativeHelpers.sketch)
+    // the 19 non-aggregate expressions: every scalar SQL name (nfc and nfkc
+    // share one class), the broadcast probe and PQ's nearest code
+    val cols = NativeHelpers.scalars.map(_._3) ++ Seq(
+      BloomSketch.mightContainBroadcast(bc, col("h")),
+      PqKernels.nearestCode(col("u"), Seq((4, Seq(1.0)), (2, Seq(0.0))), 0))
+    /** (whether the plan runs whole-stage codegen, the rows) */
+    def rows(): (Boolean, Seq[Row]) = {
+      val q = spark.read.parquet(dir).select(cols: _*)
+      val plan = q.queryExecution.executedPlan
+      (plan.exists(_.isInstanceOf[WholeStageCodegenExec]), q.collect().toSeq)
+    }
+    // a class that fails to compile fails the query instead of falling back
+    val (wholeStage, generated) = withConf("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(rows())
+    val (noWholeStage, interpreted) = withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(rows())
+    assert(wholeStage && !noWholeStage)
+    assert(generated.size == 9)
+    assert(generated == interpreted)
+    // toString tells -0.0 from 0.0, which Row equality does not
+    assert(generated.map(_.toString) == interpreted.map(_.toString))
   }
 }
 

@@ -89,6 +89,19 @@ class RegimeSpec extends AnyFunSuite {
     assert(holding("injectFunction") == Seq("src/main/scala/graft/GraftExtensions.scala"))
   }
 
+  test("a native expression's generated code calls its kernel: no doGenCode under src/main writes a loop") {
+    val loops = sources("src/main", ".scala").flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toIndexedSeq
+      def indent(l: String) = l.takeWhile(_ == ' ').length
+      lines.indices.filter(lines(_).contains("def doGenCode")).collect {
+        case i if (lines(i) +: lines.drop(i + 1).takeWhile(l => l.trim.isEmpty ||
+            indent(l) > indent(lines(i)))).exists(l => l.contains("for (") || l.contains("while (")) =>
+          s"$p:${i + 1}"
+      }
+    }
+    assert(loops.isEmpty, s"a loop in generated code instead of a kernel call: ${loops.mkString(", ")}")
+  }
+
   /** Code text of a source file: block and line comments blanked, so a
     * name mentioned only in documentation counts as unreached. Scala
     * sources also lose the text of their string literals (a function that
