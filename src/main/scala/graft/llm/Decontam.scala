@@ -20,11 +20,7 @@ import org.apache.spark.sql.functions._
   * join is a plain equi-join on `md5(n-gram)` — 16-byte keys on the wire
   * instead of raw n-gram strings — and long n (8 words here, 13 in the
   * GPT-3 recipe) makes collisions between unrelated documents vanishingly
-  * rare, so join output ≈ true leaks, not |A|×|B|. The residual risk is
-  * boilerplate n-grams (licence headers, templates) fanning out hot keys;
-  * `maxTrainDf` drops n-grams seen in more than that many training docs
-  * before the join — the published pipelines apply the same cap, because a
-  * million-document n-gram is boilerplate, not leakage.
+  * rare, so join output ≈ true leaks, not |A|×|B|.
   */
 object Decontam {
 
@@ -41,22 +37,14 @@ object Decontam {
   /** (train, benchmark) pairs sharing at least one exact word n-gram, with
     * `n_shared` (distinct shared n-grams) and `containment` =
     * n_shared / |benchmark n-gram set| ∈ (0, 1].
-    *
-    * `maxTrainDf`: when set, n-grams occurring in more than this many
-    * TRAINING documents are dropped before the join (boilerplate guard +
-    * hot-key skew guard in one). The benchmark side is never filtered, and
-    * `containment` keeps its full denominator, so capping only ever
-    * LOWERS a pair's score — a flagged pair is always a real overlap.
     */
   def exactNgramOverlap(
       train: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String,
       n: Int = 8,
-      minContainment: Double = 0.0,
-      maxTrainDf: Option[Long] = None): DataFrame = {
-    val tg = capHot(grams(train, idCol, "a", textCol, n), maxTrainDf)
-    overlapFromGrams(tg, grams(benchmark, idCol, "b", textCol, n), minContainment)
-  }
+      minContainment: Double = 0.0): DataFrame =
+    overlapFromGrams(grams(train, idCol, "a", textCol, n),
+      grams(benchmark, idCol, "b", textCol, n), minContainment)
 
   /** [[exactNgramOverlap]] with a Bloom pre-filter on the training side —
     * IDENTICAL output (spec-pinned), different 100 TB cost model.
@@ -89,7 +77,6 @@ object Decontam {
       idCol: String, textCol: String,
       n: Int = 8,
       minContainment: Double = 0.0,
-      maxTrainDf: Option[Long] = None,
       expectedBenchmarkGrams: Long = 1L << 20,
       literalMaxBytes: Int = 8 << 20): DataFrame = {
     val bg = grams(benchmark, idCol, "b", textCol, n)
@@ -123,29 +110,10 @@ object Decontam {
         val bc = train.sparkSession.sparkContext.broadcast(sketchBytes)
         x => graft.functions.BloomSketch.mightContainBroadcast(bc, x)
       }
-    // Bloom BEFORE capHot: the probe verdict is a pure function of gid
-    // (every occurrence of a gid passes or fails together), so hot-df
-    // counts over the survivors equal the full-corpus counts for every
-    // surviving gid — output-identical, and the hot-key aggregate now
-    // runs over the pruned stream instead of re-shuffling the full
-    // training grams the sketch exists to avoid.
-    val tg = capHot(
-      grams(train, idCol, "a", textCol, n)
-        .filter(probe(xxhash64(col("gid")))),
-      maxTrainDf)
+    val tg = grams(train, idCol, "a", textCol, n)
+      .filter(probe(xxhash64(col("gid"))))
     overlapFromGrams(tg, bg, minContainment)
   }
-
-  /** Boilerplate/hot-key guard: drop n-grams above the training-side df
-    * cap (see [[exactNgramOverlap]]'s scaladoc for why this only lowers
-    * scores, never fabricates pairs).
-    */
-  private def capHot(tg0: DataFrame, maxTrainDf: Option[Long]): DataFrame =
-    maxTrainDf.fold(tg0) { cap =>
-      val hot = tg0.groupBy("gid").agg(count(lit(1)).as("tdf"))
-        .filter(col("tdf") > cap).select("gid")
-      tg0.join(hot, Seq("gid"), "left_anti")
-    }
 
   private def overlapFromGrams(
       tg: DataFrame, bg: DataFrame, minContainment: Double): DataFrame = {

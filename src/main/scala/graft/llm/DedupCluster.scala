@@ -10,46 +10,38 @@ import org.apache.spark.sql.functions._
   * shrinks the training set. Without it, A≈B and B≈C dedup to {A, C} even
   * when A≈C transitively.
   *
-  * Algorithm: iterative min-label propagation. Every node starts with
-  * `rep = id`; each round every node takes the min rep over itself and its
-  * neighbors; converged when no rep changed. Rounds = graph diameter, and
-  * near-dup clusters are small and dense (a near-dup relation is almost
-  * transitive), so 2–4 rounds is typical at any corpus size. Each round is
-  * one equi-join + one key agg — the standard shuffle shapes, no driver-side
-  * graph state; the edge list is persisted once and each round's labels are
-  * `localCheckpoint`ed so lineage stays O(1) instead of O(rounds).
+  * One tiered solve:
+  *  1. an edge list at or under `localSolveMaxEdges` (100k) is collected
+  *     and solved with an in-memory union–find. The collect is BOUNDED BY CONSTRUCTION at the
+  *     threshold (the k-means-centroid/heavy-hitter-candidate contract) and
+  *     skips every per-round job floor: a 70-edge graph costs 2 jobs, not
+  *     8 rounds × 6 stages;
+  *  2. above it, iterative min-label propagation: every node starts with
+  *     `rep = id`, each round every node takes the min rep over itself and
+  *     its neighbors. Rounds = graph diameter, and near-dup clusters are
+  *     small and dense, so 2–4 rounds is typical at any corpus size. Each
+  *     round is one equi-join + one key agg; the per-round changed-label
+  *     count is monitored;
+  *  3. if those counts stop shrinking geometrically (the long-chain
+  *     signature: a chain retires O(1) labels per round), the loop escapes
+  *     to the large-star/small-star alternation of Kiveris et al.
+  *     ("Connected Components in MapReduce and Beyond", SoCC'14) seeded
+  *     with the partial labels: rounds grow with log² of the longest chain
+  *     instead of its length.
+  * Both loops keep the graph in frames only, and each round's frame is
+  * `localCheckpoint`ed so lineage stays O(1) instead of O(rounds). A round
+  * budget of 25 bounds each loop: propagation escapes to the star at it,
+  * and the star fails loudly past it rather than silently emitting
+  * partial clusters.
   *
-  * For adversarial long-chain graphs (diameter ≫ log n — not a shape
-  * near-dup graphs take), the classic fix is pointer-doubling, available
-  * here as [[DedupCluster.AlternatingStar]] (the large-star/small-star
-  * alternation of Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC'14): rounds grow with log² of the longest chain instead of
-  * its length, at the cost of one extra join-shaped phase per round.
-  * `maxIters` bounds the work on both algorithms and fails loudly rather
-  * than silently emitting partial clusters.
+  * A pair with a NULL endpoint is dropped before the solve: a NULL id names
+  * no document, so it is no node and links nothing (the explicit contract
+  * of [[GraphRank.pageRank]]).
   */
 object DedupCluster {
 
-  /** Component algorithm choice. [[Propagation]] (default): one join + one
-    * agg per round, rounds = graph diameter — optimal for the near-dup
-    * regime where clusters are small and dense. [[AlternatingStar]]:
-    * large-star/small-star pointer doubling, rounds = O(log² chain) — the
-    * escape hatch for adversarial long-chain graphs that blow past
-    * `maxIters` under propagation. [[Auto]]: the production tiering —
-    * (1) an edge list at or under `localSolveMaxEdges` is solved with a
-    * driver union–find (the collect is BOUNDED BY CONSTRUCTION at the
-    * threshold — the k-means-centroid/heavy-hitter-candidate contract —
-    * and skips every per-round job floor: a 70-edge graph costs 2 jobs,
-    * not 8 rounds × 6 stages); (2) above it, min-label propagation runs
-    * with its per-round change count monitored, and (3) if the counts
-    * stop shrinking geometrically (the long-chain signature: a chain
-    * retires O(1) labels per round), the loop escapes to alternating-star
-    * seeded with the partial labels, so propagation progress is kept.
-    */
-  sealed trait Algorithm
-  case object Propagation extends Algorithm
-  case object AlternatingStar extends Algorithm
-  case object Auto extends Algorithm
+  /** Round budget of the propagation tier and of the star fixpoint. */
+  private val maxIters = 25
 
   /** Free the block-manager storage behind a `localCheckpoint`ed frame.
     * Local checkpoints live as persisted RDD blocks outside the SQL
@@ -65,40 +57,34 @@ object DedupCluster {
     }
 
   /** Component representative (min reachable id) for every node appearing
-    * in `pairs`. Output: (`id`, `rep`) — one row per distinct node;
-    * singleton documents (no pair) are their own representative by
-    * definition and are simply absent here.
+    * in a pair without a NULL endpoint. Output: (`id`, `rep`) — one row
+    * per distinct node; a self-pair's node labels itself, and singleton
+    * documents (no pair) are their own representative by definition and
+    * are simply absent here. The result is `localCheckpoint`-backed.
     */
-  def components(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIters: Int = 25,
-      algorithm: Algorithm = Propagation,
-      localSolveMaxEdges: Long = 100000L): DataFrame = algorithm match {
-    case Propagation     => componentsPropagation(pairs, aCol, bCol, maxIters)
-    case AlternatingStar => componentsStar(pairs, aCol, bCol, maxIters)
-    case Auto => componentsAuto(pairs, aCol, bCol, maxIters, localSolveMaxEdges)
-  }
+  def components(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    components(pairs, aCol, bCol, localSolveMaxEdges = 100000L)
 
-  /** [[Auto]] tiering — see [[Algorithm]]. The local tier's collect is
-    * threshold-gated (never data-sized: the gate is an exact count of the
-    * canonical deduped edge list), and a sub-threshold component graph is
-    * answer-sized by the same argument as a centroid set — at 100 TB a
-    * real near-dup pair list blows the gate and the distributed tiers run.
+  /** The tiering with its local-tier threshold exposed, so a spec can force
+    * the distributed tiers. The local tier's collect is threshold-gated
+    * (never data-sized: the gate is an exact count of the canonical deduped
+    * edge list), and a sub-threshold component graph is answer-sized by the
+    * same argument as a centroid set — at 100 TB a real near-dup pair list
+    * blows the gate and the distributed tiers run.
     */
-  private def componentsAuto(
+  private[graft] def components(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIters: Int,
       localSolveMaxEdges: Long): DataFrame = {
     val a = col(aCol).cast("long")
     val b = col(bCol).cast("long")
     // the pair list is often the tail of an expensive pipeline (LSH,
     // blocking); cache its 2-long projection ONCE so the gate count, the
     // node set, and the solve all read the cache instead of re-running it
-    val base = pairs.select(a.as("u"), b.as("v")).persist()
+    val base = pairs.select(a.as("u"), b.as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
+      .persist()
     val canonical = base
       .select(greatest(col("u"), col("v")).as("hi"),
         least(col("u"), col("v")).as("lo"))
@@ -111,7 +97,7 @@ object DedupCluster {
     // can be dropped without downstream consumers re-deriving the pairs
     val out =
       if (nEdges <= localSolveMaxEdges) localUnionFind(canonical, nodes).localCheckpoint()
-      else adaptivePropagation(canonical, nodes, maxIters)
+      else propagateLabels(canonical, nodes)
     base.unpersist(blocking = false)
     out
   }
@@ -155,7 +141,7 @@ object DedupCluster {
       .select(col("id"), coalesce(col("__rep"), col("id")).as("rep"))
   }
 
-  /** Distributed [[Auto]] tier: min-label propagation with the per-round
+  /** Distributed tier: min-label propagation with the per-round
     * changed-label count monitored. A near-dup graph's count collapses
     * geometrically (diameter 2–4); a chain retires O(1) labels per round.
     * When a round fails to shrink the count below `0.7×` the previous
@@ -164,8 +150,7 @@ object DedupCluster {
     * links stay within components, so the merged graph has identical
     * components and the star starts from the propagation's progress).
     */
-  private def adaptivePropagation(
-      canonical: DataFrame, nodes: DataFrame, maxIters: Int): DataFrame = {
+  private def propagateLabels(canonical: DataFrame, nodes: DataFrame): DataFrame = {
     val edges = canonical.select(col("hi").as("x"), col("lo").as("y"))
       .union(canonical.select(col("lo").as("x"), col("hi").as("y")))
       .persist()
@@ -191,7 +176,7 @@ object DedupCluster {
       iters += 1
       if (changed == 0L) {
         // join back to the full node set: canonical edges dropped self-pair
-        // singletons, which label themselves; checkpoint (the Auto output
+        // singletons, which label themselves; checkpoint (the output
         // contract) so the caller can drop the pair cache
         result = nodes
           .join(labels.select(col("id"), col("rep").as("__rep")), Seq("id"), "left")
@@ -207,7 +192,7 @@ object DedupCluster {
           .distinct()
           .localCheckpoint()
         freeCheckpoint(labels)
-        val star = starFixpoint(seeded, maxIters)
+        val star = starFixpoint(seeded)
         result = nodes
           .join(star.select(col("hi").as("id"), col("lo").as("__rep")), Seq("id"), "left")
           .select(col("id"), coalesce(col("__rep"), col("id")).as("rep"))
@@ -220,62 +205,11 @@ object DedupCluster {
     result
   }
 
-  private def componentsPropagation(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIters: Int): DataFrame = {
-    // undirected edge list, both directions, deduped once
-    val edges = pairs.select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
-      .union(pairs.select(col(bCol).cast("long").as("x"), col(aCol).cast("long").as("y")))
-      .distinct()
-      .persist()
-    // Round 1 folded into initialization: from rep = id, the first
-    // propagation round would compute exactly least(id, min(neighbor id)) —
-    // one aggregation over the edge list, no join. (Every node appears as
-    // an `x` because edges carry both directions.)
-    var labels = edges.groupBy(col("x").as("id"))
-      .agg(min(col("y")).as("__my"))
-      .select(col("id"), least(col("id"), col("__my")).as("rep"))
-      .localCheckpoint()
-    var iters = 1
-    var done = false
-    while (!done) {
-      if (iters >= maxIters)
-        throw new IllegalStateException(
-          s"DedupCluster.components did not converge in $maxIters rounds — " +
-            "graph diameter exceeds the near-dup regime; raise maxIters or " +
-            "pass algorithm = DedupCluster.AlternatingStar (pointer doubling)")
-      // One join + one aggregate per round: neighbors' reps are propagated
-      // across edges, the node's own row rides along through a union (its
-      // prior rep doubling as the `__old` marker — exactly one non-null per
-      // id), and a single min-agg combines both. The prior rep lands in the
-      // checkpointed output so convergence is a cheap scan of the
-      // checkpointed blocks, not a second join.
-      val prop = edges
-        .join(labels.withColumnRenamed("id", "y"), "y")
-        .select(col("x").as("id"), col("rep"), lit(null).cast("long").as("__old"))
-      val next = labels.select(col("id"), col("rep"), col("rep").as("__old"))
-        .unionByName(prop)
-        .groupBy(col("id"))
-        .agg(min(col("rep")).as("rep"), min(col("__old")).as("__old"))
-        .localCheckpoint()
-      val changed = next.filter(col("rep") < col("__old")).limit(1).count()
-      // prior round's labels are dead once `next` is checkpointed and the
-      // changed-count (the only reader of both) has run — release its blocks
-      freeCheckpoint(labels)
-      labels = next.select("id", "rep")
-      iters += 1
-      done = changed == 0L
-    }
-    edges.unpersist()
-    labels
-  }
-
-  /** Large-star/small-star alternation (Kiveris et al., SoCC'14).
+  /** Large-star/small-star alternation (Kiveris et al., SoCC'14) — the
+    * escape tier, seeded with partial propagation labels.
     *
-    * The edge set is kept CANONICAL — (hi, lo) with hi > lo, distinct —
-    * and each round applies:
+    * The edge set is kept CANONICAL — (hi, lo) with hi > lo, distinct,
+    * `localCheckpoint`ed — and each round applies:
     *
     *  - large-star: over the symmetric adjacency, every node u computes
     *    m = min(u ∪ Γ(u)) and re-points every LARGER neighbor v > u at m
@@ -285,46 +219,12 @@ object DedupCluster {
     *
     * Both phases strictly shrink a component's potential (sum of
     * node-to-root distances), and at the fixpoint the edge set is exactly
-    * the star {(v, min of v's component)} — so labels fall out of the last
-    * edge set with no extra pass. Convergence is detected by an
-    * order-independent fingerprint (count + xor of per-edge xxhash64) of
-    * the canonical set; each round is two window-shaped phases (one
-    * exchange each — see the in-line note), still no driver-side graph
-    * state, same O(1) lineage via released localCheckpoints as the
-    * propagation loop.
+    * the star {(v, min of v's component)}, returned checkpoint-backed —
+    * so labels fall out of the last edge set with no extra pass.
+    * Convergence is detected by an order-independent fingerprint (count +
+    * xor of per-edge xxhash64) of the canonical set.
     */
-  private def componentsStar(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIters: Int): DataFrame = {
-    val a = col(aCol).cast("long")
-    val b = col(bCol).cast("long")
-    val nodes = pairs.select(a.as("id")).union(pairs.select(b.as("id")))
-      .distinct().persist()
-    val edges0 = pairs
-      .select(greatest(a, b).as("hi"), least(a, b).as("lo"))
-      .filter(col("hi") =!= col("lo"))
-      .distinct()
-      .localCheckpoint()
-    val fix = starFixpoint(edges0, maxIters)
-    // fixpoint edge set IS the star graph: hi → component min. Roots (and
-    // self-pair singletons) have no outgoing star edge — they label
-    // themselves.
-    val labels = nodes
-      .join(fix.select(col("hi").as("id"), col("lo").as("__rep")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__rep"), col("id")).as("rep"))
-    nodes.unpersist()
-    labels
-  }
-
-  /** The large-star/small-star loop on an already-canonical (hi > lo,
-    * distinct, `localCheckpoint`ed) edge set; returns the fixpoint star
-    * edge set (hi → its component min), itself checkpoint-backed. Shared
-    * by [[AlternatingStar]] and the [[Auto]] escape tier (which seeds it
-    * with partial propagation labels).
-    */
-  private def starFixpoint(edges0: DataFrame, maxIters: Int): DataFrame = {
+  private def starFixpoint(edges0: DataFrame): DataFrame = {
     var edges = edges0
 
     def fingerprint(e: DataFrame): (Long, Long) = {
@@ -374,8 +274,8 @@ object DedupCluster {
     while (!done) {
       if (iters >= maxIters)
         throw new IllegalStateException(
-          s"DedupCluster.components(AlternatingStar) did not converge in " +
-            s"$maxIters rounds — raise maxIters")
+          s"DedupCluster.components: the star fixpoint did not converge in " +
+            s"$maxIters rounds")
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nextFp = fingerprint(next)
       freeCheckpoint(edges)
@@ -390,12 +290,12 @@ object DedupCluster {
   /** Per-cluster summary: representative (min id), member count, and the
     * sorted comma-joined member list (canonical string form so the result
     * is engine-comparable). Only multi-member clusters appear — singletons
-    * never entered the pair list.
+    * never entered the pair list — apart from a self-pair's node, which
+    * labels itself; pairs with a NULL endpoint are dropped (see
+    * [[components]]).
     */
-  def clusterSummary(
-      pairs: DataFrame, aCol: String, bCol: String,
-      algorithm: Algorithm = Auto): DataFrame =
-    components(pairs, aCol, bCol, algorithm = algorithm)
+  def clusterSummary(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    components(pairs, aCol, bCol)
       .groupBy(col("rep"))
       .agg(
         count(lit(1)).as("n_members"),

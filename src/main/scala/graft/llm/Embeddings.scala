@@ -255,33 +255,12 @@ object Embeddings {
   def dedupInCells(corpus: DataFrame, cents: DataFrame, threshold: Double): DataFrame =
     dedupInCells(corpus, trainQuantizer(cents), threshold)
 
-  /** @param saltFactor >1 salts the cell self-join: a hot IVF cell (a dense
-    *   region of embedding space — near-identical boilerplate vectors — or a
-    *   degenerate quantizer) otherwise enumerates its |cell|² pairs in ONE
-    *   task. The keeper leg carries `salt = hash(kept_id) % factor`, the dup
-    *   leg is exploded over all salts, so each (kept, dup) pair still joins
-    *   exactly once while the hot cell fans out over `factor` tasks. Off by
-    *   default: the exploded leg shuffles its vectors ×factor, only worth
-    *   paying on skewed corpora. Same construction as the banded LSH salt
-    *   (MinHashLsh.candidatePairs).
-    */
-  def dedupInCells(corpus: DataFrame, quant: Quantizer, threshold: Double,
-      saltFactor: Int = 1): DataFrame = {
-    require(saltFactor >= 1, "saltFactor must be >= 1")
+  def dedupInCells(corpus: DataFrame, quant: Quantizer, threshold: Double): DataFrame = {
     val assigned = persistedAssign(corpus, quant)
-    val l0 = assigned.select(col("vec_id").as("kept_id"), col("vec").as("va"), col("cell"))
-    val r0 = assigned.select(col("vec_id").as("dup_id"), col("vec").as("vb"), col("cell"))
+    val l = assigned.select(col("vec_id").as("kept_id"), col("vec").as("va"), col("cell"))
+    val r = assigned.select(col("vec_id").as("dup_id"), col("vec").as("vb"), col("cell"))
     val w = Window.partitionBy(col("dup_id")).orderBy(col("sim").desc, col("kept_id").asc)
-    val joined =
-      if (saltFactor <= 1) l0.join(r0, Seq("cell"))
-      else {
-        val l = l0.withColumn("__salt",
-          graft.operators.Salt.saltFrom(col("kept_id"), saltFactor))
-        val r = r0.withColumn("__salt",
-          explode(sequence(lit(0), lit(saltFactor - 1))))
-        l.join(r, Seq("cell", "__salt")).drop("__salt")
-      }
-    joined
+    l.join(r, Seq("cell"))
       .filter(col("kept_id") < col("dup_id"))
       .withColumn("sim", cosine(col("va"), col("vb")))
       .filter(col("sim") >= threshold)

@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
   * r_{k+1}(v) = (1−d)/n + d · Σ_{u→v} r_k(u)/outdeg(u), r_0 = 1/n.
   *
   * Scale shape (the q61/q84 iterative idiom): outdegree is ONE hash
-  * aggregate, and the per-edge SHARE DIVISOR rides ON THE EDGE FRAME
-  * (`__sdeg`, attached once at build time — the classic
-  * edges-carry-1/outdeg PageRank layout), so the rank frame every round
-  * consumes and produces is a pure `(node, pr)` pair: no deg re-attach
-  * join after the aggregate, no per-round odd jobs. Each round is then
-  * exactly one node-keyed equi-join (broadcast ranks × edges on src), one
-  * hash aggregate by dst, and a free union of the static in-degree-0
-  * frame — no driver-side graph state. `n` is a 1-row broadcast in the
+  * aggregate, and the rank frame every round consumes and produces is a
+  * pure `(node, pr)` pair. Unweighted, each round precomputes the
+  * per-source share pr/outdeg on the broadcast side and probes the raw
+  * edge frame; weighted, the normalized weight rides ON THE EDGE FRAME
+  * (attached once at build time). Either way a round is exactly one
+  * node-keyed equi-join (broadcast × edges on src), one hash aggregate by
+  * dst, and a free union of the static in-degree-0 frame — the graph
+  * lives in frames only. `n` is a 1-row broadcast in the
   * lazy form; under `reuseFrames` it is counted ONCE off the materialized
   * outdegree frame and embedded as a literal (one bounded driver long),
   * which deletes the per-round 1-row broadcast builds. Rank and degree
@@ -71,11 +71,12 @@ object GraphRank {
     *                 for graphs validated once or correct by construction
     *                 (symmetrized / self-looped)
     * @param reuseFrames when true, the frames every round reads — the edge
-    *                    input, outdegree `od` and the outdegree-attached
-    *                    edge frame `se` — are EAGERLY localCheckpoint'd
-    *                    once, `n` is counted once into a literal, and every
-    *                    intermediate rank frame is checkpointed (the q61
-    *                    discipline; the call stops being lazy). False
+    *                    input, outdegree `od` and (weighted) the
+    *                    weight-attached edge frame `se` — are EAGERLY
+    *                    localCheckpoint'd once, `n` is counted once into
+    *                    a literal, and every intermediate rank frame is
+    *                    checkpointed (the q61 discipline; the call stops
+    *                    being lazy). False
     *                    (default) keeps ONE lazy plan with zero driver
     *                    actions. Callers differ, each on measurement: q97
     *                    and q146 run lazy (one prepared plan, so a rerun
@@ -191,24 +192,19 @@ object GraphRank {
         case None => df.crossJoin(broadcast(nFrame)).select(col("node"),
           (lit(oneMinusD) / col("n") + psumTerm).as("pr"))
       }
-    // THE layout decision: the per-edge share divisor rides ON the edge
-    // frame — `__sdeg` = outdeg(src) unweighted, `__nw` = w/outstrength
-    // weighted (normalization folded once, not per round) — so the rank
-    // frame is a pure (node, pr) pair and NO round ever re-attaches deg.
+    // Weighted layout: the normalized weight `__nw` = w/outstrength rides
+    // ON the edge frame (normalization folded once, not per round), so the
+    // rank frame stays a pure (node, pr) pair and NO round re-attaches deg.
     // Built with one broadcast od join, checkpointed under reuseFrames.
     val odSrc = od.select(col("node").as("__on"), col("deg"))
-    val seCols = weightCol.fold(
-      Seq(src.as("__s"), dst.as("__d"), col("deg").as("__sdeg")))(_ =>
-      Seq(src.as("__s"), dst.as("__d"),
-        (col("__w").cast("double") / col("deg")).as("__nw")))
-    // lazy val: the lazy UNWEIGHTED form never builds the decorated copy
-    // at all — its per-source share moves to the broadcast side of each
+    // lazy val: the unweighted form never builds the decorated copy at
+    // all — its per-source share moves to the broadcast side of each
     // round (below), and the probe side stays raw `base`. (The weighted
-    // share w/outstrength is PER-EDGE, so the weighted form keeps the
-    // decoration either way.)
+    // share w/outstrength is PER-EDGE, so it needs the decoration.)
     lazy val se = {
       val seRaw = base.join(broadcast(odSrc), src === col("__on"))
-        .select(seCols: _*)
+        .select(src.as("__s"), dst.as("__d"),
+          (col("__w").cast("double") / col("deg")).as("__nw"))
       // lazy weighted form: pin the decorated edge frame behind ONE
       // __s-keyed exchange — every round's probe (and the final save) then
       // READS it via ReuseExchange instead of re-running the |E|-sized
@@ -217,12 +213,6 @@ object GraphRank {
       // localCheckpoint is already the barrier.
       if (reuseFrames) seRaw.localCheckpoint() else seRaw.repartition(col("__s"))
     }
-    val lazySparseRounds = !reuseFrames && weightCol.isEmpty
-    // per-edge mass share: pr/outdeg unweighted (kept verbatim for bit
-    // compatibility), pr·nw weighted (nw precomputed above — the order
-    // the SQL twins mirror)
-    def share: Column =
-      weightCol.fold(col("pr") / col("__sdeg"))(_ => col("pr") * col("__nw"))
     // in-degree-0 nodes are STATIC: nobody ever links to them, so their
     // rank is pinned at the (1−d)/n baseline every round — computed once
     // and re-unioned per round (cheaper than a per-round left join), which
@@ -252,7 +242,7 @@ object GraphRank {
       // one map-side equi-join (edges × broadcast ranks on src) + one hash
       // aggregate by dst; the only exchange is the ≤|V|-sized
       // partially-aggregated contribution frame
-      ranks = if (lazySparseRounds) {
+      ranks = if (weightCol.isEmpty) {
         // the per-edge share floor((pr/deg)·1e12 + 0.5) is CONSTANT per
         // source, so precompute it ON THE BROADCAST SIDE (`__c`) and probe
         // the raw 2-column edge frame — bit-identical psums, no decorated
@@ -278,9 +268,11 @@ object GraphRank {
           if (k == 1) withN(se).withColumn("pr", initPr)
           else se.join(broadcast(r.withColumnRenamed("node", "__r")),
             col("__s") === col("__r"))
+        // weighted per-edge mass share pr·nw (nw precomputed on the edge
+        // frame — the order the SQL twins mirror)
         withBaseline(
           joined.groupBy(col("__d").as("node"))
-            .agg(sum(floor(share * lit(1e12) + 0.5)
+            .agg(sum(floor(col("pr") * col("__nw") * lit(1e12) + 0.5)
               .cast("long")).as("__psum")),
           lit(damping) * (col("__psum").cast("double") / lit(1e12)))
       }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-overlap link prediction over an undirected graph:
@@ -16,13 +16,6 @@ import org.apache.spark.sql.functions._
   * anti-join against existing edges (predict only NEW links). No
   * cartesian anywhere; cost = Σ_w deg(w)² wedges, the same term q101's
   * triangle count pays.
-  *
-  * Hub skew: a degree-D hub emits D² wedges. [[predict]] takes `maxDeg`
-  * — center nodes with deg > maxDeg are EXCLUDED from wedge generation
-  * (not truncated: dropping a random subset of a hub's wedges would make
-  * scores partition-dependent; excluding the hub entirely is the
-  * deterministic form of the standard "a stopword neighbor says nothing
-  * about affinity" argument — mirror the same filter in any SQL twin).
   *
   * Determinism: counts and Jaccard are exact integer / single-division
   * arithmetic. Adamic–Adar sums `1/ln(deg)` doubles — r4 convention
@@ -40,14 +33,12 @@ object LinkPredict {
     * so the node set must be dimension-sized. A billion-node graph would
     * need the shuffle joins back, selected from the node count.
     *
-    * @param maxDeg wedge centers with degree above this are excluded
-    *               (None = no cap)
     * @return (rnk, u, v, cn, jaccard, aa) — ordered by (cn desc, u, v);
     *         jaccard = cn/(deg u + deg v − cn)
     */
   def predict(
       edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, maxDeg: Option[Long] = None): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val und = edges
       .select(
@@ -70,12 +61,8 @@ object LinkPredict {
       .select(col("__e.n").as("n"), col("__e.m").as("m"))
     val deg = broadcast(adj.groupBy(col("n")).agg(count(lit(1)).as("d")))
 
-    // wedges a–w–b (a<b), centered on w; hub centers excluded wholesale
-    val centers = maxDeg match {
-      case Some(cap) => adj.join(deg.filter(col("d") <= cap), "n")
-        .select(col("n"), col("m"), col("d"))
-      case None => adj.join(deg, "n").select(col("n"), col("m"), col("d"))
-    }
+    // wedges a–w–b (a<b), centered on w
+    val centers = adj.join(deg, "n").select(col("n"), col("m"), col("d"))
     val wedges = centers.as("x")
       .join(centers.as("y"),
         col("x.n") === col("y.n") && col("x.m") < col("y.m"))

@@ -30,21 +30,12 @@ object MinHashLsh {
   /** @param numHashes   MinHash signature length k (= bands * rowsPerBand)
     * @param shingleSize word n-gram size
     * @param bands       number of LSH bands
-    * @param saltFactor  >1 salts the band-bucket self-join (see
-    *                    [[candidatePairs]]): the realistic 100 TB failure
-    *                    mode is one hot band key — boilerplate text whose
-    *                    shingles minhash identically across millions of
-    *                    docs — concentrating a quadratic bucket in ONE
-    *                    task. Off (1) by default: salting multiplies one
-    *                    join leg's shuffle ×factor, only worth paying on
-    *                    skewed corpora.
     * @param hashFamily  [[Md5]] (oracle-parity default) or [[Xx]]
     *                    (production speed; no DuckDB twin)
     */
   case class Config(numHashes: Int = 8, shingleSize: Int = 3, bands: Int = 4,
-      saltFactor: Int = 1, hashFamily: HashFamily = Md5) {
+      hashFamily: HashFamily = Md5) {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(saltFactor >= 1, "saltFactor must be >= 1")
     val rowsPerBand: Int = numHashes / bands
   }
 
@@ -93,32 +84,11 @@ object MinHashLsh {
       .select(col("id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
-  /** Candidate pairs (a < b) with the number of colliding bands.
-    *
-    * With `saltFactor > 1` the self-join key becomes (band, band_key,
-    * salt): the left leg carries `salt = hash(a) % factor`, the right leg
-    * is exploded over all `factor` salts, so every (a, b) collision still
-    * matches exactly once while a hot bucket's pair enumeration fans out
-    * over `factor` tasks instead of one. (Same construction as
-    * [[graft.operators.Salt.saltedJoin]], minus the broadcast — both legs
-    * here are corpus-sized.) Cost: the exploded leg shuffles ×factor, but
-    * each row is only (id, band, band_key) ≈ 50 B.
-    */
-  def candidatePairs(bandKeysDf: DataFrame, saltFactor: Int = 1): DataFrame = {
-    val l0 = bandKeysDf.select(col("id").as("a"), col("band"), col("band_key"))
-    val r0 = bandKeysDf.select(col("id").as("b"), col("band"), col("band_key"))
-    val joined =
-      if (saltFactor <= 1) l0.join(r0, Seq("band", "band_key"))
-      else {
-        val l = l0.withColumn("__salt",
-          graft.operators.Salt.saltFrom(col("a"), saltFactor))
-        // sequence(int, int) is array<int>, so the exploded salt is already
-        // the same int type saltFrom produces
-        val r = r0.withColumn("__salt",
-          explode(sequence(lit(0), lit(saltFactor - 1))))
-        l.join(r, Seq("band", "band_key", "__salt")).drop("__salt")
-      }
-    joined
+  /** Candidate pairs (a < b) with the number of colliding bands. */
+  def candidatePairs(bandKeysDf: DataFrame): DataFrame = {
+    val l = bandKeysDf.select(col("id").as("a"), col("band"), col("band_key"))
+    val r = bandKeysDf.select(col("id").as("b"), col("band"), col("band_key"))
+    l.join(r, Seq("band", "band_key"))
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_bands"))
@@ -240,7 +210,7 @@ object MinHashLsh {
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame = {
     val sigs = signatures(docs, idCol, textCol, cfg)
-    jaccardVerifyDocs(candidatePairs(bandKeys(sigs, cfg), cfg.saltFactor),
+    jaccardVerifyDocs(candidatePairs(bandKeys(sigs, cfg)),
       docs, idCol, textCol, cfg)
   }
 }

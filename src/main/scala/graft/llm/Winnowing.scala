@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD
@@ -16,20 +16,12 @@ import org.apache.spark.sql.functions._
   * per document, deduplicated): positional attribution (which offset
   * matched) is not kept, which is the right trade for dedup/overlap
   * detection — the pair join needs identity, not alignment.
-  * [[positionalFingerprints]] is the opt-in POSITIONAL form — (doc, pos,
-  * f), the Schleimer et al. §2 output shape — for alignment/attribution
-  * consumers (clone REGION reporting, cross-document diffing); the
-  * posting-list join shape is identical, positions ride along.
   *
   * Scale shape: fingerprint extraction is entirely scan-time (one
   * compiled-kernel shingle pass + array HOFs — no explode until the final
   * posting list, no self-join on token volume). Overlap detection is a
   * posting-list equi-join on the fingerprint value — candidates only,
-  * never all-pairs (the q24/q65 idiom). A template phrase shared by
-  * thousands of documents makes a hot posting list (|df|² pairs); the
-  * `maxDf` knob drops fingerprints above a document-frequency cap before
-  * the join — the q65 stopword-cap story, with the same loud trade-off:
-  * capped fingerprints can no longer witness an overlap.
+  * never all-pairs (the q24/q65 idiom).
   *
   * Determinism: fingerprints are md5 hex strings (cross-engine stable);
   * counts are exact longs; no floating point anywhere.
@@ -57,61 +49,14 @@ object Winnowing {
       .distinct()
   }
 
-  /** Positional winnowing fingerprints: one row per selected (`idCol`,
-    * `pos`, `f`) — `pos` is the 1-BASED TOKEN OFFSET of the selected
-    * k-gram (each window keeps its LEFTMOST minimal hash, a fixed
-    * deterministic choice; the same (pos, f) selected by several
-    * overlapping windows appears once). Same selection as
-    * [[fingerprints]]: projecting out `pos` and deduplicating yields
-    * exactly its rows, so the w+k−1 overlap guarantee carries over — any
-    * long-enough verbatim clone shares a fingerprint VALUE in both
-    * documents, and `pos` then locates the clone region in each. Same
-    * scan-time shape (shingle kernel + array HOFs, one explode at the
-    * end); documents shorter than `k + w − 1` tokens produce no rows.
-    */
-  def positionalFingerprints(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 3): DataFrame = {
-    require(k >= 1 && w >= 1, "k and w must be >= 1")
-    val hs = transform(
-      graft.functions.TextExprs.wordShingles(col(textCol), k), s => md5(s))
-    // guard: Spark's sequence(1, n) is DESCENDING for n < 1 (see
-    // fingerprints); struct per window = (selected offset, min hash)
-    val sel = when(size(col("__hs")) >= w,
-      array_distinct(transform(
-        sequence(lit(1), size(col("__hs")) - (w - 1)),
-        j => {
-          val win = slice(col("__hs"), j, lit(w))
-          val m = array_min(win)
-          struct((j + array_position(win, m) - 1).cast("int").as("pos"),
-            m.as("f"))
-        })))
-      .otherwise(array().cast("array<struct<pos:int,f:string>>"))
-    docs.select(col(idCol), hs.as("__hs"))
-      .select(col(idCol), explode(sel).as("__pf"))
-      .select(col(idCol), col("__pf.pos").as("pos"), col("__pf.f").as("f"))
-  }
-
   /** Top-`topK` document pairs by shared winnowing fingerprints:
     * `rnk`, `d1`, `d2`, `n_shared` — ties broken on (d1, d2).
-    *
-    * @param maxDf drop fingerprints appearing in more than this many
-    *              documents before the pair join (hot-posting cap; None =
-    *              exact). Capped fingerprints cannot witness an overlap.
     */
   def overlapTopK(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 4, w: Int = 3, topK: Int = 10,
-      maxDf: Option[Long] = None): DataFrame = {
+      k: Int = 4, w: Int = 3, topK: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val f0 = fingerprints(docs, idCol, textCol, k, w)
-    val f = maxDf match {
-      case Some(cap) =>
-        val keep = f0.groupBy(col("f")).agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cap).select(col("f"))
-        f0.join(keep, "f")
-      case None => f0
-    }
+    val f = fingerprints(docs, idCol, textCol, k, w)
     val a = f.select(col("f"), col(idCol).as("d1"))
     val b = f.select(col("f"), col(idCol).as("d2"))
     val top = a.join(b, Seq("f"))

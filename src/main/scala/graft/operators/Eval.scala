@@ -24,6 +24,16 @@ import org.apache.spark.sql.functions._
   */
 object Eval {
 
+  /** Tie count of `v` within the groups `g`. */
+  private def ties(g: Seq[Column], v: Column): Column =
+    count(lit(1)).over(Window.partitionBy(g :+ v: _*))
+
+  /** Doubled midrank of `v` within the groups `g`: `2·rank + ties − 1`,
+    * a tied block's mean rank ×2 as an exact long. */
+  private def midrank2(g: Seq[Column], v: Column): Column =
+    lit(2L) * rank().over(Window.partitionBy(g: _*).orderBy(v)).cast("long") +
+      ties(g, v) - lit(1L)
+
   /** ROC-AUC per group via the Mann–Whitney rank-sum identity:
     *
     *   AUC = (Σ_{i∈pos} R_i − n⁺(n⁺+1)/2) / (n⁺ · n⁻)
@@ -48,14 +58,11 @@ object Eval {
       labelCol: Column, scoreCol: Column): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val g = groupCols.map(col)
-    val wRank = Window.partitionBy(g: _*).orderBy(scoreCol)
-    val wTies = Window.partitionBy(g :+ scoreCol: _*)
     val scored = df
       .filter(scoreCol.isNotNull && labelCol.isNotNull)
       .select(g ++ Seq(
         labelCol.cast("boolean").as("__pos"),
-        (lit(2L) * rank().over(wRank).cast("long") +
-          count(lit(1)).over(wTies) - lit(1L)).as("__r2")): _*)
+        midrank2(g, scoreCol).as("__r2")): _*)
     scored
       .groupBy(g: _*)
       .agg(
@@ -88,12 +95,9 @@ object Eval {
       x: Column, y: Column): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val g = groupCols.map(col)
-    def r2(c: Column): Column =
-      (lit(2L) * rank().over(Window.partitionBy(g: _*).orderBy(c)).cast("long") +
-        count(lit(1)).over(Window.partitionBy(g :+ c: _*)) - lit(1L))
     val ranked = df
       .filter(x.isNotNull && y.isNotNull)
-      .select(g ++ Seq(r2(x).as("__rx2"), r2(y).as("__ry2")): _*)
+      .select(g ++ Seq(midrank2(g, x).as("__rx2"), midrank2(g, y).as("__ry2")): _*)
     ranked
       .groupBy(g: _*)
       .agg(
@@ -664,17 +668,14 @@ object Eval {
       valueCol: Column, inSampleA: Column): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val g = groupCols.map(col)
-    val wRank = Window.partitionBy(g: _*).orderBy(col("__v4"))
-    val wTies = Window.partitionBy(g :+ col("__v4"): _*)
     val scored = df
       .filter(valueCol.isNotNull && inSampleA.isNotNull)
       .select(g ++ Seq(
         floor(valueCol.cast("double") * 10000 + 0.5).cast("long").as("__v4"),
         inSampleA.cast("boolean").as("__a")): _*)
       .select(g ++ Seq(col("__a"),
-        (lit(2L) * rank().over(wRank).cast("long") +
-          count(lit(1)).over(wTies) - lit(1L)).as("__r2"),
-        count(lit(1)).over(wTies).as("__t")): _*)
+        midrank2(g, col("__v4")).as("__r2"),
+        ties(g, col("__v4")).as("__t")): _*)
     val m = scored.groupBy(g: _*).agg(
       sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
       sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"),
@@ -988,17 +989,14 @@ object Eval {
       valueCol: Column, levelCol: Column): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val g = groupCols.map(col)
-    val wRank = Window.partitionBy(g: _*).orderBy(col("__v4"))
-    val wTies = Window.partitionBy(g :+ col("__v4"): _*)
     val scored = df
       .filter(valueCol.isNotNull)
       .select(g ++ Seq(levelCol.cast("string").as("__lvl"),
         floor(valueCol.cast("double") * 10000 + 0.5).cast("long")
           .as("__v4")): _*)
       .select(g ++ Seq(col("__lvl"),
-        (lit(2L) * rank().over(wRank).cast("long") +
-          count(lit(1)).over(wTies) - lit(1L)).as("__r2"),
-        count(lit(1)).over(wTies).as("__t")): _*)
+        midrank2(g, col("__v4")).as("__r2"),
+        ties(g, col("__v4")).as("__t")): _*)
     val lvl = scored.groupBy(g :+ col("__lvl"): _*)
       .agg(count(lit(1)).as("__nl"),
         sum(dec38(col("__r2"))).as("__rs2"),
@@ -1057,17 +1055,14 @@ object Eval {
     val g = groupCols.map(col)
     val d4 = floor(aCol.cast("double") * 10000 + 0.5).cast("long") -
       floor(bCol.cast("double") * 10000 + 0.5).cast("long")
-    val wRank = Window.partitionBy(g: _*).orderBy(col("__ad"))
-    val wTies = Window.partitionBy(g :+ col("__ad"): _*)
     val scored = df
       .filter(aCol.isNotNull && bCol.isNotNull)
       .select(g :+ d4.as("__d4"): _*)
       .filter(col("__d4") =!= 0L)
       .withColumn("__ad", abs(col("__d4")))
       .select(g ++ Seq(col("__d4"),
-        (lit(2L) * rank().over(wRank).cast("long") +
-          count(lit(1)).over(wTies) - lit(1L)).as("__r2"),
-        count(lit(1)).over(wTies).as("__t")): _*)
+        midrank2(g, col("__ad")).as("__r2"),
+        ties(g, col("__ad")).as("__t")): _*)
     val m = scored.groupBy(g: _*).agg(
       count(lit(1)).as("n"),
       sum(when(col("__d4") > 0, col("__r2")).otherwise(0L)).as("w2p"),

@@ -85,8 +85,7 @@ object Hll {
     * into the bucket — [[estimateComponents]] folds exactly as if the
     * absent registers were absent rows, so `estimate(sketch(subset))`
     * and this fused form are value-identical. An always-true tag yields
-    * the UNION sketch (cell-wise max over all rows = [[mergeSketches]]
-    * of the parts, by construction).
+    * the UNION sketch (cell-wise max over all rows of the parts).
     *
     * @param tags (outputColumn, rowPredicate) per subset
     * @return (groupCols…, bucket, one nullable rank column per tag)
@@ -147,23 +146,6 @@ object Hll {
       .agg(count(lit(1)).as("__nz"), sum(pow2negExpr("m_rank")).as("__s"))
     agg.select((g :+
       estimateExpr(col("__nz"), col("__s"), b).as("est")): _*)
-  }
-
-  /** Merge two register tables over the same groups/precision: cell-wise
-    * MAX per (group, bucket) — the mergeability that makes HLL the
-    * 100 TB distinct path (per-shard sketches union without colocating
-    * values), here exposed for SET ALGEBRA: `estimate(mergeSketches(a,
-    * b))` estimates |A ∪ B|, and inclusion–exclusion
-    * `est_A + est_B − est_∪` estimates |A ∩ B| (the standard HLL
-    * intersection, error grows as the intersection shrinks relative to
-    * the union — report it alongside the union, never alone).
-    */
-  def mergeSketches(
-      a: DataFrame, b: DataFrame, groupCols: Seq[String]): DataFrame = {
-    val g = groupCols.map(col)
-    a.unionByName(b)
-      .groupBy((g :+ col("bucket")): _*)
-      .agg(max(col("m_rank")).as("m_rank"))
   }
 
   /** SQL twin of sketch + estimate for cross-engine oracles (DuckDB):

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Key-skew profiler — the diagnostic that decides the scale tactics this
-  * library leans on everywhere else: is a join side broadcast-able, does a
-  * key need salting (`MinHashLsh`-style), how many partitions does a
+  * library leans on everywhere else: is a join side broadcast-able, is a
+  * key hot enough for AQE's skew-join split, how many partitions does a
   * shuffle on this key actually spread over. One corpus scan; everything
   * downstream is answer-sized.
   *

@@ -1745,9 +1745,9 @@ object Catalog {
     * is the step that turns PAIRS into a deduplicated CORPUS — A≈B, B≈C
     * must collapse to one cluster even when A,C never shared a band. The
     * oracle states the same transitive closure as a recursive CTE.
-    * Bench regime note: the component solve (`DedupCluster.Auto` — the
-    * threshold-gated local tier at bench pair counts, monitored
-    * propagation + star escape beyond it) runs at DataFrame BUILD time,
+    * Bench regime note: the component solve (`DedupCluster.components`'
+    * tiering — the threshold-gated local tier at bench pair counts,
+    * monitored propagation + star escape beyond it) runs at DataFrame BUILD time,
     * so this query is flagged `eagerBuild` and the bench rebuilds it
     * inside every timed run — the Spark number INCLUDES the closure,
     * exactly as the oracle re-pays its recursive CTE per execution.
@@ -2166,8 +2166,7 @@ object Catalog {
     val pairs = graft.llm.MinHashLsh
       .nearDupPairs(docs, "doc_id", "text")
       .filter(col("jaccard") >= 0.5)
-    val comps = graft.llm.DedupCluster.components(pairs, "a", "b",
-      algorithm = graft.llm.DedupCluster.Auto)
+    val comps = graft.llm.DedupCluster.components(pairs, "a", "b")
     val scored = comps.join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
     val best = Dedupe.topOnePerKey(scored,
       keys = Seq(col("rep")),
@@ -2203,15 +2202,15 @@ object Catalog {
       .transform(ordered("qid", "rank"))
   }
 
-  /** Adaptive connected components (`DedupCluster.Auto`) on an ADVERSARIAL
-    * graph the default propagation provably cannot converge on inside its
-    * round budget: a diameter-59 chain (doc ids 0–59) plus eleven 2-node
-    * jump components. Propagation needs rounds = diameter (59 > maxIters
-    * 25, loud failure — LlmSpec pins it); the Auto tiering solves this
-    * FIXED-SIZE graph (~70 canonical edges at every SF) in the
-    * threshold-bounded local union–find tier — per-round job floors were
-    * the whole cost here — while the large-star/small-star escape (which
-    * the seeded-escalation and adversarial-chain LlmSpec tests keep green)
+  /** Tiered connected components (`DedupCluster.components`) on an
+    * ADVERSARIAL graph plain min-label propagation cannot converge on
+    * inside its round budget: a diameter-59 chain (doc ids 0–59) plus
+    * eleven 2-node jump components. Label propagation needs rounds =
+    * diameter (59 > the 25-round budget); the tiering solves this FIXED-SIZE graph
+    * (~70 canonical edges at every SF) in the threshold-bounded local
+    * union–find tier — per-round job floors were the whole cost here —
+    * while the seeded large-star/small-star escape (which the
+    * adversarial-chain LlmSpec tests keep green with the local tier off)
     * handles the same shape when it arrives at cluster scale. The DuckDB
     * twin is the natural recursive-CTE transitive closure — tiny here
     * (60-node chain), quadratic in general.
@@ -2232,10 +2231,9 @@ object Catalog {
       .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
     val jumps = ids.filter(col("doc_id").between(70, 80))
       .select(col("doc_id").as("a"), (col("doc_id") * 3).as("b"))
-    graft.llm.DedupCluster.components(chain.unionByName(jumps), "a", "b",
-        algorithm = graft.llm.DedupCluster.Auto)
+    graft.llm.DedupCluster.components(chain.unionByName(jumps), "a", "b")
       .transform(ordered("id"))
-  }.copy(eagerBuild = true) // the Auto gate + solve run driver-side actions
+  }.copy(eagerBuild = true) // the tier gate + solve run Spark actions
                             // at build time, same regime as q61's propagation
 
   /** Per-document duplicated-passage profile
@@ -2714,7 +2712,7 @@ object Catalog {
   }
 
   /** Key-skew profiler (`operators/SkewProfile`): the diagnostic behind
-    * every salting/broadcast decision in this library, as a first-class
+    * every skew/broadcast decision in this library, as a first-class
     * operator — top-10 heavy keys with row shares and cumulative share,
     * riding on the per-key count distribution frame (`n_keys`, `n_rows`,
     * exact interpolated p50/p99 of key counts). One corpus-sized hash
@@ -4748,11 +4746,11 @@ object Catalog {
     * ≤ w·n candidates) → a null-safe similarity gate
     * ([[graft.functions.JaroWinklerSim]] at the r4-floor compare
     * convention + an exact-cents |Δbalance| band) →
-    * [[graft.llm.DedupCluster.components]] under AUTO tiering (the
-    * balance band chains records, so components can be path-shaped and
-    * plain min-label propagation's O(diameter) rounds would not converge
-    * in bounded iterations; Auto solves the threshold-bounded pair list
-    * locally and escapes to the star alternation at scale) → a
+    * [[graft.llm.DedupCluster.components]]'s tiering (the balance band
+    * chains records, so components can be path-shaped and plain
+    * min-label propagation's O(diameter) rounds would not converge in
+    * bounded iterations; the tiering solves the threshold-bounded pair
+    * list locally and escapes to the star alternation at scale) → a
     * canonical-record pick per cluster (max balance, id tie-break).
     * Scale: candidates bounded by construction, name/balance attach is a
     * dimension-broadcast, the closure runs bucketed star rounds — no
@@ -4805,8 +4803,7 @@ object Catalog {
         floor(graft.functions.JaroWinklerSim.jaroWinkler(
           col("n_a"), col("n_b")) * 10000 + 0.5) >= 9000)
       .select(col("id_a"), col("id_b"))
-    val comp = graft.llm.DedupCluster.components(pairs, "id_a", "id_b",
-      algorithm = graft.llm.DedupCluster.Auto)
+    val comp = graft.llm.DedupCluster.components(pairs, "id_a", "id_b")
     val w = Window.partitionBy(col("rep"))
       .orderBy(col("bal2").desc, col("id").asc)
     comp

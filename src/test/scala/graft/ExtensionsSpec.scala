@@ -13,7 +13,6 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions._
-import graft.operators.Salt
 
 /** One input frame and every native Column helper over it, shared by the
   * SQL-name case and the session-independence case.
@@ -340,23 +339,6 @@ class SquaredL2Spec extends SparkSpec {
     assert(edge.isNullAt(0))
     assert(edge.getDouble(1) == 0.0)
     assert(edge.isNullAt(2))
-  }
-}
-
-class SaltSpec extends SparkSpec {
-  import spark.implicits._
-
-  private val skewed = (1 to 900).map(i => ("hot", i.toLong, 1.0)) ++
-    (1 to 100).map(i => (s"k${i % 10}", (1000 + i).toLong, 2.0))
-
-  test("salted join equals plain join") {
-    val big = skewed.toDF("k", "id", "v")
-    val small = Seq(("hot", "HOT"), ("k1", "K1")).toDF("k", "label")
-    val salted = Salt.saltedJoin(big, small, "k", "id", factor = 4)
-      .orderBy("id").collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("label")))
-    val plain = big.join(small, Seq("k"), "left")
-      .orderBy("id").collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("label")))
-    assert(salted.sameElements(plain))
   }
 }
 

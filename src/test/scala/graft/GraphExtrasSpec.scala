@@ -47,14 +47,6 @@ class GraphExtrasSpec extends SparkSpec {
     assert(LinkPredict.predict(edges, "src", "dst", k = 5).count() == 0)
   }
 
-  test("predict: maxDeg excludes hub centers deterministically") {
-    // star: hub 0 connected to 1..5; every leaf pair is distance-2 via
-    // the hub. With maxDeg < 5 the hub is excluded → no wedges at all.
-    val edges = (1L to 5L).map(i => (0L, i)).toDF("src", "dst")
-    assert(LinkPredict.predict(edges, "src", "dst", k = 100).count() == 10)
-    assert(LinkPredict.predict(edges, "src", "dst", k = 100, maxDeg = Some(4L)).count() == 0)
-  }
-
   // ------------------------------------------------------------ k-core
 
   test("kCorePeel: 2-core strips pendants and trees, keeps the cycle") {

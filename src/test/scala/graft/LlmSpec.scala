@@ -202,40 +202,32 @@ class LlmSpec extends SparkSpec {
     assert(sig.length == 8)
   }
 
-  test("salted band join ≡ unsalted on a deliberately skewed corpus") {
+  test("band join on a deliberately skewed corpus: the hot bucket's full pair set") {
     // one hot bucket: 40 exact copies of the same text minhash identically
-    // in EVERY band (plus the two unrelated docs) — the 100 TB boilerplate
-    // failure shape where one band key holds a quadratic pair count
+    // in EVERY band (plus the two unrelated docs) — the boilerplate shape
+    // where one band key holds a quadratic pair count
     val skewed = ((0L until 40L).map(i => (i, "same boilerplate text repeated " +
       "across the whole corpus forever and ever amen")) ++ Seq(
       (100L, "completely different content about spark engines and queries"),
       (101L, "another unrelated document mentioning rivers and banks only")))
       .toDF("doc_id", "text")
-    def pairsWith(cfg: MinHashLsh.Config) =
-      MinHashLsh.nearDupPairs(skewed, "doc_id", "text", cfg)
-        .collect()
-        .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
-          r.getAs[Long]("n_bands"), r.getAs[Double]("jaccard"))).toSet
-    val unsalted = pairsWith(MinHashLsh.Config())
-    val salted = pairsWith(MinHashLsh.Config(saltFactor = 4))
-    assert(salted == unsalted)
-    assert(unsalted.size == 40 * 39 / 2) // the hot bucket's full pair set
-    assert(unsalted.forall { case (a, b, nb, j) => a < 40 && b < 40 && nb == 4 && j == 1.0 })
+    val pairs = MinHashLsh.nearDupPairs(skewed, "doc_id", "text")
+      .collect()
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"),
+        r.getAs[Long]("n_bands"), r.getAs[Double]("jaccard"))).toSet
+    assert(pairs.size == 40 * 39 / 2) // the hot bucket's full pair set
+    assert(pairs.forall { case (a, b, nb, j) => a < 40 && b < 40 && nb == 4 && j == 1.0 })
   }
 
-  test("salted in-cell dedup ≡ unsalted on a hot cell") {
+  test("in-cell dedup on a hot cell: each dup keeps its most-similar lower id") {
     // every vector lands in one cell (all same direction ± tiny noise)
     val hot = (0L until 30L).map { i =>
       (i, Array(1.0f, (i % 7) * 1e-4f, 0.0f, 0.0f), 0)
     }.toDF("vec_id", "embedding", "label")
     val cents = Embeddings.centroids(hot)
     val quant = Embeddings.trainQuantizer(cents)
-    def dedupWith(salt: Int) =
-      Embeddings.dedupInCells(hot, quant, 0.9, saltFactor = salt)
-        .collect().map(r => (r.getAs[Long]("dup_id"), r.getAs[Long]("kept_id"))).toSet
-    val unsalted = dedupWith(1)
-    val salted = dedupWith(4)
-    assert(salted == unsalted)
+    val kept = Embeddings.dedupInCells(hot, quant, 0.9)
+      .collect().map(r => (r.getAs[Long]("dup_id"), r.getAs[Long]("kept_id"))).toSet
     // every non-zero id is a near-dup; its keeper is the most-similar
     // lower id (sim desc, kept_id asc): the lowest id sharing its noise
     // component (i % 7) when one exists below it, else the adjacent-noise
@@ -243,7 +235,7 @@ class LlmSpec extends SparkSpec {
     val expected = (1L until 30L).map { i =>
       (i, if (i >= 7) i % 7 else i - 1)
     }.toSet
-    assert(unsalted == expected)
+    assert(kept == expected)
   }
 
   test("quantizer memo: regeneration under the same path retrains and evicts the stale entry") {
@@ -442,82 +434,97 @@ class LlmSpec extends SparkSpec {
       .orderBy("rep").collect()
     assert(summary.map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ==
       Seq((1L, 4L, "1,2,3,4"), (10L, 2L, "10,11"), (20L, 2L, "20,21")))
-    // a longer chain still converges (diameter 9 < maxIters)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val chain = (0 until 9).map(i => (i.toLong, i + 1L)).toDF("a", "b")
-    val chainComps = DedupCluster.components(chain, "a", "b").collect()
-    assert(chainComps.length == 10 && chainComps.forall(_.getLong(1) == 0L))
     // storage stays flat across rounds: every superseded round's
     // localCheckpoint blocks are released — only the final labels (and
-    // nothing per-iteration) may remain after ~9 propagation rounds
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1, s"leaked checkpoint RDDs: $before -> $after")
+    // nothing per-iteration) may remain. The local tier is off, so this
+    // runs the propagation rounds (diameter-9 chain) and, on the
+    // diameter-59 chain, the propagation rounds plus the star escape.
+    for (len <- Seq(9, 59)) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val chain = (0 until len).map(i => (i.toLong, i + 1L)).toDF("a", "b")
+      val chainComps = DedupCluster.components(chain, "a", "b",
+        localSolveMaxEdges = 0L).collect()
+      assert(chainComps.length == len + 1 && chainComps.forall(_.getLong(1) == 0L))
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after - before <= 1, s"chain $len leaked checkpoint RDDs: $before -> $after")
+    }
   }
 
+  /** Near-dup-shaped fixture: multi-cluster, reversed pairs, a duplicate
+    * edge and a self-pair singleton, with its fixed labels. */
+  private val nearDupPairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L),
+    (21L, 20L), (2L, 1L), (30L, 30L))
+  private val nearDupLabels = Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+    10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L)
+
   test("dedup clusters: alternating-star escape hatch for adversarial chains") {
-    // diameter-59 path graph: propagation needs ~59 rounds and must fail
-    // LOUDLY at the default 25, naming the escape hatch
-    val longChain = (0 until 59).map(i => (i.toLong, i + 1L)).toDF("a", "b")
-    val boom = intercept[IllegalStateException] {
-      DedupCluster.components(longChain, "a", "b").collect()
-    }
-    assert(boom.getMessage.contains("AlternatingStar"))
-
-    // pointer doubling converges well inside the same budget (O(log²) vs
-    // O(diameter) rounds) and labels the whole chain with its min
-    val starComps = DedupCluster
-      .components(longChain, "a", "b", algorithm = DedupCluster.AlternatingStar)
+    // a 61-node path whose ids are permuted along it (node i of the path is
+    // 37·i mod 61), local tier off: propagation needs ~60 rounds, retires
+    // O(1) labels per round, stalls and must escape to the SEEDED star
+    // fixpoint, which converges inside the 25-round budget
+    val perm = (0 to 60).map(i => (37L * i) % 61)
+    val path = perm.zip(perm.tail).toDF("a", "b")
+    val escaped = DedupCluster.components(path, "a", "b", localSolveMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(starComps.size == 60 && starComps.forall(_._2 == 0L))
+    assert(escaped.size == 61 && escaped.forall(_._2 == 0L))
 
-    // on normal (near-dup-shaped) fixtures both algorithms agree exactly —
-    // multi-cluster, reversed pairs, duplicate edges, self-pair singleton
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (21L, 20L),
-      (2L, 1L), (30L, 30L)).toDF("a", "b")
-    val prop = DedupCluster.components(pairs, "a", "b")
+    // propagation alone suffices on a near-dup-shaped (shallow) graph with
+    // the local tier off — geometric change-shrink never trips the escape
+    val shallow = DedupCluster.components(nearDupPairs.toDF("a", "b"), "a", "b",
+        localSolveMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val star = DedupCluster
-      .components(pairs, "a", "b", algorithm = DedupCluster.AlternatingStar)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(star == prop)
-    assert(star.contains(30L -> 30L)) // self-pair singleton labels itself
+    assert(shallow == nearDupLabels)
   }
 
   test("dedup clusters: Auto tiering — local union-find, seeded star escape") {
-    // tier 1: sub-threshold edge list → driver union-find; identical labels
-    // to propagation, self-pair singleton preserved
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (21L, 20L),
-      (2L, 1L), (30L, 30L)).toDF("a", "b")
-    val auto = DedupCluster.components(pairs, "a", "b",
-      algorithm = DedupCluster.Auto)
+    // sub-threshold edge list → local union-find: the same fixed labels
+    // as the distributed tiers, self-pair singleton preserved
+    val local = DedupCluster.components(nearDupPairs.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val prop = DedupCluster.components(pairs, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(auto == prop)
-    assert(auto.contains(30L -> 30L))
+    assert(local == nearDupLabels)
 
-    // tier 1 solves the adversarial diameter-59 chain without iteration
+    // the local tier solves the adversarial diameter-59 chain without iteration
     val longChain = (0 until 59).map(i => (i.toLong, i + 1L)).toDF("a", "b")
-    val autoChain = DedupCluster.components(longChain, "a", "b",
-      algorithm = DedupCluster.Auto)
+    val localChain = DedupCluster.components(longChain, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(autoChain.size == 60 && autoChain.forall(_._2 == 0L))
+    assert(localChain.size == 60 && localChain.forall(_._2 == 0L))
 
-    // tiers 2+3: gate forced off (localSolveMaxEdges = 0) — monitored
-    // propagation stalls on the chain (O(1) labels retired per round) and
-    // must escape to the SEEDED star fixpoint, converging where plain
-    // propagation would throw at maxIters
+    // local tier off: monitored propagation stalls on the same chain and
+    // escapes to the seeded star fixpoint — the same labels
     val escalated = DedupCluster.components(longChain, "a", "b",
-      algorithm = DedupCluster.Auto, localSolveMaxEdges = 0L)
+        localSolveMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(escalated.size == 60 && escalated.forall(_._2 == 0L))
+    assert(escalated == localChain)
+  }
 
-    // tier 2 alone suffices on a near-dup-shaped (shallow) graph even with
-    // the local gate off — geometric change-shrink never trips the escape
-    val shallow = DedupCluster.components(pairs, "a", "b",
-      algorithm = DedupCluster.Auto, localSolveMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(shallow == prop)
+  test("dedup clusters: NULL-endpoint pairs dropped in every tier; empty input; self-pair") {
+    // a NULL id names no document: (NULL,5) and (7,NULL) link nothing and
+    // add no node — no phantom (5,5), (7,7) or (NULL,NULL) rows
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(5L)),
+      (Some(7L), None), (Some(10L), Some(11L))).toDF("a", "b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    val expected = Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+      .map { case (i, r) => (Option[Any](i), Option[Any](r)) }
+    for (gate <- Seq(100000L, 0L))
+      assert(labels(DedupCluster.components(withNulls, "a", "b",
+        localSolveMaxEdges = gate)) == expected, s"localSolveMaxEdges $gate")
+    val summary = DedupCluster.clusterSummary(withNulls, "a", "b")
+      .orderBy("rep").collect()
+    assert(summary.map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ==
+      Seq((1L, 3L, "1,2,3"), (10L, 2L, "10,11")))
+
+    // an empty pair list has no nodes and no clusters
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(DedupCluster.components(empty, "a", "b").count() == 0)
+    assert(DedupCluster.clusterSummary(empty, "a", "b").count() == 0)
+
+    // a self-pair is a node with no edge: it labels itself
+    val self = Seq((30L, 30L)).toDF("a", "b")
+    for (gate <- Seq(100000L, 0L))
+      assert(DedupCluster.components(self, "a", "b", localSolveMaxEdges = gate)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq == Seq(30L -> 30L))
   }
 
   test("stratified sample: deterministic, subset-monotone, rate-proportional") {
@@ -572,7 +579,7 @@ class LlmSpec extends SparkSpec {
     assert(sbanana.getAs[Long]("df") == 3L) // still corpus-wide
   }
 
-  test("decontam: verbatim quote scores containment 1.0, boilerplate cap only lowers") {
+  test("decontam: verbatim quote scores containment 1.0, every boilerplate host flagged") {
     // benchmark item (6 words → 3 distinct 4-grams) quoted verbatim inside
     // a much longer training doc — symmetric Jaccard would be tiny
     val quote = "alpha beta gamma delta epsilon zeta"
@@ -592,18 +599,14 @@ class LlmSpec extends SparkSpec {
     // minContainment filters
     assert(Decontam.exactNgramOverlap(train, bench, "doc_id", "text", n = 4,
       minContainment = 1.1).count() == 0)
-    // boilerplate cap: an n-gram present in >cap training docs is dropped —
-    // containment can only fall, never rise, and the denominator is stable
+    // boilerplate quoted by three training docs: every host is a full hit
     val boiler = "common header line one two three four"
     val train2 = Seq((1L, boiler + " body a"), (2L, boiler + " body b"),
       (3L, boiler + " body c")).toDF("doc_id", "text")
     val bench2 = Seq((9L, boiler)).toDF("doc_id", "text")
-    val uncapped = Decontam.exactNgramOverlap(train2, bench2, "doc_id", "text", n = 4)
+    val hosts = Decontam.exactNgramOverlap(train2, bench2, "doc_id", "text", n = 4)
       .collect().map(r => (r.getAs[Long]("a"), r.getAs[Double]("containment"))).toMap
-    assert(uncapped.size == 3 && uncapped.values.forall(_ == 1.0))
-    val capped = Decontam.exactNgramOverlap(train2, bench2, "doc_id", "text", n = 4,
-      maxTrainDf = Some(2L)).count()
-    assert(capped == 0) // every gram of the boilerplate is in 3 > 2 docs
+    assert(hosts.size == 3 && hosts.values.forall(_ == 1.0))
   }
 
   test("semanticOverlap: bucket-blocked cosine sweep; threshold + bucket misses") {
@@ -1117,7 +1120,7 @@ class LlmSpec extends SparkSpec {
     assert(top(1).getAs[String]("node") == "a") // tie a/c broken on node id
   }
 
-  test("winnowing: overlap guarantee, short-doc vanishing, df cap") {
+  test("winnowing: overlap guarantee, short-doc vanishing, shared template pairs all") {
     import spark.implicits._
     // k=4, w=3 → any verbatim overlap of ≥ w+k-1 = 6 tokens MUST share a
     // fingerprint (the winnowing selection guarantee)
@@ -1137,48 +1140,11 @@ class LlmSpec extends SparkSpec {
     assert(top(0).getAs[Long]("d1") == 1L && top(0).getAs[Long]("d2") == 2L)
     assert(top(0).getAs[Long]("n_shared") == shared)
 
-    // df cap: a fingerprint present in all three docs is dropped at cap=2
+    // a template shared by all three docs witnesses all three pairs
     val tpl = "t1 t2 t3 t4 t5 t6"
     val hot = Seq((1L, tpl), (2L, tpl), (3L, tpl)).toDF("doc_id", "text")
     assert(Winnowing.overlapTopK(hot, "doc_id", "text", k = 4, w = 3,
-      topK = 5, maxDf = Some(2L)).count() == 0)
-    assert(Winnowing.overlapTopK(hot, "doc_id", "text", k = 4, w = 3,
-      topK = 5).count() == 3) // uncapped: all three pairs
-  }
-
-  test("winnowing positional: same selection as value form, offsets locate the k-gram") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "q w e r t y u i o p"),
-      (2L, "z1 z2 q w e r t y x1 x2"), // shares the 6-token run (k+w-1 = 6)
-      (3L, "a b c")                    // < k tokens → no fingerprints
-    ).toDF("doc_id", "text")
-    val pf = Winnowing.positionalFingerprints(docs, "doc_id", "text", k = 4, w = 3)
-    // projection to values = exactly the value form's selection
-    val fromPos = pf.select(col("doc_id"), col("f")).distinct()
-    val valueForm = Winnowing.fingerprints(docs, "doc_id", "text", k = 4, w = 3)
-    assert(fromPos.exceptAll(valueForm).count() == 0)
-    assert(valueForm.exceptAll(fromPos).count() == 0)
-    // every (pos, f): f is the md5 of the k-gram starting at that 1-based
-    // token offset — positions really locate the fingerprinted shingle
-    val rows = pf.collect()
-    assert(rows.nonEmpty)
-    val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    rows.foreach { r =>
-      val toks = texts(r.getAs[Long]("doc_id")).split(" ")
-      val pos = r.getAs[Int]("pos")
-      val gram = toks.slice(pos - 1, pos - 1 + 4).mkString(" ")
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(gram.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      assert(h == r.getAs[String]("f"), s"pos $pos does not locate its k-gram")
-    }
-    // guarantee with positions: the shared 6-token run selects at least one
-    // identical fingerprint VALUE in docs 1 and 2
-    val f1 = rows.filter(_.getLong(0) == 1L).map(_.getAs[String]("f")).toSet
-    val f2 = rows.filter(_.getLong(0) == 2L).map(_.getAs[String]("f")).toSet
-    assert((f1 & f2).nonEmpty)
-    // short doc: no rows
-    assert(!rows.exists(_.getLong(0) == 3L))
+      topK = 5).count() == 3)
   }
 
   test("personalized pagerank: seed teleport, uniform-seed law, source-only seeds, unknown seed") {

@@ -104,29 +104,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("salted LSH candidate pairs ≡ unsalted over a random small-vocab corpus") {
-    import graft.llm.MinHashLsh
-    // tiny vocabulary → natural duplicates, shared shingles, and skewed
-    // band buckets — the shapes the salt rewrite must preserve exactly
-    val docGen = Gen.listOfN(120, for {
-      n <- Gen.choose(3, 8)
-      ws <- Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta"))
-    } yield ws.mkString(" "))
-    val texts = docGen.pureApply(Gen.Parameters.default, Seed(7L))
-    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    def pairs(salt: Int) = {
-      val cfg = MinHashLsh.Config(saltFactor = salt)
-      MinHashLsh.candidatePairs(
-          MinHashLsh.bandKeys(MinHashLsh.signatures(corpus, "doc_id", "text", cfg), cfg),
-          cfg.saltFactor)
-        .collect()
-        .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"), r.getAs[Long]("n_bands"))).toSet
-    }
-    val unsalted = pairs(1)
-    assert(unsalted.nonEmpty) // the vocab guarantees collisions to compare
-    for (f <- Seq(2, 5)) assert(pairs(f) == unsalted, s"saltFactor $f diverged")
-  }
-
   test("packing: per-shard net waste under one budget quantum, rows conserved") {
     import graft.llm.Packing
     // skewed token counts across a few shards — boundary-crossing docs,

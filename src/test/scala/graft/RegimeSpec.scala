@@ -218,10 +218,7 @@ class RegimeSpec extends AnyFunSuite {
       "TextAnalysis.charGrams" -> kernelReference,
       "TextAnalysis.jaccardSets" -> kernelReference,
       "SimHash.simhash32Agg" -> kernelReference,
-      "Salt.saltedJoin" -> "the salted skew join, kept as a library operator",
-      "Hll.mergeSketches" -> pinnedOperator,
-      "Bootstrap.poissonWeight" -> pinnedOperator,
-      "Winnowing.positionalFingerprints" -> pinnedOperator)
+      "Bootstrap.poissonWeight" -> pinnedOperator)
   }
 
   test("every public definition under src/main is reached by the engine, a tool or the benchmark") {
