@@ -5,66 +5,15 @@ import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-
-/** Native vector math over `array<double>` columns — tier-(b) custom
-  * Catalyst expressions. The `zip_with` + `aggregate` formulation is
-  * interpreted (per-element lambda dispatch through NamedLambdaVariable);
-  * these run one compiled primitive loop per row ([[ArrayKernels]]), which
-  * whole-stage codegen calls like `eval` does.
-  * Element order is ascending-index (fold-left), matching both the
-  * interpreted formulation and DuckDB's list functions — results are
-  * bit-identical to what they replace.
-  */
-abstract class ArrayBinaryMath extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<double>, array<double>), got ($l, $r)")
-    }
-}
-
-/** Σ aᵢ·bᵢ over the common prefix; null elements contribute 0. */
-case class DotProduct(left: Expression, right: Expression) extends ArrayBinaryMath {
-  override def prettyName: String = "dot_product"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.ArrayKernels.dot($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** dot(a,b) / (‖a‖·‖b‖), single pass. */
-case class CosineSimilarity(left: Expression, right: Expression) extends ArrayBinaryMath {
-  override def prettyName: String = "cosine_similarity"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ArrayKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ArrayKernels.cosine($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
 
 /** Σ (aᵢ−bᵢ)² — squared Euclidean distance, the PQ/ANN hot kernel.
   *
   * EXACT drop-in for the interpreted formulation it replaces
   * (`aggregate(zip_with(a, b, (x,y) => (x−y)·(x−y)), 0.0, _+_)`),
-  * including its null semantics — which differ from [[DotProduct]]'s
+  * including its null semantics — which differ from `dot_product`'s
   * skip-null convention: zip_with pads a shorter array with nulls and a
   * null term POISONS the fold, so mismatched lengths or any null element
   * yield NULL here, never a silently-partial distance. Ascending-index
@@ -74,9 +23,20 @@ case class CosineSimilarity(left: Expression, right: Expression) extends ArrayBi
   * Generated code hands the kernel a one-slot buffer that lives in the
   * generated class, so a row allocates nothing.
   */
-case class SquaredL2(left: Expression, right: Expression) extends ArrayBinaryMath {
+case class SquaredL2(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
   override def prettyName: String = "squared_l2"
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires (array<double>, array<double>), got ($l, $r)")
+    }
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val out = new Array[Double](1)
@@ -95,7 +55,7 @@ case class SquaredL2(left: Expression, right: Expression) extends ArrayBinaryMat
     copy(left = newLeft, right = newRight)
 }
 
-/** The loops of [[DotProduct]], [[CosineSimilarity]] and [[SquaredL2]]:
+/** The loops of `dot_product`, `cosine_similarity` and [[SquaredL2]]:
   * interpreted `eval` and generated code both call these. */
 object ArrayKernels {
 
@@ -142,11 +102,31 @@ object ArrayKernels {
   }
 }
 
+/** Native vector math over `array<double>` columns. The `zip_with` +
+  * `aggregate` formulation is interpreted (per-element lambda dispatch
+  * through NamedLambdaVariable); these run one compiled primitive loop per
+  * row ([[ArrayKernels]]), which whole-stage codegen calls like `eval`
+  * does. `dot` and `cosine` are Spark's own `StaticInvoke` of their kernel.
+  * Element order is ascending-index (fold-left), matching both the
+  * interpreted formulation and DuckDB's list functions — results are
+  * bit-identical to what they replace.
+  */
 object ArrayMath {
-  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
+  private val vec = ArrayType(DoubleType)
 
-  def cosine(a: Column, b: Column): Column =
-    column(CosineSimilarity(expression(a), expression(b)))
+  /** Σ aᵢ·bᵢ over the common prefix; null elements contribute 0. */
+  private[graft] def dot(a: Expression, b: Expression): Expression =
+    StaticInvoke(ArrayKernels.getClass, DoubleType, "dot", Seq(a, b), Seq(vec, vec),
+      returnNullable = false)
+
+  def dot(a: Column, b: Column): Column = column(dot(expression(a), expression(b)))
+
+  /** dot(a,b) / (‖a‖·‖b‖), single pass. */
+  private[graft] def cosine(a: Expression, b: Expression): Expression =
+    StaticInvoke(ArrayKernels.getClass, DoubleType, "cosine", Seq(a, b), Seq(vec, vec),
+      returnNullable = false)
+
+  def cosine(a: Column, b: Column): Column = column(cosine(expression(a), expression(b)))
 
   def l2sq(a: Column, b: Column): Column = column(SquaredL2(expression(a), expression(b)))
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
 
 /** Bloom-filter build + probe as native Catalyst kernels.
@@ -139,35 +140,7 @@ case class BloomAgg(
     copy(inputAggBufferOffset = newOffset)
 }
 
-/** Codegen probe: `bloom_might_contain(sketch, x)` — a tight static call
-  * inside whole-stage codegen (the sketch reference is a broadcast-joined
-  * column, so the generated loop probes local bytes, zero allocation).
-  */
-case class BloomMightContain(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bloom_might_contain"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (binary, long), got (${left.dataType}, ${right.dataType})")
-
-  override protected def nullSafeEval(sketch: Any, x: Any): Any =
-    BloomKernels.mightContain(sketch.asInstanceOf[Array[Byte]], x.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, x) =>
-      s"${ev.value} = graft.functions.BloomKernels.mightContain($s, $x);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[BloomMightContain]] over a BROADCAST sketch instead of a plan literal.
+/** `bloom_might_contain` over a BROADCAST sketch instead of a plan literal.
   *
   * A literal sketch is the fastest probe at small sizes (a codegen constant
   * reference), but it is serialized into the plan and into every task
@@ -228,8 +201,16 @@ object BloomSketch {
   def bloomAgg(c: Column, numBytes: Int, numHashes: Int): Column =
     column(BloomAgg(Cast(expression(c), LongType), numBytes, numHashes).toAggregateExpression())
 
+  /** `bloom_might_contain(sketch, x)`: Spark's `StaticInvoke` of
+    * [[BloomKernels.mightContain]], a tight static call inside whole-stage
+    * codegen (the sketch is a broadcast-joined column, so the generated
+    * loop probes local bytes, zero allocation). */
+  private[graft] def mightContain(sketch: Expression, x: Expression): Expression =
+    StaticInvoke(BloomKernels.getClass, BooleanType, "mightContain", Seq(sketch, x),
+      Seq(BinaryType, LongType), returnNullable = false)
+
   def mightContain(sketch: Column, x: Column): Column =
-    column(BloomMightContain(expression(sketch), expression(x)))
+    column(mightContain(expression(sketch), expression(x)))
 
   /** Probe against a broadcast sketch (the large-sketch path — see
     * [[BloomMightContainBroadcast]]). Bit-identical verdicts to the literal

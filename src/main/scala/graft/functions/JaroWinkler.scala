@@ -2,10 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled Jaro-Winkler kernel for the record-linkage verify leg.
@@ -88,39 +87,18 @@ object JaroKernels {
   }
 }
 
-/** Native Catalyst expression wrapping [[JaroKernels.jaroWinkler]] — runs
-  * inside whole-stage codegen as a static call, so a blocked candidate
-  * join scores pairs without leaving the generated loop (preference-order
-  * tier (b): a scalar the built-in function set can't express).
+/** `jaro_winkler(a, b)`: Spark's `StaticInvoke` of
+  * [[JaroKernels.jaroWinkler]] — a static call inside whole-stage codegen,
+  * so a blocked candidate join scores pairs without leaving the generated
+  * loop (a scalar the built-in function set can't express).
   */
-case class JaroWinklerSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jaro_winkler"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got (${left.dataType}, ${right.dataType})")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    JaroKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.JaroKernels.jaroWinkler($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaroWinklerSim {
+
+  private[graft] def jaroWinkler(a: Expression, b: Expression): Expression =
+    StaticInvoke(JaroKernels.getClass, DoubleType, "jaroWinkler", Seq(a, b),
+      Seq(StringType, StringType), returnNullable = false)
 
   /** Column-API form. */
   def jaroWinkler(a: Column, b: Column): Column =
-    column(JaroWinklerSim(expression(a), expression(b)))
+    column(jaroWinkler(expression(a), expression(b)))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled q-gram Jaccard kernels — the record-linkage hot path.
@@ -17,10 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * PAIR — the multiplied cost center of a blocked similarity join. These
   * kernels split the work the way the join multiplies it: per ROW, encode
   * the distinct q-grams once as a SORTED primitive long array
-  * ([[CharGramCodes]]; sentinel + 21 bits per code point for q ≤ 3,
+  * (`char_gram_codes`; sentinel + 21 bits per code point for q ≤ 3,
   * 16 bits per BMP code point for q = 4 — details below); per PAIR, a
   * two-pointer merge counts the intersection with zero allocation
-  * ([[SortedCodesJaccard]]).
+  * (`sorted_codes_jaccard`). Each SQL function is Spark's `StaticInvoke`
+  * of its kernel here, which generated code and `eval` both call.
   *
   * Semantics match `charGrams` exactly (grams = `substr(s, i, q)` for
   * i ∈ [1, max(len−q+1, 1)], distinct — strings shorter than q yield the
@@ -43,7 +43,7 @@ object QgramKernels {
   /** Sorted distinct packed gram codes of `s` (see object doc for the
     * code-point basis and the collision-free packing).
     */
-  def gramCodes(s: UTF8String, q: Int): Array[Long] = {
+  def gramCodes(s: UTF8String, q: Int): ArrayData = {
     val str = s.toString
     // one pass UTF-16 → code points (the gram unit; see object doc)
     val cps = new Array[Int](str.codePointCount(0, str.length))
@@ -91,7 +91,7 @@ object QgramKernels {
       if (w == 0 || raw(i) != raw(w - 1)) { raw(w) = raw(i); w += 1 }
       i += 1
     }
-    if (w == cnt) raw else java.util.Arrays.copyOf(raw, w)
+    new GenericArrayData(if (w == cnt) raw else java.util.Arrays.copyOf(raw, w))
   }
 
   /** Jaccard of two SORTED-distinct string arrays (two-pointer merge over
@@ -150,129 +150,35 @@ object QgramKernels {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  def charGramCodes(s: Column, q: Int): Column = column(CharGramCodes(expression(s), q))
+  private val codes = ArrayType(LongType)
+  private val strings = ArrayType(StringType)
+
+  private[graft] def charGramCodes(s: Expression, q: Int): Expression = {
+    require(q >= 1 && q <= 4, s"char_gram_codes supports q in [1, 4], got $q")
+    StaticInvoke(QgramKernels.getClass, ArrayType(LongType, containsNull = false), "gramCodes",
+      Seq(s, Literal(q)), Seq(StringType, IntegerType), returnNullable = false)
+  }
+
+  def charGramCodes(s: Column, q: Int): Column = column(charGramCodes(expression(s), q))
+
+  private[graft] def sortedCodesJaccard(a: Expression, b: Expression): Expression =
+    StaticInvoke(QgramKernels.getClass, DoubleType, "jaccard", Seq(a, b), Seq(codes, codes),
+      returnNullable = false)
 
   def sortedCodesJaccard(a: Column, b: Column): Column =
-    column(SortedCodesJaccard(expression(a), expression(b)))
+    column(sortedCodesJaccard(expression(a), expression(b)))
+
+  private[graft] def sortedStringsJaccard(a: Expression, b: Expression): Expression =
+    StaticInvoke(QgramKernels.getClass, DoubleType, "jaccardStrings", Seq(a, b),
+      Seq(strings, strings), returnNullable = false)
 
   def sortedStringsJaccard(a: Column, b: Column): Column =
-    column(SortedStringsJaccard(expression(a), expression(b)))
+    column(sortedStringsJaccard(expression(a), expression(b)))
+
+  private[graft] def sortedStringsIntersect(a: Expression, b: Expression): Expression =
+    StaticInvoke(QgramKernels.getClass, LongType, "intersectStrings", Seq(a, b),
+      Seq(strings, strings), returnNullable = false)
 
   def sortedStringsIntersect(a: Column, b: Column): Column =
-    column(SortedStringsIntersect(expression(a), expression(b)))
-}
-
-/** Sorted distinct packed q-gram codes of a string (see [[QgramKernels]]). */
-case class CharGramCodes(child: Expression, q: Int) extends UnaryExpression {
-
-  require(q >= 1 && q <= 4, s"char_gram_codes supports q in [1, 4], got $q")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_gram_codes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string, got ${child.dataType}")
-
-  override protected def nullSafeEval(s: Any): Any =
-    new GenericArrayData(QgramKernels.gramCodes(s.asInstanceOf[UTF8String], q))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.QgramKernels.gramCodes($s, $q));")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Jaccard of two sorted-distinct code arrays (see [[QgramKernels]]). */
-case class SortedCodesJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_codes_jaccard"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def okType(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (okType(left.dataType) && okType(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<long>, array<long>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QgramKernels.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.QgramKernels.jaccard($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Jaccard of two sorted-distinct STRING arrays (see [[QgramKernels]]). */
-case class SortedStringsJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_strings_jaccard"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def okType(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (okType(left.dataType) && okType(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<string>, array<string>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QgramKernels.jaccardStrings(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.QgramKernels.jaccardStrings($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |A ∩ B| of two sorted-distinct string arrays as a LONG (see
-  * [[QgramKernels.intersectStrings]]).
-  */
-case class SortedStringsIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sorted_strings_intersect"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def okType(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (okType(left.dataType) && okType(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<string>, array<string>), got (${left.dataType}, ${right.dataType})")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QgramKernels.intersectStrings(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.QgramKernels.intersectStrings($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+    column(sortedStringsIntersect(expression(a), expression(b)))
 }

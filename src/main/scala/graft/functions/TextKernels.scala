@@ -5,8 +5,9 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -186,27 +187,6 @@ object TextKernels {
   }
 }
 
-/** Codegen-integrated expression wrapping [[TextKernels.shingles]]. */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires string input")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.shingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.shingles($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Codegen-integrated expression wrapping [[TextKernels.markerCounts]]:
   * array<long> of per-marker occurrence counts over padded-lowercase text.
   */
@@ -234,83 +214,41 @@ case class MarkerCounts(child: Expression, markers: Seq[String]) extends UnaryEx
     copy(child = newChild)
 }
 
-/** Codegen-integrated expression wrapping [[TextKernels.simhash32]]. */
-case class SimHash32(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash32"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires string input")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.simhash32(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.simhash32($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Codegen-integrated expression wrapping [[TextKernels.minhashSlices]]. */
-case class MinHashSlices(child: Expression, numHashes: Int) extends UnaryExpression {
-  require(numHashes % 4 == 0, "numHashes must be a multiple of 4")
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_slices"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got $t")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhashSlices(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.minhashSlices($c, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Codegen-integrated expression wrapping [[TextKernels.minhashXx]]. */
-case class MinHashXx(child: Expression, numHashes: Int) extends UnaryExpression {
-  require(numHashes >= 1, "numHashes must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_xx"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string>, got $t")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhashXx(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.minhashXx($c, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** The text kernels as Columns: Spark's `StaticInvoke` of each
+  * [[TextKernels]] method, except `marker_counts` ([[MarkerCounts]]), whose
+  * marker array lives in the generated class. */
 object TextExprs {
-  def wordShingles(text: Column, n: Int): Column = column(WordShingles(expression(text), n))
+  private val strings = ArrayType(StringType)
+
+  private[graft] def wordShingles(text: Expression, n: Int): Expression =
+    StaticInvoke(TextKernels.getClass, ArrayType(StringType, containsNull = false), "shingles",
+      Seq(text, Literal(n)), Seq(StringType, IntegerType), returnNullable = false)
+
+  def wordShingles(text: Column, n: Int): Column = column(wordShingles(expression(text), n))
+
+  private[graft] def minhashSlices(shingles: Expression, numHashes: Int): Expression = {
+    require(numHashes % 4 == 0, "numHashes must be a multiple of 4")
+    StaticInvoke(TextKernels.getClass, strings, "minhashSlices",
+      Seq(shingles, Literal(numHashes)), Seq(strings, IntegerType), returnNullable = false)
+  }
 
   def minhashSlices(shingles: Column, numHashes: Int): Column =
-    column(MinHashSlices(expression(shingles), numHashes))
+    column(minhashSlices(expression(shingles), numHashes))
+
+  private[graft] def minhashXx(shingles: Expression, numHashes: Int): Expression = {
+    require(numHashes >= 1, "numHashes must be >= 1")
+    StaticInvoke(TextKernels.getClass, ArrayType(LongType), "minhashXx",
+      Seq(shingles, Literal(numHashes)), Seq(strings, IntegerType), returnNullable = false)
+  }
 
   def minhashXx(shingles: Column, numHashes: Int): Column =
-    column(MinHashXx(expression(shingles), numHashes))
+    column(minhashXx(expression(shingles), numHashes))
 
-  def simhash32(text: Column): Column = column(SimHash32(expression(text)))
+  private[graft] def simhash32(text: Expression): Expression =
+    StaticInvoke(TextKernels.getClass, StringType, "simhash32", Seq(text), Seq(StringType),
+      returnNullable = false)
+
+  def simhash32(text: Column): Column = column(simhash32(expression(text)))
 
   def markerCounts(text: Column, markers: Seq[String]): Column =
     column(MarkerCounts(expression(text), markers))

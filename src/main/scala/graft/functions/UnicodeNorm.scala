@@ -4,10 +4,9 @@ import java.text.Normalizer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization as a native codegen expression — the corpus
@@ -28,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * mostly-ASCII corpus) avoids any allocation.
   *
   * Scale: per-row compiled kernel inside whole-stage codegen (no UDF
-  * boundary, no serialization), `nullIntolerant` so null handling stays
-  * in generated code.
+  * boundary, no serialization); null inputs short-circuit in generated
+  * code before the call.
   */
 object UnicodeNorm {
   def normalize(s: UTF8String, nfkc: Boolean): UTF8String = {
@@ -40,30 +39,15 @@ object UnicodeNorm {
   }
 }
 
-/** `unicode_norm(text, nfkc)` — NFC (nfkc = false) or NFKC canonical form. */
-case class UnicodeNormalize(child: Expression, nfkc: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = if (nfkc) "nfkc_normalize" else "nfc_normalize"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires string input")
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnicodeNorm.normalize(input.asInstanceOf[UTF8String], nfkc)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnicodeNorm.normalize($c, $nfkc);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnicodeNormExprs {
-  def nfc(text: Column): Column = column(UnicodeNormalize(expression(text), nfkc = false))
 
-  def nfkc(text: Column): Column = column(UnicodeNormalize(expression(text), nfkc = true))
+  /** `nfc_normalize` (nfkc = false) or `nfkc_normalize`: Spark's
+    * `StaticInvoke` of [[UnicodeNorm.normalize]]. */
+  private[graft] def normalize(text: Expression, nfkc: Boolean): Expression =
+    StaticInvoke(UnicodeNorm.getClass, StringType, "normalize", Seq(text, Literal(nfkc)),
+      Seq(StringType, BooleanType), returnNullable = false)
+
+  def nfc(text: Column): Column = column(normalize(expression(text), nfkc = false))
+
+  def nfkc(text: Column): Column = column(normalize(expression(text), nfkc = true))
 }

@@ -48,8 +48,9 @@ object DedupCluster {
     * CacheManager (`df.unpersist()` is a no-op on them) and are otherwise
     * only reclaimed when the RDD is GC'd — explicit release keeps storage
     * flat across propagation rounds instead of growing linearly with them.
+    * [[KCore]]'s peel rounds free theirs with it too.
     */
-  private def freeCheckpoint(df: DataFrame): Unit =
+  private[graft] def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)

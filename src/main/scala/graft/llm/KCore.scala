@@ -33,14 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** Free the block storage behind a localCheckpoint (q61 idiom). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Surviving nodes after `rounds` peels at threshold `k`, with their
     * degree in the peeled subgraph. Edges are treated as undirected and
     * normalized (self-loops dropped, duplicates/reversals collapsed).
@@ -70,7 +62,7 @@ object KCore {
         .join(keep, Seq("n"), "left_semi")
         .join(keep.select(col("n").as("m")), Seq("m"), "left_semi")
         .localCheckpoint()
-      freeCheckpoint(adj)
+      DedupCluster.freeCheckpoint(adj)
       adj = next
     }
     adj.groupBy(col("n")).agg(count(lit(1)).as("coredeg"))

@@ -124,7 +124,7 @@ object MinHashLsh {
   }
 
   // Per-PAIR exact Jaccard via the compiled two-pointer kernel
-  // (functions/QgramJaccard.SortedStringsJaccard): each set is sorted ONCE
+  // (QgramKernels.jaccardStrings, `sorted_strings_jaccard`): each set is sorted ONCE
   // per row (array_sort = the same UTF8String binary order the kernel
   // merges by), replacing the boxed array_intersect/array_union HOF chain.
   // Bit-identical jaccard for non-empty unions (intersection/union counts

@@ -66,7 +66,7 @@ object SimHash {
   }
 
   /** Scan-speed form: the whole per-document vote loop in one compiled
-    * kernel ([[graft.functions.SimHash32]]) — raw md5 digest bytes, integer
+    * kernel ([[graft.functions.TextKernels.simhash32]]) — raw md5 digest bytes, integer
     * votes, no explode, no shuffle, no per-bit expression trees. Same bit
     * math and results as [[simhash32]]/[[simhash32Agg]]; this is the form a
     * 100 TB fingerprinting scan should run.
@@ -75,7 +75,7 @@ object SimHash {
     graft.functions.TextExprs.simhash32(text)
 
   /** Hamming distance between two '0'/'1' fingerprint strings — the native
-    * codegen expression (see [[graft.functions.HammingDistance]]); the
+    * codegen kernel (see [[graft.functions.HammingDistance]]); the
     * interpreted `zip_with` formulation it replaced paid per-character
     * lambda dispatch.
     */

@@ -989,7 +989,7 @@ object Catalog {
   }
 
   /** SimHash Hamming-distance histogram against a reference document —
-    * exercises the native codegen `HammingDistance` expression (the
+    * exercises the native codegen `hamming_distance` kernel (the
     * fingerprint-similarity primitive for simhash near-dup bucketing).
     */
   val q36 = q(
@@ -8332,7 +8332,7 @@ object Catalog {
       .transform(ordered("event_type", "season"))
   }
 
-  /** Unicode normalization audit ([[graft.functions.UnicodeNormalize]] —
+  /** Unicode normalization audit ([[graft.functions.UnicodeNorm]] —
     * native codegen NFC/NFKC, UAX #15): per lang, how many docs change
     * under NFC canonicalization and how much NFKC compatibility folding
     * shrinks them — the pre-dedup canonicalization report (mixed

@@ -97,8 +97,8 @@ object FeaturesEvents {
     * exact (staleness ≤ bucket), and the union+window shuffle stays hash-
     * partitioned however few stations there are; no single-task sort.
     */
-  def asofWeatherJoin(enriched: DataFrame, weather: DataFrame, stationId: Option[String],
-      staleSec: Long = 300): DataFrame = {
+  def asofWeatherJoin(enriched: DataFrame, weather: DataFrame,
+      stationId: Option[String]): DataFrame = {
     val w = stationId.map(id => weather.filter(col("station_id") === id)).getOrElse(weather)
     val payload = WeatherIngest.measures.map(m => m -> m).toMap
     Asof.joinBucketed(
@@ -106,7 +106,7 @@ object FeaturesEvents {
       keys = Seq("station_id"),
       leftTime = "sched_bin", rightTime = "ts_utc",
       payloadCols = payload,
-      toleranceSec = staleSec,
+      toleranceSec = 300, // F6: a fixed 5 minutes
       rightTieBreak = Some("ts_utc")
     ).withColumnRenamed("asof_ts", "weather_ts")
       .withColumn("weather_station_id",

@@ -37,19 +37,16 @@ object Serving {
 
   /** Top-N columns by missing-value share over ANY gold frame
     * (`streamlit_app.py:146-153`: `df.isna().mean()` descending). One
-    * aggregate pass over all requested columns (defaults to every column),
-    * `na_percent` rounded to one decimal like the dashboard table.
+    * aggregate pass over every column, `na_percent` rounded to one decimal
+    * like the dashboard table.
     */
-  def missingProfile(gold: DataFrame, topN: Int = 20,
-      columns: Seq[String] = Nil): DataFrame = {
-    val cols = if (columns.nonEmpty) columns else gold.columns.toSeq
-    graft.operators.Profile.missingProfile(gold, cols)
+  def missingProfile(gold: DataFrame, topN: Int = 20): DataFrame =
+    graft.operators.Profile.missingProfile(gold, gold.columns.toSeq)
       .select(
         col("column_name").as("column"),
         (round(col("null_frac") * 1000.0) / 10.0).as("na_percent"))
       .orderBy(col("na_percent").desc, col("column"))
       .limit(topN)
-  }
 
   /** One-row QA KPI slice over event-level gold (`streamlit_app.py:113-141`
     * `compute_kpis` + `:156-176` `coalescing_table`, combined): row total,
@@ -57,9 +54,8 @@ object Serving {
     * share, unusable rows (no sched or no est), and rows carrying the full
     * weather payload.
     */
-  def kpiSlice(features: DataFrame,
-      weatherCols: Seq[String] = WeatherIngest.measures): DataFrame = {
-    val fullWeather = weatherCols.map(col(_).isNotNull).reduce(_ && _)
+  def kpiSlice(features: DataFrame): DataFrame = {
+    val fullWeather = WeatherIngest.measures.map(col(_).isNotNull).reduce(_ && _)
     features.agg(
       count(lit(1)).as("rows_total"),
       sum((col("depart_time_sched").isNotNull && col("depart_time_est").isNotNull)

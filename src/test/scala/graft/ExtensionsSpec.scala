@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -249,8 +249,7 @@ class NativeCodegenSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_native_edges_").resolve("t").toString
     edges().write.parquet(dir)
     val bc = spark.sparkContext.broadcast(NativeHelpers.sketch)
-    // the 19 non-aggregate expressions: every scalar SQL name (nfc and nfkc
-    // share one class), the broadcast probe and PQ's nearest code
+    // every scalar SQL name, the broadcast probe and PQ's nearest code
     val cols = NativeHelpers.scalars.map(_._3) ++ Seq(
       BloomSketch.mightContainBroadcast(bc, col("h")),
       PqKernels.nearestCode(col("u"), Seq((4, Seq(1.0)), (2, Seq(0.0))), 0))
@@ -270,6 +269,22 @@ class NativeCodegenSpec extends SparkSpec {
     assert(generated == interpreted)
     // toString tells -0.0 from 0.0, which Row equality does not
     assert(generated.map(_.toString) == interpreted.map(_.toString))
+  }
+
+  test("a kernel call fails analysis on an uncastable argument, checks its literals when built, " +
+    "and is nullable only over nullable inputs") {
+    val df = NativeHelpers.input(spark)
+    // no implicit cast turns array<string> into the kernel's string
+    val e = intercept[AnalysisException](df.select(HammingDistance.hamming(col("s1"), col("s2"))))
+    assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+    intercept[IllegalArgumentException](QgramKernels.charGramCodes(col("a"), 5))
+    intercept[IllegalArgumentException](TextExprs.minhashSlices(col("s1"), 6))
+    val strict = spark.createDataFrame(df.rdd, StructType(df.schema.map(_.copy(nullable = false))))
+    def nullable(frame: DataFrame) =
+      NativeHelpers.scalars.map { case (name, _, c) => name -> frame.select(c).schema.head.nullable }
+    // squared_l2 is NULL on a length mismatch or a NULL element, whatever its inputs
+    assert(nullable(strict) == NativeHelpers.scalars.map(s => s._1 -> (s._1 == "squared_l2")))
+    assert(nullable(df).forall(_._2))
   }
 }
 

@@ -106,13 +106,19 @@ class RegimeSpec extends AnyFunSuite {
     * name mentioned only in documentation counts as unreached. Scala
     * sources also lose the text of their string literals (a function that
     * names itself in its own error message is not reached by that), keeping
-    * the `$name` and `${…}` parts of interpolated ones; tool scripts name
-    * classes in strings on purpose, so theirs stay. */
+    * the `$name` and `${…}` parts of interpolated ones and the method string
+    * of a `StaticInvoke(<Object>.getClass, <type>, "<method>", …)` call,
+    * which Spark resolves by that name; tool scripts name classes in
+    * strings on purpose, so theirs stay. */
   private def code(p: java.nio.file.Path): String = {
     val text = Files.readString(p)
-    if (p.toString.endsWith(".scala")) scalaCode(text)
+    if (p.toString.endsWith(".scala"))
+      (scalaCode(text) +: staticInvoke.findAllMatchIn(text).map(_.group(1)).toSeq).mkString(" ")
     else text.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", "")
   }
+
+  /** The method string of a `StaticInvoke` call (its first string literal). */
+  private val staticInvoke = raw"""StaticInvoke\(\s*\w+\.getClass\s*,[^"]*"(\w+)"""".r
 
   /** `src` with comments, character literals and string-literal text blanked. */
   private def scalaCode(src: String): String = {
@@ -210,8 +216,6 @@ class RegimeSpec extends AnyFunSuite {
     Map(
       "Embeddings.invalidateQuantizers" -> "memo-reset hook the specs call between sessions",
       "ProductQuant.invalidateBooks" -> "memo-reset hook the specs call between sessions",
-      "Logging" -> ("the reference's utils_logging.py analog; its caller is the chain's " +
-        "run record, still to come"),
       "CorpusPipeline.instrumented" -> ("the Observation-tap run record the chain's run " +
         "record is to follow"),
       "CorpusPipeline.frame" -> "the frame of an instrumented run",

@@ -426,21 +426,4 @@ class TpgPipelineSpec extends SparkSpec {
       assert(e.getMessage.contains(named), s"$args: ${e.getMessage}")
     }
   }
-
-  test("Logging: rotating file handler rotates, format matches, setup is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_logs_").toString
-    // tiny rotation budget so a few records span generations
-    val log = Logging.setup(name = "etl_test", logDir = dir,
-      maxBytes = 512, backupCount = 2, toConsole = false)
-    val again = Logging.setup(name = "etl_test", logDir = dir)
-    assert(again eq log)
-    assert(log.getHandlers.length == 1) // idempotent: no duplicate handlers
-    (1 to 60).foreach(i => log.info(s"record $i with some padding to force rotation"))
-    log.getHandlers.foreach(_.flush())
-    val files = new java.io.File(dir).listFiles().map(_.getName).sorted
-    assert(files.count(_.matches("log_etl_test\\.\\d\\.log")) >= 2, files.mkString(","))
-    val first = scala.io.Source.fromFile(s"$dir/${files.head}").getLines().toSeq
-    assert(first.exists(_.matches(
-      "\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2} \\[INFO\\] etl_test: record .*")))
-  }
 }
