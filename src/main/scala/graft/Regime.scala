@@ -17,30 +17,45 @@ import org.apache.spark.sql.SparkSession
 object Regime {
   type Env = Map[String, String]
 
-  /** Spark's cache of compiled generated classes, sized to the engine's
-    * working set. It is a per-JVM LRU keyed by the generated source, and a
-    * static SQL conf read once, when the first class is compiled, so it is
-    * set here, at session build. Spark's default (100 entries) is smaller
-    * than one pass of either benchmark workload, so in a rotating mix the
-    * queries evict each other's classes and every pass pays the Janino
-    * compile plus fresh JIT work again. Measured on a 4-core VM:
-    *  - working sets: the perfbench `catalog_mix` set-up plus one pass (five
-    *    catalog queries) compiles 152 distinct classes; a `pipeline_batch`
-    *    pass plus its checks compiles 272. These counts include repeats: the
-    *    cache keys a class on the compiling thread's class loader as well as
-    *    its source, so a whole-stage class the driver compiles to check its
-    *    size is compiled again in an executor task thread (67 of 264
-    *    compiles in one cold chain pass with its serving reads);
-    *  - at 100 entries every `catalog_mix` pass recompiled 77–138 classes,
-    *    and HotSpot JIT was 69% of the pass's CPU (16.9 of 24.5 CPU-s);
-    *  - heap: a retained class keeps about 30 KB (172 extra retained
-    *    classes added 5 MB), so 1024 entries cap the retained heap near
-    *    30 MB while holding several times the largest working set;
-    *  - with 1024, a `catalog_mix` pass recompiles 0 classes and its CPU
-    *    time drops 28% (10 interleaved pairs: median 21.1 → 15.3 s), with
-    *    the same jobs, stages, tasks and shuffle bytes.
+  /** How generated code is compiled and kept, applied by [[session]] to
+    * every regime. Fixed settings, no env var or flag:
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: Spark's cache of compiled
+    *    generated classes, sized to the engine's working set. It is a
+    *    per-JVM LRU keyed by the generated source, and a static SQL conf
+    *    read once, when the first class is compiled, so it is set at
+    *    session build. Spark's default (100 entries) is smaller than one
+    *    pass of either benchmark workload, so in a rotating mix the queries
+    *    evict each other's classes and every pass pays the Janino compile
+    *    plus fresh JIT work again. Measured on a 4-core VM:
+    *     - working sets: the perfbench `catalog_mix` set-up plus one pass
+    *       (five catalog queries) compiles 113 distinct classes; a
+    *       `pipeline_batch` pass plus its checks compiles 203;
+    *     - at 100 entries every `catalog_mix` pass recompiled 77–138
+    *       classes, and HotSpot JIT was 69% of the pass's CPU (16.9 of
+    *       24.5 CPU-s);
+    *     - heap: a retained class keeps about 30 KB (172 extra retained
+    *       classes added 5 MB), so 1024 entries cap the retained heap near
+    *       30 MB while holding several times the largest working set;
+    *     - with 1024, a `catalog_mix` pass recompiles 0 classes and its CPU
+    *       time drops 28% (10 interleaved pairs: median 21.1 → 15.3 s),
+    *       with the same jobs, stages, tasks and shuffle bytes.
+    *  - `spark.sql.artifact.isolation.enabled=false` and `spark.plugins` =
+    *    [[TaskLoaderPlugin]]: the cache also keys a class on the compiling
+    *    thread's class loader, and by default local tasks run under
+    *    another loader than the driver's threads, so a task compiles again
+    *    each whole-stage class the driver compiled to check its size. With
+    *    isolation off, SQL jobs run in the executor's default state (the
+    *    engine adds no session jars or artifacts), and the plugin runs each
+    *    task under that state's parent loader, the driver's. Together they
+    *    cut a cold `pipeline_batch` pass's compiles from 272 to 203 and the
+    *    `catalog_mix` set-up's from 152 to 113, with no source compiled
+    *    twice; each setting alone changes nothing.
     */
-  val codegenCache: (String, String) = "spark.sql.codegen.cache.maxEntries" -> "1024"
+  val codegen: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.plugins" -> classOf[TaskLoaderPlugin].getName)
 
   /** `name` from `vars`, trimmed; `default` when unset or blank. */
   def env(name: String, default: String, vars: Env = sys.env): String =
@@ -81,8 +96,7 @@ object Regime {
       // reason Verify runs in this regime.
       "graft.scan.repartition" -> e("SPARK_GRAFT_REPART", "8"),
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.ui.enabled" -> "false",
-      codegenCache)
+      "spark.ui.enabled" -> "false")
   }
 
   /** Shared-scan reuse: a resident engine serves repeated queries from its
@@ -107,8 +121,7 @@ object Regime {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
-      codegenCache)
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
   }
 
   val gendata: Map[String, String] = Map(
@@ -119,11 +132,12 @@ object Regime {
     "spark.ui.enabled" -> "false")
 
   /** The session for `settings` (`spark.master` and `spark.app.name`
-    * included), with the engine's SQL function names ([[GraftExtensions]]),
-    * log level WARN. The level is set in the builder, so it holds from the
-    * SparkContext's start; only the context's version, OS and Java banner,
-    * logged before any conf applies, precede it. */
+    * included), with [[codegen]], the engine's SQL function names
+    * ([[GraftExtensions]]) and log level WARN. The level is set in the
+    * builder, so it holds from the SparkContext's start; only the context's
+    * version, OS and Java banner, logged before any conf applies, precede
+    * it. */
   def session(settings: Map[String, String]): SparkSession =
-    SparkSession.builder().config(settings).config("spark.log.level", "WARN")
+    SparkSession.builder().config(settings).config(codegen).config("spark.log.level", "WARN")
       .withExtensions(new GraftExtensions).getOrCreate()
 }

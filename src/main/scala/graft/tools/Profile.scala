@@ -10,6 +10,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, InputAdapter, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -52,13 +53,14 @@ object Profile extends AdaptiveSparkPlanHelper {
     *                 builder runs)
     * @param operators executed-plan node counts, subqueries included
     * @param codegenCompiles classes Spark compiled from generated code
+    * @param janinoMs time those compiles took, all threads
     * @param jitMs HotSpot JIT compile time, all threads
     * @param gcMs collection time summed over the JVM's collectors
     */
   final case class Record(query: String, sfDir: String, runs: Int, buildS: Double,
       execS: Double, wallMs: Long, phasesMs: Map[String, Long], jobs: Int,
       stages: Seq[Stage], operators: Map[String, Int], plan: String,
-      codegenCompiles: Long, jitMs: Long, gcMs: Long) {
+      codegenCompiles: Long, janinoMs: Long, jitMs: Long, gcMs: Long) {
     def wallSumMs: Long = stages.map(_.wallMs).sum
     def execRunSumMs: Long = stages.map(_.execRunMs).sum
 
@@ -94,7 +96,8 @@ object Profile extends AdaptiveSparkPlanHelper {
         "tracker_ms" -> obj(phasesMs.toSeq.sorted),
         "jobs" -> jobs, "stages" -> stages.size, "wall_sum_s" -> sec(wallSumMs),
         "exec_run_sum_s" -> sec(execRunSumMs), "stage_gap_s" -> sec(stageGapMs),
-        "codegen_compiles" -> codegenCompiles, "jit_ms" -> jitMs, "gc_ms" -> gcMs,
+        "codegen_compiles" -> codegenCompiles, "janino_ms" -> janinoMs, "jit_ms" -> jitMs,
+        "gc_ms" -> gcMs,
         "operators" -> obj(operators.toSeq.sorted),
         "stage_rows" -> Raw(stageRows.map(_.json).mkString("[", ",", "]")))).json
     }
@@ -128,14 +131,15 @@ object Profile extends AdaptiveSparkPlanHelper {
   }
 
   /** JVM-wide counters a run reads on both sides: classes compiled from
-    * generated code, JIT ms, GC ms. */
-  private def counters(): (Long, Long, Long) = (
+    * generated code, their compile ms, JIT ms, GC ms. */
+  private def counters(): (Long, Long, Long, Long) = (
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    CodeGenerator.compileTime / 1000000L,
     ManagementFactory.getCompilationMXBean.getTotalCompilationTime,
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum)
 
   private final case class Run(buildNs: Long, execNs: Long, events: Events, df: DataFrame,
-      compiles: Long, jitMs: Long, gcMs: Long)
+      compiles: Long, janinoMs: Long, jitMs: Long, gcMs: Long)
 
   private def run(spark: SparkSession, sfDir: String, q: Catalog.Q): Run = {
     val sc = spark.sparkContext
@@ -143,15 +147,15 @@ object Profile extends AdaptiveSparkPlanHelper {
     val events = new Events
     sc.addSparkListener(events)
     try {
-      val (c0, j0, g0) = counters()
+      val (c0, n0, j0, g0) = counters()
       val t0 = System.nanoTime()
       val df = q.run(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       GraftSqlShims.drainListeners(sc)
-      val (c1, j1, g1) = counters()
-      Run(t1 - t0, t2 - t1, events, df, c1 - c0, j1 - j0, g1 - g0)
+      val (c1, n1, j1, g1) = counters()
+      Run(t1 - t0, t2 - t1, events, df, c1 - c0, n1 - n0, j1 - j0, g1 - g0)
     } finally sc.removeSparkListener(events)
   }
 
@@ -174,7 +178,8 @@ object Profile extends AdaptiveSparkPlanHelper {
       (best.df.queryExecution.tracker.phases.map { case (p, s) => p -> s.durationMs }.toSeq ++
         best.events.phases.asScala).groupMapReduce(_._1)(_._2)(_ + _),
       best.events.jobs.get, best.events.stages.asScala.toSeq, operators,
-      warm.df.queryExecution.explainString(FormattedMode), best.compiles, best.jitMs, best.gcMs)
+      warm.df.queryExecution.explainString(FormattedMode), best.compiles, best.janinoMs, best.jitMs,
+      best.gcMs)
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,11 +1,15 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.{ChildFirstURLClassLoader, MutableURLClassLoader}
 
-/** Generated code is compiled once per JVM and then reused: a rotating mix
-  * of queries must not evict each other's classes from Spark's codegen
-  * cache, however many it holds between repeats.
+/** Generated code is compiled once per JVM and then reused: a local task
+  * reuses the class the driver compiled, and a rotating mix of queries must
+  * not evict each other's classes from Spark's codegen cache, however many
+  * it holds between repeats.
   */
 class CodegenReuseSpec extends SparkSpec {
 
@@ -38,5 +42,21 @@ class CodegenReuseSpec extends SparkSpec {
     // more distinct classes than Spark's default cache (100 entries) holds
     assert(round() > 100)
     assert(round() == 0)
+  }
+
+  test("a fresh one-stage query compiles one class: its four tasks reuse the driver's") {
+    val n = compiles(spark.range(0, 1000, 1, 4).select(col("id") * lit(104729L))
+      .write.format("noop").mode("overwrite").save())
+    assert(n == 1)
+  }
+
+  test("TaskLoaderPlugin.taskLoader: a URL-less MutableURLClassLoader gives its parent, others themselves") {
+    val parent = getClass.getClassLoader
+    assert(TaskLoaderPlugin.taskLoader(new MutableURLClassLoader(Array.empty, parent)) eq parent)
+    val withUrl = new MutableURLClassLoader(Array(new File("lib.jar").toURI.toURL), parent)
+    assert(TaskLoaderPlugin.taskLoader(withUrl) eq withUrl)
+    val childFirst = new ChildFirstURLClassLoader(Array.empty, parent)
+    assert(TaskLoaderPlugin.taskLoader(childFirst) eq childFirst)
+    assert(TaskLoaderPlugin.taskLoader(parent) eq parent)
   }
 }

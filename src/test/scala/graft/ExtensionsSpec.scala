@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -95,6 +96,20 @@ object NativeHelpers {
   }
 }
 
+/** The context class loaders the tasks of one SQL job ran under. */
+object TaskLoaders {
+  private val seen = new ConcurrentLinkedQueue[ClassLoader]()
+
+  def of(spark: SparkSession): Seq[ClassLoader] = {
+    seen.clear()
+    spark.range(0, 4, 1, 4).mapPartitions { rows =>
+      seen.add(Thread.currentThread.getContextClassLoader)
+      rows
+    }(Encoders.LONG).collect()
+    seen.asScala.toSeq
+  }
+}
+
 class ExtensionsSpec extends AnyFunSuite {
 
   /** A dedicated session built by [[Regime.session]], so its SQL names
@@ -111,8 +126,7 @@ class ExtensionsSpec extends AnyFunSuite {
       "spark.app.name" -> "graft-ext-test",
       "spark.sql.shuffle.partitions" -> "2",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false",
-      Regime.codegenCache)))
+      "spark.ui.enabled" -> "false")))
     finally {
       // hand the shared session back without stopping the SparkContext
       SparkSession.clearDefaultSession()
@@ -122,6 +136,17 @@ class ExtensionsSpec extends AnyFunSuite {
         SparkSession.setActiveSession(p)
       }
     }
+  }
+
+  test("a SQL task runs under the driver thread's class loader, in Regime.session's and SparkSpec's sessions") {
+    val driver = Thread.currentThread.getContextClassLoader
+    withExtensionSession { spark =>
+      val loaders = TaskLoaders.of(spark)
+      assert(loaders.size == 4 && loaders.forall(_ eq driver), loaders)
+      assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    }
+    val loaders = TaskLoaders.of(SparkSpec.session)
+    assert(loaders.size == 4 && loaders.forall(_ eq driver), loaders)
   }
 
   test("GraftExtensions registers native functions for SQL use") {

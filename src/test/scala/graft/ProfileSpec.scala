@@ -16,13 +16,13 @@ class ProfileSpec extends SparkSpec {
     assert(r.plan.nonEmpty)
     assert(r.buildS > 0 && r.execS > 0)
     // the warm run compiled q09's classes; the timed runs reuse them
-    assert(r.codegenCompiles == 0)
+    assert(r.codegenCompiles == 0 && r.janinoMs == 0)
     assert(r.jitMs >= 0 && r.gcMs >= 0)
     val json = new ObjectMapper().readTree(r.json)
     assert(json.get("query").asText == "q09_asof_join")
     assert(json.get("stage_rows").size == r.stages.size)
     assert(json.get("codegen_compiles").asLong == 0)
-    assert(json.has("jit_ms") && json.has("gc_ms"))
+    assert(json.has("janino_ms") && json.has("jit_ms") && json.has("gc_ms"))
   }
 
   test("record: an unknown query name raises an error naming it") {

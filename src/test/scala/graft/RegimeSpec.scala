@@ -50,8 +50,7 @@ class RegimeSpec extends AnyFunSuite {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.parquet.compression.codec" -> "zstd",
-      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
-      "spark.sql.codegen.cache.maxEntries" -> "1024")
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
     assert(Regime.jobs("app", Map.empty) == expected("local[32]", "32"))
     assert(Regime.jobs("app", Map("SPARK_GRAFT_CPUS" -> "6")) == expected("local[6]", "6"))
     assert(Regime.jobs("app", Map("SPARK_GRAFT_CPUS" -> "6", "SPARK_MASTER" -> "local[2]")) ==
@@ -67,10 +66,14 @@ class RegimeSpec extends AnyFunSuite {
   }
 
   test("bench and jobs size the codegen cache to the engine's working set") {
-    for (env <- Seq(Map.empty[String, String], Map("SPARK_GRAFT_CPUS" -> "4"))) {
-      assert(Regime.bench(env).get("spark.sql.codegen.cache.maxEntries").contains("1024"))
-      assert(Regime.jobs("app", env).get("spark.sql.codegen.cache.maxEntries").contains("1024"))
-    }
+    assert(Regime.codegen == Map(
+      "spark.sql.codegen.cache.maxEntries" -> "1024",
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.plugins" -> "graft.TaskLoaderPlugin"))
+    // Regime.session applies Regime.codegen to every regime; none sets a key of its own
+    for (env <- Seq(Map.empty[String, String], Map("SPARK_GRAFT_CPUS" -> "4")))
+      for (regime <- Seq(Regime.bench(env), Regime.jobs("app", env), Regime.gendata))
+        assert(regime.keySet.intersect(Regime.codegen.keySet).isEmpty, regime)
   }
 
   /** The files under src/main whose text contains `word`. */

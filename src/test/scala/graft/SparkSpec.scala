@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (UTC, small shuffle partitions, and the
-  * engine's codegen cache size: the cache is per JVM and sized on first
-  * use, so the suites see the reuse the mains see). */
+  * engine's codegen regime, [[Regime.codegen]]: the cache is per JVM and
+  * sized on first use, and `spark.plugins` is read only when the
+  * SparkContext starts, so the suites see the reuse the mains see). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
@@ -18,7 +19,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config(Map(Regime.codegenCache))
+      .config(Regime.codegen)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
