@@ -61,8 +61,8 @@ object Decontam {
     * (rate set by `bitsPerItem`, default ≈1%) only add join input rows
     * that the exact join then discards — results are bit-identical to the
     * exact form, which is why the same DuckDB oracle verifies both (q68).
-    */
-  /** @param literalMaxBytes sketches at or below this size embed as a plan
+    *
+    * @param literalMaxBytes sketches at or below this size embed as a plan
     *                        literal (fastest probe: a codegen constant);
     *                        larger sketches switch to a broadcast variable
     *                        ([[graft.functions.BloomMightContainBroadcast]])

@@ -72,63 +72,6 @@ object Drift {
       .withColumnRenamed("__slice", byCol)
   }
 
-  /** Two-sample Kolmogorov–Smirnov statistic per group:
-    * D = max_v |F_A(v) − F_B(v)| over the pooled distinct values — the
-    * nonparametric NUMERIC-drift companion to [[tokenKlDrift]]'s token
-    * drift ("did this metric's distribution move between snapshots /
-    * slices?"), sensitive to location AND shape with no binning choices.
-    *
-    * EXACT cross-engine: ECDF differences are compared as the integer
-    * cross-product |cumA·n_B − cumB·n_A| (never a float per step), so
-    * `d_num` is exact long arithmetic and `d = d_num/(n_A·n_B)` is one
-    * IEEE division. Ties are handled by evaluating at DISTINCT values
-    * with inclusive cumulative counts — the mathematically correct ECDF
-    * under ties.
-    *
-    * Plan: one (group, value) count aggregate (map-side combined — the
-    * only stage carrying row volume), then windows PARTITIONED BY GROUP
-    * over the distinct-value frame, then a bounded group aggregate. At
-    * 100 TB the distinct-value frame is the only window input; a
-    * continuous metric with data-sized distinct counts still windows per
-    * group, never globally.
-    *
-    * @param inSampleA boolean Column: true → sample A, false → sample B;
-    *                  null rows (either side) are excluded
-    * @return per group: (groupCols…, n_a, n_b, d_num, d); d is NULL when
-    *         either sample is empty
-    */
-  /** Population Stability Index per group — the BINNED two-sample drift
-    * statistic model-monitoring dashboards standardize on (PSI < 0.1
-    * stable, > 0.25 action), complementing [[ksStatistic]] (max ECDF gap,
-    * bin-free) and [[tokenKlDrift]] (categorical KL):
-    *
-    *   PSI = Σ_bins (p_B(i) − p_A(i)) · ln(p_B(i) / p_A(i))   ≥ 0
-    *
-    * Binning is EQUI-WIDTH over the group's combined [min, max] into
-    * `bins` buckets (`⌊(v−min)·bins/(max−min)⌋` capped to bins−1; a
-    * degenerate max = min group puts everything in bin 0) — deterministic
-    * given the data, no quantile estimation. Proportions use ADD-ONE
-    * (Laplace) smoothing over the nominal bin count,
-    * `p(i) = (c_i + 1)/(n + bins)`, so a bin empty on one side
-    * contributes a finite term instead of ±∞ (the standard
-    * epsilon-handling, made exact and engine-identical); bins empty on
-    * BOTH sides are not emitted and contribute nothing.
-    *
-    * Determinism: counts are exact longs; each bin term is floored at
-    * scale 8 (`floor(t·10⁸ + 0.5)` as long, the [[tokenKlDrift]]
-    * convention) so the per-group sum is exact long addition on any
-    * merge tree; `ln` carries the q71 ±1-ulp caveat. Plan: an
-    * answer-sized min/max aggregate broadcast-attached (null-safe) to
-    * the rows, one (group, bin)-keyed count aggregate, and group totals
-    * via a window over the ≤ bins-rows-per-group bin frame — no window
-    * ever sees raw rows, no collect.
-    *
-    * @param inBaseline boolean Column: true → baseline sample A,
-    *                   false → current sample B; null value/flag rows
-    *                   are excluded
-    * @return per group: (groupCols…, n_a, n_b, psi8, psi); psi NULL when
-    *         either sample is empty
-    */
   /** Shared binning scaffold for the two-sample binned drift family
     * ([[psi]], [[hellinger]]): deterministic equi-width bins over each
     * group's [min, max] (answer-sized min/max aggregate, NULL-SAFE
@@ -173,6 +116,38 @@ object Drift {
       .withColumn("__nb", sum(col("__cb")).over(wAll))
   }
 
+  /** Population Stability Index per group — the BINNED two-sample drift
+    * statistic model-monitoring dashboards standardize on (PSI < 0.1
+    * stable, > 0.25 action), complementing [[ksStatistic]] (max ECDF gap,
+    * bin-free) and [[tokenKlDrift]] (categorical KL):
+    *
+    *   PSI = Σ_bins (p_B(i) − p_A(i)) · ln(p_B(i) / p_A(i))   ≥ 0
+    *
+    * Binning is EQUI-WIDTH over the group's combined [min, max] into
+    * `bins` buckets (`⌊(v−min)·bins/(max−min)⌋` capped to bins−1; a
+    * degenerate max = min group puts everything in bin 0) — deterministic
+    * given the data, no quantile estimation. Proportions use ADD-ONE
+    * (Laplace) smoothing over the nominal bin count,
+    * `p(i) = (c_i + 1)/(n + bins)`, so a bin empty on one side
+    * contributes a finite term instead of ±∞ (the standard
+    * epsilon-handling, made exact and engine-identical); bins empty on
+    * BOTH sides are not emitted and contribute nothing.
+    *
+    * Determinism: counts are exact longs; each bin term is floored at
+    * scale 8 (`floor(t·10⁸ + 0.5)` as long, the [[tokenKlDrift]]
+    * convention) so the per-group sum is exact long addition on any
+    * merge tree; `ln` carries the q71 ±1-ulp caveat. Plan: an
+    * answer-sized min/max aggregate broadcast-attached (null-safe) to
+    * the rows, one (group, bin)-keyed count aggregate, and group totals
+    * via a window over the ≤ bins-rows-per-group bin frame — no window
+    * ever sees raw rows, no collect.
+    *
+    * @param inBaseline boolean Column: true → baseline sample A,
+    *                   false → current sample B; null value/flag rows
+    *                   are excluded
+    * @return per group: (groupCols…, n_a, n_b, psi8, psi); psi NULL when
+    *         either sample is empty
+    */
   def psi(
       df: DataFrame, groupCols: Seq[String],
       valueCol: org.apache.spark.sql.Column,
@@ -466,6 +441,31 @@ object Drift {
     firstAlarm("__gu", "up").unionAll(firstAlarm("__gd", "down"))
   }
 
+  /** Two-sample Kolmogorov–Smirnov statistic per group:
+    * D = max_v |F_A(v) − F_B(v)| over the pooled distinct values — the
+    * nonparametric NUMERIC-drift companion to [[tokenKlDrift]]'s token
+    * drift ("did this metric's distribution move between snapshots /
+    * slices?"), sensitive to location AND shape with no binning choices.
+    *
+    * EXACT cross-engine: ECDF differences are compared as the integer
+    * cross-product |cumA·n_B − cumB·n_A| (never a float per step), so
+    * `d_num` is exact long arithmetic and `d = d_num/(n_A·n_B)` is one
+    * IEEE division. Ties are handled by evaluating at DISTINCT values
+    * with inclusive cumulative counts — the mathematically correct ECDF
+    * under ties.
+    *
+    * Plan: one (group, value) count aggregate (map-side combined — the
+    * only stage carrying row volume), then windows PARTITIONED BY GROUP
+    * over the distinct-value frame, then a bounded group aggregate. At
+    * 100 TB the distinct-value frame is the only window input; a
+    * continuous metric with data-sized distinct counts still windows per
+    * group, never globally.
+    *
+    * @param inSampleA boolean Column: true → sample A, false → sample B;
+    *                  null rows (either side) are excluded
+    * @return per group: (groupCols…, n_a, n_b, d_num, d); d is NULL when
+    *         either sample is empty
+    */
   def ksStatistic(
       df: DataFrame, groupCols: Seq[String],
       valueCol: org.apache.spark.sql.Column,

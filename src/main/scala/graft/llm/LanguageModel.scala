@@ -42,26 +42,6 @@ object LanguageModel {
     counts.join(prefix, "w1").select(col("w12"), col("c12"), col("c1"))
   }
 
-  /** Score `docs` under `model` ([[bigramModel]] output): one row per
-    * document having ≥1 bigram — `n_bigrams`, `logsum4` (sum of scale-4
-    * rounded bigram log-probs, exact long), and `avg_logp` (mean log-prob
-    * per bigram, scale-4). Bigrams absent from the model are dropped by
-    * the join, so `n_bigrams` counts SCORED bigrams (with a self-trained
-    * model that is all of them); under a foreign model, compute each
-    * document's total bigram count separately
-    * (`size(wordShingles(text, 2))`) and gate on the coverage ratio
-    * before trusting `avg_logp`.
-    *
-    * Cross-engine caveat: the scale-4 floor makes the SUM order-independent
-    * (exact long addition), but each per-bigram term still passes through
-    * `ln` — and IEEE 754 does not require correctly-rounded `ln`, so an
-    * engine pair whose libm implementations disagree in the last ulp could
-    * round a log-prob landing within an ulp of an integer scale-4 boundary
-    * to adjacent longs. Java's `Math.log` and DuckDB's libm agree on every
-    * value in the test corpora (q71 hash-matches at three SFs); a gate
-    * comparing against a third engine should allow ±1 on `logsum4` rather
-    * than assume bit equality.
-    */
   /** Stupid-backoff trigram scoring (Brants et al. 2007): the production
     * upgrade of [[scoreBigrams]] — higher-order context where the training
     * slice has evidence, graceful α-discounted fallback where it does not.
@@ -179,6 +159,26 @@ object LanguageModel {
         floor((col("logsum4").cast("double") / 10000.0 / col("n_scored")) * 10000 + 0.5) / 10000)
   }
 
+  /** Score `docs` under `model` ([[bigramModel]] output): one row per
+    * document having ≥1 bigram — `n_bigrams`, `logsum4` (sum of scale-4
+    * rounded bigram log-probs, exact long), and `avg_logp` (mean log-prob
+    * per bigram, scale-4). Bigrams absent from the model are dropped by
+    * the join, so `n_bigrams` counts SCORED bigrams (with a self-trained
+    * model that is all of them); under a foreign model, compute each
+    * document's total bigram count separately
+    * (`size(wordShingles(text, 2))`) and gate on the coverage ratio
+    * before trusting `avg_logp`.
+    *
+    * Cross-engine caveat: the scale-4 floor makes the SUM order-independent
+    * (exact long addition), but each per-bigram term still passes through
+    * `ln` — and IEEE 754 does not require correctly-rounded `ln`, so an
+    * engine pair whose libm implementations disagree in the last ulp could
+    * round a log-prob landing within an ulp of an integer scale-4 boundary
+    * to adjacent longs. Java's `Math.log` and DuckDB's libm agree on every
+    * value in the test corpora (q71 hash-matches at three SFs); a gate
+    * comparing against a third engine should allow ±1 on `logsum4` rather
+    * than assume bit equality.
+    */
   def scoreBigrams(
       docs: DataFrame, idCol: String, textCol: String,
       model: DataFrame): DataFrame = {

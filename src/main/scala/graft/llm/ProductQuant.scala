@@ -164,15 +164,6 @@ object ProductQuant {
       array((0 until bk.m).map(s => col(s"code_$s")): _*).as("codes"))
   }
 
-  /** ADC top-k: score every encoded vector against each query via the
-    * per-query m×k distance table (computed driver-side from the query
-    * vectors — queries are an answer-sized set by contract — with the
-    * same sequential fold as the in-plan distances, then broadcast).
-    * Queries score all OTHER vectors; ranks break ties by vec_id.
-    *
-    * @param queries (vec_id, embedding) rows — must be answer-sized
-    * @return (query_id, rnk, vec_id, adist) — topK rows per query
-    */
   /** EXACT squared-L2 top-k (brute force) — the ground-truth leg for PQ
     * recall audits (the q26 brute-force role, L2 metric): broadcast the
     * answer-sized query set, sequential-fold distances, rank per query.
@@ -196,6 +187,15 @@ object ProductQuant {
       .select(col("query_id"), col("rnk"), col("vec_id"), col("dist"))
   }
 
+  /** ADC top-k: score every encoded vector against each query via the
+    * per-query m×k distance table (computed driver-side from the query
+    * vectors — queries are an answer-sized set by contract — with the
+    * same sequential fold as the in-plan distances, then broadcast).
+    * Queries score all OTHER vectors; ranks break ties by vec_id.
+    *
+    * @param queries (vec_id, embedding) rows — must be answer-sized
+    * @return (query_id, rnk, vec_id, adist) — topK rows per query
+    */
   def adcTopK(
       encoded: DataFrame, bk: Books, queries: DataFrame, topK: Int): DataFrame = {
     require(topK > 0, "topK must be positive")

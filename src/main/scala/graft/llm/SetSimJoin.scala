@@ -45,16 +45,6 @@ object SetSimJoin {
   private def floorDiv(a: Column, b: Long): Column =
     ((a - pmod(a, lit(b))) / lit(b)).cast("long")
 
-  /** All pairs (id_a < id_b) with Jaccard(tokens_a, tokens_b) ≥ num/den.
-    *
-    * @param docs   input frame
-    * @param idCol  unique document id column name
-    * @param tokens array<string> expression (need not be distinct; empty
-    *               strings are dropped, mirroring SQL `string_split`
-    *               artifacts from repeated separators)
-    * @param num/den similarity threshold as a rational in (0, 1]
-    * @return (id_a, id_b, inter, union_n, sim) — sim = inter/union_n
-    */
   /** The shared front half of both joins, as ONE id-keyed index frame:
     * per doc, the distinct non-empty tokens SORTED by the global
     * (df asc, token asc) order (`__arr`), the set size (`__n`), and the
@@ -120,6 +110,16 @@ object SetSimJoin {
     // re-run of the answer-side collect_list tail is the residual cost.)
   }
 
+  /** All pairs (id_a < id_b) with Jaccard(tokens_a, tokens_b) ≥ num/den.
+    *
+    * @param docs   input frame
+    * @param idCol  unique document id column name
+    * @param tokens array<string> expression (need not be distinct; empty
+    *               strings are dropped, mirroring SQL `string_split`
+    *               artifacts from repeated separators)
+    * @param num/den similarity threshold as a rational in (0, 1]
+    * @return (id_a, id_b, inter, union_n, sim) — sim = inter/union_n
+    */
   def jaccardJoin(
       docs: DataFrame, idCol: String, tokens: Column,
       num: Int, den: Int): DataFrame = {

@@ -9,6 +9,12 @@ import org.apache.spark.sql.functions._
   * staleness tolerance (reference J5, `src/10_build_features.py:168-178` +
   * staleness post-filter `10:254-259`).
   *
+  * One contract for [[join]], [[joinBucketed]] and [[nearestJoin]]: keys
+  * match with SQL equi-join semantics (NULL never matches NULL), right
+  * rows with a NULL time never match, every left row is kept, ties among
+  * right rows at one timestamp are broken by a required column, and
+  * tolerances are exact microsecond intervals (`unix_micros`).
+  *
   * Spark has no built-in AS-OF join. The naive theta-join
   * (`l.join(r, r.ts <= l.ts)`) is a per-key cartesian product — quadratic,
   * dead at scale. This implementation uses the *union + ordered window*
@@ -27,10 +33,11 @@ object Asof {
     * @param leftTime    event-time column on `left`
     * @param rightTime   event-time column on `right`
     * @param payloadCols right columns to carry (renamed as given)
-    * @param toleranceSec if set, matches older than this many seconds are
-    *                     nulled out (reference staleness rule F6)
     * @param rightTieBreak column ordering right rows that share a timestamp;
     *                      the *last* under this ordering wins (deterministic)
+    * @param toleranceUs if set, matches more than this many MICROSECONDS
+    *                    older than the left row are nulled out (reference
+    *                    staleness rule F6)
     */
   def join(
       left: DataFrame,
@@ -39,24 +46,11 @@ object Asof {
       leftTime: String,
       rightTime: String,
       payloadCols: Map[String, String],
-      toleranceSec: Option[Long] = None,
-      rightTieBreak: Option[String] = None): DataFrame = {
+      rightTieBreak: String,
+      toleranceUs: Option[Long] = None): DataFrame = {
 
-    val payload = struct(
-      (col(rightTime).as("__asof_ts") +:
-        payloadCols.toSeq.sortBy(_._1).map { case (from, to) => col(from).as(to) }): _*)
-
-    val tieBreak = rightTieBreak.map(col).getOrElse(lit(0L))
-    val rightU = right
-      .select((keys.map(col) :+ col(rightTime).as("__ts") :+ payload.as("__rv") :+ tieBreak.as("__tb")): _*)
-      .withColumn("__side", lit(0))
-
-    val leftU = left
-      .withColumn("__ts", col(leftTime))
-      .withColumn("__side", lit(1))
-      .withColumn("__tb", lit(null).cast(rightU.schema("__tb").dataType))
-
-    val unioned = leftU.unionByName(rightU, allowMissingColumns = true)
+    val unioned = sides(left, right, keys, leftTime, rightTime, payloadCols,
+      rightTieBreak, "__ts", identity, "__asof_ts")
 
     // Right rows sort before left rows at equal ts (side 0 < 1) so a right
     // row at exactly leftTime matches (<= semantics). Among right ties the
@@ -70,14 +64,8 @@ object Asof {
       .withColumn("__m", last(col("__rv"), ignoreNulls = true).over(w))
       .filter(col("__side") === 1)
 
-    val fresh = toleranceSec match {
-      case Some(tol) =>
-        when(
-          col("__m").isNotNull &&
-            (col("__ts").cast("long") - col("__m.__asof_ts").cast("long")) <= tol,
-          col("__m"))
-      case None => col("__m")
-    }
+    val fresh = toleranceUs.fold(col("__m"))(tol => when(col("__m").isNotNull &&
+      (unix_micros(col("__ts")) - unix_micros(col("__m.__asof_ts"))) <= tol, col("__m")))
 
     val withPayload = payloadCols.toSeq.sortBy(_._1).foldLeft(
       matched.withColumn("__f", fresh)
@@ -96,9 +84,9 @@ object Asof {
     * Left rows land in bucket `floor(ts / bucketSeconds)`; right rows are
     * replicated into their own bucket and the next one, so a left row near a
     * bucket's start still sees the latest right row from the tail of the
-    * previous bucket. Because every match farther than `toleranceSec` in the
-    * past is nulled anyway, `toleranceSec <= bucketSeconds` makes the result
-    * EXACTLY equal to the unbucketed join — while the shuffle is hash-
+    * previous bucket. Because every match farther than `toleranceUs` in the
+    * past is nulled anyway, a tolerance of at most `bucketSeconds` makes the
+    * result EXACTLY equal to the unbucketed join — while the shuffle is hash-
     * partitioned on (keys, bucket): parallelism grows with the time span of
     * the data instead of collapsing to one task per key.
     */
@@ -109,17 +97,17 @@ object Asof {
       leftTime: String,
       rightTime: String,
       payloadCols: Map[String, String],
-      toleranceSec: Long,
-      bucketSeconds: Long = 86400L,
-      rightTieBreak: Option[String] = None): DataFrame = {
-    require(toleranceSec <= bucketSeconds,
-      s"bucketed ASOF is only exact when toleranceSec ($toleranceSec) <= bucketSeconds ($bucketSeconds)")
+      rightTieBreak: String,
+      toleranceUs: Long,
+      bucketSeconds: Long = 86400L): DataFrame = {
+    require(toleranceUs <= bucketSeconds * 1000000L,
+      s"bucketed ASOF is only exact when toleranceUs ($toleranceUs) <= bucketSeconds ($bucketSeconds) in µs")
     def bucketOf(c: Column) = floor(c.cast("timestamp").cast("long") / bucketSeconds)
     val lb = left.withColumn("__bucket", bucketOf(col(leftTime)))
     val rb0 = right.withColumn("__bucket", bucketOf(col(rightTime)))
     val rb = rb0.unionByName(rb0.withColumn("__bucket", col("__bucket") + 1))
     join(lb, rb, keys :+ "__bucket", leftTime, rightTime, payloadCols,
-      Some(toleranceSec), rightTieBreak)
+      rightTieBreak, Some(toleranceUs))
       .drop("__bucket")
   }
 
@@ -137,14 +125,12 @@ object Asof {
     * among equal-timestamp right rows); dt compares in exact MICROSECOND
     * longs (`unix_micros`), never truncated seconds.
     *
-    * @param toleranceUs matches farther than this many MICROSECONDS (in
-    *                    either direction) are nulled out
     * @param rightTieBreak column ordering right rows that share a
     *                      timestamp; the SMALLEST under this ordering
-    *                      wins (required for a deterministic result when
-    *                      right timestamps can tie). NULL-timestamp right
-    *                      rows are excluded; NULL-timestamp left rows are
-    *                      preserved with a NULL match
+    *                      wins. NULL-timestamp left rows are preserved
+    *                      with a NULL match
+    * @param toleranceUs matches farther than this many MICROSECONDS (in
+    *                    either direction) are nulled out
     * @return left columns + `nearest_ts` + `nearest_dt_us` (signed,
     *         right − left, negative = matched backward) + payloadCols
     */
@@ -155,36 +141,11 @@ object Asof {
       leftTime: String,
       rightTime: String,
       payloadCols: Map[String, String],
-      toleranceUs: Option[Long] = None,
-      rightTieBreak: Option[String] = None): DataFrame = {
+      rightTieBreak: String,
+      toleranceUs: Option[Long] = None): DataFrame = {
 
-    val payload = struct(
-      (col(rightTime).as("__n_ts") +:
-        payloadCols.toSeq.sortBy(_._1).map { case (from, to) =>
-          col(from).as(to)
-        }): _*)
-    val tieBreak = rightTieBreak.map(col).getOrElse(lit(0L))
-    // NULL-timestamp right rows can never be a nearest match but would
-    // sort nulls-first into the backward scan and surface as a phantom
-    // match (payload with NULL nearest_ts) — exclude them up front.
-    // NULL-KEY right rows are excluded for the same reason: the key match
-    // is SQL equi-join semantics (NULL never matches NULL — mirroring the
-    // `p.user_id = v.user_id` oracle form), but the window partition
-    // groups NULL keys together, so without this filter a NULL-key left
-    // row would <=>-match a NULL-key right row. With right-side NULL keys
-    // gone, a NULL-key left row's partition holds no right rows at all
-    // and it surfaces with a NULL match — preserved, like every left row.
-    val rightU = right
-      .filter(col(rightTime).isNotNull &&
-        keys.map(col(_).isNotNull).foldLeft(lit(true))(_ && _))
-      .select((keys.map(col) :+ unix_micros(col(rightTime)).as("__us") :+
-        payload.as("__rv") :+ tieBreak.as("__tb")): _*)
-      .withColumn("__side", lit(0))
-    val leftU = left
-      .withColumn("__us", unix_micros(col(leftTime)))
-      .withColumn("__side", lit(1))
-      .withColumn("__tb", lit(null).cast(rightU.schema("__tb").dataType))
-    val unioned = leftU.unionByName(rightU, allowMissingColumns = true)
+    val unioned = sides(left, right, keys, leftTime, rightTime, payloadCols,
+      rightTieBreak, "__us", unix_micros, "__n_ts")
 
     // Backward scan: right rows sort before left at equal __us (side 0 <
     // 1) so dt = 0 matches; among right rows tied on __us, __tb DESC puts
@@ -212,11 +173,8 @@ object Asof {
       .when(col("__prev").isNotNull && col("__next").isNotNull,
         when(dPrev <= dNext, col("__prev")).otherwise(col("__next")))
       .otherwise(coalesce(col("__prev"), col("__next")))
-    val inTol = toleranceUs match {
-      case Some(tol) => when(col("__c").isNotNull &&
-        abs(unix_micros(col("__c.__n_ts")) - col("__us")) <= tol, col("__c"))
-      case None => col("__c")
-    }
+    val inTol = toleranceUs.fold(col("__c"))(tol => when(col("__c").isNotNull &&
+      abs(unix_micros(col("__c.__n_ts")) - col("__us")) <= tol, col("__c")))
     val withPayload = payloadCols.toSeq.sortBy(_._1).foldLeft(
       both.withColumn("__c", chosen)
         .withColumn("__f", inTol)
@@ -227,5 +185,37 @@ object Asof {
     }
     withPayload.drop("__us", "__side", "__tb", "__rv", "__prev", "__next",
       "__c", "__f")
+  }
+
+  /** The frame both scans window over: `left` tagged side 1 with its time
+    * as `t`, unioned with `right`'s keys, its time as `t`, side 0, the
+    * tie-break as `__tb` and `__rv` = struct(right time as `rvTs`, payload
+    * columns renamed). `time` maps a time column to the scanned order.
+    *
+    * Right rows with a NULL time or a NULL key are dropped first. A NULL
+    * time sorts nulls-first into the scan, and the window partition groups
+    * NULL keys together, so either would surface as a phantom match. Keys
+    * match with SQL equi-join semantics instead, NULL never matching NULL
+    * (the oracles' `p.user_id = v.user_id`): a NULL-key left row finds no
+    * right rows in its partition and keeps a NULL match.
+    */
+  private def sides(left: DataFrame, right: DataFrame, keys: Seq[String],
+      leftTime: String, rightTime: String, payloadCols: Map[String, String],
+      rightTieBreak: String, t: String, time: Column => Column,
+      rvTs: String): DataFrame = {
+    val payload = struct(
+      (col(rightTime).as(rvTs) +:
+        payloadCols.toSeq.sortBy(_._1).map { case (from, to) => col(from).as(to) }): _*)
+    val rightU = right
+      .filter(col(rightTime).isNotNull &&
+        keys.map(col(_).isNotNull).foldLeft(lit(true))(_ && _))
+      .select((keys.map(col) :+ time(col(rightTime)).as(t) :+
+        payload.as("__rv") :+ col(rightTieBreak).as("__tb")): _*)
+      .withColumn("__side", lit(0))
+    val leftU = left
+      .withColumn(t, time(col(leftTime)))
+      .withColumn("__side", lit(1))
+      .withColumn("__tb", lit(null).cast(rightU.schema("__tb").dataType))
+    leftU.unionByName(rightU, allowMissingColumns = true)
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Plan shape (scale story): ONE data-sized aggregate — the (a, b) cell
   * counts, map-side combined to ≤|A×B| rows per partition — then margins
   * and the final statistics are aggregates/joins OVER THE CELL FRAME
-  * (answer-sized; AQE broadcasts the margin frames). The raw table is
+  * (answer-sized; the margin frames are broadcast). The raw table is
   * scanned once; no window, no Expand, no distinct. Double sums over
   * ≤|A×B| cells fall under the catalog's r4 convention (q47).
   */
@@ -45,11 +45,18 @@ object Association {
       .agg(count(lit(1)).as("__c"))
     val ra = cells.groupBy(col("__a")).agg(sum(col("__c")).as("__ra"))
     val cb = cells.groupBy(col("__b")).agg(sum(col("__c")).as("__cb"))
+    // Category counts as set sizes: two countDistinct in one agg plan as an
+    // Expand whose group order follows expression ids, so each new build of
+    // the query generated new source.
     val tot = cells.agg(
       sum(col("__c")).as("__n"),
-      countDistinct(col("__a")).as("__na"),
-      countDistinct(col("__b")).as("__nb"))
-    val j = cells.join(ra, "__a").join(cb, "__b").crossJoin(broadcast(tot))
+      size(collect_set(col("__a"))).cast("long").as("__na"),
+      size(collect_set(col("__b"))).cast("long").as("__nb"))
+    // Margins are broadcast by hint: left to AQE, the build side of each
+    // join followed whichever small stage finished first, so a rerun could
+    // plan (and compile) the other side.
+    val j = cells.join(broadcast(ra), "__a").join(broadcast(cb), "__b")
+      .crossJoin(broadcast(tot))
     val e = col("__ra").cast("double") * col("__cb") / col("__n")
     val c = col("__c").cast("double")
     j.agg(

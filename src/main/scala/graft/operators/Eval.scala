@@ -112,26 +112,6 @@ object Eval {
           .as("rho")): _*)
   }
 
-  /** Gini concentration coefficient per group, from the sorted-rank
-    * identity over non-null values:
-    *
-    *   G = (2·Σ i·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ)    (xᵢ ascending, i = 1..n)
-    *
-    * — the inequality / concentration profile of a distribution ("is this
-    * source's token mass concentrated in a few documents?"). One
-    * row_number window per group + one aggregate. The weighted sum is
-    * invariant under permutations of equal values (equal xᵢ contribute
-    * the same Σi·xᵢ for any tie order), so the window needs no unique
-    * tie-break to be deterministic.
-    *
-    * Standard Gini assumes non-negative values; negative values are
-    * accepted (the identity still evaluates, both engines identically)
-    * but the [0,1] reading no longer applies — filter first if that
-    * matters. NULL when the group sum is 0 (undefined). Double
-    * accumulation ⇒ r4 convention.
-    *
-    * @return one row per group: (groupCols…, n, gini)
-    */
   /** nDCG@k and MRR per query group — the RANKING-QUALITY member of the
     * eval family (AUC grades a classifier, Spearman a monotone fit; this
     * grades a RETRIEVAL ORDERING against graded relevance — the offline
@@ -412,6 +392,40 @@ object Eval {
           .as("df")): _*)
   }
 
+  /** Shared contingency scaffold for [[chiSquare]] and [[mutualInfo]]:
+    * one (group, r, c) cells aggregate with the group/row/column
+    * marginals attached as windows over that answer-sized frame —
+    * (groupCols…, __r, __c, __o, __n, __rm, __cm). NULL categories group
+    * as first-class cells.
+    */
+  private def contingencyCells(
+      df: DataFrame, groupCols: Seq[String],
+      rowCat: Column, colCat: Column): DataFrame = {
+    require(groupCols.nonEmpty, "groupCols must be non-empty")
+    val g = groupCols.map(col)
+    df.select(g ++ Seq(rowCat.cast("string").as("__r"),
+        colCat.cast("string").as("__c")): _*)
+      .groupBy(g ++ Seq(col("__r"), col("__c")): _*)
+      .agg(count(lit(1)).as("__o"))
+      .withColumn("__n", sum(col("__o")).over(Window.partitionBy(g: _*)))
+      .withColumn("__rm",
+        sum(col("__o")).over(Window.partitionBy(g :+ col("__r"): _*)))
+      .withColumn("__cm",
+        sum(col("__o")).over(Window.partitionBy(g :+ col("__c"): _*)))
+  }
+
+  /** Distinct-category counts over the cells frame, counting NULL as a
+    * category: `(n_rows, n_cols)` aggregate expressions. Counted as the size
+    * of a `collect_set`, not with `countDistinct`: two distinct aggregates
+    * in one `agg` plan as an `Expand` whose group order follows expression
+    * ids, so each new build of the query generated new source.
+    */
+  private def categoryCountAggs = Seq(
+    (size(collect_set(col("__r"))).cast("long") +
+      max(when(col("__r").isNull, 1L).otherwise(0L))).as("n_rows"),
+    (size(collect_set(col("__c"))).cast("long") +
+      max(when(col("__c").isNull, 1L).otherwise(0L))).as("n_cols"))
+
   /** Pearson chi-square test of independence per group — "are these two
     * categoricals associated?" (label×slice leakage probes, feature
     * screening before target encoding, annotator×category bias checks).
@@ -450,37 +464,6 @@ object Eval {
     *         — chi2 NULL when dof = 0 (a degenerate single-row or
     *         single-column table has no independence to test)
     */
-  /** Shared contingency scaffold for [[chiSquare]] and [[mutualInfo]]:
-    * one (group, r, c) cells aggregate with the group/row/column
-    * marginals attached as windows over that answer-sized frame —
-    * (groupCols…, __r, __c, __o, __n, __rm, __cm). NULL categories group
-    * as first-class cells.
-    */
-  private def contingencyCells(
-      df: DataFrame, groupCols: Seq[String],
-      rowCat: Column, colCat: Column): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
-    val g = groupCols.map(col)
-    df.select(g ++ Seq(rowCat.cast("string").as("__r"),
-        colCat.cast("string").as("__c")): _*)
-      .groupBy(g ++ Seq(col("__r"), col("__c")): _*)
-      .agg(count(lit(1)).as("__o"))
-      .withColumn("__n", sum(col("__o")).over(Window.partitionBy(g: _*)))
-      .withColumn("__rm",
-        sum(col("__o")).over(Window.partitionBy(g :+ col("__r"): _*)))
-      .withColumn("__cm",
-        sum(col("__o")).over(Window.partitionBy(g :+ col("__c"): _*)))
-  }
-
-  /** Distinct-category counts over the cells frame, counting NULL as a
-    * category: `(n_rows, n_cols)` aggregate expressions.
-    */
-  private def categoryCountAggs = Seq(
-    (countDistinct(col("__r")) +
-      max(when(col("__r").isNull, 1L).otherwise(0L))).as("n_rows"),
-    (countDistinct(col("__c")) +
-      max(when(col("__c").isNull, 1L).otherwise(0L))).as("n_cols"))
-
   def chiSquare(
       df: DataFrame, groupCols: Seq[String],
       rowCat: Column, colCat: Column): DataFrame = {
@@ -617,6 +600,26 @@ object Eval {
         (lit(1.0 - p) * (col("rbo8").cast("double") / lit(1e8))).as("rbo"))
   }
 
+  /** Gini concentration coefficient per group, from the sorted-rank
+    * identity over non-null values:
+    *
+    *   G = (2·Σ i·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ)    (xᵢ ascending, i = 1..n)
+    *
+    * — the inequality / concentration profile of a distribution ("is this
+    * source's token mass concentrated in a few documents?"). One
+    * row_number window per group + one aggregate. The weighted sum is
+    * invariant under permutations of equal values (equal xᵢ contribute
+    * the same Σi·xᵢ for any tie order), so the window needs no unique
+    * tie-break to be deterministic.
+    *
+    * Standard Gini assumes non-negative values; negative values are
+    * accepted (the identity still evaluates, both engines identically)
+    * but the [0,1] reading no longer applies — filter first if that
+    * matters. NULL when the group sum is 0 (undefined). Double
+    * accumulation ⇒ r4 convention.
+    *
+    * @return one row per group: (groupCols…, n, gini)
+    */
   def gini(
       df: DataFrame, groupCols: Seq[String], valueCol: Column): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")

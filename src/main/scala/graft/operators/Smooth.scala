@@ -201,29 +201,6 @@ object Smooth {
           .as("ewma")): _*)
   }
 
-  /** Per-group lag-k autocorrelation, k = 1…maxLag — "does this metric
-    * remember itself?": the seasonality/momentum detector that decides
-    * whether [[ewma]] smoothing or [[graft.llm.Drift.cusum]] alarms are
-    * even meaningful on a slice, and the independence check before any
-    * i.i.d.-assuming statistic (q150's t-test, q152's bootstrap).
-    *
-    *   ρ_k = Σᵢ (v_i − v̄)(v_{i+k} − v̄) / Σᵢ (v_i − v̄)²
-    *
-    * Exactness: deviations are kept ×n — `dl_i = n·v4_i − T` with T the
-    * exact scale-4 group total — so every deviation is an exact LONG
-    * (bound: n·|v|·10⁴ must fit a long, the cusum contract; pre-bucket
-    * past ~10⁹·10⁴) and the num/den sums are exact DECIMAL on any merge
-    * tree; each ρ_k is ONE double division of two exact integers (the
-    * ×n² factors cancel).
-    *
-    * Plan: answer-sized totals broadcast-attached (null-safe), ONE
-    * ordered window carrying all maxLag lag() offsets (small K — the
-    * [[ewma]] A/B showed per-offset frame processors only hurt at K ≈
-    * 50+), one moment aggregate. Per-group sequential by nature.
-    *
-    * @return per group: (groupCols…, n, rho1…rho<maxLag>) — ρ NULL for
-    *         constant or too-short series
-    */
   /** Inter-arrival statistics + burstiness per group — "does this stream
     * arrive regularly, randomly, or in bursts?": gaps between each
     * entity's consecutive events, aggregated per group into mean, sample
@@ -395,6 +372,29 @@ object Smooth {
       .drop("__cbk", "__prev", "__bk", "__rn", "__bn")
   }
 
+  /** Per-group lag-k autocorrelation, k = 1…maxLag — "does this metric
+    * remember itself?": the seasonality/momentum detector that decides
+    * whether [[ewma]] smoothing or [[graft.llm.Drift.cusum]] alarms are
+    * even meaningful on a slice, and the independence check before any
+    * i.i.d.-assuming statistic (q150's t-test, q152's bootstrap).
+    *
+    *   ρ_k = Σᵢ (v_i − v̄)(v_{i+k} − v̄) / Σᵢ (v_i − v̄)²
+    *
+    * Exactness: deviations are kept ×n — `dl_i = n·v4_i − T` with T the
+    * exact scale-4 group total — so every deviation is an exact LONG
+    * (bound: n·|v|·10⁴ must fit a long, the cusum contract; pre-bucket
+    * past ~10⁹·10⁴) and the num/den sums are exact DECIMAL on any merge
+    * tree; each ρ_k is ONE double division of two exact integers (the
+    * ×n² factors cancel).
+    *
+    * Plan: answer-sized totals broadcast-attached (null-safe), ONE
+    * ordered window carrying all maxLag lag() offsets (small K — the
+    * [[ewma]] A/B showed per-offset frame processors only hurt at K ≈
+    * 50+), one moment aggregate. Per-group sequential by nature.
+    *
+    * @return per group: (groupCols…, n, rho1…rho<maxLag>) — ρ NULL for
+    *         constant or too-short series
+    */
   def acf(
       df: DataFrame, groupCols: Seq[String], orderCol: Column,
       valueCol: Column, tieCols: Seq[String], maxLag: Int = 5): DataFrame = {

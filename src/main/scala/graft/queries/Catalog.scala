@@ -56,19 +56,18 @@ object Catalog {
     */
   private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
-  /** Cross-engine 128-bit→double hazard (found by the generated-sf0.1
-    * oracle gate, round 14): DuckDB converts HUGEINT→DOUBLE in two steps
-    * (upper·2⁶⁴ + lower, two roundings) while Spark's Decimal→double is
-    * correctly rounded, so the two engines can disagree by 1 ulp whenever
-    * a >2⁵³ 128-bit value is cast to double. Harmless where the double
-    * feeds an r4/r8-rounded TAIL (1 ulp almost never moves the 4th/8th
-    * decimal, and every such query passes the driver + generated gates at
-    * three SFs); a REAL wrong-answer class where the double feeds an
-    * exact-compared integer column — q185/q191/q194's half-up divisions
-    * did, and are now division-free integral arithmetic on both sides:
-    * floor(a/b + ½) = (2a + b) intdiv (2b) for a ≥ 0 (DECIMAL(38,0) `div`
-    * on the Spark side, HUGEINT `//` on the DuckDB side).
-    */
+  // Cross-engine 128-bit→double hazard (found by the generated-sf0.1
+  // oracle gate, round 14): DuckDB converts HUGEINT→DOUBLE in two steps
+  // (upper·2⁶⁴ + lower, two roundings) while Spark's Decimal→double is
+  // correctly rounded, so the two engines can disagree by 1 ulp whenever
+  // a >2⁵³ 128-bit value is cast to double. Harmless where the double
+  // feeds an r4/r8-rounded TAIL (1 ulp almost never moves the 4th/8th
+  // decimal, and every such query passes the driver + generated gates at
+  // three SFs); a REAL wrong-answer class where the double feeds an
+  // exact-compared integer column — q185/q191/q194's half-up divisions
+  // did, and are now division-free integral arithmetic on both sides:
+  // floor(a/b + ½) = (2a + b) intdiv (2b) for a ≥ 0 (DECIMAL(38,0) `div`
+  // on the Spark side, HUGEINT `//` on the DuckDB side).
 
   /** Order-independent mean of a money-like (≤2-decimal-intended) double
     * column, r4-rounded. A plain double `avg` is associativity-dependent:
@@ -358,25 +357,17 @@ object Catalog {
     val left = ev.filter(col("event_type") =!= "purchase")
     val right = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id").as("p_event_id"), col("value").as("p_value"))
-    // Tolerance is on whole microseconds ↔ the oracle's epoch_us diff; our
-    // cast("long") is whole seconds — 3600 s ≡ 3600000000 µs on both sides
-    // only when sub-second parts are handled identically, so compare in µs.
-    val joined = Asof.join(
+    Asof.join(
       left, right,
       keys = Seq("user_id"),
       leftTime = "ts", rightTime = "ts",
       payloadCols = Map("p_event_id" -> "purchase_id", "p_value" -> "purchase_value"),
-      toleranceSec = None,
-      rightTieBreak = Some("p_event_id"))
-    joined
-      .withColumn("__fresh",
-        col("asof_ts").isNotNull &&
-          (unix_micros(col("ts")) - unix_micros(col("asof_ts"))) <= 3600000000L)
+      rightTieBreak = "p_event_id",
+      toleranceUs = Some(3600000000L))
       .select(
         col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        when(col("__fresh"), col("purchase_id")).as("purchase_id"),
-        when(col("__fresh"), unix_micros(col("asof_ts"))).as("purchase_ts_us"),
-        when(col("__fresh"), col("purchase_value")).as("purchase_value"))
+        col("purchase_id"), unix_micros(col("asof_ts")).as("purchase_ts_us"),
+        col("purchase_value"))
       .transform(ordered("event_id"))
   }
 
@@ -6943,7 +6934,7 @@ object Catalog {
         col("value").as("p_value"))
     graft.operators.Asof.nearestJoin(left, right, Seq("user_id"), "ts", "ts",
         Map("p_event_id" -> "p_id", "p_value" -> "p_value"),
-        toleranceUs = Some(7200000000L), rightTieBreak = Some("p_event_id"))
+        rightTieBreak = "p_event_id", toleranceUs = Some(7200000000L))
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("p_id"), col("nearest_dt_us"), r4(col("p_value")).as("p_value4"))
       .transform(ordered("event_id"))

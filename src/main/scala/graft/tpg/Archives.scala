@@ -23,21 +23,6 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object Archives {
 
-  /** List an archive's member names. */
-  def listMembers(zipPath: String): Seq[String] = {
-    import org.apache.commons.compress.archivers.zip.ZipFile
-    val zf = ZipFile.builder().setFile(new File(zipPath)).get()
-    try {
-      val it = zf.getEntries
-      val names = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasMoreElements) {
-        val e = it.nextElement()
-        if (!e.isDirectory) names += e.getName
-      }
-      names.toSeq
-    } finally zf.close()
-  }
-
   /** Extraction dirs of this JVM. The extracted files back lazy
     * DataFrames, so they live until the JVM exits; one shutdown hook then
     * deletes them all. */
@@ -45,35 +30,34 @@ object Archives {
   Runtime.getRuntime.addShutdownHook(
     new Thread(() => extractDirs.forEach(d => FileUtils.deleteQuietly(d))))
 
-  /** Extract the members accepted by `wanted` to a temp dir (deleted at JVM
-    * exit); returns member name → local path (insertion order = archive
-    * order).
+  /** Extract the file members that `select` picks from the archive's
+    * member names (archive order, directories left out) to a temp dir
+    * (deleted at JVM exit), reading the entry list once; returns member
+    * name → local path in archive order.
     */
-  def extractMembers(zipPath: String, wanted: String => Boolean): Seq[(String, String)] = {
+  def extractMembers(zipPath: String,
+      select: Seq[String] => Seq[String]): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
     import org.apache.commons.compress.archivers.zip.ZipFile
     val tmp = Files.createTempDirectory("graft_zip_").toFile
     extractDirs.add(tmp)
     val zf = ZipFile.builder().setFile(new File(zipPath)).get()
     try {
-      val it = zf.getEntries
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasMoreElements) {
-        val e = it.nextElement()
-        if (!e.isDirectory && wanted(e.getName)) {
-          // Preserve the member's directory structure under the temp dir:
-          // flattening to basenames would let `a/istdaten.csv` and
-          // `b/istdaten.csv` silently overwrite each other. Canonical-path
-          // check rejects `../` traversal (zip-slip).
-          val dst = new File(tmp, e.getName)
-          if (!dst.getCanonicalPath.startsWith(tmp.getCanonicalPath + File.separator))
-            sys.error(s"archive member escapes extraction dir: ${e.getName}")
-          dst.getParentFile.mkdirs()
-          val os = new FileOutputStream(dst)
-          try zf.getInputStream(e).transferTo(os) finally os.close()
-          out += e.getName -> dst.getAbsolutePath
-        }
+      val files = zf.getEntries.asScala.filterNot(_.isDirectory).toSeq
+      val wanted = select(files.map(_.getName)).toSet
+      files.filter(e => wanted(e.getName)).map { e =>
+        // Preserve the member's directory structure under the temp dir:
+        // flattening to basenames would let `a/istdaten.csv` and
+        // `b/istdaten.csv` silently overwrite each other. Canonical-path
+        // check rejects `../` traversal (zip-slip).
+        val dst = new File(tmp, e.getName)
+        if (!dst.getCanonicalPath.startsWith(tmp.getCanonicalPath + File.separator))
+          sys.error(s"archive member escapes extraction dir: ${e.getName}")
+        dst.getParentFile.mkdirs()
+        val os = new FileOutputStream(dst)
+        try zf.getInputStream(e).transferTo(os) finally os.close()
+        e.getName -> dst.getAbsolutePath
       }
-      out.toSeq
     } finally zf.close()
   }
 

@@ -106,8 +106,8 @@ object FeaturesEvents {
       keys = Seq("station_id"),
       leftTime = "sched_bin", rightTime = "ts_utc",
       payloadCols = payload,
-      toleranceSec = 300, // F6: a fixed 5 minutes
-      rightTieBreak = Some("ts_utc")
+      rightTieBreak = "ts_utc",
+      toleranceUs = 300000000L // F6: a fixed 5 minutes
     ).withColumnRenamed("asof_ts", "weather_ts")
       .withColumn("weather_station_id",
         when(col("weather_ts").isNotNull, col("station_id")))

@@ -24,7 +24,7 @@ object GtfsIngest {
   def ingest(spark: SparkSession, zipPath: String,
       operatorPattern: String = "Transports Publics Genevois")
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val paths = Archives.extractMembers(zipPath, Schemas.gtfsRenames.contains).toMap
+    val paths = Archives.extractMembers(zipPath, _.filter(Schemas.gtfsRenames.contains)).toMap
     def member(name: String): DataFrame = Archives.readCsv(spark,
       Seq(paths.getOrElse(name, sys.error(s"$name missing from GTFS feed"))),
       Map.empty, Schemas.gtfsRenames(name), Schemas.gtfsRequired(name))

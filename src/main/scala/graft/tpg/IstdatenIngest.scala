@@ -20,13 +20,13 @@ import graft.operators.Dedupe
   */
 object IstdatenIngest {
 
-  /** S2: archive members that count as IstDaten CSVs (reference
+  /** S2: the archive member names that count as IstDaten CSVs (reference
     * `02:113-179` enumerates `*istdaten*.csv` case-insensitively, with a
     * fallback to any CSV member when the pattern matches nothing).
     */
   private val istdatenMember = "(?i).*istdaten.*\\.csv$".r
-  def istdatenCsvMembers(zipPath: String): Seq[String] = {
-    val csvs = Archives.listMembers(zipPath).filter(_.toLowerCase.endsWith(".csv"))
+  def istdatenCsvMembers(members: Seq[String]): Seq[String] = {
+    val csvs = members.filter(_.toLowerCase.endsWith(".csv"))
     val matching = csvs.filter(m => istdatenMember.pattern.matcher(m).matches)
     if (matching.nonEmpty) matching else csvs
   }
@@ -41,7 +41,7 @@ object IstdatenIngest {
   def readRaw(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val csvPaths = paths.flatMap { p =>
       if (p.toLowerCase.endsWith(".zip"))
-        Archives.extractMembers(p, istdatenCsvMembers(p).toSet.contains).map(_._2)
+        Archives.extractMembers(p, istdatenCsvMembers).map(_._2)
       else Seq(p)
     }
     Archives.readCsv(spark, csvPaths, Map("sep" -> ";"),
@@ -101,6 +101,10 @@ object IstdatenIngest {
     * plus a deterministic final tiebreak (the reference relied on pandas
     * stable sort order; we pin line_text+stop_name to make runs reproducible
     * on any cluster — divergence documented in SURVEY §7 risk 1).
+    *
+    * The reference drops exact duplicate rows first (O6). That step is
+    * subsumed here: exact copies share the business key, so keeping one
+    * row per key already keeps exactly one of them.
     */
   def dedupe(df: DataFrame): DataFrame = {
     val statRank = greatest(
@@ -111,7 +115,7 @@ object IstdatenIngest {
     // FIRST (unlike the features build, which coalesces depart first).
     val estTs = coalesce(col("arrival_time_est"), col("depart_time_est"))
     Dedupe.topOnePerKey(
-      df.distinct(), // O6: exact duplicates first, as the reference does
+      df,
       keys = Seq(
         col("service_date"), col("fahrt_bezeichner"), col("stop_code"),
         coalesce(col("arrival_time_sched"), col("depart_time_sched"))),

@@ -39,6 +39,19 @@ object Jobs {
 
   private[tpg] def wrongCount(args: Seq[String], usage: String): Nothing =
     usageError(s"wrong number of arguments (${args.size})", usage)
+
+  /** `<gold> <csv...>`, at least one CSV; anything shorter is a usage error. */
+  private[tpg] def goldAndCsvs(args: Seq[String], usage: String): (String, Seq[String]) =
+    args match {
+      case gold +: csvs if csvs.nonEmpty => (gold, csvs)
+      case _ => wrongCount(args, usage)
+    }
+
+  /** `<gold>` alone; any other argument count is a usage error. */
+  private[tpg] def goldOnly(args: Seq[String], usage: String): String = args match {
+    case Seq(gold) => gold
+    case _ => wrongCount(args, usage)
+  }
 }
 
 object IngestGtfs {
@@ -55,11 +68,8 @@ object IngestGtfs {
 }
 
 object IngestIstdaten {
-  /** `<gold> <csv...>`, at least one CSV; anything shorter is a usage error. */
-  def parse(args: Seq[String]): (String, Seq[String]) = args match {
-    case gold +: csvs if csvs.nonEmpty => (gold, csvs)
-    case _ => Jobs.wrongCount(args, "IngestIstdaten <gold> <csv...>")
-  }
+  def parse(args: Seq[String]): (String, Seq[String]) =
+    Jobs.goldAndCsvs(args, "IngestIstdaten <gold> <csv...>")
 
   def main(args: Array[String]): Unit = {
     val (gold, csvs) = parse(args.toSeq)
@@ -68,11 +78,8 @@ object IngestIstdaten {
 }
 
 object IngestWeather {
-  /** `<gold> <csv...>`, at least one CSV; anything shorter is a usage error. */
-  def parse(args: Seq[String]): (String, Seq[String]) = args match {
-    case gold +: csvs if csvs.nonEmpty => (gold, csvs)
-    case _ => Jobs.wrongCount(args, "IngestWeather <gold> <csv...>")
-  }
+  def parse(args: Seq[String]): (String, Seq[String]) =
+    Jobs.goldAndCsvs(args, "IngestWeather <gold> <csv...>")
 
   def main(args: Array[String]): Unit = {
     val (gold, csvs) = parse(args.toSeq)
@@ -115,11 +122,7 @@ object BuildFeatures {
 }
 
 object BuildByStopLine {
-  /** `<gold>` alone; any other argument count is a usage error. */
-  def parse(args: Seq[String]): String = args match {
-    case Seq(gold) => gold
-    case _ => Jobs.wrongCount(args, "BuildByStopLine <gold>")
-  }
+  def parse(args: Seq[String]): String = Jobs.goldOnly(args, "BuildByStopLine <gold>")
 
   def main(args: Array[String]): Unit = {
     val gold = parse(args.toSeq)
@@ -131,11 +134,7 @@ object BuildByStopLine {
 }
 
 object BuildTrainingRows {
-  /** `<gold>` alone; any other argument count is a usage error. */
-  def parse(args: Seq[String]): String = args match {
-    case Seq(gold) => gold
-    case _ => Jobs.wrongCount(args, "BuildTrainingRows <gold>")
-  }
+  def parse(args: Seq[String]): String = Jobs.goldOnly(args, "BuildTrainingRows <gold>")
 
   def main(args: Array[String]): Unit = {
     val gold = parse(args.toSeq)

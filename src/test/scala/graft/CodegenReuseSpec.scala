@@ -28,8 +28,11 @@ class CodegenReuseSpec extends SparkSpec {
   }.toMap
 
   test("catalog_mix's five queries compile nothing when run again in another order") {
+    // q151 and q115 ride along: each counted two distinct categories with
+    // countDistinct, planned as an Expand whose group order followed
+    // expression ids, so a rerun compiled new classes on some runs.
     val mix = Seq("q85_perplexity_gate", "q96_trigram_backoff", "q125_setsim_join",
-      "q07_dedupe_priority", "q09_asof_join")
+      "q07_dedupe_priority", "q09_asof_join", "q151_chi_square", "q115_association")
     runAll(mix)
     val second = runAll(mix.drop(2) ++ mix.take(2))
     assert(second.values.sum == 0, second)

@@ -111,7 +111,7 @@ class OperatorsSpec extends SparkSpec {
       ("u", "2024-06-01 10:04:00", 201L))
       .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
     val got = Asof.join(left, right, Seq("k"), "ts", "ts",
-      Map("rid" -> "matched_rid"), toleranceSec = Some(300), rightTieBreak = Some("rid"))
+      Map("rid" -> "matched_rid"), rightTieBreak = "rid", toleranceUs = Some(300000000L))
       .orderBy("id")
       .select("id", "matched_rid")
       .collect()
@@ -121,6 +121,26 @@ class OperatorsSpec extends SparkSpec {
     assert(got(1).getLong(1) == 201L)
     assert(got(2).isNullAt(1))
     assert(got(3).isNullAt(1))
+  }
+
+  test("asof join: NULL keys and NULL right times never match") {
+    val left = Seq[(Long, String, String)](
+      (1L, null, "2024-06-01 10:00:00"), // NULL-key left: preserved, NULL match
+      (2L, "u", "2024-06-01 10:00:00"),  // only right row for u has a NULL time
+      (3L, "w", "2024-06-01 10:00:00"))
+      .toDF("id", "k", "ts").withColumn("ts", to_timestamp($"ts"))
+    val right = Seq[(String, String, Long)](
+      (null, "2024-06-01 09:59:00", 99L), // NULL-key right: never a match
+      ("u", null, 98L),                   // NULL-time right: never a match
+      ("w", "2024-06-01 09:30:00", 1L))
+      .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
+    val got = Asof.join(left, right, Seq("k"), "ts", "ts",
+        Map("rid" -> "m"), rightTieBreak = "rid")
+      .orderBy("id").select("id", "m", "asof_ts").collect()
+    assert(got.length == 3)
+    assert(got(0).isNullAt(1) && got(0).isNullAt(2)) // NOT rid 99
+    assert(got(1).isNullAt(1) && got(1).isNullAt(2)) // NOT rid 98
+    assert(got(2).getLong(1) == 1L)
   }
 
   test("nearestJoin: two-sided min-distance, backward-preferred ties, tolerance") {
@@ -141,8 +161,8 @@ class OperatorsSpec extends SparkSpec {
       ("u", "2024-06-01 12:00:00", 7L))
       .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
     val got = Asof.nearestJoin(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "m_rid"), toleranceUs = Some(30L * 60 * 1000000),
-        rightTieBreak = Some("rid"))
+        Map("rid" -> "m_rid"), rightTieBreak = "rid",
+        toleranceUs = Some(30L * 60 * 1000000))
       .orderBy("id")
       .select("id", "m_rid", "nearest_dt_us")
       .collect()
@@ -163,7 +183,7 @@ class OperatorsSpec extends SparkSpec {
       ("u", "2024-06-01 10:01:00", 1L))
       .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
     val got = Asof.nearestJoin(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "m"), rightTieBreak = Some("rid"))
+        Map("rid" -> "m"), rightTieBreak = "rid")
       .orderBy("id").select("id", "m", "nearest_ts").collect()
     assert(got(0).getLong(1) == 1L)                    // real match, not rid 99
     assert(got(1).isNullAt(1) && got(1).isNullAt(2))   // NULL-ts left row kept
@@ -179,7 +199,7 @@ class OperatorsSpec extends SparkSpec {
       ("u", "2024-06-01 10:01:00", 1L))
       .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
     val got = Asof.nearestJoin(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "m"), rightTieBreak = Some("rid"))
+        Map("rid" -> "m"), rightTieBreak = "rid")
       .orderBy("id").select("id", "m").collect()
     assert(got(0).isNullAt(1)) // NOT rid 99 — NULL keys group but never match
     assert(got(1).getLong(1) == 1L)
@@ -191,10 +211,10 @@ class OperatorsSpec extends SparkSpec {
     val right = Seq(("u", "2024-06-01 10:00:00", 10L), ("u", "2024-06-01 10:04:00", 20L))
       .toDF("k", "ts", "rid").withColumn("ts", to_timestamp($"ts"))
     val near = Asof.nearestJoin(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "m"), rightTieBreak = Some("rid"))
+        Map("rid" -> "m"), rightTieBreak = "rid")
       .orderBy("id").select("m").collect().map(_.getLong(0))
     val asof = Asof.join(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "m"), rightTieBreak = Some("rid"))
+        Map("rid" -> "m"), rightTieBreak = "rid")
       .orderBy("id").select("m").collect().map(_.getLong(0))
     assert(near.sameElements(asof))
   }

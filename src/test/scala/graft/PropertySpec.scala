@@ -5,6 +5,7 @@ import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Asof, Dedupe, Merge}
+import graft.tpg.{IstdatenIngest, Schemas}
 
 /** Property-style invariants (SURVEY §5.3) over a ScalaCheck-generated
   * dataset — one deterministic seed so failures are reproducible.
@@ -75,6 +76,45 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("istdaten dedupe keeps one of each exact copy without a distinct() pass") {
+    // Small domains so rows often share a business key and tie on the early
+    // priority terms; stop_name (the last term) is unique per distinct row,
+    // so two rows tie on the key and every priority term only when they are
+    // exact copies, and the pick is deterministic.
+    def opt[T](g: Gen[T]): Gen[Option[T]] = Gen.frequency(3 -> g.map(Some(_)), 1 -> Gen.const(None))
+    val minute = Gen.choose(0, 3).map(m => f"2024-06-01 10:0$m%d:00")
+    val status = Gen.oneOf("REAL", "IST", "GESCHAETZT", "PROGNOSE", "UNBEKANNT")
+    val baseGen = Gen.listOfN(300, for {
+      day <- Gen.oneOf("2024-06-01", "2024-06-02")
+      fahrt <- Gen.oneOf("85:889:1", "85:889:2")
+      stop <- Gen.oneOf("8587057", "8587058")
+      line <- opt(Gen.oneOf("12", "15"))
+      arrSched <- opt(minute)
+      arrEst <- opt(minute)
+      arrStatus <- opt(status)
+      depSched <- opt(minute)
+      depEst <- opt(minute)
+      depStatus <- opt(status)
+      flags <- Gen.listOfN(3, Gen.oneOf(true, false))
+    } yield (day, fahrt, line, stop, arrSched, arrEst, arrStatus, depSched, depEst,
+      depStatus, flags))
+    val base = baseGen.pureApply(Gen.Parameters.default, Seed(17L)).distinct
+    val copies = Gen.listOfN(base.length, Gen.choose(1, 3))
+      .pureApply(Gen.Parameters.default, Seed(18L))
+    val withCopies = base.zipWithIndex.zip(copies).flatMap {
+      case (((day, fahrt, line, stop, aS, aE, aSt, dS, dE, dSt, flags), i), n) =>
+        Seq.fill(n)((day, fahrt, "TPG", "Bus", line, s"stop-$i", stop, aS, aE, aSt,
+          dS, dE, dSt, flags(0), flags(1), flags(2)))
+    }
+    assert(withCopies.length > base.length)
+    val events = withCopies.toDF(Schemas.istEvents.fieldNames.toSeq: _*)
+      .transform(Schemas.project(Schemas.istEvents))
+    val got = IstdatenIngest.dedupe(events)
+    val distinctFirst = IstdatenIngest.dedupe(events.distinct())
+    assert(got.count() == distinctFirst.count())
+    assert(got.exceptAll(distinctFirst).isEmpty && distinctFirst.exceptAll(got).isEmpty)
+  }
+
   test("upsert: run-twice ≡ run-once (idempotent), keys unioned exactly") {
     val existing = df.filter($"id" % 3 =!= 0).select($"id", $"p")
     val incoming = df.filter($"id" % 2 === 0).select($"id", ($"p" + 100).as("p"))
@@ -96,10 +136,10 @@ class PropertySpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
     for (tol <- Seq(60L, 600L, 3600L)) {
       val plain = Asof.join(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "matched_rid"), toleranceSec = Some(tol), rightTieBreak = Some("rid"))
+        Map("rid" -> "matched_rid"), rightTieBreak = "rid", toleranceUs = Some(tol * 1000000L))
       val bucketed = Asof.joinBucketed(left, right, Seq("k"), "ts", "ts",
-        Map("rid" -> "matched_rid"), toleranceSec = tol, bucketSeconds = tol,
-        rightTieBreak = Some("rid"))
+        Map("rid" -> "matched_rid"), rightTieBreak = "rid", toleranceUs = tol * 1000000L,
+        bucketSeconds = tol)
       assert(norm(bucketed) == norm(plain), s"tolerance $tol diverged")
     }
   }
@@ -174,11 +214,11 @@ class PropertySpec extends SparkSpec {
     val right = df.filter($"p" >= 3)
       .select($"k", timestamp_seconds($"ts" - 10).as("ts"), $"id".as("rid"))
     val joined = Asof.join(left, right, Seq("k"), "ts", "ts",
-      Map("rid" -> "matched_rid"), toleranceSec = Some(1000), rightTieBreak = Some("rid"))
+      Map("rid" -> "matched_rid"), rightTieBreak = "rid", toleranceUs = Some(1000000000L))
     assert(joined.count() == left.count())
     // every match is truly at-or-before and within tolerance
     val bad = joined.filter($"asof_ts".isNotNull &&
-      ($"asof_ts" > $"ts" || $"ts".cast("long") - $"asof_ts".cast("long") > 1000))
+      ($"asof_ts" > $"ts" || unix_micros($"ts") - unix_micros($"asof_ts") > 1000000000L))
     assert(bad.count() == 0)
   }
 

@@ -51,7 +51,7 @@ class RobustnessSpec extends SparkSpec {
     put("a/istdaten.csv", "from-a")
     put("b/istdaten.csv", "from-b")
     zo.close()
-    val out = Archives.extractMembers(zip.getAbsolutePath, _.endsWith("istdaten.csv"))
+    val out = Archives.extractMembers(zip.getAbsolutePath, _.filter(_.endsWith("istdaten.csv")))
     assert(out.size == 2)
     val byMember = out.toMap
     assert(new String(Files.readAllBytes(new File(byMember("a/istdaten.csv")).toPath)) == "from-a")
@@ -64,7 +64,7 @@ class RobustnessSpec extends SparkSpec {
     zo.putNextEntry(new ZipEntry("../escape.csv"))
     zo.write("x".getBytes("UTF-8")); zo.closeEntry(); zo.close()
     intercept[RuntimeException] {
-      Archives.extractMembers(zip.getAbsolutePath, _ => true)
+      Archives.extractMembers(zip.getAbsolutePath, identity)
     }
   }
 

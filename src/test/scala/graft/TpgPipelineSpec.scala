@@ -121,7 +121,7 @@ class TpgPipelineSpec extends SparkSpec {
       "subdir/2024-06-02_istdaten.csv" ->
         (istHeader + "\n" + istRow("85:889:2", "Stand") + "\n")): _*)
 
-    assert(IstdatenIngest.istdatenCsvMembers(zip).toSet ==
+    assert(Archives.extractMembers(zip, IstdatenIngest.istdatenCsvMembers).map(_._1).toSet ==
       Set("2024-06-01_IstDaten.csv", "subdir/2024-06-02_istdaten.csv"))
     val got = IstdatenIngest.ingest(spark, Seq(zip))
       .orderBy("fahrt_bezeichner").collect()

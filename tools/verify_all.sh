@@ -8,7 +8,8 @@
 # Usage:
 #   tools/verify_all.sh quick   # ~6 min: compile + oracle gate at sf0.01
 #                               #   + the TPG chain (E2E, then the six CLI
-#                               #   mains over its generated inputs)
+#                               #   mains over its generated inputs, whose
+#                               #   gold must equal E2E's)
 #   tools/verify_all.sh full    # ~25 min: sbt test + oracle gates at
 #                               #   sf0.001/0.01/0.1 + det audit + bench
 #                               #   ratio guard at sf0.1
@@ -59,6 +60,8 @@ quick)
   run_main graft.tpg.BuildFeatures "$gold" --asof
   run_main graft.tpg.BuildByStopLine "$gold"
   run_main graft.tpg.BuildTrainingRows "$gold"
+  step "TPG chain: the CLI mains' gold equals E2E's, table by table (DuckDB EXCEPT ALL)"
+  python3 tools/gold_diff.py "$e2e/gold" "$gold"
   ;;
 full)
   step "sbt test (all suites)"
