@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * `src/10_build_features.py:200-232`, `src/02_ingest_istdaten.py:210-268`).
   *
   * Every function here is a pure `Column => Column` built from
-  * `org.apache.spark.sql.functions` — fully Catalyst-optimizable, codegen'd,
-  * zero UDFs. These compose into whole-stage codegen spans, so at 100 TB they
-  * run at vectorized-scan speed with no serialization boundary.
+  * `org.apache.spark.sql.functions` and the engine's kernels (case mapping
+  * is [[TextExprs.lower]]/[[TextExprs.upper]], Spark's `lower`/`upper` bit
+  * for bit) — fully Catalyst-optimizable, codegen'd, zero UDFs. These
+  * compose into whole-stage codegen spans, so at 100 TB they run at
+  * vectorized-scan speed with no serialization boundary.
   */
 object Macros {
 
@@ -80,13 +82,13 @@ object Macros {
     * (incl. NULL) → false. Reference: `02:210-220`.
     */
   def robustBool(c: Column): Column =
-    coalesce(lower(trim(c)).isin("1", "true"), lit(false))
+    coalesce(TextExprs.lower(trim(c)).isin("1", "true"), lit(false))
 
   /** IstDaten status priority: REAL/IST → 3, GESCHAETZT → 2, PROGNOSE → 1,
     * other/NULL → 0. Reference: `02:263-268`.
     */
   def statusRank(c: Column): Column = {
-    val u = upper(trim(c))
+    val u = TextExprs.upper(trim(c))
     when(u.isin("REAL", "IST"), 3)
       .when(u === "GESCHAETZT", 2)
       .when(u === "PROGNOSE", 1)

@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShims.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -69,17 +70,33 @@ object TextKernels {
     new GenericArrayData(out)
   }
 
+  /** Spark's `lower()` of a UTF8_BINARY string, bit for bit: the body of
+    * Spark 4.1's `CollationAwareUTF8String.toLowerCase(UTF8String)`. An
+    * all-ASCII string maps byte by byte; any other string goes through
+    * ICU's full case map in the default locale. Calling ICU here skips that
+    * class's static initializer, which title-cases all 1,114,112 code
+    * points into a table only `initcap` reads; the title-casing loads ICU's
+    * CJK word-break dictionary, which stays on the heap until the JVM exits.
+    */
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+
+  /** Spark's `upper()` of a UTF8_BINARY string, bit for bit; see [[lower]]. */
+  def upper(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toUpperCaseAscii
+    else UTF8String.fromString(UCharacter.toUpperCase(s.toValidString))
+
   /** Non-overlapping occurrence counts of each marker over the space-padded
     * lowercase of `text` — one compiled pass, zero intermediate strings
     * besides the padded copy. Count semantics are identical to the portable
     * `(length(t) - length(replace(t, m, ''))) / length(m)` trick (both are
     * left-to-right non-overlapping scans), so results match the SQL oracle
-    * bit-for-bit. Lowercasing goes through UTF8String.toLowerCase — the same
-    * code path as Spark's `lower()`.
+    * bit-for-bit. Lowercasing is [[lower]], so it equals Spark's `lower()`.
     */
   def markerCounts(text: UTF8String, markers: Array[String]): ArrayData = {
     if (text == null) return null
-    val t = " " + text.toLowerCase.toString + " "
+    val t = " " + lower(text).toString + " "
     val out = new Array[Any](markers.length)
     var i = 0
     while (i < markers.length) {
@@ -188,7 +205,8 @@ object TextKernels {
 }
 
 /** Codegen-integrated expression wrapping [[TextKernels.markerCounts]]:
-  * array<long> of per-marker occurrence counts over padded-lowercase text.
+  * array<long> of per-marker occurrence counts over the padded
+  * [[TextKernels.lower]] of the text (Spark's `lower()`, bit for bit).
   */
 case class MarkerCounts(child: Expression, markers: Seq[String]) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -252,4 +270,15 @@ object TextExprs {
 
   def markerCounts(text: Column, markers: Seq[String]): Column =
     column(MarkerCounts(expression(text), markers))
+
+  /** Spark's `lower(text)`, bit for bit, without the table Spark's own
+    * expression builds on its first call ([[TextKernels.lower]]). */
+  def lower(text: Column): Column =
+    column(StaticInvoke(TextKernels.getClass, StringType, "lower", Seq(expression(text)),
+      Seq(StringType), returnNullable = false))
+
+  /** Spark's `upper(text)`, bit for bit ([[TextKernels.upper]]). */
+  def upper(text: Column): Column =
+    column(StaticInvoke(TextKernels.getClass, StringType, "upper", Seq(expression(text)),
+      Seq(StringType), returnNullable = false))
 }

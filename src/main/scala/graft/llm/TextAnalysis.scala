@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextExprs
+
 /** Text-analysis operators for a large-scale training-data pipeline:
   * tokenization, shingling, quality features, marker-based language ID and
   * document fingerprinting.
@@ -214,7 +216,7 @@ object TextAnalysis {
     */
   def normalized(text: Column): Column = {
     val cleaned = trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
+      regexp_replace(TextExprs.lower(text), "[^a-z0-9 ]", ""), " +", " "))
     array_join(
       filter(split(cleaned, " "),
         w => !w.isin(stopwords.map(_.asInstanceOf[Any]): _*)),

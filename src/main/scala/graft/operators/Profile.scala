@@ -9,19 +9,20 @@ import org.apache.spark.sql.functions._
 object Profile {
 
   /** Per-column null fraction, one output row per column:
-    * (column_name, null_frac, n_null). Single pass, single partial+final
-    * aggregate over all columns at once (NOT one job per column).
+    * (column_name, n_null, null_frac). One pass: a single partial+final
+    * aggregate over all columns at once (NOT one job per column) that keeps
+    * the row count and one null count per column, k + 1 buffer fields for
+    * k columns, so up to 99 columns stay inside whole-stage codegen (Spark's
+    * limit is 100 fields). `null_frac = n_null / n` divides two exact
+    * counts, so it equals `avg(isNull)` bit for bit; an empty frame gives
+    * NULL for both.
     */
   def missingProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(
-        sum(col(c).isNull.cast("long")).as(s"__n_$c"),
-        avg(col(c).isNull.cast("double")).as(s"__f_$c"))
-    }
+    val aggs = count(lit(1)).as("__n") +: cols.map(c => sum(col(c).isNull.cast("long")).as(s"__n_$c"))
     val one = df.agg(aggs.head, aggs.tail: _*)
     // pivot the single row to long form with a stack expression
     val stackArgs = cols
-      .map(c => s"'$c', __n_$c, __f_$c")
+      .map(c => s"'$c', __n_$c, try_divide(__n_$c, __n)")
       .mkString(", ")
     one.selectExpr(
       s"stack(${cols.size}, $stackArgs) as (column_name, n_null, null_frac)")

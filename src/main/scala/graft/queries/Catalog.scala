@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.Macros
+import graft.functions.{Macros, TextExprs}
 import graft.operators.{Asof, Dedupe, Funnel, Merge, Profile, Retention}
 import graft.tpg.{FeaturesEvents, IstdatenIngest}
 
@@ -943,7 +943,7 @@ object Catalog {
       |WHERE contains(lower(p_type), 'dar')
       |GROUP BY p_brand ORDER BY p_brand""".stripMargin) { (s, d) =>
     Tables.part(s, d)
-      .filter(lower(col("p_type")).contains("dar"))
+      .filter(TextExprs.lower(col("p_type")).contains("dar"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n"),
         min("p_retailprice").as("min_price"),
@@ -6520,12 +6520,12 @@ object Catalog {
     val k = pmod(col("c_custkey"), lit(3L))
     Tables.customer(s, d)
       .withColumn("raw",
-        when(k === 0, concat(lit("  "), lower(col("c_mktsegment")), lit(" ")))
+        when(k === 0, concat(lit("  "), TextExprs.lower(col("c_mktsegment")), lit(" ")))
           .when(k === 1, col("c_mktsegment"))
-          .otherwise(concat(lower(col("c_mktsegment")), lit("   "))))
+          .otherwise(concat(TextExprs.lower(col("c_mktsegment")), lit("   "))))
       .groupBy(
-        upper(trim(col("raw"))).as("seg_up"),
-        lower(trim(col("raw"))).as("seg_lo"))
+        TextExprs.upper(trim(col("raw"))).as("seg_up"),
+        TextExprs.lower(trim(col("raw"))).as("seg_lo"))
       .agg(count(lit(1)).as("n"))
       .transform(ordered("seg_up"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.TextExprs
+
 /** GTFS timetable ingest ≙ reference `src/01_ingest_gtfs.py`.
   *
   * ZIP member extraction happens once on the driver (S1/S2 — GTFS feeds are
@@ -50,7 +52,7 @@ object GtfsIngest {
     val routes = member("routes.txt")
       .join(broadcast(agency.select(col("agency_id"), col("agency_name").as("operator_name"))),
         Seq("agency_id"), "left")
-      .filter(lower(col("operator_name")).contains(operatorPattern.toLowerCase))
+      .filter(TextExprs.lower(col("operator_name")).contains(operatorPattern.toLowerCase))
       .transform(silver(Schemas.gtfsRoutes))
 
     // J2: cascading semi-join prune — trips ⋉ routes, stop_times ⋉ trips,

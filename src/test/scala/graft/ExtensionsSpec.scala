@@ -240,6 +240,37 @@ class NativeHelpersSpec extends SparkSpec {
     t.join()
     assert(inThread.get == expected)
   }
+
+  test("TextExprs.lower/upper equal Spark's lower()/upper(), generated and interpreted") {
+    // every non-ASCII codepoint as a \u escape: dotted capital I, sharp s,
+    // the title-case digraph Dz, a Greek word ending in sigma, the st ligature
+    val words = Seq("Hello, TPG 42!", "\u0130", "\u00df", "\u01c5", "\u039f\u0394\u039f\u03a3",
+      "\ufb06", "", null)
+    val id = col("id").cast("int")
+    // the last row is invalid UTF-8: 0xFF never starts a character
+    val s = when(id < words.size, element_at(typedLit(words), id + 1))
+      .otherwise(unhex(lit("61FF62")).cast("string"))
+    /** The rows of a fresh plan under `confs`. */
+    def rows(confs: (String, String)*): Seq[Row] = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try spark.range(0, words.size + 1, 1, 2).select(s.as("s"))
+        .select(lower(col("s")), TextExprs.lower(col("s")), upper(col("s")), TextExprs.upper(col("s")))
+        .collect().toSeq
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val generated = rows("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = rows("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(generated == interpreted)
+    assert(generated.size == words.size + 1)
+    generated.foreach(r => assert(r.get(0) == r.get(1) && r.get(2) == r.get(3), r))
+    // full case maps, final sigma included
+    assert(generated.map(_.getString(1)).slice(4, 6) == Seq("\u03bf\u03b4\u03bf\u03c2", "\ufb06"))
+    assert(generated.map(_.getString(3)).slice(1, 3) == Seq("\u0130", "SS"))
+    assert(generated(7).isNullAt(1) && generated(7).isNullAt(3))
+    assert(generated(8).getString(3) == "A\uFFFDB")
+  }
 }
 
 class NativeCodegenSpec extends SparkSpec {

@@ -60,15 +60,18 @@ class MacrosSpec extends SparkSpec {
   }
 
   test("robustBool: 1/true → true; 0/false/other/null → false") {
-    val got = Seq("1", " true ", "TRUE", "0", "false", "x", null)
+    val got = Seq("1", " true ", "TRUE", " TRUE ", "0", "false", "x", null)
       .toDF("v").select(Macros.robustBool($"v").as("b")).collect().map(_.getBoolean(0))
-    assert(got.sameElements(Array(true, true, true, false, false, false, false)))
+    assert(got.sameElements(Array(true, true, true, true, false, false, false, false)))
   }
 
   test("statusRank: REAL/IST=3 GESCHAETZT=2 PROGNOSE=1 other=0") {
-    val got = Seq("REAL", "ist", "GESCHAETZT", "PROGNOSE", "UNBEKANNT", null)
+    // full case maps, as the reference's pandas `str.strip().str.upper()`:
+    // dotless i (U+0131) → I, long s (U+017F) → S, the st ligature (U+FB06) → ST
+    val got = Seq("REAL", "ist", " \u0131st ", "PROGNO\u017FE", "I\uFB06", "GESCHAETZT", "PROGNOSE",
+        "UNBEKANNT", null)
       .toDF("v").select(Macros.statusRank($"v").as("r")).collect().map(_.getInt(0))
-    assert(got.sameElements(Array(3, 3, 2, 1, 0, 0)))
+    assert(got.sameElements(Array(3, 3, 3, 1, 3, 2, 1, 0, 0)))
   }
 
   test("hamming_distance native expression: eval, codegen span") {

@@ -306,4 +306,30 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("CartesianProduct"))
   }
+
+  test("missingProfile: both aggregates over 40 columns run whole-stage generated; an empty frame gives NULL") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // column c<i> is NULL on the ids that i + 2 divides (the features table has 37)
+    val cols = (0 until 40).map(i => s"c$i")
+    val df = spark.range(0, 100, 1, 2).select(cols.indices.map(i =>
+      when(col("id") % (i + 2) === 0, lit(null)).otherwise(col("id")).as(cols(i))): _*)
+    val q = operators.Profile.missingProfile(df, cols)
+    val got = q.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val expected = cols.indices.map { i =>
+      val n = (0 until 100).count(_ % (i + 2) == 0).toLong
+      (cols(i), n, n / 100.0)
+    }
+    assert(got == expected)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = q.queryExecution.executedPlan
+    val generated = aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+      .flatMap(_.collect { case a: HashAggregateExec => a })
+    assert(aqe.collect(plan) { case a: HashAggregateExec => a }.size == 2, plan)
+    assert(generated.size == 2, plan)
+    val empty = operators.Profile.missingProfile(df.where(col("c0") < 0), cols).collect()
+    assert(empty.length == cols.size && empty.forall(r => r.isNullAt(1) && r.isNullAt(2)))
+  }
 }

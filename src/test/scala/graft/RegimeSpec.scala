@@ -105,6 +105,23 @@ class RegimeSpec extends AnyFunSuite {
     assert(loops.isEmpty, s"a loop in generated code instead of a kernel call: ${loops.mkString(", ")}")
   }
 
+  test("no Spark lower, upper or initcap call under src/main: the first one costs its JVM a title-case table") {
+    // Spark 4.1's case mappings initialize CollationAwareUTF8String, which
+    // title-cases all 1,114,112 code points into a table only initcap reads
+    // (over a second of CPU, and ICU's CJK dictionary on the heap until the
+    // JVM exits); TextExprs.lower/upper are the same maps without the table
+    val qualified = raw"\bfunctions\s*\.\s*(lower|upper|initcap)\s*\(".r
+    val bare = raw"(?<![\w.]|def\s)(lower|upper|initcap)\s*\(".r
+    val calls = sources("src/main", ".scala").flatMap { p =>
+      val c = scalaCode(Files.readString(p))
+      val imported = c.contains("org.apache.spark.sql.functions")
+      (qualified.findAllMatchIn(c) ++ (if (imported) bare.findAllMatchIn(c) else Iterator.empty))
+        .map(m => s"$p: ${c.substring(m.start, (m.end + 30).min(c.length)).takeWhile(_ != '\n')}")
+    }
+    assert(calls.isEmpty, "Spark case mapping under src/main (call TextExprs.lower/upper instead): " +
+      calls.mkString("; "))
+  }
+
   /** Code text of a source file: block and line comments blanked, so a
     * name mentioned only in documentation counts as unreached. Scala
     * sources also lose the text of their string literals (a function that

@@ -31,10 +31,19 @@ mkdir -p "$WORK"
 # for the project lock, and cold-starts in ~8 s instead of ~40.
 run_main() { SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-12g}" tools/jrun.sh "$@"; }
 
+# sbt with the tier-1 test command's settings: offline, resolving only from
+# the local repositories file. Without them an offline machine waits on
+# dependency resolution before sbt starts the build.
+run_sbt() {
+  COURSIER_MODE=offline \
+  SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}" \
+    sbt --batch -Dsbt.log.noformat=true "$@"
+}
+
 step() { echo; echo "=== [verify_all/$TIER] $* ==="; }
 
 step "sbt compile"
-sbt -batch compile > "$WORK/compile.log" 2>&1 || {
+run_sbt compile > "$WORK/compile.log" 2>&1 || {
   tail -30 "$WORK/compile.log"; exit 1; }
 echo "compile OK"
 
@@ -65,7 +74,7 @@ quick)
   ;;
 full)
   step "sbt test (all suites)"
-  sbt -batch test > "$WORK/test.log" 2>&1 || { tail -50 "$WORK/test.log"; exit 1; }
+  run_sbt test > "$WORK/test.log" 2>&1 || { tail -50 "$WORK/test.log"; exit 1; }
   grep -E "Tests: succeeded|All tests passed" "$WORK/test.log" | tail -2
   for sf in 0.001 0.01 0.1; do
     step "oracle gate @ /root/testdata/sf$sf"
