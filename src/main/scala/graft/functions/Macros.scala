@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
 
 /** Scalar function library — the engine's equivalent of the reference's
   * DuckDB macros and inline SQL expressions (reference: `src/common.py:200-257`,
@@ -19,16 +20,16 @@ object Macros {
   /** Epoch seconds of a timestamp, tolerant of TIMESTAMP_NTZ inputs (parquet
     * `isAdjustedToUTC=false`): NTZ values are interpreted in the session
     * time zone (always UTC for this engine), matching how DuckDB treats its
-    * naive TIMESTAMPs. A direct `cast("long")` on NTZ is illegal in Spark 4.
+    * naive TIMESTAMPs. A direct cast to LONG on NTZ is illegal in Spark 4.
     */
-  def epochSeconds(c: Column): Column = c.cast("timestamp").cast("long")
+  def epochSeconds(c: Column): Column = c.cast(TimestampType).cast(LongType)
 
   /** Minute difference with DuckDB `date_diff('minute', sched, est)` semantics:
     * counts minute-*boundary crossings*, not elapsed-time/60. NULL-safe
     * (NULL in → NULL out). Reference: `common.py:208-218`.
     */
   def delayMinutes(est: Column, sched: Column): Column =
-    (floor(epochSeconds(est) / 60) - floor(epochSeconds(sched) / 60)).cast("double")
+    (floor(epochSeconds(est) / 60) - floor(epochSeconds(sched) / 60)).cast(DoubleType)
 
   /** Exact second difference (epoch diff). Reference: `10:210-224`. */
   def delaySeconds(est: Column, sched: Column): Column =
@@ -39,7 +40,7 @@ object Macros {
     * matching the reference macro's WHEN chain).
     */
   def rainBin(mm: Column): Column =
-    when(mm.isNull, lit(null).cast("string"))
+    when(mm.isNull, lit(null).cast(StringType))
       .when(mm === 0.0, "no_rain")
       .when(mm < 0.5, "drizzle")
       .when(mm < 2.0, "light")
@@ -48,7 +49,7 @@ object Macros {
 
   /** Wind speed bin (m/s). Boundaries 4 / 8 / 14 / 21. Reference: `common.py:233-244`. */
   def windBin(ms: Column): Column =
-    when(ms.isNull, lit(null).cast("string"))
+    when(ms.isNull, lit(null).cast(StringType))
       .when(ms < 4.0, "calm")
       .when(ms < 8.0, "breeze")
       .when(ms < 14.0, "moderate")
@@ -57,7 +58,7 @@ object Macros {
 
   /** Temperature bin (°C). Boundaries 0 / 10 / 20 / 30. Reference: `common.py:245-256`. */
   def tempBin(c: Column): Column =
-    when(c.isNull, lit(null).cast("string"))
+    when(c.isNull, lit(null).cast(StringType))
       .when(c < 0.0, "<0")
       .when(c < 10.0, "0-10")
       .when(c < 20.0, "10-20")
@@ -76,7 +77,7 @@ object Macros {
 
   /** Bin start as epoch seconds (BIGINT) — join/compare-friendly form. */
   def floorBinEpoch(ts: Column, binSeconds: Long): Column =
-    (floor(epochSeconds(ts) / binSeconds) * binSeconds).cast("long")
+    (floor(epochSeconds(ts) / binSeconds) * binSeconds).cast(LongType)
 
   /** Robust boolean: trim+lower, then '1'/'true' → true, anything else
     * (incl. NULL) → false. Reference: `02:210-220`.
@@ -116,5 +117,5 @@ object Macros {
   /** Null-tolerant numeric coercion (reference `pd.to_numeric(errors='coerce')`,
     * `03:147`): invalid strings → NULL, not error.
     */
-  def toDoubleOrNull(c: Column): Column = c.try_cast("double")
+  def toDoubleOrNull(c: Column): Column = c.try_cast(DoubleType)
 }

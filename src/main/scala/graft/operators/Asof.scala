@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** AS-OF join: for each left row, attach the latest right row with
   * `rightTime <= leftTime` within the same key, optionally bounded by a
@@ -102,7 +103,7 @@ object Asof {
       bucketSeconds: Long = 86400L): DataFrame = {
     require(toleranceUs <= bucketSeconds * 1000000L,
       s"bucketed ASOF is only exact when toleranceUs ($toleranceUs) <= bucketSeconds ($bucketSeconds) in µs")
-    def bucketOf(c: Column) = floor(c.cast("timestamp").cast("long") / bucketSeconds)
+    def bucketOf(c: Column) = floor(c.cast(TimestampType).cast(LongType) / bucketSeconds)
     val lb = left.withColumn("__bucket", bucketOf(col(leftTime)))
     val rb0 = right.withColumn("__bucket", bucketOf(col(rightTime)))
     val rb = rb0.unionByName(rb0.withColumn("__bucket", col("__bucket") + 1))

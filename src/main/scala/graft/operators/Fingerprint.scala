@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Dataset content fingerprinting: a per-group digest of ROW CONTENT that
   * is order-independent and mergeable — the "did this 100 TB copy/rebuild
@@ -35,12 +36,12 @@ object Fingerprint {
     * clear of signed-64 overflow in any engine's hex parse). */
   def contentHash60(cols: Seq[Column]): Column =
     conv(substring(md5(concat_ws("\u0001", cols: _*)), 1, 15), 16, 10)
-      .cast("long")
+      .cast(LongType)
 
   /** 32-bit companion hash (different digest window, so independent). */
   def contentHash32(cols: Seq[Column]): Column =
     conv(substring(md5(concat_ws("\u0001", cols: _*)), 17, 8), 16, 10)
-      .cast("long")
+      .cast(LongType)
 
   /** SQL twins for cross-engine oracles (DuckDB dialect); `colsSql` are the
     * pre-coalesced column expressions. */
@@ -60,7 +61,7 @@ object Fingerprint {
       .groupBy(g: _*)
       .agg(
         count(lit(1)).as("n_rows"),
-        expr("bit_xor(__h60)").as("xor60"),
+        bit_xor(col("__h60")).as("xor60"),
         sum(col("__h32")).as("sum32"))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
 /** Data-quality profiling (reference A7 missing-value profile,
   * `app/streamlit_app.py:142-148`).
@@ -18,14 +19,12 @@ object Profile {
     * NULL for both.
     */
   def missingProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("__n") +: cols.map(c => sum(col(c).isNull.cast("long")).as(s"__n_$c"))
+    val aggs = count(lit(1)).as("__n") +: cols.map(c => sum(col(c).isNull.cast(LongType)).as(s"__n_$c"))
     val one = df.agg(aggs.head, aggs.tail: _*)
     // pivot the single row to long form with a stack expression
-    val stackArgs = cols
-      .map(c => s"'$c', __n_$c, try_divide(__n_$c, __n)")
-      .mkString(", ")
-    one.selectExpr(
-      s"stack(${cols.size}, $stackArgs) as (column_name, n_null, null_frac)")
+    val stackArgs = cols.flatMap(c =>
+      Seq(lit(c), col(s"__n_$c"), try_divide(col(s"__n_$c"), col("__n"))))
+    one.select(stack(lit(cols.size) +: stackArgs: _*).as(Seq("column_name", "n_null", "null_frac")))
   }
 
   /** Dataset card: per-column completeness + exact cardinality in ONE
@@ -45,15 +44,15 @@ object Profile {
   def datasetCard(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "cols must be non-empty")
     val aggs = Seq(count(lit(1)).as("__n")) ++ cols.flatMap { c =>
-      Seq(sum(col(c).isNull.cast("long")).as(s"__nn_$c"),
+      Seq(sum(col(c).isNull.cast(LongType)).as(s"__nn_$c"),
         count_distinct(col(c)).as(s"__nd_$c"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
-    val stackArgs = cols.map(c => s"'$c', __nn_$c, __nd_$c").mkString(", ")
-    one.selectExpr("__n",
-        s"stack(${cols.size}, $stackArgs) as (column_name, n_null, n_distinct)")
+    val stackArgs = cols.flatMap(c => Seq(lit(c), col(s"__nn_$c"), col(s"__nd_$c")))
+    one.select(col("__n"),
+        stack(lit(cols.size) +: stackArgs: _*).as(Seq("column_name", "n_null", "n_distinct")))
       .select(col("column_name"), col("__n").as("n_rows"), col("n_null"),
-        (col("n_null").cast("double") / col("__n")).as("null_frac"),
+        (col("n_null").cast(DoubleType) / col("__n")).as("null_frac"),
         col("n_distinct"))
   }
 
@@ -89,7 +88,7 @@ object Profile {
       .agg(
         sum(col("__c")).as("n"),
         count(lit(1)).as("n_values"),
-        sum(col("__c").cast("double") * log2(col("__c"))).as("__clc"))
+        sum(col("__c").cast(DoubleType) * log2(col("__c"))).as("__clc"))
       .select((g ++ Seq(
         col("n"), col("n_values"),
         (log2(col("n")) - col("__clc") / col("n")).as("entropy_bits"),
@@ -141,7 +140,7 @@ object Profile {
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val wG = Window.partitionBy(g: _*)
-    val v = valueCol.cast("double")
+    val v = valueCol.cast(DoubleType)
     val down = aggregate(sequence(lit(1), lit(14)), v,
       (acc, _) => when(acc >= lit(1e22), acc / lit(1e22)).otherwise(acc))
     val up = aggregate(sequence(lit(1), lit(15)), down,
@@ -152,15 +151,15 @@ object Profile {
       .withColumn("__m", when(col("__m22") >= lit(1e11),
         col("__m22") / lit(1e11)).otherwise(col("__m22")))
       .withColumn("digit",
-        substring(floor(col("__m")).cast("long").cast("string"), 1, 1)
-          .cast("int"))
+        substring(floor(col("__m")).cast(LongType).cast(StringType), 1, 1)
+          .cast(IntegerType))
       .groupBy(g :+ col("digit"): _*)
       .agg(count(lit(1)).as("n_d"))
       .withColumn("n", sum(col("n_d")).over(wG))
       .withColumn("frac",
-        col("n_d").cast("double") / col("n").cast("double"))
+        col("n_d").cast(DoubleType) / col("n").cast(DoubleType))
       .withColumn("expected",
-        log10(lit(1.0) + lit(1.0) / col("digit").cast("double")))
+        log10(lit(1.0) + lit(1.0) / col("digit").cast(DoubleType)))
       .withColumn("dev", col("frac") - col("expected"))
       .select(g ++ Seq(col("digit"), col("n"), col("n_d"), col("frac"),
         col("expected"), col("dev")): _*)
@@ -201,8 +200,8 @@ object Profile {
     val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
     val byKey = df
       .filter(keyCol.isNotNull && valueCol.isNotNull)
-      .select(g ++ Seq(keyCol.cast("string").as("key"),
-        floor(valueCol.cast("double") * 10000 + 0.5).cast("long")
+      .select(g ++ Seq(keyCol.cast(StringType).as("key"),
+        floor(valueCol.cast(DoubleType) * 10000 + 0.5).cast(LongType)
           .as("__v4")): _*)
       .groupBy(g :+ col("key"): _*)
       .agg(sum(col("__v4")).as("value4"))
@@ -211,12 +210,12 @@ object Profile {
     val wCum = wRank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wTot = Window.partitionBy(g: _*)
     byKey
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
+      .withColumn("rnk", row_number().over(wRank).cast(LongType))
       .withColumn("cum4", sum(col("value4")).over(wCum))
       .withColumn("__tot", sum(col("value4")).over(wTot))
       .select(g ++ Seq(col("key"), col("rnk"), col("value4"), col("cum4"),
         when(col("__tot") > 0,
-          col("cum4").cast("double") / col("__tot").cast("double"))
+          col("cum4").cast(DoubleType) / col("__tot").cast(DoubleType))
           .as("share"),
         when(dec(col("cum4")) * 100 <= dec(col("__tot")) * aPct, "A")
           .when(dec(col("cum4")) * 100 <= dec(col("__tot")) * bPct, "B")
@@ -269,8 +268,8 @@ object Profile {
       .select(col("n_child"), col("n_null_key"), col("n_orphans"),
         col("n_distinct_missing"),
         when(col("n_child") - col("n_null_key") > 0,
-          col("n_orphans").cast("double") /
-            (col("n_child") - col("n_null_key")).cast("double"))
+          col("n_orphans").cast(DoubleType) /
+            (col("n_child") - col("n_null_key")).cast(DoubleType))
           .as("orphan_rate"))
   }
 
@@ -298,8 +297,8 @@ object Profile {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
     val g = groupCols.map(col)
     val pairs = df
-      .select(g ++ Seq(lhsCol.cast("string").as("__l"),
-        rhsCol.cast("string").as("__r")): _*)
+      .select(g ++ Seq(lhsCol.cast(StringType).as("__l"),
+        rhsCol.cast(StringType).as("__r")): _*)
       .groupBy(g ++ Seq(col("__l"), col("__r")): _*)
       .agg(count(lit(1)).as("__n"))
     val byLhs = pairs.groupBy(g :+ col("__l"): _*)

@@ -2,6 +2,7 @@ package graft.tpg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.functions.Macros
 
@@ -25,9 +26,9 @@ object FeaturesByStopLine {
         avg(col("delay_min")).as("delay_avg_min"),
         percentile(col("delay_min"), lit(0.5)).as("delay_p50_min"),
         percentile(col("delay_min"), lit(0.9)).as("delay_p90_min"),
-        avg((col("delay_min") >= 2).cast("double")).as("share_late_ge2"),
-        avg(col("used_arrival_sched").cast("double")).as("share_used_arrival_sched"),
-        avg(col("used_arrival_est").cast("double")).as("share_used_arrival_est"),
+        avg((col("delay_min") >= 2).cast(DoubleType)).as("share_late_ge2"),
+        avg(col("used_arrival_sched").cast(DoubleType)).as("share_used_arrival_sched"),
+        avg(col("used_arrival_est").cast(DoubleType)).as("share_used_arrival_est"),
         avg(col("temp_c")).as("temp_c_avg"),
         avg(col("rain_mm")).as("rain_mm_avg"),
         max(col("rain_mm")).as("rain_mm_max"),

@@ -2,6 +2,7 @@ package graft.tpg
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 import graft.functions.Macros
 import graft.operators.Asof
@@ -47,7 +48,7 @@ object FeaturesEvents {
     * DOUBLE)/60.0, NOT the minute-boundary-crossing date_diff macro, which
     * is Macros.delayMinutes, used where the reference calls it). */
   val delaySec: Column = Macros.delaySeconds(col("est_ts"), col("sched_ts"))
-  val delayMin: Column = col("delay_sec").cast("double") / 60.0
+  val delayMin: Column = col("delay_sec").cast(DoubleType) / 60.0
 
   /** The enrichment stage (base filters + C7 coalesce/flags + C5 delays +
     * C6 bin). Exposed separately for testing.
@@ -132,8 +133,8 @@ object FeaturesEvents {
   def qc(features: DataFrame): DataFrame =
     features.agg(
       count(lit(1)).as("n_rows"),
-      sum(col("used_arrival_sched").cast("int")).as("n_used_arrival_sched"),
-      sum(col("used_arrival_est").cast("int")).as("n_used_arrival_est"),
+      sum(col("used_arrival_sched").cast(IntegerType)).as("n_used_arrival_sched"),
+      sum(col("used_arrival_est").cast(IntegerType)).as("n_used_arrival_est"),
       sum(when(col("delay_sec").isNull, 1).otherwise(0)).as("n_unusable"),
       sum(when(col("temp_c").isNotNull, 1).otherwise(0)).as("n_with_weather"))
 

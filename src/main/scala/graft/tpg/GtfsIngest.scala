@@ -2,7 +2,7 @@ package graft.tpg
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.TextExprs
 
@@ -17,11 +17,20 @@ import graft.functions.TextExprs
   * `feed_info.txt` as feed_version "unknown"; any other missing member is an
   * error. Agency broadcast join (J1), operator substring filter (F1), and the
   * cascading semi-join prune (J2) follow the reference exactly.
+  *
+  * The cascade runs once: `ingest` materializes each pruned silver frame
+  * with an eager `localCheckpoint` as it goes, so the next level's semi-join
+  * and the four writes read those blocks instead of re-deriving routes ⋉
+  * trips ⋉ stop_times from the CSVs (each member is scanned once). The
+  * blocks stay in the session's block manager until Spark's ContextCleaner
+  * drops them after the returned frames are garbage-collected, or the
+  * session stops.
   */
 object GtfsIngest {
 
   /** Full GTFS ingest: returns (routes, trips, stop_times, stops) pruned to
-    * the configured operator, each stamped with feed_version.
+    * the configured operator, each stamped with feed_version and
+    * checkpointed (the Spark jobs of the whole cascade run here).
     */
   def ingest(spark: SparkSession, zipPath: String,
       operatorPattern: String = "Transports Publics Genevois")
@@ -41,11 +50,12 @@ object GtfsIngest {
       df.transform(Schemas.project(StructType(table.filter(_.name != "feed_version"))))
         .distinct()
         .withColumn("feed_version", lit(feedVersion))
+        .localCheckpoint()
 
     val agency =
       if (paths.contains("agency.txt")) member("agency.txt")
       else spark.createDataFrame(java.util.List.of[Row](),
-        StructType.fromDDL("agency_id STRING, agency_name STRING"))
+        StructType(Seq("agency_id", "agency_name").map(StructField(_, StringType))))
 
     // J1: tiny agency dim — broadcast left join; F1: case-insensitive
     // substring filter on the denormalized operator name.

@@ -2,6 +2,7 @@ package graft.tpg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, IntegerType}
 
 import graft.functions.Macros
 import graft.operators.Dedupe
@@ -72,7 +73,7 @@ object IstdatenIngest {
     tpgBusTram(raw)
       .withColumn("service_date", coalesce(
         try_to_timestamp(col("service_date"), lit("dd.MM.yyyy")),
-        try_to_timestamp(col("service_date"), lit("yyyy-MM-dd"))).cast("date"))
+        try_to_timestamp(col("service_date"), lit("yyyy-MM-dd"))).cast(DateType))
       .withColumn("arrival_time_sched", parseTs(col("arrival_time_sched")))
       .withColumn("arrival_time_est", parseTs(col("arrival_time_est")))
       .withColumn("depart_time_sched", parseTs(col("depart_time_sched")))
@@ -121,9 +122,9 @@ object IstdatenIngest {
         coalesce(col("arrival_time_sched"), col("depart_time_sched"))),
       priority = Seq(
         statRank.desc,
-        hasEst.cast("int").desc,
-        (!col("is_cancelled")).cast("int").desc,
-        (!col("is_pass_through")).cast("int").desc,
+        hasEst.cast(IntegerType).desc,
+        (!col("is_cancelled")).cast(IntegerType).desc,
+        (!col("is_pass_through")).cast(IntegerType).desc,
         estTs.desc_nulls_last,
         col("line_text").asc_nulls_last,
         col("stop_name").asc_nulls_last))

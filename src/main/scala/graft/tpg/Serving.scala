@@ -2,6 +2,7 @@ package graft.tpg
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.Macros
 
@@ -30,7 +31,7 @@ object Serving {
     IstdatenIngest.tpgBusTram(istEvents)
       .select(col("service_date"), col("line_text"), col("stop_name"),
         FeaturesEvents.schedTs.as("sched_ts"), FeaturesEvents.estTs.as("est_ts"))
-      .withColumn("delay_sec", FeaturesEvents.delaySec.cast("int"))
+      .withColumn("delay_sec", FeaturesEvents.delaySec.cast(IntegerType))
       .withColumn("delay_min", FeaturesEvents.delayMin)
       .orderBy(col("service_date").desc, col("sched_ts").desc)
       .limit(n)
@@ -59,15 +60,15 @@ object Serving {
     features.agg(
       count(lit(1)).as("rows_total"),
       sum((col("depart_time_sched").isNotNull && col("depart_time_est").isNotNull)
-        .cast("long")).as("both_depart_present"),
-      sum(col("used_arrival_sched").cast("long")).as("n_coalesce_sched"),
-      sum(col("used_arrival_est").cast("long")).as("n_coalesce_est"),
-      sum((col("used_arrival_sched") || col("used_arrival_est")).cast("long"))
+        .cast(LongType)).as("both_depart_present"),
+      sum(col("used_arrival_sched").cast(LongType)).as("n_coalesce_sched"),
+      sum(col("used_arrival_est").cast(LongType)).as("n_coalesce_est"),
+      sum((col("used_arrival_sched") || col("used_arrival_est")).cast(LongType))
         .as("n_any_coalesce"),
-      avg((col("used_arrival_sched") || col("used_arrival_est")).cast("double"))
+      avg((col("used_arrival_sched") || col("used_arrival_est")).cast(DoubleType))
         .as("pct_any_coalesce"),
-      sum((col("sched_ts").isNull || col("est_ts").isNull).cast("long")).as("unusable"),
-      sum(fullWeather.cast("long")).as("full_weather_rows"))
+      sum((col("sched_ts").isNull || col("est_ts").isNull).cast(LongType)).as("unusable"),
+      sum(fullWeather.cast(LongType)).as("full_weather_rows"))
       .withColumn("pct_any_coalesce", col("pct_any_coalesce") * 100.0)
   }
 

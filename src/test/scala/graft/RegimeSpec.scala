@@ -122,6 +122,24 @@ class RegimeSpec extends AnyFunSuite {
       calls.mkString("; "))
   }
 
+  test("no SQL text in the TPG chain: casts by type, no selectExpr, expr or fromDDL") {
+    // Each string-typed form goes through Spark's ANTLR SQL parser: its first
+    // use loads the parser, and its DFA cache grows with every distinct
+    // string parsed and stays on the heap until the JVM exits. In code text
+    // a string literal reads as one blank, so `cast("long")` is `cast( )`.
+    val files = sources("src/main/scala/graft/tpg", ".scala") ++
+      Seq("functions/Macros", "functions/TextKernels", "operators/Asof", "operators/Dedupe",
+        "operators/Merge", "operators/Profile", "operators/Fingerprint")
+        .map(f => Paths.get(s"src/main/scala/graft/$f.scala"))
+    val parsed = raw"\b(?:try_)?cast\(\s+\)|\bselectExpr\s*\(|\bexpr\s*\(|\bfromDDL\s*\(".r
+    val found = files.flatMap { p =>
+      parsed.findAllMatchIn(scalaCode(Files.readString(p))).map(m => s"$p: ${m.matched}")
+    }
+    assert(found.isEmpty, "SQL text the chain would parse (use the typed form: a DataType " +
+      "cast, functions.stack(...).as(...), a Column function, a StructType): " +
+      found.mkString("; "))
+  }
+
   /** Code text of a source file: block and line comments blanked, so a
     * name mentioned only in documentation counts as unreached. Scala
     * sources also lose the text of their string literals (a function that

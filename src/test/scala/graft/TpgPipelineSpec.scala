@@ -2,7 +2,17 @@ package graft
 
 import java.io.{File, FileOutputStream}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{ZipEntry, ZipOutputStream}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlShims
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 import graft.tpg._
 
@@ -29,6 +39,10 @@ class TpgPipelineSpec extends SparkSpec {
     zos.close()
     zip.getAbsolutePath
   }
+
+  /** The charset [[Archives.probe]] reads `path` in. */
+  private def charset(path: String, probeBytes: Int = 4 << 20): String =
+    Archives.probe(path, Map.empty, caseSensitive = false, probeBytes)._1
 
   private def utf8(members: (String, String)*): Seq[(String, Array[Byte])] =
     members.map { case (n, c) => n -> c.getBytes("UTF-8") }
@@ -139,8 +153,8 @@ class TpgPipelineSpec extends SparkSpec {
     f.deleteOnExit()
     Files.write(f.toPath, latin1Csv.getBytes("ISO-8859-1"))
 
-    assert(Archives.isValidUtf8(utf8Path))
-    assert(!Archives.isValidUtf8(f.getAbsolutePath))
+    assert(charset(utf8Path) == "UTF-8")
+    assert(charset(f.getAbsolutePath) == "ISO-8859-1")
     val got = IstdatenIngest.ingest(spark, Seq(utf8Path, f.getAbsolutePath))
       .orderBy("fahrt_bezeichner").collect()
     assert(got.length == 2)
@@ -175,6 +189,24 @@ class TpgPipelineSpec extends SparkSpec {
     assert(gtfsStops.map(_.getAs[String]("stop_name")).toSeq == Seq("Châtelaine", "Genève-Plage"))
   }
 
+  test("istdaten day files whose columns come in another order, or lack an optional one, map by name") {
+    // The reference reads each day file by its own header (pandas); one
+    // header applied by position to every file would shift the other's values.
+    val names = istHeader.split(';').toSeq
+    def row(fahrt: String, stop: String) = names.zip(istRow(fahrt, stop).split(';')).toMap
+    def day(name: String, cols: Seq[String], r: Map[String, String]) =
+      writeTemp(name, cols.mkString(";") + "\n" + cols.map(r).mkString(";") + "\n")
+    val day1 = day("ist_day1", names, row("85:889:1", "Bel-Air"))
+    val day2 = day("ist_day2", names.reverse.filterNot(_ == "ZUSATZFAHRT_TF"),
+      row("85:889:2", "Stand"))
+    val got = IstdatenIngest.ingest(spark, Seq(day1, day2)).orderBy("fahrt_bezeichner").collect()
+    assert(got.map(r => (r.getAs[String]("fahrt_bezeichner"), r.getAs[String]("stop_name"),
+        r.getAs[String]("line_text"), r.getAs[String]("stop_code"))).toSeq ==
+      Seq(("85:889:1", "Bel-Air", "12", "8587057"), ("85:889:2", "Stand", "12", "8587057")))
+    for (r <- got)
+      assert(r.getAs[java.sql.Timestamp]("depart_time_est").toString == "2024-06-01 10:03:00.0")
+  }
+
   test("malformed raw input: a missing required column fails the read, naming it") {
     // a comma-delimited IstDaten file reads as one column under ';'
     val commas = writeTemp("ist_commas",
@@ -199,18 +231,20 @@ class TpgPipelineSpec extends SparkSpec {
 
   test("utf8 probe: multi-byte char straddling the probe boundary is not invalid") {
     // 'é' = 0xC3 0xA9: place it so the probe window ends between its bytes —
-    // a REPORT decoder must treat the truncated tail as underflow, not error
+    // a REPORT decoder must treat the truncated tail as underflow, not error.
+    // The header line ends inside the window: the probe also reads it.
     val f = File.createTempFile("probe", ".csv")
     f.deleteOnExit()
-    val bytes = ("a" * 15).getBytes("UTF-8") ++ "é".getBytes("UTF-8") ++ "tail".getBytes("UTF-8")
+    val bytes = ("h\n" + "a" * 13).getBytes("UTF-8") ++ "é".getBytes("UTF-8") ++
+      "tail".getBytes("UTF-8")
     Files.write(f.toPath, bytes)
-    assert(Archives.isValidUtf8(f.getAbsolutePath, probeBytes = 16)) // cuts é in half
-    assert(Archives.isValidUtf8(f.getAbsolutePath))                  // whole file valid
+    assert(charset(f.getAbsolutePath, probeBytes = 16) == "UTF-8") // cuts é in half
+    assert(charset(f.getAbsolutePath) == "UTF-8")                  // whole file valid
     // a genuinely malformed byte inside the window is still caught
     val bad = File.createTempFile("probe_bad", ".csv")
     bad.deleteOnExit()
     Files.write(bad.toPath, ("x" * 8).getBytes("UTF-8") ++ Array(0xE9.toByte) ++ "y".getBytes("UTF-8"))
-    assert(!Archives.isValidUtf8(bad.getAbsolutePath))
+    assert(charset(bad.getAbsolutePath) == "ISO-8859-1")
   }
 
   test("gtfs ingest: member extraction, operator filter, semi-join cascade") {
@@ -425,5 +459,64 @@ class TpgPipelineSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](parse(args))
       assert(e.getMessage.contains(named), s"$args: ${e.getMessage}")
     }
+  }
+
+  /** Jobs, SQL executions and the CSV files each execution's plan scans
+    * (by name), over what `body` submits. */
+  private def counted(body: => Unit): (Int, Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    GraftSqlShims.drainListeners(sc)
+    val jobs = new AtomicInteger
+    val executions = new AtomicInteger
+    val scans = mutable.Buffer.empty[String]
+    val listener = new SparkListener with AdaptiveSparkPlanHelper {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case end: SparkListenerSQLExecutionEnd =>
+          GraftSqlShims.queryExecution(end).foreach { qe =>
+            scans.synchronized {
+              scans ++= collectWithSubqueries(qe.executedPlan) {
+                case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] =>
+                  s.relation.location.rootPaths.map(_.getName)
+              }.flatten
+            }
+          }
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try { body; GraftSqlShims.drainListeners(sc) } finally sc.removeSparkListener(listener)
+    (jobs.get, executions.get, scans.synchronized(scans.toSeq))
+  }
+
+  test("readCsv over three files in two charsets submits no Spark job and no SQL execution") {
+    val header = "A;B\n"
+    val latin1 = File.createTempFile("latin1", ".csv")
+    latin1.deleteOnExit()
+    Files.write(latin1.toPath, (header + "3;é\n").getBytes("ISO-8859-1"))
+    val paths = Seq(writeTemp("utf8_1", header + "1;x\n"), writeTemp("utf8_2", header + "2;y\n"),
+      latin1.getAbsolutePath)
+    var df: org.apache.spark.sql.DataFrame = null
+    val (jobs, executions, _) = counted {
+      df = Archives.readCsv(spark, paths, Map("sep" -> ";"), Seq("A" -> "a", "B" -> "b"),
+        Seq("A", "B"))
+    }
+    assert((jobs, executions) == ((0, 0)))
+    assert(df.orderBy("a").collect().map(_.getString(1)).toSeq == Seq("x", "y", "é"))
+  }
+
+  test("GtfsIngest: ingest and the four writes scan each member's CSV once") {
+    val feed = gtfsFeed()
+    val zip = zipOf(utf8(feed: _*): _*)
+    val gold = Files.createTempDirectory("graft_gtfs_gold_").toString
+    val (_, _, scans) = counted {
+      val (routes, trips, stopTimes, stops) = GtfsIngest.ingest(spark, zip)
+      for ((df, table) <- Seq(routes -> "routes", trips -> "trips",
+          stopTimes -> "stop_times", stops -> "stops"))
+        GtfsIngest.write(df, s"$gold/$table")
+    }
+    assert(scans.groupBy(identity).view.mapValues(_.size).toMap == feed.map(_._1 -> 1).toMap)
+    assert(spark.read.parquet(s"$gold/stops").count() == 2L)
   }
 }

@@ -6,7 +6,8 @@
 # without reading four tools' CLIs.
 #
 # Usage:
-#   tools/verify_all.sh quick   # ~6 min: compile + oracle gate at sf0.01
+#   tools/verify_all.sh quick   # ~6 min: compile + perfbench build
+#                               #   + oracle gate at sf0.01
 #                               #   + the TPG chain (E2E, then the six CLI
 #                               #   mains over its generated inputs, whose
 #                               #   gold must equal E2E's)
@@ -57,6 +58,12 @@ gate() { # gate <sf_dir> <out_dir> — Verify dump + DuckDB compare
 
 case "$TIER" in
 quick)
+  # perfbench compiles src/main with its own harness (no sbt): a function
+  # the benchmark calls that changed shape fails here, not in a bench run.
+  step "perfbench build (src/main + the benchmark harness)"
+  python3 perfbench/build.py > "$WORK/perfbench_build.log" 2>&1 || {
+    tail -30 "$WORK/perfbench_build.log"; exit 1; }
+  echo "perfbench build OK"
   step "oracle gate @ /root/testdata/sf0.01 (222 queries, Spark vs DuckDB)"
   gate /root/testdata/sf0.01 "$WORK/out_sf001q"
   step "TPG chain: E2E, then the six CLI mains over its inputs into a second gold dir"
